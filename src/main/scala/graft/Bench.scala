@@ -630,7 +630,6 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // full-board runs wait (bounded) for the box to go idle before the
     // load snapshot — see [[waitForIdle]]; subset profiling runs start
     // immediately (they never touch the committed artifact anyway)
@@ -640,16 +639,7 @@ object Bench {
     if (idleWaited > 0)
       System.err.println(s"[bench] waited ${idleWaited}s for an idle box " +
         s"(load now '$loadBefore')")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.limit.initialNumPartitions", cpus)
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     // warm the JVM/codegen/parquet-reader paths so the first timed query
     // isn't charged for session bootstrap
     spark.range(1000).selectExpr("sum(id)").collect()

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.gen.DataGen
@@ -12,11 +11,7 @@ import graft.operators.Ecommerce
 object EcomDemo {
   def main(args: Array[String]): Unit = {
     val nSessions = args.headOption.map(_.toLong).getOrElse(2000000L)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Sessions.local(32)
 
     val t0 = System.nanoTime()
     val users = DataGen.users(spark)

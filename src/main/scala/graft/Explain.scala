@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan inspection tool: prints the formatted physical plan of the named
   * queries (all queries if no names given) — the "is the filter pushed
   * down / is the dim broadcast / where are the exchanges" review loop.
@@ -11,10 +9,7 @@ object Explain {
     val sf = args.headOption.getOrElse("/root/testdata/sf0.1")
     val names = if (args.length > 1) args.drop(1).toSeq
                 else SparkEntry.queries.keys.toSeq.sorted
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Sessions.local(4)
     names.foreach { q =>
       println(s"===== $q")
       SparkEntry.queries(q)(spark, sf).explain("formatted")

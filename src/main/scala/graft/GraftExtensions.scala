@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
@@ -8,28 +8,24 @@ import graft.plans._
 
 /** Session-extension entry point (custom-operator route (c) from the
   * build rules: registration via `SparkSessionExtensions`): injects
-  * every graft native Catalyst expression into the session's function
-  * registry at SESSION BUILD time, so a user enables the whole library
-  * surface with
+  * every native Catalyst expression in [[GraftExtensions.functions]]
+  * into the session's function registry at SESSION BUILD time, so a
+  * user enables the whole library surface in plain SQL with
   *
   * {{{
   *   spark.sql.extensions=graft.GraftExtensions
   * }}}
   *
-  * (or `.withExtensions(new GraftExtensions)`) and gets `float_dot`,
-  * `hyperplane_sketch`, `min_rolling_hash`, `simhash64`,
-  * `simhash_md5_60`, `bloom_probe_md5`, `shingle_hashes_md5` in plain
-  * SQL — no per-session `register()` calls.
-  * The builders are the SAME arity-checked functions the imperative
-  * `register` path uses, so the two entry points cannot drift.
+  * (or `.withExtensions(new GraftExtensions)`). Sessions built without
+  * it get the same functions from [[GraftExtensions.install]], which the
+  * operators call before building a plan that uses them; both routes
+  * walk the one table, so they cannot drift.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     GraftExtensions.functions.foreach { case (name, usage, builder) =>
-      ext.injectFunction((
-        FunctionIdentifier(name),
-        new ExpressionInfo(classOf[GraftExtensions].getName, null, name, usage, ""),
-        builder))
+      ext.injectFunction((FunctionIdentifier(name),
+        GraftExtensions.info(name, usage), builder))
     }
     // route (c) continued: a Rule[LogicalPlan] — constant-width pure
     // range joins become bucket-grid equi-joins instead of cartesians
@@ -68,4 +64,22 @@ object GraftExtensions {
       "quality_margin(text) - frozen quality-classifier logistic margin (QualityCoefficients fold), one native pass",
       QualityMarginExpr.build),
   )
+
+  private def info(name: String, usage: String): ExpressionInfo =
+    new ExpressionInfo(classOf[GraftExtensions].getName, null, name, usage, "")
+
+  /** Register every [[functions]] entry the session's registry lacks
+    * (usable from SQL and via call_function). Names already present —
+    * from an earlier call or from the extension — are left as they are,
+    * so a repeat call changes nothing and operators call it per use. */
+  def install(s: SparkSession): Unit = {
+    val registry = s.sessionState.functionRegistry
+    registry.synchronized {
+      functions.foreach { case (name, usage, builder) =>
+        val id = FunctionIdentifier(name)
+        if (!registry.functionExists(id))
+          registry.registerFunction(id, info(name, usage), builder)
+      }
+    }
+  }
 }

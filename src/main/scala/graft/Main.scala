@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** CLI entry point (SURVEY §7 layout): run a named query against a data
   * dir and print it.
   *
@@ -27,12 +25,7 @@ object Main {
           s"unknown query '$name' - run `graft.Main list` for the catalog")
         sys.exit(2)
       case Some(fn) =>
-        val spark = SparkSession.builder().master("local[*]")
-          .appName(s"graft:$name")
-          .config("spark.sql.shuffle.partitions", "32")
-          .config("spark.sql.session.timeZone", "UTC")
-          .config("spark.ui.enabled", "false").getOrCreate()
-        spark.sparkContext.setLogLevel("ERROR")
+        val spark = Sessions.local(Runtime.getRuntime.availableProcessors)
         val df = fn(spark, sfDir)
         if (explain) df.explain("formatted")
         df.show(50, truncate = false)

@@ -28,8 +28,7 @@ object VectorFunctions {
   def cosine(a: Column, b: Column): Column = dot(a, b) / (norm(a) * norm(b))
 
   // Native codegen'd variants (graft.plans.FloatVectorDot) — identical
-  // double accumulation order, so results are bit-equal to the HOF forms;
-  // the session must have called FloatVectorExprs.register first.
+  // double accumulation order, so results are bit-equal to the HOF forms.
   def dotNative(a: Column, b: Column): Column = call_function("float_dot", a, b)
 
   def cosineNative(a: Column, b: Column): Column =

@@ -172,7 +172,7 @@ object Compose {
                                  maxDocFreq: Long = 100,
                                  keepText: Boolean = true)
       : (DataFrame, Column, DataFrame, DataFrame, DataFrame) = {
-    Sampling.registerMargin(documents.sparkSession)
+    graft.GraftExtensions.install(documents.sparkSession)
     val base = withTokens(documents)
     val gate = Sampling.modelMargin(col("text")) >
       lit(QualityCoefficients.MarginTau)

@@ -203,6 +203,44 @@ object Dedup {
       docToks
         .filter(size(col("t")) >= 3)
         .select(col("doc_id"), shingles(col("t"), 3).as("grams")))
+    val (capped, ncc) = cappedCandidates(docGrams, maxDocFreq)
+    // Upper-bound prune (the similarity-join positional-filter idea):
+    // instead of dragging both gram ARRAYS through a join for every pair
+    // that shares even one random shingle, bound n_common from the
+    // capped count. True n_common exceeds ncc by at most the smaller
+    // side's HOT-gram count, and jaccard is monotone in n_common — so
+    // j(ncc + min(hotA, hotB)) is a provable upper bound and any pair
+    // below threshold on it can be dropped WITHOUT rescoring. Only the
+    // few survivors touch the arrays.
+    // per-doc totals: ng = all grams (per-row, no shuffle), ngc = capped
+    // grams — ints only, joined on doc id (AQE broadcasts when small)
+    val ngAll = docGrams.select(col("doc_id"), size(col("grams")).cast("long").as("ng"))
+    val ngCap = capped.groupBy(col("doc_id")).agg(count(lit(1)).as("ngc"))
+    val counts = ngAll.join(ngCap, Seq("doc_id"))
+    val pruned = ncc
+      .join(counts.select(col("doc_id").as("doc_a"),
+        col("ng").as("ng_a"), col("ngc").as("ngc_a")), "doc_a")
+      .join(counts.select(col("doc_id").as("doc_b"),
+        col("ng").as("ng_b"), col("ngc").as("ngc_b")), "doc_b")
+      .withColumn("nc_upper",
+        col("ncc") + least(col("ng_a") - col("ngc_a"), col("ng_b") - col("ngc_b")))
+      .filter(col("nc_upper").cast("double") /
+        (col("ng_a") + col("ng_b") - col("nc_upper")) >= threshold)
+      .select(col("doc_a"), col("doc_b"))
+    // exact rescoring over full gram sets (arrays are per-doc sized), so
+    // (n_common, ng_a, ng_b, jaccard) are identical to the uncapped
+    // operator for every surviving candidate — same output schema too
+    rescoreExact(pruned, docGrams, threshold)
+  }
+
+  /** The capped candidate stage over per-doc gram arrays: `capped` is
+    * every (doc_id, gh) gram-hash row whose gram occurs in at most
+    * `maxDocFreq` documents (cached, released via Caches.release()), and
+    * `ncc` counts, per candidate pair (doc_a < doc_b), the capped grams
+    * the two documents share. [[ngramJaccardPairsCappedTokRaw]] prunes
+    * and rescores these pairs; the soak counts them. */
+  private[graft] def cappedCandidates(docGrams: DataFrame,
+                                      maxDocFreq: Long): (DataFrame, DataFrame) = {
     // candidate stages key on xxhash64(gram), not the gram STRING: the
     // df-count groupBy and the pair self-join are the pipeline's two big
     // shuffles, and an 8-byte key beats a ~25-byte text shingle in both
@@ -228,39 +266,14 @@ object Dedup {
       .filter(col("_df") > maxDocFreq)
       .select(col("gh"))
     val capped = Caches.track(g.join(broadcast(hot), Seq("gh"), "left_anti"))
-    // Upper-bound prune (the similarity-join positional-filter idea):
-    // instead of DISTINCT-ing candidate pairs and dragging both gram
-    // ARRAYS through a join for every pair that shares even one random
-    // shingle, count the common CAPPED grams per pair (a pure integer
-    // aggregate on the same shuffle). True n_common exceeds that count
-    // by at most the smaller side's HOT-gram count, and jaccard is
-    // monotone in n_common — so j(ncc + min(hotA, hotB)) is a provable
-    // upper bound and any pair below threshold on it can be dropped
-    // WITHOUT rescoring. Only the few survivors touch the arrays.
+    // common CAPPED grams per pair: a pure integer aggregate on the
+    // self-join's shuffle, never a DISTINCT over pairs
     val ncc = capped.select(col("doc_id").as("doc_a"), col("gh"))
       .join(capped.select(col("doc_id").as("doc_b"), col("gh")), Seq("gh"))
       .filter(col("doc_a") < col("doc_b"))
       .groupBy(col("doc_a"), col("doc_b"))
       .agg(count(lit(1)).as("ncc"))
-    // per-doc totals: ng = all grams (per-row, no shuffle), ngc = capped
-    // grams — ints only, joined on doc id (AQE broadcasts when small)
-    val ngAll = docGrams.select(col("doc_id"), size(col("grams")).cast("long").as("ng"))
-    val ngCap = capped.groupBy(col("doc_id")).agg(count(lit(1)).as("ngc"))
-    val counts = ngAll.join(ngCap, Seq("doc_id"))
-    val pruned = ncc
-      .join(counts.select(col("doc_id").as("doc_a"),
-        col("ng").as("ng_a"), col("ngc").as("ngc_a")), "doc_a")
-      .join(counts.select(col("doc_id").as("doc_b"),
-        col("ng").as("ng_b"), col("ngc").as("ngc_b")), "doc_b")
-      .withColumn("nc_upper",
-        col("ncc") + least(col("ng_a") - col("ngc_a"), col("ng_b") - col("ngc_b")))
-      .filter(col("nc_upper").cast("double") /
-        (col("ng_a") + col("ng_b") - col("nc_upper")) >= threshold)
-      .select(col("doc_a"), col("doc_b"))
-    // exact rescoring over full gram sets (arrays are per-doc sized), so
-    // (n_common, ng_a, ng_b, jaccard) are identical to the uncapped
-    // operator for every surviving candidate — same output schema too
-    rescoreExact(pruned, docGrams, threshold)
+    (capped, ncc)
   }
 
   /** Shared exact-rescore tail: join candidate (doc_a, doc_b) pairs with
@@ -512,7 +525,7 @@ object Dedup {
       threshold: Double = 0.40, bits: Int = 32,
       bands: Int = 8, dim: Int = 64): DataFrame = {
     require(bits % bands == 0, "bands must divide bits")
-    graft.plans.FloatVectorExprs.register(s)
+    graft.GraftExtensions.install(s)
     import graft.functions.VectorFunctions.dotNative
     // per-vector norm computed ONCE here (sqrt(dot(v,v)) is the same
     // double wherever computed, so the per-pair cosine stays bit-equal
@@ -565,7 +578,7 @@ object Dedup {
     * cross join is a cartesian death sentence at corpus scale). */
   def embeddingNearDupPairsExact(s: SparkSession, dir: String,
                                  threshold: Double = 0.40): DataFrame = {
-    graft.plans.FloatVectorExprs.register(s)
+    graft.GraftExtensions.install(s)
     import graft.functions.VectorFunctions.cosineNative
     val e = Tables(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
     val a = e.select(col("vec_id").as("vec_a"), col("embedding").as("va"))
@@ -814,7 +827,7 @@ object Dedup {
     * (banding: distance ≤ 3 guarantees a shared band among 4 bands). */
   def simhashPairs(s: SparkSession, dir: String,
                    maxHamming: Int = 6): DataFrame = {
-    graft.plans.SimHashMd5.register(s)
+    graft.GraftExtensions.install(s)
     // cached: the md5-per-token signature is the dominant per-row cost
     // (hence the spread scan) and feeds BOTH sides of the band
     // self-join; released via Caches.release()
@@ -1007,7 +1020,7 @@ object Dedup {
     * deployment precomputes this once over the corpus. */
   private[graft] def embSketchProjection(vecs: DataFrame, bits: Int = 32,
                                          dim: Int = 64): DataFrame = {
-    graft.plans.FloatVectorExprs.register(vecs.sparkSession)
+    graft.GraftExtensions.install(vecs.sparkSession)
     import graft.functions.VectorFunctions.dotNative
     Similarity.hyperplaneSketch(vecs, "embedding", bits, dim)
       .withColumn("_norm", sqrt(dotNative(col("embedding"), col("embedding"))))

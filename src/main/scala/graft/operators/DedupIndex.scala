@@ -577,7 +577,7 @@ object DedupIndex {
     * both fixed for a given (session, prefix, buckets), so re-planning
     * the probe under disabled-broadcast confs on every call re-proves a
     * theorem that cannot have changed — and that planning pass alone
-    * measured ~1.0 s of q79's wall (ProfileIndex). First call per
+    * measured ~1.0 s of q79's wall (stage profile). First call per
     * (session, prefix, buckets) still runs the full lint, so any code
     * change is caught by every fresh session (each Verify/Bench/test
     * JVM). WEAK-keyed on the session object itself (r11 ADVICE): an

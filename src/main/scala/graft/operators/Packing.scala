@@ -287,8 +287,8 @@ object Packing {
     // modest-byte shuffle into ONE task — which then opens/closes every
     // shard's parquet file SEQUENTIALLY, serializing the per-file
     // constant the dynamic writer pays per partition directory
-    // (ProfileStages: 4.9 s one-task vs 1.2 s at the session's shuffle
-    // width for the same 28-shard write; §2.2/§6 — a write job wants
+    // (OPTIMIZATION_r16.md: 4.9 s one-task vs 1.2 s at the session's
+    // shuffle width for the same 28-shard write; §2.2/§6 — a write job wants
     // its file-open constants parallelized, not its partitions fewer).
     // The count is the session's configured shuffle width — the same
     // scale-adaptive value the bare form would use before coalescing
@@ -320,7 +320,7 @@ object Packing {
   def writeCleanShards(s: SparkSession, dir: String, budget: Long = 512,
                        seqsPerShard: Long = 8): DataFrame =
     // LAZY survivor frame, counts from the funnel's own token arrays
-    // (r15 measurement, ProfileStages): the funnel caches its exact-dedup
+    // (r15 stage-profile measurement): the funnel caches its exact-dedup
     // stage and solves the pair subgraph into a local relation at plan
     // time, so the writer's extra evaluations re-run only a cache-fed
     // anti-join (~0.3 s) — while the r15-interim eager localCheckpoint
@@ -388,7 +388,7 @@ object Packing {
     // with the pin). The checkpoint holds (doc_id, text) survivor rows
     // — the stage-boundary working set, bounded by the cleaned corpus.
     //
-    // r15 RESTRUCTURE, from ProfileStages measurement:
+    // r15 RESTRUCTURE, from stage-profile measurement:
     //  - the survivor frame stays LAZY (see writeCleanShards — the
     //    funnel's internal caches make re-evaluation a cache-fed
     //    anti-join, while eagerly checkpointing the text cost ~2 s and

@@ -202,7 +202,7 @@ object Sampling {
   def contaminatedSpansFor(trainToks: DataFrame, evalToks: DataFrame,
                            k: Int = 8): DataFrame = {
     import graft.functions.TextFunctions.shingles
-    graft.plans.ShingleWindows.register(evalToks.sparkSession)
+    graft.GraftExtensions.install(evalToks.sparkSession)
     // 1-based gram start positions (matching the oracle's
     // generate_series); shingle_windows is the non-distinct native
     // window builder — a gram repeated inside the eval doc anchors a
@@ -377,20 +377,17 @@ object Sampling {
     * oracle-exact where the model FIT never could be. Per-row compute,
     * shuffle-free; the |vocab| filter folds are the broadcast-scoring
     * shape [[graft.ml.QualityModel.score]] runs with the live model
-    * (MlSpec pins this literal margin ≡ the fitted model's margin). */
+    * (MlSpec pins this literal margin ≡ the fitted model's margin).
+    *
+    * Callers run [[graft.GraftExtensions.install]] on the session before
+    * building the plan. The native expression computes the frozen fold
+    * in ONE pass with whole-stage codegen instead of |vocab| interpreted
+    * array-filter subtrees per row ([[graft.plans.QualityMarginExpr]] —
+    * bit-identical by the vocab-order integer-tf argument there, pinned
+    * in MarginExprSpec and gated end-to-end by the q108/q111/q112 oracle
+    * hashes). */
   def modelMargin(text: Column): Column =
     call_function("quality_margin", text)
-
-  /** Register the native margin in `s`'s function registry — callers of
-    * [[modelMargin]] do this once before building the plan (the
-    * FloatVectorExprs.register pattern). The native expression computes
-    * the frozen fold in ONE pass with whole-stage codegen instead of
-    * |vocab| interpreted array-filter subtrees per row
-    * ([[graft.plans.QualityMarginExpr]] — bit-identical by the vocab-
-    * order integer-tf argument there, pinned in MarginExprSpec and gated
-    * end-to-end by the q108/q111/q112 oracle hashes). */
-  def registerMargin(s: SparkSession): Unit =
-    graft.plans.QualityMarginExpr.register(s)
 
   /** [[modelMargin]]'s fold over ANY frozen (vocab, idf, coef,
     * intercept) tuple — MlSpec fits a live model, extracts the tuple
@@ -433,7 +430,7 @@ object Sampling {
   /** Core of q108 over any (doc_id, source, text) frame. */
   def modelQuotaFor(documents: DataFrame, k: Int = 10,
                     salts: Int = QuotaSalts): DataFrame = {
-    registerMargin(documents.sparkSession)
+    graft.GraftExtensions.install(documents.sparkSession)
     modelQuotaScored(documents.select(
       col("doc_id"), col("source"),
       graft.functions.TextFunctions.tokenCount(col("text")).as("n_tokens"),

@@ -42,7 +42,7 @@ object Similarity {
     * entry. */
   def bruteForceTopKFor(s: SparkSession, e0: DataFrame,
                         k: Int = 5, nQueries: Int = 10): DataFrame = {
-    FloatVectorExprs.register(s)
+    graft.GraftExtensions.install(s)
     // per-vector norm computed ONCE, not per pair — sqrt(dot(v,v)) on the
     // same input is the same double, so cosine stays bit-identical to the
     // per-pair formulation (and to the oracle) while rescoring does one
@@ -84,7 +84,7 @@ object Similarity {
     * HOF formulation kept in [[hyperplaneSketchHof]] (parity spec). */
   def hyperplaneSketch(df: DataFrame, vecCol: String, bits: Int, dim: Int,
                        seed: Int = 42): DataFrame = {
-    graft.plans.HyperplaneSketch.register(df.sparkSession)
+    graft.GraftExtensions.install(df.sparkSession)
     df.withColumn("sketch",
       call_function("hyperplane_sketch", col(vecCol),
         lit(bits), lit(dim), lit(seed)))
@@ -134,7 +134,7 @@ object Similarity {
                  dim: Int = 64): DataFrame = {
     require(bits % bands == 0,
       s"bands ($bands) must divide bits ($bits) — trailing sketch bits would be silently unused")
-    FloatVectorExprs.register(s)
+    graft.GraftExtensions.install(s)
     val r = bits / bands
     val mask = (1L << r) - 1
     val e = hyperplaneSketch(e0, "embedding", bits, dim)
@@ -285,7 +285,7 @@ object Similarity {
     * recall gate measures how the FIXED centroids hold up at 10×). */
   def ivfTopKFor(s: SparkSession, e0: DataFrame, k: Int = 5,
                  nQueries: Int = 10, nProbe: Int = DefaultNProbe): DataFrame = {
-    FloatVectorExprs.register(s)
+    graft.GraftExtensions.install(s)
     val cents = IvfCentroids.cells
     val halfSq = cents.map(c => 0.5 * IvfCentroids.sqNorm(c))
     val cnorm = cents.map(c => math.sqrt(IvfCentroids.sqNorm(c)))
@@ -447,7 +447,7 @@ object Similarity {
     * the incremental ingest so the two paths can never assign a vector
     * differently. */
   private def ivfStoreRows(e0: DataFrame): DataFrame = {
-    FloatVectorExprs.register(e0.sparkSession)
+    graft.GraftExtensions.install(e0.sparkSession)
     val cents = IvfCentroids.cells
     val halfSq = cents.map(c => 0.5 * IvfCentroids.sqNorm(c))
     val scores = array(cents.indices.map(j =>
@@ -556,7 +556,7 @@ object Similarity {
     * probed cells, so results are row-identical to q38's. */
   def ivfProbeStore(s: SparkSession, path: String, queries0: DataFrame,
                     k: Int, nQueries: Int, nProbe: Int): DataFrame = {
-    FloatVectorExprs.register(s)
+    graft.GraftExtensions.install(s)
     val cents = IvfCentroids.cells
     val cnorm = cents.map(c => math.sqrt(IvfCentroids.sqNorm(c)))
     val queries = queries0.filter(col("vec_id") < nQueries)

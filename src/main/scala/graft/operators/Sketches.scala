@@ -74,7 +74,7 @@ object Sketches {
     * deliberately does NOT happen inside this lambda: higher-order-
     * function bodies evaluate INTERPRETED (no codegen), and an
     * interpreted md5+conv per shingle was measured at ~80% of q83's
-    * wall (ProfileQ83). Callers explode first and hash at row level,
+    * wall (stage profile). Callers explode first and hash at row level,
     * where [[md5Long]] is whole-stage-codegen'd. */
   private[graft] def shingleWindows(toks: Column, k: Int = ShingleK): Column =
     transform(sequence(lit(1), size(toks) - (k - 1)),
@@ -85,12 +85,12 @@ object Sketches {
     * k)))` convention, computed by the NATIVE one-pass
     * `shingle_hashes_md5` expression (spec-asserted equal to the
     * declarative [[shingleWindows]]+[[md5Long]] form, which the oracle
-    * replays; ProfileQ83 measured the interpreted form at ~60-80% of
+    * replays; a stage profile measured the interpreted form at ~60-80% of
     * q83's wall). The corpus guarantees ≥ k tokens per document.
     * Shared by q83, the soak gate, and the streaming twin. */
   private[graft] def shingleHashRows(df: DataFrame, keep: Seq[String],
                                      k: Int = ShingleK): DataFrame = {
-    graft.plans.ShingleHashesMd5.register(df.sparkSession)
+    graft.GraftExtensions.install(df.sparkSession)
     df.select(keep.map(col) :+
       explode(call_function("shingle_hashes_md5",
         tokens(col("text")), lit(k))).as("hv"): _*)
@@ -103,7 +103,7 @@ object Sketches {
     * log2 (not correctly-rounded-guaranteed; a one-ulp slip at a
     * power-of-two boundary would flip a register), and no higher-order
     * function (HOF lambdas evaluate interpreted; the original
-    * 52-comparison `filter` formulation cost ~0.5 s/rep in ProfileQ83).
+    * 52-comparison `filter` formulation cost ~0.5 s/rep in the q83 profile).
     * The DuckDB oracle keeps its own pure-integer-comparison
     * formulation; both produce the identical integer. */
   private[graft] val rhoExpr: Column = expr(
@@ -222,7 +222,7 @@ object Sketches {
     * per task) and probes it with a candidate stream. Here the exact
     * table doubles as candidate source and audit foil. */
   def cmsHeavyHitters(s: SparkSession, dir: String): DataFrame = {
-    bigramsReg(s)
+    graft.GraftExtensions.install(s)
     val cnt = Caches.track(
       docs(s, dir)
         .select(explode(bigrams(tokens(col("text")))).as("bigram"))
@@ -246,15 +246,10 @@ object Sketches {
     * kept as STRINGS because the CMS salts re-hash them per row. The
     * k=2 case of the native `shingle_windows` expression (the
     * declarative transform+slice lambda evaluates interpreted — same
-    * measured story as [[shingleHashRows]]). Callers must [[bigramsReg]]
-    * the session first. */
+    * measured story as [[shingleHashRows]]). Callers must run
+    * [[graft.GraftExtensions.install]] on the session first. */
   private[graft] def bigrams(toks: Column): Column =
     call_function("shingle_windows", toks, lit(2))
-
-  /** Register the native window builder on the session that will
-    * evaluate [[bigrams]]. */
-  private[graft] def bigramsReg(s: SparkSession): Unit =
-    graft.plans.ShingleWindows.register(s)
 
   // ---------------------------------------------------------------- Bloom
 
@@ -334,7 +329,7 @@ object Sketches {
     * Spec-asserted equal, key-for-key, to [[bloomProbe]]. */
   def bloomProbePacked(keys: DataFrame, packed: Array[Byte],
                        keyCol: String): DataFrame = {
-    graft.plans.BloomProbeMd5.register(keys.sparkSession)
+    graft.GraftExtensions.install(keys.sparkSession)
     keys.filter(call_function("bloom_probe_md5", col(keyCol), lit(packed)))
   }
 
@@ -365,7 +360,7 @@ object Sketches {
     // per-doc distinct grams via the native window builder (value-equal
     // to TextFunctions.shingles — the native-equality spec — minus the
     // interpreted per-window lambda cost)
-    graft.plans.ShingleWindows.register(s)
+    graft.GraftExtensions.install(s)
     def grams = array_distinct(
       call_function("shingle_windows", col("t"), lit(k)))
     val g = Caches.track(

@@ -332,7 +332,7 @@ object TextOps {
     * oracles replay). */
   private def positionedGrams(documents: DataFrame,
                               k: Int): (DataFrame, DataFrame) = {
-    graft.plans.ShingleHashesMd5.register(documents.sparkSession)
+    graft.GraftExtensions.install(documents.sparkSession)
     val toks = documents.select(col("doc_id"), tokens(col("text")).as("_tk"))
     val grams = toks
       .select(col("doc_id"),

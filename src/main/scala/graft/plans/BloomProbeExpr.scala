@@ -76,16 +76,12 @@ object BloomProbeMd5 {
     true
   }
 
-  /** Arity-checked builder — shared by the per-session [[register]]
-    * path and the [[graft.GraftExtensions]] injection path. */
+  /** Arity-checked builder — the [[graft.GraftExtensions.functions]]
+    * entry both the extension and `install` register. */
   def build(exprs: Seq[Expression]): Expression = {
     require(exprs.length == 2,
       s"bloom_probe_md5 expects exactly 2 arguments (key string, " +
         s"packed bitmap binary), got ${exprs.length}")
     BloomProbeMd5(exprs.head, exprs(1))
   }
-
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "bloom_probe_md5", build, "built-in")
 }

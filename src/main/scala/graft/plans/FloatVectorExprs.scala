@@ -78,17 +78,11 @@ case class FloatVectorDot(left: Expression, right: Expression)
 }
 
 object FloatVectorExprs {
-  /** Arity-checked builder — shared by the per-session [[register]]
-    * path and the [[graft.GraftExtensions]] injection path. */
+  /** Arity-checked builder — the [[graft.GraftExtensions.functions]]
+    * entry both the extension and `install` register. */
   def build(exprs: Seq[Expression]): Expression = {
     require(exprs.length == 2,
       s"float_dot expects exactly 2 arguments (two array<float>), got ${exprs.length}")
     FloatVectorDot(exprs(0), exprs(1))
   }
-
-  /** Idempotently register the native functions in a session's registry
-    * (usable from SQL and via call_function). */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "float_dot", build, "built-in")
 }

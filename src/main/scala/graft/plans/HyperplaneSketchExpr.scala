@@ -86,8 +86,8 @@ object HyperplaneSketch {
     sketch
   }
 
-  /** Arity-checked builder — shared by the per-session [[register]]
-    * path and the [[graft.GraftExtensions]] injection path. */
+  /** Arity-checked builder — the [[graft.GraftExtensions.functions]]
+    * entry both the extension and `install` register. */
   def build(exprs: Seq[Expression]): Expression = {
     require(exprs.length == 4,
       s"hyperplane_sketch expects (array<float>, bits, dim, seed), got ${exprs.length} args")
@@ -98,8 +98,4 @@ object HyperplaneSketch {
     }
     HyperplaneSketch(exprs.head, intArg(1), intArg(2), intArg(3))
   }
-
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "hyperplane_sketch", build, "built-in")
 }

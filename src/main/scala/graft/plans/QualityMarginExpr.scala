@@ -112,15 +112,11 @@ object QualityMarginExpr {
     m
   }
 
-  /** Arity-checked builder — shared by the per-session [[register]]
-    * path and the [[graft.GraftExtensions]] injection path. */
+  /** Arity-checked builder — the [[graft.GraftExtensions.functions]]
+    * entry both the extension and `install` register. */
   def build(exprs: Seq[Expression]): Expression = {
     require(exprs.length == 1,
       s"quality_margin expects exactly 1 argument (string), got ${exprs.length}")
     QualityMargin(exprs.head)
   }
-
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "quality_margin", build, "built-in")
 }

@@ -97,8 +97,8 @@ object MinRollingHash {
     min
   }
 
-  /** Arity-checked builder — shared by the per-session [[register]]
-    * path and the [[graft.GraftExtensions]] injection path. */
+  /** Arity-checked builder — the [[graft.GraftExtensions.functions]]
+    * entry both the extension and `install` register. */
   def build(exprs: Seq[Expression]): Expression = {
     require(exprs.length == 2,
       s"min_rolling_hash(tokens, k) takes 2 arguments, got ${exprs.length}")
@@ -109,8 +109,4 @@ object MinRollingHash {
     }
     MinRollingHash(exprs.head, k)
   }
-
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "min_rolling_hash", build, "built-in")
 }

@@ -15,9 +15,9 @@ import org.apache.spark.sql.types._
   * replays in DuckDB.
   *
   * Why native: higher-order-function lambda bodies evaluate INTERPRETED
-  * — no whole-stage codegen inside `transform` — and ProfileQ83
-  * measured the interpreted slice+concat+md5 projection at ~60-80% of
-  * q83's wall. Here token bytes are fetched once per row and each
+  * — no whole-stage codegen inside `transform` — and a q83 stage
+  * profile measured the interpreted slice+concat+md5 projection at
+  * ~60-80% of q83's wall. Here token bytes are fetched once per row and each
   * window's buffer is assembled and hashed in a tight JVM loop.
   * Returns an empty array for docs shorter than k tokens (the
   * declarative sequence form would be undefined there; the corpus
@@ -85,8 +85,8 @@ object ShingleHashesMd5 {
     new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
   }
 
-  /** Arity-checked builder — shared by the per-session [[register]]
-    * path and the [[graft.GraftExtensions]] injection path. */
+  /** Arity-checked builder — the [[graft.GraftExtensions.functions]]
+    * entry both the extension and `install` register. */
   def build(exprs: Seq[Expression]): Expression = {
     require(exprs.length == 2,
       s"shingle_hashes_md5(tokens, k) takes 2 arguments, got ${exprs.length}")
@@ -97,10 +97,6 @@ object ShingleHashesMd5 {
     }
     ShingleHashesMd5(exprs.head, k)
   }
-
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "shingle_hashes_md5", build, "built-in")
 }
 
 /** All k-token shingle WINDOW STRINGS in one native pass:
@@ -111,8 +107,8 @@ object ShingleHashesMd5 {
   * Value-identical to `transform(sequence(...), i -> concat_ws(" ",
   * slice(toks, i, k)))`, which the oracle replays; the declarative
   * form's interpreted lambda cost is the same story as
-  * [[ShingleHashesMd5]] (measured in ProfileQ83). Empty array when
-  * fewer than k tokens. */
+  * [[ShingleHashesMd5]] (measured in the q83 stage profile). Empty
+  * array when fewer than k tokens. */
 case class ShingleWindows(child: Expression, k: Int)
     extends UnaryExpression {
 
@@ -173,8 +169,8 @@ object ShingleWindows {
     new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
   }
 
-  /** Arity-checked builder — shared by the per-session [[register]]
-    * path and the [[graft.GraftExtensions]] injection path. */
+  /** Arity-checked builder — the [[graft.GraftExtensions.functions]]
+    * entry both the extension and `install` register. */
   def build(exprs: Seq[Expression]): Expression = {
     require(exprs.length == 2,
       s"shingle_windows(tokens, k) takes 2 arguments, got ${exprs.length}")
@@ -185,8 +181,4 @@ object ShingleWindows {
     }
     ShingleWindows(exprs.head, k)
   }
-
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "shingle_windows", build, "built-in")
 }

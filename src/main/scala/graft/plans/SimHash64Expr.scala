@@ -62,17 +62,13 @@ object SimHash64 {
     sig
   }
 
-  /** Arity-checked builder — shared by the per-session [[register]]
-    * path and the [[graft.GraftExtensions]] injection path. */
+  /** Arity-checked builder — the [[graft.GraftExtensions.functions]]
+    * entry both the extension and `install` register. */
   def build(exprs: Seq[Expression]): Expression = {
     require(exprs.length == 1,
       s"simhash64 expects exactly 1 argument (array<string>), got ${exprs.length}")
     SimHash64(exprs.head)
   }
-
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "simhash64", build, "built-in")
 }
 
 /** 60-bit SimHash over md5-derived per-token hashes — the PORTABLE
@@ -144,15 +140,11 @@ object SimHashMd5 {
     sig
   }
 
-  /** Arity-checked builder — shared by the per-session [[register]]
-    * path and the [[graft.GraftExtensions]] injection path. */
+  /** Arity-checked builder — the [[graft.GraftExtensions.functions]]
+    * entry both the extension and `install` register. */
   def build(exprs: Seq[Expression]): Expression = {
     require(exprs.length == 1,
       s"simhash_md5_60 expects exactly 1 argument (array<string>), got ${exprs.length}")
     SimHashMd5(exprs.head)
   }
-
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "simhash_md5_60", build, "built-in")
 }

@@ -69,7 +69,7 @@ object QuotaScore {
     * columns [[Sampling.modelQuotaFor]] derives in-plan, so the store's
     * rows ARE the batch query's scored frame. */
   def scoreRows(docs: DataFrame): DataFrame = {
-    Sampling.registerMargin(docs.sparkSession)
+    graft.GraftExtensions.install(docs.sparkSession)
     docs.select(
       col("doc_id"), col("source"),
       graft.functions.TextFunctions.tokenCount(col("text")).as("n_tokens"),

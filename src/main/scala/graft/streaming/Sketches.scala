@@ -65,7 +65,7 @@ object Sketches {
   def windowedCmsCells(docs: DataFrame,
                        windowLen: String = "1 hour",
                        watermark: String = "30 minutes"): DataFrame = {
-    B.bigramsReg(docs.sparkSession)
+    graft.GraftExtensions.install(docs.sparkSession)
     docs.withWatermark("ingest_ts", watermark)
       .select(col("ingest_ts"),
         explode(B.bigrams(tokens(col("text")))).as("bigram"))

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Regenerates the checked-in quality-classifier artifact
@@ -36,13 +35,7 @@ object FitQualityModel {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val vocabSize = args.lift(1).map(_.toInt).getOrElse(32)
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.local(8)
     import graft.functions.TextFunctions.{tokenCount, distinctTokenCount}
     val docs = graft.sources.Tables(spark, dir, "documents")
     val nTokens = tokenCount(col("text"))

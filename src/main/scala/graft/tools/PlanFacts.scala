@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Prints the load-bearing physical-plan facts (exchange / join / sort
   * node counts) for the named queries — the measurement side of
   * PlanShapeSpec's golden pins. Run:
@@ -31,12 +29,7 @@ object PlanFacts {
     val sf = args.headOption.getOrElse("/root/testdata/sf0.1")
     val names = if (args.length > 1) args.drop(1).toSeq
                 else graft.SparkEntry.queries.keys.toSeq.sorted
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Sessions.local(4)
     names.foreach { q =>
       val p = graft.SparkEntry.queries(q)(spark, sf)
         .queryExecution.executedPlan.toString

@@ -50,22 +50,13 @@ object SoakScale {
 
   /** Candidate-pair count of the capped n-gram pipeline — the DISTINCT
     * (doc_a, doc_b) pairs sharing ≥1 capped gram, i.e. the rows entering
-    * q26's upper-bound prune. Mirrors ngramJaccardPairsCappedTokRaw's
-    * candidate stage (same keys, same cap). */
+    * q26's upper-bound prune: the shipped [[Dedup.cappedCandidates]]
+    * stage itself, counted. */
   def candidatePairCount(documents: DataFrame, maxDocFreq: Long = 100): Long = {
     val (n, sc) = Caches.scope {
-      val g = documents
-        .select(col("doc_id"), tokens(col("text")).as("t"))
-        .filter(size(col("t")) >= 3)
-        .select(col("doc_id"), explode(shingles(col("t"), 3)).as("gram"))
-        .select(col("doc_id"), xxhash64(col("gram")).as("gh"))
-      val hot = g.groupBy(col("gh")).agg(count(lit(1)).as("_df"))
-        .filter(col("_df") > maxDocFreq).select(col("gh"))
-      val capped = Caches.track(g.join(broadcast(hot), Seq("gh"), "left_anti"))
-      capped.select(col("doc_id").as("doc_a"), col("gh"))
-        .join(capped.select(col("doc_id").as("doc_b"), col("gh")), Seq("gh"))
-        .filter(col("doc_a") < col("doc_b"))
-        .select(col("doc_a"), col("doc_b")).distinct().count()
+      val (_, ncc) = Dedup.cappedCandidates(
+        Caches.track(Dedup.gramsFor(documents)), maxDocFreq)
+      ncc.count()
     }
     sc.release(); n
   }
@@ -242,17 +233,7 @@ object SoakScale {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.limit.initialNumPartitions", cpus)
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     spark.range(1000).selectExpr("sum(id)").collect()
 
     // spread + cached like the real query paths (the raw sf0.1 parquet is
@@ -883,7 +864,7 @@ object SoakScale {
       sc.release(); (n, (System.nanoTime() - t0) / 1e9)
     }
     def cmsCellRows(df: DataFrame): (Long, Double) = {
-      Sk.bigramsReg(df.sparkSession)
+      graft.GraftExtensions.install(df.sparkSession)
       val t0 = System.nanoTime()
       val (n, sc) = Caches.scope {
         Sk.cmsCells(

@@ -4,13 +4,12 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.functions.VectorFunctions
-import graft.plans.FloatVectorExprs
 
 class ExpressionSpec extends AnyFunSuite {
   import TestSpark._
 
   test("native float_dot is bit-identical to the HOF formulation") {
-    FloatVectorExprs.register(spark)
+    GraftExtensions.install(spark)
     val e = graft.sources.Tables(spark, sf, "embeddings")
       .select(col("vec_id"), col("embedding"))
     val pairs = e.as("a").crossJoin(e.as("b").limit(5))
@@ -23,7 +22,7 @@ class ExpressionSpec extends AnyFunSuite {
   }
 
   test("float_dot handles nulls and is usable from SQL") {
-    FloatVectorExprs.register(spark)
+    GraftExtensions.install(spark)
     val r = spark.sql(
       "SELECT float_dot(array(cast(1.0 as float), cast(2.0 as float)), " +
         "array(cast(3.0 as float), cast(4.0 as float))) AS d," +
@@ -34,7 +33,7 @@ class ExpressionSpec extends AnyFunSuite {
   }
 
   test("min_rolling_hash matches brute-force recomputation and edge cases") {
-    graft.plans.MinRollingHash.register(spark)
+    GraftExtensions.install(spark)
     val docs = graft.sources.Tables(spark, sf, "documents")
       .selectExpr("doc_id", "split(text, ' ') AS t")
       .filter(expr("size(t) >= 8")).limit(50).cache()
@@ -111,7 +110,7 @@ class ExpressionSpec extends AnyFunSuite {
   }
 
   test("float_dot yields null on length-mismatched vectors (codegen + interpreted)") {
-    FloatVectorExprs.register(spark)
+    GraftExtensions.install(spark)
     // codegen path (whole-stage over a real plan)
     val r = spark.range(1).selectExpr(
       "float_dot(array(cast(1.0 as float), cast(2.0 as float)), " +
@@ -128,8 +127,7 @@ class ExpressionSpec extends AnyFunSuite {
   }
 
   test("native function registration validates arity with a descriptive error") {
-    FloatVectorExprs.register(spark)
-    graft.plans.SimHash64.register(spark)
+    GraftExtensions.install(spark)
     val e1 = intercept[Exception] { spark.sql("SELECT simhash64()").collect() }
     assert(e1.getMessage.contains("simhash64"))
     val e2 = intercept[Exception] {
@@ -139,7 +137,7 @@ class ExpressionSpec extends AnyFunSuite {
   }
 
   test("float_dot rejects wrong input types at analysis time") {
-    FloatVectorExprs.register(spark)
+    GraftExtensions.install(spark)
     val err = intercept[Exception] {
       spark.sql("SELECT float_dot(array(1.0D), array(2.0D))").collect()
     }
@@ -149,7 +147,7 @@ class ExpressionSpec extends AnyFunSuite {
 
   test("native quality_margin is bit-identical to the Catalyst fold (corpus + edges)") {
     import graft.operators.{QualityCoefficients, Sampling}
-    Sampling.registerMargin(spark)
+    GraftExtensions.install(spark)
     // planted edges: empty text, multi/leading/trailing spaces, case
     // folding, vocab words embedded in longer words (must NOT count),
     // repeated vocab words, and a vocab-free document

@@ -5,8 +5,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Spec for the `spark.sql.extensions=graft.GraftExtensions` entry
   * point: every native expression must resolve in plain SQL on a session
-  * built WITH the extension and WITHOUT any imperative `register()`
-  * call, and must agree with the register() path value-for-value. */
+  * built WITH the extension and WITHOUT any `install` call, and must
+  * agree with the `install` path value-for-value. */
 class ExtensionsSpec extends AnyFunSuite {
   import TestSpark._
 
@@ -35,7 +35,8 @@ class ExtensionsSpec extends AnyFunSuite {
           |       hyperplane_sketch(array(cast(1.0 AS float), cast(-1.0 AS float)), 8, 2, 42) AS hp,
           |       bloom_probe_md5('k', cast('' AS BINARY)) AS bp0,
           |       shingle_hashes_md5(array('a','b','c'), 2) AS shs,
-          |       shingle_windows(array('a','b','c'), 2) AS shw
+          |       shingle_windows(array('a','b','c'), 2) AS shw,
+          |       quality_margin('join hash JOIN') AS qm
           |""".stripMargin).head
 
       assert(row.getDouble(0) == 11.0, s"float_dot: ${row.getDouble(0)}")
@@ -44,21 +45,33 @@ class ExtensionsSpec extends AnyFunSuite {
         "shingle_hashes_md5 must emit one hash per 2-token window")
       assert(row.getSeq[String](7) == Seq("a b", "b c"),
         "shingle_windows must emit the space-joined windows")
-      // the register() path on the base session must agree bit-for-bit
-      graft.plans.SimHash64.register(base)
-      graft.plans.SimHashMd5.register(base)
-      graft.plans.MinRollingHash.register(base)
-      graft.plans.HyperplaneSketch.register(base)
+      // the install path on the base session must agree bit-for-bit
+      GraftExtensions.install(base)
       val expect = base.sql(
         """SELECT simhash64(array('the','quick','fox')),
           |       simhash_md5_60(array('the','quick','fox')),
           |       min_rolling_hash(array('a','b','c','d'), 2),
-          |       hyperplane_sketch(array(cast(1.0 AS float), cast(-1.0 AS float)), 8, 2, 42)
+          |       hyperplane_sketch(array(cast(1.0 AS float), cast(-1.0 AS float)), 8, 2, 42),
+          |       quality_margin('join hash JOIN')
           |""".stripMargin).head
       assert(row.getLong(1) == expect.getLong(0), "simhash64 disagrees")
       assert(row.getLong(2) == expect.getLong(1), "simhash_md5_60 disagrees")
       assert(row.getLong(3) == expect.getLong(2), "min_rolling_hash disagrees")
       assert(row.getLong(4) == expect.getLong(3), "hyperplane_sketch disagrees")
+      assert(row.getDouble(8) == expect.getDouble(4), "quality_margin disagrees")
+
+      // every table entry resolves on both sessions, and a repeat
+      // install keeps each registration as it was
+      import org.apache.spark.sql.catalyst.FunctionIdentifier
+      val names = GraftExtensions.functions.map(_._1)
+      for (sess <- Seq(ext, base); n <- names)
+        assert(sess.catalog.functionExists(n), s"$n missing")
+      val registry = base.sessionState.functionRegistry
+      def infos = names.map(n => registry.lookupFunction(FunctionIdentifier(n)).get)
+      val before = infos
+      GraftExtensions.install(base)
+      assert(before.zip(infos).forall { case (a, b) => a eq b },
+        "a second install must leave every registration untouched")
 
       // DESCRIBE FUNCTION surfaces the injected usage text
       val desc = ext.sql("DESCRIBE FUNCTION float_dot")

@@ -60,7 +60,7 @@ class PropertySpec extends AnyFunSuite {
   test("simhash64 is permutation-invariant in token multiset sign sums") {
     // shuffling tokens never changes the signature (per-bit sums commute)
     forAll(words) { ws =>
-      graft.plans.SimHash64.register(spark)
+      GraftExtensions.install(spark)
       val sig = (l: List[String]) => Seq(l).toDF("t")
         .select(call_function("simhash64", col("t"))).head.getLong(0)
       assert(sig(ws) == sig(scala.util.Random.shuffle(ws)))
@@ -69,7 +69,7 @@ class PropertySpec extends AnyFunSuite {
 
   test("simhash_md5_60 is permutation-invariant and equals a direct recompute") {
     forAll(words) { ws =>
-      graft.plans.SimHashMd5.register(spark)
+      GraftExtensions.install(spark)
       val sig = (l: List[String]) => Seq(l).toDF("t")
         .select(call_function("simhash_md5_60", col("t"))).head.getLong(0)
       val s = sig(ws)

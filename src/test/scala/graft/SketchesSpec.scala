@@ -67,8 +67,7 @@ class SketchesSpec extends AnyFunSuite {
 
   test("native shingle_hashes_md5 equals the declarative " +
        "transform+md5Long form element-for-element on the real corpus") {
-    graft.plans.ShingleHashesMd5.register(spark)
-    Sketches.bigramsReg(spark)
+    GraftExtensions.install(spark)
     import graft.functions.TextFunctions.{md5Long, tokens}
     val toks = tokens(col("text"))
     val both = graft.sources.Tables(spark, sf, "documents")
@@ -147,7 +146,7 @@ class SketchesSpec extends AnyFunSuite {
 
   test("cms: estimate >= exact for EVERY bigram, and equality holds " +
        "exactly when the key collides with mass in all 4 rows") {
-    Sketches.bigramsReg(spark)
+    GraftExtensions.install(spark)
     val cnt = graft.sources.Tables(spark, sf, "documents")
       .select(explode(Sketches.bigrams(
         graft.functions.TextFunctions.tokens(col("text")))).as("bigram"))

@@ -56,7 +56,7 @@ class StreamingSketchesSpec extends AnyFunSuite {
     // the flush doc's own window (+9h) never closes, so only the BASE
     // documents' windows emit — the batch foil is over base alone
     val mergedCells = S.mergeCells(winCells)
-    B.bigramsReg(spark)
+    GraftExtensions.install(spark)
     val batchCells = B.cmsCells(
       base
         .select(explode(B.bigrams(graft.functions.TextFunctions
