@@ -133,8 +133,4 @@ object Evaluate {
     val wss = pred.agg(sum(d2ToOwn)).head.getDouble(0)
     (bss / (k - 1)) / (wss / (n - k))
   }
-
-  /** Year/predicate train-test split (P8: `train = df.Year < 2005`). */
-  def splitByPredicate(df: DataFrame, predicate: org.apache.spark.sql.Column): (DataFrame, DataFrame) =
-    (df.filter(predicate), df.filter(!predicate))
 }

@@ -24,10 +24,6 @@ object Features {
     new StandardScaler().setInputCol(in).setOutputCol(out)
       .setWithMean(true).setWithStd(true)
 
-  /** [0,1] scaling (sklearn MinMaxScaler). */
-  def minMaxScaler(in: String = "features", out: String = "scaled"): MinMaxScaler =
-    new MinMaxScaler().setInputCol(in).setOutputCol(out)
-
   /** One-hot ≡ pandas get_dummies(drop_first=True)
     * (codes_in_book_of_statisct.ipynb cell 168): alphabetDesc indexing
     * puts the alphabetically FIRST category at the last index, so
@@ -46,11 +42,6 @@ object Features {
                  out: String = "poly"): PolynomialExpansion =
     new PolynomialExpansion().setDegree(degree).setInputCol(in).setOutputCol(out)
 
-  /** Interaction terms (statsmodels `x1:x2`,
-    * codes_in_book_of_statisct.ipynb cell 159). */
-  def interaction(cols: Seq[String], out: String = "interacted"): Interaction =
-    new Interaction().setInputCols(cols.toArray).setOutputCol(out)
-
   /** TF-IDF text pipeline (sklearn TfidfVectorizer(max_features,
     * stop_words), data_mining_Assignment1.ipynb cell 52):
     * tokenize → stopword-filter → count-vectorize → IDF. */
@@ -63,12 +54,6 @@ object Features {
     val idf = new IDF().setInputCol("_tf").setOutputCol(out)
     new Pipeline().setStages(Array(tok, stop, cv, idf))
   }
-
-  /** Mean imputation (sklearn SimpleImputer(strategy='mean'),
-    * data_mining_Assignment1.ipynb cell 52). */
-  def meanImputer(cols: Seq[String]): Imputer =
-    new Imputer().setInputCols(cols.toArray)
-      .setOutputCols(cols.map(c => s"${c}_imp").toArray).setStrategy("mean")
 
   /** Quantile/threshold binning (pd.cut, data_mining_Assignment1.ipynb
     * cell 7). */

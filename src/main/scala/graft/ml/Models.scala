@@ -5,7 +5,7 @@ import org.apache.spark.ml.clustering.{KMeans, KMeansModel}
 import org.apache.spark.ml.evaluation._
 import org.apache.spark.ml.feature.PCA
 import org.apache.spark.ml.regression._
-import org.apache.spark.ml.tuning.{CrossValidator, CrossValidatorModel, ParamGridBuilder}
+import org.apache.spark.ml.tuning.{CrossValidator, ParamGridBuilder}
 import org.apache.spark.ml.param.ParamMap
 import org.apache.spark.ml.Estimator
 import org.apache.spark.sql.DataFrame
@@ -44,11 +44,6 @@ object Models {
                regParam: Double = 0.0): LogisticRegression =
     new LogisticRegression().setLabelCol(labelCol).setFeaturesCol(featuresCol)
       .setRegParam(regParam)
-
-  /** Binomial GLM — the `sm.GLM(family=Binomial())` route (M2). */
-  def binomialGlm(labelCol: String, featuresCol: String = "features"): GeneralizedLinearRegression =
-    new GeneralizedLinearRegression().setFamily("binomial").setLink("logit")
-      .setLabelCol(labelCol).setFeaturesCol(featuresCol)
 
   /** Gaussian Naive Bayes (M5). */
   def gaussianNB(labelCol: String, featuresCol: String = "features"): NaiveBayes =
@@ -131,8 +126,6 @@ object Models {
                     evaluator: Evaluator, folds: Int = 5): CrossValidator =
     new CrossValidator().setEstimator(est).setEstimatorParamMaps(grid)
       .setEvaluator(evaluator).setNumFolds(folds).setSeed(42L)
-
-  def bestOf(m: CrossValidatorModel): org.apache.spark.ml.Model[_] = m.bestModel
 
   /** Convenience grid builder for a single hyperparameter sweep. */
   def grid[T](param: org.apache.spark.ml.param.Param[T], values: Seq[T]): Array[ParamMap] =

@@ -72,13 +72,6 @@ object Compose {
     survivorsTok(s, dir, threshold, maxDocFreq)
       .select(col("doc_id"), col("text"))
 
-  /** [[survivors]] over ANY (doc_id, text) frame. */
-  def survivorsFor(documents: DataFrame,
-                   threshold: Double = 0.5,
-                   maxDocFreq: Long = 100): DataFrame =
-    survivorsTokFor(documents, threshold, maxDocFreq)
-      .select(col("doc_id"), col("text"))
-
   /** [[survivors]] WITH the whitespace token count riding along
     * (`_nt = size(_t)` — tokenCount ≡ size(tokens) by definition, so the
     * column is bit-identical to what a downstream re-split would

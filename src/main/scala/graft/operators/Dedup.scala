@@ -892,8 +892,10 @@ object Dedup {
 
   /** [[incrementalDedup]] over ANY pair of (doc_id, text) frames — the
     * library entry point: classify `newDocs` against `corpus` without
-    * the driver-table split rule. Callers with a precomputed index use
-    * [[graft.streaming.IncrementalDedup.index]] + the streaming twin. */
+    * the driver-table split rule. Callers with a precomputed index
+    * ([[hashSigProjection]], refreshed by [[refreshed]]) run
+    * [[classifyNewRaw]] per micro-batch through
+    * [[graft.streaming.Ingest.probe]]. */
   def incrementalDedupFor(newDocs: DataFrame, corpus: DataFrame,
                           k: Int = 12, bands: Int = 4,
                           estThreshold: Double = 0.5): DataFrame =
@@ -906,32 +908,77 @@ object Dedup {
     * (CollapseProject keeps a non-cheap alias referenced twice). The
     * corpus side of [[classifyNew]] is exactly this projection — a
     * production deployment precomputes and caches it as the dedup
-    * INDEX, which is what the streaming twin does per micro-batch. */
-  private[graft] def hashSigProjection(docs: DataFrame, k: Int = 12): DataFrame =
+    * INDEX ([[refreshed]] keeps it current), and per-micro-batch ingest
+    * projects each batch the same way. */
+  def hashSigProjection(docs: DataFrame, k: Int = 12): DataFrame =
     docs.select(col("doc_id"), md5(col("text")).as("_h"),
         tokens(col("text")).as("_t"))
       .select(col("doc_id"), col("_h"),
         when(size(col("_t")) >= 3, minhashSigCol(col("_t"), k)).as("sig"))
 
+  /** Fold a classified batch's `new` survivors into an existing
+    * [[hashSigProjection]] index WITHOUT a full corpus rebuild — the
+    * day-over-day production loop (classify → refresh → tomorrow's
+    * batch). Only `new`-verdict docs enter: exact/near matches are
+    * duplicates whose corpus copy already indexes them. Exact by
+    * construction: the projection is pure per-row, so
+    * `index(C) ∪ proj(B_new) ≡ index(C ∪ B_new)` — the refresh duality
+    * spec proves classify-after-refresh equals the one-shot
+    * classification end-to-end.
+    *
+    * The union is lazy and costs |B_new| rows of projection; the
+    * deliberate act is the cache swap — persist the returned frame and
+    * unpersist the old index (or append the |B_new| index rows to the
+    * index's table: the same union, durable). A streaming query picks
+    * up the new static side on restart (static-side refresh is a
+    * restart-boundary operation in Structured Streaming). */
+  def refreshed(index: DataFrame, batchDocs: DataFrame, verdicts: DataFrame,
+                k: Int = 12): DataFrame =
+    index.unionByName(hashSigProjection(
+      batchDocs.join(
+        verdicts.filter(col("status") === "new").select("doc_id"),
+        Seq("doc_id")), k))
+
+  /** Three-tier [[refreshed]]: fold a classified batch's `new` survivors
+    * into BOTH indexes — text ([[hashSigProjection]]) and embedding
+    * ([[embSketchProjection]]). A `new` verdict means no tier matched,
+    * so the doc must become probe-able by every tier tomorrow;
+    * exact/near/near_embedding matches are already represented by their
+    * corpus copy. Same exactness argument as [[refreshed]] (both
+    * projections are pure per-row, so union ≡ rebuild), proven
+    * end-to-end by the three-tier duality spec. Returns
+    * (textIndex', embIndex'). */
+  def refreshed3(index: DataFrame, embIdx: DataFrame,
+                 batchDocs: DataFrame, batchEmb: DataFrame,
+                 verdicts: DataFrame, k: Int = 12,
+                 bits: Int = 32, dim: Int = 64): (DataFrame, DataFrame) = {
+    val newIds = verdicts.filter(col("status") === "new").select("doc_id")
+    (index.unionByName(
+       hashSigProjection(batchDocs.join(newIds, Seq("doc_id")), k)),
+     embIdx.unionByName(
+       embSketchProjection(batchEmb.join(newIds, Seq("doc_id")), bits, dim)))
+  }
+
   /** Classify each `batch` doc against `corpus` — both already
-    * [[hashSigProjection]]-shaped. Shared verbatim by q65 and the
-    * streaming twin, so batch and continuous ingest can't drift.
+    * [[hashSigProjection]]-shaped. Shared verbatim by q65 and
+    * per-micro-batch ingest, so batch and continuous ingest can't drift.
     * Every join is keyed with the SMALL batch side (AQE broadcasts it);
     * the corpus is never shuffled against itself. */
   private[graft] def classifyNew(batch: DataFrame, corpus: DataFrame,
                                  k: Int = 12, bands: Int = 4,
                                  estThreshold: Double = 0.5): DataFrame =
     // sort-last, cache-free (the tier joins re-read the callers' cached
-    // projections under sampling); the STREAMING twin uses
+    // projections under sampling); streaming ingest uses
     // [[classifyNewRaw]] — its sink needs no order at all.
     classifyNewRaw(batch, corpus, k, bands, estThreshold)
       .orderBy(col("doc_id"))
 
   /** [[classifyNew]] without the oracle sort or the cache — the
-    * per-micro-batch entry (verdicts are order-free rows to a sink). */
-  private[graft] def classifyNewRaw(batch: DataFrame, corpus: DataFrame,
-                                    k: Int = 12, bands: Int = 4,
-                                    estThreshold: Double = 0.5): DataFrame =
+    * per-micro-batch entry (verdicts are order-free rows to a sink),
+    * run by [[graft.streaming.Ingest.probe]]. */
+  def classifyNewRaw(batch: DataFrame, corpus: DataFrame,
+                     k: Int = 12, bands: Int = 4,
+                     estThreshold: Double = 0.5): DataFrame =
     batch.select(col("doc_id"))
       .join(exactTier(batch, corpus), Seq("doc_id"), "left")
       .join(nearTier(batch, corpus, k, bands, estThreshold), Seq("doc_id"), "left")
@@ -1018,8 +1065,8 @@ object Dedup {
     * (doc_id, embedding) frame — the embedding-side dedup INDEX
     * ([[hashSigProjection]]'s vector twin). Pure per-row; a production
     * deployment precomputes this once over the corpus. */
-  private[graft] def embSketchProjection(vecs: DataFrame, bits: Int = 32,
-                                         dim: Int = 64): DataFrame = {
+  def embSketchProjection(vecs: DataFrame, bits: Int = 32,
+                          dim: Int = 64): DataFrame = {
     graft.GraftExtensions.install(vecs.sparkSession)
     import graft.functions.VectorFunctions.dotNative
     Similarity.hyperplaneSketch(vecs, "embedding", bits, dim)

@@ -35,7 +35,7 @@ import org.apache.spark.sql.functions._
   * scale that trade (storage for zero shuffle per ingest run) is the
   * point. Bucket counts size to ~128-256 MB per bucket file in
   * production; refresh appends the day's `new` survivors
-  * ([[graft.streaming.IncrementalDedup.refreshed]]'s projection, written
+  * ([[Dedup.refreshed]]'s projection, written
   * with the same bucketing) — no rebuild.
   */
 object DedupIndex {
@@ -113,7 +113,7 @@ object DedupIndex {
 
   /** Day-over-day DURABLE refresh: append a classified batch's `new`
     * survivors to the three stored index tables — the persisted twin of
-    * [[graft.streaming.IncrementalDedup.refreshed3]]. Only `new`
+    * [[Dedup.refreshed3]]. Only `new`
     * verdicts enter (matched docs are already represented by their
     * corpus copy); the writes use the SAME bucket spec as
     * [[saveIndex]], so appended files land per bucket and every later
@@ -285,9 +285,9 @@ object DedupIndex {
 
   /** The image-tier probe alone, against the stored `_img` table:
     * (doc_id, img_id = min corpus image within `maxHamming`). Shared
-    * by [[classifyNew4Indexed]] and the streaming image-dedup twin
-    * ([[graft.streaming.ImageDedup]]) so the probe join can't drift
-    * between batch and continuous ingest. */
+    * by [[classifyNew4Indexed]] and [[classifyImg]] (the per-micro-batch
+    * classifier [[graft.streaming.Ingest.probe]] runs) so the probe
+    * join can't drift between batch and continuous ingest. */
   def imgProbe(s: SparkSession, batchImg: DataFrame, prefix: String,
                maxHamming: Int = 6): DataFrame =
     bandedProbe(s, Dedup.imgBanded(batchImg).withColumnRenamed("dhash", "_da"),
@@ -322,6 +322,34 @@ object DedupIndex {
                maxHamming: Int = 6): DataFrame =
     bandedProbe(s, Dedup.imgBanded(batchVid).withColumnRenamed("dhash", "_da"),
       vidTable(prefix), "dhash", maxHamming, "vid_id")
+
+  /** Single-modality verdicts of a (doc_id, dhash) image frame against
+    * the stored `_img` table: (doc_id, status ∈ near_image|new,
+    * match_id) — the single-tier instance of the shared
+    * [[Dedup.verdictTiers]] fold, one precedence definition across every
+    * classifier shape. Continuous ingest decodes each micro-batch with
+    * [[Multimodal.payloadHashes]] and runs this through
+    * [[graft.streaming.Ingest.probe]]: zero keyed state, and the index
+    * side reads its bucketed layout with no exchange, so trigger latency
+    * scales with feed rate, not corpus size. */
+  def classifyImg(hashes: DataFrame, prefix: String,
+                  maxHamming: Int = 6): DataFrame =
+    Dedup.verdictTiers(hashes.select(col("doc_id")), Seq(("near_image",
+      "img_id", imgProbe(hashes.sparkSession, hashes, prefix, maxHamming))))
+
+  /** [[classifyImg]] for a (doc_id, afp) audio frame against `_afp`:
+    * status ∈ near_audio|new. */
+  def classifyAfp(fps: DataFrame, prefix: String,
+                  maxHamming: Int = 4): DataFrame =
+    Dedup.verdictTiers(fps.select(col("doc_id")), Seq(("near_audio",
+      "afp_id", afpProbe(fps.sparkSession, fps, prefix, maxHamming))))
+
+  /** [[classifyImg]] for a (doc_id, dhash) video frame against `_vid`:
+    * status ∈ near_video|new. */
+  def classifyVid(hashes: DataFrame, prefix: String,
+                  maxHamming: Int = 6): DataFrame =
+    Dedup.verdictTiers(hashes.select(col("doc_id")), Seq(("near_video",
+      "vid_id", vidProbe(hashes.sparkSession, hashes, prefix, maxHamming))))
 
   /** Write the audio and video perceptual index tables ([[saveImgIndex]]'s
     * siblings; same bucket spec and denormalization trade). */

@@ -753,13 +753,36 @@ object Multimodal {
                       ids: org.apache.spark.sql.Dataset[Long]): DataFrame = {
     import s.implicits._
     ids.mapPartitions { it =>
-      it.map { id =>
-        val bytes = MediaCodec.pngNearFor(id) // the camera
-        val img = ImageIO.read(new ByteArrayInputStream(bytes)) // bytes alone
-        require(img != null, s"media_id=$id: undecodable PNG")
-        (id, MediaCodec.dHash64(img))
-      }
+      // the camera, then a hash of the bytes alone
+      it.map(id => (id, pngDHash(id, MediaCodec.pngNearFor(id))))
     }.toDF("media_id", "dhash")
+  }
+
+  /** (doc_id, `out`) from a (doc_id, bytes) media frame: `hash`
+    * reduces each payload inside its task, so bytes never leave it and
+    * only the 8-byte hash moves — the per-micro-batch decode of the
+    * image, audio and video ingest classifiers
+    * ([[DedupIndex.classifyImg]]/[[DedupIndex.classifyAfp]]/
+    * [[DedupIndex.classifyVid]]); `hash` gets the row's id to name it
+    * in errors. */
+  def payloadHashes(media: DataFrame, out: String)(
+      hash: (Long, Array[Byte]) => Long): DataFrame = {
+    val spark = media.sparkSession
+    import spark.implicits._
+    media.select(col("doc_id").cast("long"), col("bytes"))
+      .as[(Long, Array[Byte])]
+      .mapPartitions(_.map { case (id, bytes) => (id, hash(id, bytes)) })
+      .toDF("doc_id", out)
+  }
+
+  /** The image hash of [[imageDHashesFor]] and [[payloadHashes]]:
+    * decode the PNG payload and [[MediaCodec.dHash64]] it. Ingest
+    * payloads come from outside the program, so an undecodable one
+    * fails naming its row. */
+  def pngDHash(id: Long, bytes: Array[Byte]): Long = {
+    val img = ImageIO.read(new ByteArrayInputStream(bytes))
+    require(img != null, s"id=$id: undecodable PNG payload")
+    MediaCodec.dHash64(img)
   }
 
   /** q73 — PERCEPTUAL image near-dup pairs: dedup extended to the

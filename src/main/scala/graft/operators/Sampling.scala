@@ -101,22 +101,32 @@ object Sampling {
     * DuckDB reproduces membership exactly. */
   def benchmarkDecontamination(s: SparkSession, dir: String, k: Int = 8,
                                evalMod: Int = 10): DataFrame = {
-    import graft.functions.TextFunctions.tokens
     // cached: the gram projection feeds the (tiny) eval side and the
     // train side from ONE scan+tokenize; released via Caches.release()
-    val g = Caches.track(TextOps.docsHeavy(s, dir)
-      .select(col("doc_id"), tokens(col("text")).as("t"))
-      .filter(size(col("t")) >= k)
+    val g = Caches.track(gramTokens(TextOps.docsHeavy(s, dir), k)
       .withColumn("_eval", hashBucket(col("doc_id"), evalMod) === 0))
     decontaminationAuditFor(
       g.filter(!col("_eval")).select(col("doc_id"), col("t")),
       g.filter(col("_eval")).select(col("doc_id"), col("t")), k)
   }
 
+  /** (doc_id, t) tokens of every (doc_id, text) document with at least
+    * `k` tokens — a shorter document carries no k-gram, so it can
+    * neither leak into nor be leaked into at this k. The tokenized
+    * operand of [[benchmarkGramIndex]], [[contaminationHits]] and
+    * [[decontaminationAuditFor]]. */
+  def gramTokens(docs: DataFrame, k: Int = 8): DataFrame = {
+    import graft.functions.TextFunctions.tokens
+    docs.select(col("doc_id"), tokens(col("text")).as("t"))
+      .filter(size(col("t")) >= k)
+  }
+
   /** The benchmark GRAM INDEX: one (eval_id, gram) row per distinct
     * k-gram of each eval document — the static side every
-    * decontamination pass (batch q72, the streaming twin) probes.
-    * Tiny by construction (benchmark suites are small); broadcast it. */
+    * decontamination pass probes: batch q72, and ingest-time admission
+    * checks running [[contaminationHits]] per micro-batch through
+    * [[graft.streaming.Ingest.probe]]. Tiny by construction (benchmark
+    * suites are small); broadcast it. */
   def benchmarkGramIndex(evalToks: DataFrame, k: Int = 8): DataFrame = {
     import graft.functions.TextFunctions.shingles
     evalToks.select(col("doc_id").as("eval_id"),
@@ -126,8 +136,8 @@ object Sampling {
   /** Contamination HITS of a train frame against a benchmark gram
     * index: one (eval_id, train_id, n_overlap) row per contaminated
     * pair, n_overlap = |gram(eval) ∩ gram(train)| (both sides distinct
-    * per doc). Shared verbatim by the batch audit and the streaming
-    * twin, so the two ingestion shapes can't drift. */
+    * per doc). Shared verbatim by the batch audit and ingest-time
+    * admission, so the two ingestion shapes can't drift. */
   def contaminationHits(trainToks: DataFrame, gramIndex: DataFrame,
                         k: Int = 8): DataFrame = {
     import graft.functions.TextFunctions.shingles

@@ -198,7 +198,7 @@ object TextOps {
     * the same (doc_id, line_no, line) contract. Segment count and bounds
     * are all-integer (`(n + segLen − 1) div segLen`), so DuckDB replays
     * the segmentation exactly. Pure per-row explode — no shuffle. */
-  private[graft] def docLines(documents: DataFrame, segLen: Int): DataFrame = {
+  def docLines(documents: DataFrame, segLen: Int): DataFrame = {
     require(segLen > 0, s"need segLen > 0, got $segLen")
     documents
       .select(col("doc_id"), tokens(col("text")).as("_t"))
@@ -466,7 +466,8 @@ object TextOps {
 
   /** The corpus GRAM INDEX: distinct k-gram hashes of a (doc_id, text)
     * corpus — the static artifact ingest-time cross-doc scrubbing
-    * probes ([[graft.streaming.SpanScrub]]), refreshed on the
+    * probes ([[scrubAgainstGramIndex]] per micro-batch through
+    * [[graft.streaming.Ingest.probe]]), refreshed on the
     * deployment's cadence exactly like q87's boilerplate line table.
     * One partial-agg distinct on 8-byte keys. */
   def corpusGramIndex(corpus: DataFrame, k: Int = 8): GramIndex =
@@ -530,7 +531,8 @@ object TextOps {
   /** A fitted bigram LM: the vocabulary-sized unigram table (broadcast
     * operand), the corpus-growing bigram table (hash-join operand), and
     * the add-one denominator. The static artifact ingest-time scoring
-    * probes ([[graft.streaming.LmScore]]); caller caches the frames. */
+    * probes ([[bigramLmScoreAgainst]] per micro-batch through
+    * [[graft.streaming.Ingest.probe]]); caller caches the frames. */
   final case class BigramLm(uni: DataFrame, big: DataFrame, denom: Double)
 
   /** The (doc_id, w1, w2) adjacent-token pair stream — per-row explode,
@@ -610,7 +612,8 @@ object TextOps {
     * hash) row per line appearing in more than `maxDocs` distinct
     * documents — the corpus-frequency pass, and the static artifact a
     * deployment recomputes daily and probes at ingest
-    * ([[graft.streaming.LineDedup]]). */
+    * ([[scrubLines]] per micro-batch through
+    * [[graft.streaming.Ingest.probe]]). */
   def boilerplateLines(lines: DataFrame, maxDocs: Int = 1): DataFrame = {
     import graft.functions.TextFunctions.md5Long
     lines

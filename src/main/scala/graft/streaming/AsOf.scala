@@ -37,8 +37,7 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   *     group with no new arrivals still answers once the watermark
   *     passes) and evict the carry once the watermark passes the user's
   *     newest activity + horizon. An order arriving later than that sees
-  *     no prior event — the same cross-window contract as the streaming
-  *     exact-dedup twin, with the batch pass as backstop.
+  *     no prior event; the batch pass is the backstop.
   */
 object AsOf {
 

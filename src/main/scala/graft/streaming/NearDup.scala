@@ -8,9 +8,7 @@ import graft.functions.TextFunctions.tokens
 import graft.operators.Dedup
 
 /** Streaming near-duplicate detection — the streaming twin of the batch
-  * MinHash+LSH pass (q27, [[graft.operators.Dedup.minhashLshPairs]]),
-  * completing the batch/streaming duality the exact-dedup and
-  * sessionize twins started.
+  * MinHash+LSH pass (q27, [[graft.operators.Dedup.minhashLshPairs]]).
   *
   * Shape: the per-row signature ([[Dedup.minhashSigCol]] — a row-local
   * array aggregate, shuffle-free by construction) and the band-key

@@ -7,7 +7,7 @@ import org.apache.spark.sql.streaming.StreamingQuery
 import graft.operators.Sampling
 
 /** Streaming twin of q108 ([[graft.operators.Sampling.modelQuotaFor]]):
-  * MODEL-SCORED quality selection over a document feed — the 20th twin.
+  * MODEL-SCORED quality selection over a document feed.
   *
   * The frozen classifier's margin is STATELESS per row (a literal
   * expression over the broadcast coefficients — no vocabulary fit, no
@@ -19,13 +19,12 @@ import graft.operators.Sampling
   * computed from the full store ([[Sampling.modelQuotaScored]] — the
   * exact batch selection tail, salted two-stage top-k included).
   *
-  * ZERO KEYED STATE, like [[ShardAppend]]: the scored store IS the
-  * state (no `mapGroupsWithState`, no watermark — the progress metrics
-  * report no state operators, spec-pinned). Restarts recover from the
-  * store; replayed batches are skipped by the same committed-batch-id
-  * marker protocol ([[ShardAppend.committedBatch]]/`commitBatch`), so a
-  * re-executed trigger can never double-count a document's tokens in
-  * the report.
+  * ZERO KEYED STATE: the scored store IS the state (no
+  * `mapGroupsWithState`, no watermark — the progress metrics report no
+  * state operators, spec-pinned). Restarts recover from the store;
+  * replayed batches are skipped by [[Ingest.once]]'s committed-batch
+  * marker, so a re-executed trigger can never double-count a
+  * document's tokens in the report.
   *
   * Scale/trigger cost: scoring is map-only over the micro-batch (the
   * |vocab| filter-folds, no shuffle); the store append is one write of
@@ -39,31 +38,23 @@ object QuotaScore {
 
   /** Start scoring a streaming (doc_id, source, text) feed into the
     * scored store at `path`, publishing each APPLIED trigger's quota
-    * report (q108's exact shape) to `sink` with the batch id. Empty
-    * and replayed micro-batches are skipped. */
+    * report (q108's exact shape) to `sink` with the batch id. */
   def start(docs: DataFrame, path: String, k: Int, salts: Int,
             sink: (DataFrame, Long) => Unit): StreamingQuery =
-    docs.writeStream
-      .outputMode("append")
-      .foreachBatch { (microBatch: DataFrame, batchId: Long) =>
-        applyBatch(microBatch, batchId, path, k, salts)
-          .foreach(report => sink(report, batchId))
-      }
-      .start()
+    Ingest.once(docs, path, append(_, path, k, salts), sink)
 
-  /** One trigger's work, extracted so the replay path is spec-testable:
-    * score + append the micro-batch unless empty or already committed,
-    * then report from the accumulated store. Returns None when the
-    * batch was skipped. The marker commits strictly after the scored
-    * rows land. */
+  /** One trigger ([[Ingest.applyOnce]]): the report from the
+    * accumulated store when the batch applied, None when it was empty
+    * or already committed. */
   def applyBatch(microBatch: DataFrame, batchId: Long, path: String,
                  k: Int, salts: Int): Option[DataFrame] =
-    if (microBatch.isEmpty || batchId <= ShardAppend.committedBatch(path)) None
-    else {
-      scoreRows(microBatch).write.mode("append").parquet(path)
-      ShardAppend.commitBatch(path, batchId)
-      Some(report(microBatch.sparkSession, path, k, salts))
-    }
+    Ingest.applyOnce(microBatch, batchId, path, append(_, path, k, salts))
+
+  private def append(batch: DataFrame, path: String, k: Int,
+                     salts: Int): DataFrame = {
+    scoreRows(batch).write.mode("append").parquet(path)
+    report(batch.sparkSession, path, k, salts)
+  }
 
   /** The stateless per-row scoring projection — identical to the
     * columns [[Sampling.modelQuotaFor]] derives in-plan, so the store's

@@ -5,35 +5,17 @@ import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.operators.TextOps
 
-/** Streaming twin of q95 ([[graft.operators.TextOps.repeatedGramScrub]]):
-  * intra-document repeated-n-gram scrubbing AT INGEST — generated or
-  * boilerplate-looping text is cut the moment a document lands, before
-  * it reaches the corpus store.
-  *
-  * Shape: the purest twin in the family — the scrub is a function of
-  * ONE document's tokens (every grouping key in the batch operator
-  * includes doc_id), so there is no static artifact, no watermark and
-  * no keyed state at all; `foreachBatch` runs the SAME
-  * [[TextOps.repeatedGramScrubFor]] the declared query uses, so
-  * replaying the batch input in any chunking yields precisely the
-  * batch rows (duality spec).
-  *
-  * Scale/state story: per-trigger cost is the per-document gram pass +
-  * doc_id-keyed aggregates over the micro-batch alone; trigger latency
-  * scales with feed rate and document length, never corpus size.
-  */
+/** q95's intra-document repeated-n-gram scrub
+  * ([[graft.operators.TextOps.repeatedGramScrubFor]]) at ingest: the
+  * scrub is a function of ONE document's tokens, so there is no static
+  * artifact at all — [[Ingest.probe]] runs the declared query's batch
+  * function on each micro-batch. */
 object SelfDedup {
 
-  /** Start scrubbing a streaming (doc_id, text) feed. Each
-    * micro-batch's per-document retention rows — (doc_id, n_tokens,
-    * n_removed_tokens, n_repeat_spans, retained_hash) — go to `sink`
-    * with the batch id. */
+  /** Scrub a streaming (doc_id, text) feed; each micro-batch's
+    * (doc_id, n_tokens, n_removed_tokens, n_repeat_spans, retained_hash)
+    * rows go to `sink` with the batch id. */
   def start(docs: DataFrame, sink: (DataFrame, Long) => Unit,
             n: Int = 3): StreamingQuery =
-    docs.writeStream
-      .outputMode("append")
-      .foreachBatch { (microBatch: DataFrame, batchId: Long) =>
-        sink(TextOps.repeatedGramScrubFor(microBatch, n), batchId)
-      }
-      .start()
+    Ingest.probe(docs, TextOps.repeatedGramScrubFor(_, n), sink)
 }

@@ -20,20 +20,8 @@ import graft.operators.Packing
   * watermark, no `mapGroupsWithState`: the shard store is the state,
   * exactly as a production ingest pipeline would have it (restarts
   * recover from the store; no checkpointed operator state can drift
-  * from the files).
-  *
-  * REPLAY IDEMPOTENCE (r14 ADVICE): Structured Streaming re-executes
-  * the last batch after a sink failure or query restart, and a naive
-  * append would land the same documents twice. The last successfully
-  * applied batch id is persisted NEXT TO the store (`_graft_last_batch`
-  * — underscore-prefixed, so Spark's parquet reader ignores it), written
-  * atomically (temp file + ATOMIC_MOVE) only after the batch's rows are
-  * on disk; [[applyBatch]] skips any `batchId <=` the committed one. A
-  * crash BETWEEN the append and the marker write re-appends that batch
-  * on replay — exactly-once would need the store write and the marker
-  * in one atomic commit (a table format's job, not a directory's) — but
-  * the window is the marker write alone, and every other replay path
-  * (the common one: sink failure after a complete trigger) is a no-op.
+  * from the files). A replayed batch is skipped by [[Ingest.once]]'s
+  * committed-batch marker, so replay never lands documents twice.
   *
   * Semantics note (the honest difference from the batch day-2 shape):
   * each trigger packs ITS OWN documents into its own fresh shards —
@@ -51,69 +39,26 @@ import graft.operators.Packing
 object ShardAppend {
 
   /** Start appending a streaming (doc_id, text) feed to the shard store
-    * at `path`. The first non-empty batch creates the store
-    * ([[Packing.writeShardsFor]]); every later one appends from the
-    * next whole-shard boundary ([[Packing.appendShardsFor]]). Each
-    * APPLIED trigger's full-store read-back report (q103's exact shape)
-    * goes to `sink` with the batch id. Empty micro-batches and replayed
-    * batches (batch id already committed — see the idempotence note
-    * above) are skipped: the packer has nothing to write and the store
-    * is already in the post-batch state. */
+    * at `path`; each APPLIED trigger's full-store read-back report
+    * (q103's exact shape) goes to `sink` with the batch id. */
   def start(docs: DataFrame, path: String, budget: Long, seqsPerShard: Long,
             sink: (DataFrame, Long) => Unit): StreamingQuery =
-    docs.writeStream
-      .outputMode("append")
-      .foreachBatch { (microBatch: DataFrame, batchId: Long) =>
-        applyBatch(microBatch, batchId, path, budget, seqsPerShard)
-          .foreach(report => sink(report, batchId))
-      }
-      .start()
+    Ingest.once(docs, path, pack(_, path, budget, seqsPerShard), sink)
 
-  /** One trigger's work, extracted so the replay path is spec-testable
-    * without a restarted stream: append `microBatch` unless it is empty
-    * or its `batchId` is already committed in the store's marker.
-    * Returns the read-back report when the batch APPLIED, None when it
-    * was skipped. The marker commits strictly after the rows land. */
+  /** One trigger ([[Ingest.applyOnce]]): the read-back report when the
+    * batch applied, None when it was empty or already committed. */
   def applyBatch(microBatch: DataFrame, batchId: Long, path: String,
                  budget: Long, seqsPerShard: Long): Option[DataFrame] =
-    if (microBatch.isEmpty || batchId <= committedBatch(path)) None
-    else {
-      val report =
-        if (new java.io.File(path).exists())
-          Packing.appendShardsFor(microBatch, budget, seqsPerShard, path)
-        else
-          Packing.writeShardsFor(microBatch, budget, seqsPerShard, path)
-      commitBatch(path, batchId)
-      Some(report)
-    }
+    Ingest.applyOnce(microBatch, batchId, path,
+      pack(_, path, budget, seqsPerShard))
 
-  /** The last committed batch id at `path`, or -1 with no (or an
-    * unreadable) marker — fail-open toward re-applying, never toward
-    * silently dropping a batch. */
-  def committedBatch(path: String): Long = {
-    val f = new java.io.File(path, MarkerName)
-    if (!f.exists()) -1L
+  /** The first batch creates the store ([[Packing.writeShardsFor]]);
+    * every later one appends from the next whole-shard boundary
+    * ([[Packing.appendShardsFor]]). */
+  private def pack(batch: DataFrame, path: String, budget: Long,
+                   seqsPerShard: Long): DataFrame =
+    if (new java.io.File(path).exists())
+      Packing.appendShardsFor(batch, budget, seqsPerShard, path)
     else
-      try new String(java.nio.file.Files.readAllBytes(f.toPath),
-        java.nio.charset.StandardCharsets.UTF_8).trim.toLong
-      catch { case scala.util.control.NonFatal(_) => -1L }
-  }
-
-  private val MarkerName = "_graft_last_batch"
-
-  /** Atomically persist `batchId` as the store's committed high-water
-    * mark (temp file + ATOMIC_MOVE in the same directory — a reader
-    * sees the old marker or the new one, never a torn write).
-    * Package-visible: [[QuotaScore]] reuses the same marker protocol
-    * for its scored store. */
-  private[streaming] def commitBatch(path: String, batchId: Long): Unit = {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
-    val dir = Paths.get(path)
-    val tmp = dir.resolve(
-      s".$MarkerName.tmp${ProcessHandle.current().pid()}")
-    Files.write(tmp,
-      (batchId.toString + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    Files.move(tmp, dir.resolve(MarkerName),
-      StandardCopyOption.REPLACE_EXISTING, StandardCopyOption.ATOMIC_MOVE)
-  }
+      Packing.writeShardsFor(batch, budget, seqsPerShard, path)
 }

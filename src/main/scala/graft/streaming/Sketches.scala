@@ -7,7 +7,7 @@ import graft.functions.TextFunctions.tokens
 import graft.operators.{Sketches => B}
 
 /** Streaming counterpart of the q83-q86 sketch family
-  * ([[graft.operators.Sketches]]) — the 14th twin: cardinality,
+  * ([[graft.operators.Sketches]]): cardinality,
   * heavy-hitter, membership, and quantile telemetry over a continuous
   * document feed.
   *

@@ -1,27 +1,15 @@
 package graft.streaming
 
-/** Shared event-time helpers for the streaming twins. */
+import org.apache.spark.sql.catalyst.plans.logical.EventTimeWatermark
+import org.apache.spark.sql.catalyst.util.IntervalUtils
+
+/** Shared event-time helpers for the stateful streaming operators. */
 object Watermarks {
 
-  /** Parse a `withWatermark`-style "<n> <unit>" delay into millis —
-    * the twins reuse the SAME string for Spark's watermark and their
-    * own state-retention horizon, so the two cannot drift. Kept
-    * deliberately simple: an unrecognized unit fails loudly rather
-    * than defaulting. */
+  /** A `withWatermark` delay string in millis, parsed exactly as
+    * `Dataset.withWatermark` parses it — NearDup and AsOf reuse the SAME
+    * string for Spark's watermark and their own state-retention horizon,
+    * so the two cannot drift. A malformed string throws. */
   def delayMs(watermark: String): Long =
-    watermark.trim.toLowerCase.split("\\s+") match {
-      case Array(n, u) =>
-        val v = n.toLong
-        u.stripSuffix("s") match {
-          case "millisecond"        => v
-          case "second"             => v * 1000L
-          case "minute"             => v * 60000L
-          case "hour"               => v * 3600000L
-          case "day"                => v * 86400000L
-          case other => throw new IllegalArgumentException(
-            s"unsupported watermark unit: $other")
-        }
-      case _ => throw new IllegalArgumentException(
-        s"watermark must be '<n> <unit>', got: $watermark")
-    }
+    EventTimeWatermark.getDelayMs(IntervalUtils.fromIntervalString(watermark))
 }

@@ -1,33 +1,15 @@
 package graft
 
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.Multimodal
-import graft.streaming.{NearDup, Sessionize}
+import graft.streaming.{Ingest, NearDup, Sessionize}
 
 class StreamingMultimodalSpec extends AnyFunSuite {
   import TestSpark._
   import spark.implicits._
-
-  /** Shared chunked-replay scaffold: write a (doc_id, text) frame as a
-    * 4-chunk parquet feed (pmod(doc_id, 4)) and return a
-    * maxFilesPerTrigger=1 stream over it — one micro-batch per chunk,
-    * the "any chunking" side of every duality spec below. */
-  private def chunkedFeed(docs: org.apache.spark.sql.DataFrame,
-                          tag: String): org.apache.spark.sql.DataFrame = {
-    val dir = java.nio.file.Files.createTempDirectory(s"graft_$tag").toString
-    docs.withColumn("_chunk", pmod(col("doc_id"), lit(4)))
-      .write.partitionBy("_chunk").mode("overwrite").parquet(s"$dir/feed")
-    spark.readStream
-      .schema(org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("doc_id",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("text",
-          org.apache.spark.sql.types.StringType))))
-      .option("maxFilesPerTrigger", 1)
-      .parquet(s"$dir/feed")
-  }
 
   test("codec anchors: PNG/WAV/RAWV encode to real formats, decode recovers content") {
     import Multimodal.MediaCodec
@@ -212,47 +194,227 @@ class StreamingMultimodalSpec extends AnyFunSuite {
     assert(mismatches.count() == 0)
   }
 
-  test("streaming incremental dedup: chunked replay ≡ batch q65 verdicts") {
-    import graft.streaming.IncrementalDedup
-    val dir = java.nio.file.Files.createTempDirectory("graft_incdedup").toString
-    val docs = graft.sources.Tables(spark, sf, "documents")
-      .withColumn("_new", operators.Sampling.hashBucket(col("doc_id"), 5) === 4)
-    // feed = the q65 batch side, split into 4 chunk files (file-source
-    // micro-batches); index = the q65 corpus side, cached like a
-    // production deployment would
-    docs.filter(col("_new")).select("doc_id", "text")
-      .withColumn("_chunk", pmod(col("doc_id"), lit(4)))
+  /** Write a (doc_id, payload) frame as a `chunks`-way parquet feed
+    * (pmod(doc_id, chunks)) and return a maxFilesPerTrigger=1 stream
+    * over it — one micro-batch per chunk file, the "any chunking" side
+    * of every duality spec below. */
+  private def chunkedFeed(docs: DataFrame, chunks: Int, tag: String): DataFrame = {
+    val dir = java.nio.file.Files.createTempDirectory(s"graft_$tag").toString
+    docs.withColumn("_chunk", pmod(col("doc_id"), lit(chunks)))
       .write.partitionBy("_chunk").mode("overwrite").parquet(s"$dir/feed")
-    val idx = IncrementalDedup.index(
-      docs.filter(!col("_new")).select("doc_id", "text")).cache()
-    val stream = spark.readStream
-      .schema(org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("doc_id",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("text",
-          org.apache.spark.sql.types.StringType))))
-      .option("maxFilesPerTrigger", 1)
-      .parquet(s"$dir/feed")
-    val got = scala.collection.mutable.ArrayBuffer.empty[(Long, String, Option[Long])]
-    val q = IncrementalDedup.start(stream, idx, (verdicts, _) =>
-      got.synchronized {
-        got ++= verdicts.collect().map(r => (r.getLong(0), r.getString(1),
-          if (r.isNullAt(2)) None else Some(r.getLong(2))))
-      })
+    spark.readStream.schema(spark.read.parquet(s"$dir/feed").schema)
+      .option("maxFilesPerTrigger", 1).parquet(s"$dir/feed")
+  }
+
+  /** One chunked-replay ≡ batch check: [[Ingest.probe]] runs `probe` on
+    * every micro-batch of `feed`, and the rows it emits must equal the
+    * rows of `truth` (the batch function over the whole feed, or the
+    * declared query) — same count, same set. `nonVacuous` asserts the
+    * truth rows exercise the fixture, or the duality proves nothing. */
+  private case class Pass(feed: DataFrame, probe: DataFrame => DataFrame,
+                          truth: DataFrame,
+                          nonVacuous: Set[Row] => Unit = _ => ())
+
+  /** A duality spec's fixture: its passes, and the tear-down that runs
+    * after them, pass or fail. */
+  private case class Fixture(passes: Seq[Pass], tearDown: () => Unit = () => ())
+
+  private def runPass(p: Pass): Unit = {
+    val got = scala.collection.mutable.ArrayBuffer.empty[Row]
+    val q = Ingest.probe(p.feed, p.probe, (rows, _) =>
+      got.synchronized { got ++= rows.collect() })
     try q.processAllAvailable() finally q.stop()
-    val want = operators.Dedup.incrementalDedup(spark, sf).collect()
-      .map(r => (r.getLong(0), r.getString(1),
-        if (r.isNullAt(2)) None else Some(r.getLong(2)))).toSet
-    idx.unpersist()
-    operators.Caches.release()
+    val want = p.truth.collect().toSet
+    p.nonVacuous(want)
     assert(got.size == want.size,
-      s"stream emitted ${got.size} verdicts, batch has ${want.size}")
+      s"stream emitted ${got.size} rows, batch has ${want.size}")
     assert(got.toSet == want,
-      s"verdict drift: stream-only=${got.toSet -- want} batch-only=${want -- got.toSet}")
+      s"drift: stream-only=${got.toSet -- want} batch-only=${want -- got.toSet}")
+  }
+
+  private def bothVerdicts(near: String): Set[Row] => Unit = want =>
+    assert(want.exists(_.getString(1) == near) && want.exists(_.getString(1) == "new"),
+      "fixture must exercise both verdicts or the duality is vacuous")
+
+  /** (doc_id, bytes) payloads of the `isNew` ids of a (doc_id, hash)
+    * frame, encoded per partition. */
+  private def payloads(hashes: DataFrame, isNew: Column,
+                       encode: Long => Array[Byte]): DataFrame =
+    hashes.filter(isNew).select("doc_id").as[Long]
+      .mapPartitions(_.map(id => (id, encode(id)))).toDF("doc_id", "bytes")
+
+  /** The sf0.01 testdata beside [[TestSpark.sf]]: the rows below need
+    * its denser duplicate and leakage structure to be non-vacuous. */
+  private val sf01 = s"${new java.io.File(sf).getParent}/sf0.01"
+
+  /** The stream-static duality specs, one row each: name → fixture. */
+  private val dualities: Seq[(String, () => Fixture)] = Seq(
+    "streaming incremental dedup: chunked replay ≡ batch q65 verdicts" -> { () =>
+      import operators.Dedup
+      val docs = graft.sources.Tables(spark, sf, "documents")
+        .withColumn("_new", operators.Sampling.hashBucket(col("doc_id"), 5) === 4)
+      // feed = the q65 batch side; index = the q65 corpus side, cached
+      // like a production deployment would
+      val idx = Dedup.hashSigProjection(
+        docs.filter(!col("_new")).select("doc_id", "text")).cache()
+      Fixture(Seq(Pass(
+          chunkedFeed(docs.filter(col("_new")).select("doc_id", "text"), 4, "incdedup"),
+          mb => Dedup.classifyNewRaw(Dedup.hashSigProjection(mb), idx),
+          Dedup.incrementalDedup(spark, sf))),
+        () => { idx.unpersist(); operators.Caches.release() })
+    },
+    "streaming image dedup ≡ batch classify under any chunking (q75 twin)" -> { () =>
+      import operators.{DedupIndex, Multimodal, Sampling}
+      val prefix = "graft_imgtwin"
+      val dropAll = () => DedupIndex.dropTable(spark, DedupIndex.imgTable(prefix))
+      val all = Multimodal.imageDHashes(spark, sf)
+        .select(col("media_id").as("doc_id"), col("dhash"))
+      val isNew = Sampling.hashBucket(col("doc_id"), 5) === 4
+      dropAll()
+      // corpus = bases 0..10 only: batch images of bases 11..20 have no
+      // corpus twin and must come back `new` (else the duality is
+      // vacuously all-near_image on this dense fixture)
+      DedupIndex.saveImgIndex(
+        all.filter(!isNew && expr("(doc_id div 3) % 21 < 11")), prefix, buckets = 4)
+      // the feed: the batch split's REAL PNG payloads in 3 file chunks
+      Fixture(Seq(Pass(
+          chunkedFeed(payloads(all, isNew, Multimodal.MediaCodec.pngNearFor), 3, "imgstream"),
+          mb => DedupIndex.classifyImg(
+            Multimodal.payloadHashes(mb, "dhash")(Multimodal.pngDHash), prefix),
+          DedupIndex.classifyImg(all.filter(isNew), prefix),
+          bothVerdicts("near_image"))),
+        () => { operators.Caches.release(); spark.catalog.clearCache(); dropAll() })
+    },
+    "streaming audio+video dedup ≡ batch classify under any chunking (q78 twins)" -> { () =>
+      import operators.{DedupIndex, Multimodal, Sampling}
+      import Multimodal.MediaCodec
+      val prefix = "graft_avtwin"
+      val dropAll = () => Seq(DedupIndex.afpTable(prefix),
+        DedupIndex.vidTable(prefix)).foreach(DedupIndex.dropTable(spark, _))
+      val afps = Multimodal.audioFingerprints(spark, sf)
+        .select(col("media_id").as("doc_id"), col("afp"))
+      val vids = Multimodal.videoHashes(spark, sf)
+        .select(col("media_id").as("doc_id"), col("dhash"))
+      val isNew = Sampling.hashBucket(col("doc_id"), 5) === 4
+      dropAll()
+      // corpus = half the waveform/pattern bases, so some batch media
+      // come back `new` (the image row's non-vacuity trick)
+      DedupIndex.saveAfpIndex(
+        afps.filter(!isNew && expr("(doc_id div 3) % 17 < 9")), prefix, buckets = 4)
+      DedupIndex.saveVidIndex(
+        vids.filter(!isNew && expr("(doc_id div 3) % 13 < 7")), prefix, buckets = 4)
+      // real WAV and RAWV bytes, each streamed in 3 file chunks
+      Fixture(Seq(
+          Pass(chunkedFeed(payloads(afps, isNew, MediaCodec.wavNearFor), 3, "wav"),
+            mb => DedupIndex.classifyAfp(Multimodal.payloadHashes(mb, "afp")(
+              (_, b) => MediaCodec.audioFingerprint64(MediaCodec.pcmSamples(b))), prefix),
+            DedupIndex.classifyAfp(afps.filter(isNew), prefix),
+            bothVerdicts("near_audio")),
+          Pass(chunkedFeed(payloads(vids, isNew, MediaCodec.rawvNearFor), 3, "rawv"),
+            mb => DedupIndex.classifyVid(Multimodal.payloadHashes(mb, "dhash")(
+              (_, b) => MediaCodec.vHash64(b)), prefix),
+            DedupIndex.classifyVid(vids.filter(isNew), prefix),
+            bothVerdicts("near_video"))),
+        () => { operators.Caches.release(); spark.catalog.clearCache(); dropAll() })
+    },
+    "streaming decontamination ≡ batch hits under any chunking (q72 twin)" -> { () =>
+      import operators.Sampling
+      // sf0.01: the sf0.001 corpus has NO natural 8-gram leakage across
+      // the hash split (verified), which would make the duality vacuous
+      val docs = graft.sources.Tables(spark, sf01, "documents")
+        .select(col("doc_id"), col("text"))
+        .withColumn("_eval", Sampling.hashBucket(col("doc_id"), 10) === 0)
+      val train = docs.filter(!col("_eval")).select("doc_id", "text")
+      // index = the benchmark gram index, cached like a deployment would
+      val idx = Sampling.benchmarkGramIndex(Sampling.gramTokens(
+        docs.filter(col("_eval")).select("doc_id", "text"))).cache()
+      val hits = (df: DataFrame) => Sampling.contaminationHits(Sampling.gramTokens(df), idx)
+      Fixture(Seq(Pass(chunkedFeed(train, 4, "decon"), hits, hits(train),
+          want => assert(want.nonEmpty, "fixture should contain contaminated train docs"))),
+        () => idx.unpersist())
+    },
+    "streaming self dedup ≡ batch repeated-gram scrub under any chunking (q95 twin)" -> { () =>
+      // sf0.01: 27 documents carry intra-doc repeated 3-grams, so the
+      // duality is non-vacuous on the scrubbed branch too
+      val docs = graft.sources.Tables(spark, sf01, "documents")
+        .select(col("doc_id"), col("text"))
+      // batch truth = the declared q95 rows themselves
+      Fixture(Seq(Pass(chunkedFeed(docs, 4, "selfdedup"),
+        operators.TextOps.repeatedGramScrubFor(_),
+        operators.TextOps.repeatedGramScrub(spark, sf01),
+        want => assert(want.exists(_.getLong(2) > 0), "fixture should scrub repeated grams"))))
+    },
+    "streaming line dedup ≡ batch scrub under any chunking (q87 twin)" -> { () =>
+      import operators.TextOps
+      // sf0.01: boilerplate lines actually exist there (127 cross-doc
+      // line hashes), so the duality is non-vacuous
+      val docs = graft.sources.Tables(spark, sf01, "documents")
+        .select(col("doc_id"), col("text"))
+      val boiler = TextOps.boilerplateLines(TextOps.docLines(docs, 10)).cache()
+      // batch truth = the declared q87 rows themselves
+      Fixture(Seq(Pass(chunkedFeed(docs, 4, "linededup"),
+          mb => TextOps.scrubLines(TextOps.docLines(mb, 10), boiler),
+          TextOps.lineDedup(spark, sf01),
+          want => assert(want.exists(_.getLong(2) > 0),
+            "fixture should remove boilerplate lines"))),
+        () => boiler.unpersist())
+    },
+    "streaming cross-doc span scrub ≡ batch incremental form under any chunking (q99 twin)" -> { () =>
+      import operators.TextOps
+      // sf0.01: 7 of the 108 feed-bucket docs share an 8-gram with the
+      // corpus buckets, so the duality is non-vacuous
+      val all = graft.sources.Tables(spark, sf01, "documents")
+        .select(col("doc_id"), col("text"))
+      val bucket = operators.Sampling.hashBucket(col("doc_id"), 10)
+      val feed = all.filter(bucket >= 8)
+      val index0 = TextOps.corpusGramIndex(all.filter(bucket < 8))
+      val index = index0.copy(grams = index0.grams.cache())
+      val scrub = (minSpan: Long) =>
+        (df: DataFrame) => TextOps.scrubAgainstGramIndex(df, index, minSpan)
+      lazy val removed = scrub(1L)(feed).collect()
+        .map(r => r.getLong(0) -> r.getLong(2)).toMap
+      // batch truth = the shared incremental form over the whole feed;
+      // the second pass is q102's minimum-match-length rule at INGEST:
+      // stream ≡ batch holds thresholded too, and a thresholded scrub
+      // never removes more than the unthresholded one
+      Fixture(Seq(
+          Pass(chunkedFeed(feed, 4, "spanscrub"), scrub(1L), scrub(1L)(feed), want => {
+            assert(want.exists(_.getLong(2) > 0), "fixture should scrub corpus-owned spans")
+            assert(want.exists(_.getLong(2) == 0), "fixture should pass novel docs through")
+          }),
+          Pass(chunkedFeed(feed, 4, "spanscrub_min"), scrub(20L), scrub(20L)(feed),
+            _.foreach { r =>
+              assert(r.getLong(2) <= removed(r.getLong(0)),
+                s"doc ${r.getLong(0)}: thresholded removed ${r.getLong(2)} > " +
+                  s"unthresholded ${removed(r.getLong(0))}")
+            })),
+        () => index.grams.unpersist())
+    },
+    "streaming bigram-LM scoring ≡ batch incremental form under any chunking (q101 twin)" -> { () =>
+      import operators.TextOps
+      val all = graft.sources.Tables(spark, sf01, "documents")
+        .select(col("doc_id"), col("text"))
+      val bucket = operators.Sampling.hashBucket(col("doc_id"), 10)
+      val feed = all.filter(bucket >= 8)
+      // fit returns uni already cached (Caches.track); cache big too
+      val lm0 = TextOps.bigramLmFit(all.filter(bucket < 8))
+      val lm = lm0.copy(big = lm0.big.cache())
+      // batch truth = the shared incremental form over the whole feed
+      Fixture(Seq(Pass(chunkedFeed(feed, 4, "lmscore"),
+          TextOps.bigramLmScoreAgainst(_, lm), TextOps.bigramLmScoreAgainst(feed, lm),
+          want => assert(want.nonEmpty && want.forall(_.getDouble(2) < 0.0),
+            "fixture should score feed docs with negative log-probs"))),
+        () => { lm.big.unpersist(); operators.Caches.release(); spark.catalog.clearCache() })
+    })
+
+  dualities.foreach { case (name, setUp) =>
+    test(name) {
+      val fixture = setUp()
+      try fixture.passes.foreach(runPass) finally fixture.tearDown()
+    }
   }
 
   test("index refresh: classify → refreshed → next batch ≡ one-shot classify") {
-    import graft.streaming.IncrementalDedup
     import graft.operators.Dedup
     import spark.implicits._
     def verdicts(df: org.apache.spark.sql.DataFrame) = df.collect()
@@ -271,7 +433,7 @@ class StreamingMultimodalSpec extends AnyFunSuite {
       (21L, "eleven twelve thirteen fourteen fifteen sixteen eighteen"),  // near of 11
       (22L, "entirely novel words never seen in any earlier document")    // new
     ).toDF("doc_id", "text")
-    val idx0 = IncrementalDedup.index(corpus).cache()
+    val idx0 = Dedup.hashSigProjection(corpus).cache()
     val v1 = Dedup.classifyNew(Dedup.hashSigProjection(batch1), idx0)
     assert(verdicts(v1) ==
       Set((10L, "exact", Some(1L)), (11L, "new", None)))
@@ -279,7 +441,7 @@ class StreamingMultimodalSpec extends AnyFunSuite {
     // new — the refresh is load-bearing, not bookkeeping
     val unrefreshed = Dedup.classifyNew(Dedup.hashSigProjection(batch2), idx0)
     assert(verdicts(unrefreshed).forall(_._2 == "new"))
-    val idx1 = IncrementalDedup.refreshed(idx0, batch1, v1).cache()
+    val idx1 = Dedup.refreshed(idx0, batch1, v1).cache()
     val v2 = Dedup.classifyNew(Dedup.hashSigProjection(batch2), idx1)
     assert(verdicts(v2) == Set((20L, "exact", Some(11L)),
       (21L, "near", Some(11L)), (22L, "new", None)))
@@ -326,121 +488,6 @@ class StreamingMultimodalSpec extends AnyFunSuite {
       MediaCodec.nearDupImageBase(a) == MediaCodec.nearDupImageBase(b) }
     assert(sameBase.toDouble / got.size > 0.9,
       s"only $sameBase/${got.size} pairs share a pattern base")
-  }
-
-  test("streaming image dedup ≡ batch classify under any chunking (q75 twin)") {
-    import graft.streaming.ImageDedup
-    import graft.operators.{DedupIndex, Multimodal, Sampling}
-    val spark2 = spark
-    import spark2.implicits._
-    val prefix = "graft_imgtwin"
-    def dropAll(): Unit =
-      DedupIndex.dropTable(spark, DedupIndex.imgTable(prefix))
-    val dir = java.nio.file.Files.createTempDirectory("graft_imgstream").toString
-    val all = Multimodal.imageDHashes(spark, sf)
-      .select(col("media_id").as("doc_id"), col("dhash"))
-    val isNew = Sampling.hashBucket(col("doc_id"), 5) === 4
-    dropAll()
-    try {
-      // corpus = bases 0..10 only: batch images of bases 11..20 have no
-      // corpus twin and must come back `new` (else the duality is
-      // vacuously all-near_image on this dense fixture)
-      DedupIndex.saveImgIndex(
-        all.filter(!isNew && expr("(doc_id div 3) % 21 < 11")),
-        prefix, buckets = 4)
-      // the feed: the batch split's REAL PNG payloads, written as 3
-      // file chunks so maxFilesPerTrigger replays them as 3 micro-batches
-      val batchIds = all.filter(isNew).select("doc_id").as[Long]
-      batchIds.mapPartitions { it =>
-        it.map(id => (id, Multimodal.MediaCodec.pngNearFor(id)))
-      }.toDF("doc_id", "bytes")
-        .withColumn("_chunk", pmod(col("doc_id"), lit(3)))
-        .write.partitionBy("_chunk").mode("overwrite").parquet(s"$dir/feed")
-      val schema = spark.read.parquet(s"$dir/feed").schema
-      val got = scala.collection.mutable.ListBuffer.empty[(Long, String, Option[Long])]
-      val q = ImageDedup.start(
-        spark.readStream.schema(schema)
-          .option("maxFilesPerTrigger", 1).parquet(s"$dir/feed"),
-        prefix,
-        (v, _) => got ++= v.collect().map(r => (r.getLong(0), r.getString(1),
-          if (r.isNullAt(2)) None else Some(r.getLong(2)))))
-      try q.processAllAvailable() finally q.stop()
-      // duality: chunked streaming verdicts ≡ the one-shot batch classify
-      val expected = ImageDedup.classify(spark,
-          all.filter(isNew), prefix).collect()
-        .map(r => (r.getLong(0), r.getString(1),
-          if (r.isNullAt(2)) None else Some(r.getLong(2)))).toSet
-      assert(got.toSet == expected,
-        s"stream-only=${got.toSet -- expected} batch-only=${expected -- got.toSet}")
-      assert(expected.exists(_._2 == "near_image") && expected.exists(_._2 == "new"),
-        "fixture must exercise both verdicts or the duality is vacuous")
-      operators.Caches.release()
-      spark.catalog.clearCache()
-    } finally dropAll()
-  }
-
-  test("streaming audio+video dedup ≡ batch classify under any chunking (q78 twins)") {
-    import graft.streaming.MediaDedup
-    import graft.operators.{DedupIndex, Multimodal, Sampling}
-    val spark2 = spark
-    import spark2.implicits._
-    val prefix = "graft_avtwin"
-    def dropAll(): Unit = Seq(DedupIndex.afpTable(prefix),
-      DedupIndex.vidTable(prefix)).foreach(DedupIndex.dropTable(spark, _))
-    val dir = java.nio.file.Files.createTempDirectory("graft_avstream").toString
-    val afps = Multimodal.audioFingerprints(spark, sf)
-      .select(col("media_id").as("doc_id"), col("afp"))
-    val vids = Multimodal.videoHashes(spark, sf)
-      .select(col("media_id").as("doc_id"), col("dhash"))
-    val isNew = Sampling.hashBucket(col("doc_id"), 5) === 4
-    dropAll()
-    try {
-      // corpus = half the waveform/pattern bases, so some batch media
-      // come back `new` (the ImageDedup-twin non-vacuity trick)
-      DedupIndex.saveAfpIndex(
-        afps.filter(!isNew && expr("(doc_id div 3) % 17 < 9")), prefix,
-        buckets = 4)
-      DedupIndex.saveVidIndex(
-        vids.filter(!isNew && expr("(doc_id div 3) % 13 < 7")), prefix,
-        buckets = 4)
-      def collectVerdicts(v: org.apache.spark.sql.DataFrame) =
-        v.collect().map(r => (r.getLong(0), r.getString(1),
-          if (r.isNullAt(2)) None else Some(r.getLong(2))))
-      // ---- audio twin: real WAV bytes streamed in 3 file chunks ----
-      afps.filter(isNew).select("doc_id").as[Long].mapPartitions { it =>
-        it.map(id => (id, Multimodal.MediaCodec.wavNearFor(id)))
-      }.toDF("doc_id", "bytes")
-        .withColumn("_chunk", pmod(col("doc_id"), lit(3)))
-        .write.partitionBy("_chunk").mode("overwrite").parquet(s"$dir/wav")
-      val aGot = scala.collection.mutable.ListBuffer.empty[(Long, String, Option[Long])]
-      val aq = MediaDedup.startAudio(
-        spark.readStream.schema(spark.read.parquet(s"$dir/wav").schema)
-          .option("maxFilesPerTrigger", 1).parquet(s"$dir/wav"),
-        prefix, (v, _) => aGot ++= collectVerdicts(v))
-      try aq.processAllAvailable() finally aq.stop()
-      val aExpected = collectVerdicts(
-        MediaDedup.classifyAudio(afps.filter(isNew), prefix)).toSet
-      assert(aGot.toSet == aExpected)
-      assert(aExpected.exists(_._2 == "near_audio") && aExpected.exists(_._2 == "new"))
-      // ---- video twin: real RAWV bytes, same chunked replay ----
-      vids.filter(isNew).select("doc_id").as[Long].mapPartitions { it =>
-        it.map(id => (id, Multimodal.MediaCodec.rawvNearFor(id)))
-      }.toDF("doc_id", "bytes")
-        .withColumn("_chunk", pmod(col("doc_id"), lit(3)))
-        .write.partitionBy("_chunk").mode("overwrite").parquet(s"$dir/rawv")
-      val vGot = scala.collection.mutable.ListBuffer.empty[(Long, String, Option[Long])]
-      val vq = MediaDedup.startVideo(
-        spark.readStream.schema(spark.read.parquet(s"$dir/rawv").schema)
-          .option("maxFilesPerTrigger", 1).parquet(s"$dir/rawv"),
-        prefix, (v, _) => vGot ++= collectVerdicts(v))
-      try vq.processAllAvailable() finally vq.stop()
-      val vExpected = collectVerdicts(
-        MediaDedup.classifyVideo(vids.filter(isNew), prefix)).toSet
-      assert(vGot.toSet == vExpected)
-      assert(vExpected.exists(_._2 == "near_video") && vExpected.exists(_._2 == "new"))
-      operators.Caches.release()
-      spark.catalog.clearCache()
-    } finally dropAll()
   }
 
   test("video near-dup: banding ≡ brute force, dims/frame-count-invariant, base-precise (q77)") {
@@ -510,78 +557,6 @@ class StreamingMultimodalSpec extends AnyFunSuite {
       MediaCodec.nearDupAudioBase(a) == MediaCodec.nearDupAudioBase(b) }
     assert(sameBase.toDouble / got.size > 0.9,
       s"only $sameBase/${got.size} pairs share a waveform base")
-  }
-
-  test("streaming decontamination ≡ batch hits under any chunking (q72 twin)") {
-    import graft.streaming.Decontamination
-    import graft.functions.TextFunctions.tokens
-    val dir = java.nio.file.Files.createTempDirectory("graft_decon").toString
-    // sf0.01: the sf0.001 corpus has NO natural 8-gram leakage across
-    // the hash split (verified), which would make the duality vacuous
-    val sfDecon = "/root/testdata/sf0.01"
-    val docs = graft.sources.Tables(spark, sfDecon, "documents")
-      .select(col("doc_id"), col("text"))
-      .withColumn("_eval", operators.Sampling.hashBucket(col("doc_id"), 10) === 0)
-    // feed = the q72 train split in 4 file-source micro-batches;
-    // index = the benchmark gram index, cached like a deployment would
-    docs.filter(!col("_eval")).select("doc_id", "text")
-      .withColumn("_chunk", pmod(col("doc_id"), lit(4)))
-      .write.partitionBy("_chunk").mode("overwrite").parquet(s"$dir/feed")
-    val idx = Decontamination.index(
-      docs.filter(col("_eval")).select("doc_id", "text")).cache()
-    val stream = spark.readStream
-      .schema(org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("doc_id",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("text",
-          org.apache.spark.sql.types.StringType))))
-      .option("maxFilesPerTrigger", 1)
-      .parquet(s"$dir/feed")
-    val got = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long)]
-    val q = Decontamination.start(stream, idx, (hits, _) =>
-      got.synchronized {
-        got ++= hits.collect().map(r =>
-          (r.getLong(0), r.getLong(1), r.getLong(2)))
-      })
-    try q.processAllAvailable() finally q.stop()
-    val want = operators.Sampling.contaminationHits(
-      docs.filter(!col("_eval"))
-        .select(col("doc_id"), tokens(col("text")).as("t"))
-        .filter(size(col("t")) >= 8), idx)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    idx.unpersist()
-    assert(want.nonEmpty, "fixture should contain contaminated train docs")
-    assert(got.size == want.size,
-      s"stream emitted ${got.size} hits, batch has ${want.size}")
-    assert(got.toSet == want,
-      s"hit drift: stream-only=${got.toSet -- want} batch-only=${want -- got.toSet}")
-  }
-
-  test("streaming self dedup ≡ batch repeated-gram scrub under any chunking (q95 twin)") {
-    import graft.streaming.SelfDedup
-    // sf0.01: 27 documents carry intra-doc repeated 3-grams, so the
-    // duality is non-vacuous on the scrubbed branch too
-    val sfSelf = "/root/testdata/sf0.01"
-    val docs = graft.sources.Tables(spark, sfSelf, "documents")
-      .select(col("doc_id"), col("text"))
-    val stream = chunkedFeed(docs, "selfdedup")
-    val got = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long, Long, String)]
-    val q = SelfDedup.start(stream, (rows, _) =>
-      got.synchronized {
-        got ++= rows.collect().map(r =>
-          (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getString(4)))
-      })
-    try q.processAllAvailable() finally q.stop()
-    // batch truth = the declared q95 rows themselves
-    val want = operators.TextOps.repeatedGramScrub(spark, sfSelf)
-      .collect().map(r =>
-        (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getString(4)))
-      .toSet
-    assert(want.exists(_._3 > 0), "fixture should scrub repeated grams")
-    assert(got.size == want.size,
-      s"stream emitted ${got.size} per-doc rows, batch has ${want.size}")
-    assert(got.toSet == want,
-      s"scrub drift: stream-only=${got.toSet -- want} batch-only=${want -- got.toSet}")
   }
 
   test("streaming shard append: two-trigger replay ≡ the declared q104 rows (zero keyed state)") {
@@ -731,11 +706,11 @@ class StreamingMultimodalSpec extends AnyFunSuite {
     def storeRows() = spark.read.parquet(path)
       .select(col("shard_id").cast("long"), col("seq_id"), col("doc_id"))
       .collect().map(_.toSeq).toSeq.sortBy(_.toString)
-    assert(ShardAppend.committedBatch(path) === -1L) // no store, no marker
+    assert(Ingest.committedBatch(path) === -1L) // no store, no marker
     assert(ShardAppend.applyBatch(b0, 0L, path, 512L, 8L).isDefined)
-    assert(ShardAppend.committedBatch(path) === 0L)
+    assert(Ingest.committedBatch(path) === 0L)
     assert(ShardAppend.applyBatch(b1, 1L, path, 512L, 8L).isDefined)
-    assert(ShardAppend.committedBatch(path) === 1L)
+    assert(Ingest.committedBatch(path) === 1L)
     val afterB1 = storeRows()
     assert(afterB1.size === 4)
     // the replay: same batch id re-executed — skipped, store untouched
@@ -749,133 +724,21 @@ class StreamingMultimodalSpec extends AnyFunSuite {
     // a genuinely NEW batch still applies and advances the marker
     val b2 = Seq((5L, "india juliet")).toDF("doc_id", "text")
     assert(ShardAppend.applyBatch(b2, 2L, path, 512L, 8L).isDefined)
-    assert(ShardAppend.committedBatch(path) === 2L)
+    assert(Ingest.committedBatch(path) === 2L)
     assert(storeRows().size === 5)
+    // an unreadable marker fails OPEN: it reads as -1, so the next batch
+    // is re-applied, never silently dropped
+    java.nio.file.Files.write(java.nio.file.Paths.get(path, "_graft_last_batch"),
+      "not a batch id".getBytes("UTF-8"))
+    assert(Ingest.committedBatch(path) === -1L)
+    val b3 = Seq((6L, "kilo lima")).toDF("doc_id", "text")
+    assert(ShardAppend.applyBatch(b3, 3L, path, 512L, 8L).isDefined)
+    assert(Ingest.committedBatch(path) === 3L)
+    assert(storeRows().size === 6)
     graft.operators.Caches.release()
   }
 
-  test("streaming line dedup ≡ batch scrub under any chunking (q87 twin)") {
-    import graft.streaming.LineDedup
-    // sf0.01: boilerplate lines actually exist there (127 cross-doc
-    // line hashes), so the duality is non-vacuous
-    val sfLine = "/root/testdata/sf0.01"
-    val docs = graft.sources.Tables(spark, sfLine, "documents")
-      .select(col("doc_id"), col("text"))
-    val boiler = LineDedup.boilerIndex(docs).cache()
-    val stream = chunkedFeed(docs, "linededup")
-    val got = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long, Long, String)]
-    val q = LineDedup.start(stream, boiler, (rows, _) =>
-      got.synchronized {
-        got ++= rows.collect().map(r =>
-          (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getString(4)))
-      })
-    try q.processAllAvailable() finally q.stop()
-    boiler.unpersist()
-    // batch truth = the declared q87 rows themselves
-    val want = operators.TextOps.lineDedup(spark, sfLine)
-      .collect().map(r =>
-        (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getString(4)))
-      .toSet
-    assert(want.exists(_._3 > 0), "fixture should remove boilerplate lines")
-    assert(got.size == want.size,
-      s"stream emitted ${got.size} per-doc rows, batch has ${want.size}")
-    assert(got.toSet == want,
-      s"scrub drift: stream-only=${got.toSet -- want} batch-only=${want -- got.toSet}")
-  }
-
-  test("streaming cross-doc span scrub ≡ batch incremental form under any chunking (q99 twin)") {
-    import graft.streaming.SpanScrub
-    // sf0.01: 7 of the 108 feed-bucket docs share an 8-gram with the
-    // corpus buckets, so the duality is non-vacuous
-    val sfSpan = "/root/testdata/sf0.01"
-    val all = graft.sources.Tables(spark, sfSpan, "documents")
-      .select(col("doc_id"), col("text"))
-    val bucket = graft.operators.Sampling.hashBucket(col("doc_id"), 10)
-    val corpus = all.filter(bucket < 8)
-    val feed = all.filter(bucket >= 8)
-    val index0 = SpanScrub.gramIndex(corpus)
-    val index = index0.copy(grams = index0.grams.cache())
-    val stream = chunkedFeed(feed, "spanscrub")
-    val got = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long, Long, String)]
-    val q = SpanScrub.start(stream, index, (rows, _) =>
-      got.synchronized {
-        got ++= rows.collect().map(r =>
-          (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getString(4)))
-      })
-    try q.processAllAvailable() finally q.stop()
-    // batch truth = the shared incremental form over the whole feed
-    val want = operators.TextOps.scrubAgainstGramIndex(feed, index)
-      .collect().map(r =>
-        (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getString(4)))
-      .toSet
-    assert(want.exists(_._3 > 0), "fixture should scrub corpus-owned spans")
-    assert(want.exists(_._3 == 0), "fixture should pass novel docs through")
-    assert(got.size == want.size,
-      s"stream emitted ${got.size} per-doc rows, batch has ${want.size}")
-    assert(got.toSet == want,
-      s"scrub drift: stream-only=${got.toSet -- want} batch-only=${want -- got.toSet}")
-    // q102's minimum-match-length rule at INGEST: the twin forwards
-    // minSpanTokens into the same shared scrub, so stream ≡ batch holds
-    // thresholded too, and a thresholded scrub never removes more than
-    // the unthresholded one
-    val streamT = chunkedFeed(feed, "spanscrub_min")
-    val gotT = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long, Long, String)]
-    val qT = graft.streaming.SpanScrub.start(streamT, index, (rows, _) =>
-      gotT.synchronized {
-        gotT ++= rows.collect().map(r =>
-          (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getString(4)))
-      }, minSpanTokens = 20L)
-    try qT.processAllAvailable() finally qT.stop()
-    val wantT = operators.TextOps.scrubAgainstGramIndex(feed, index, 20L)
-      .collect().map(r =>
-        (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getString(4)))
-      .toSet
-    index.grams.unpersist()
-    assert(gotT.toSet == wantT,
-      s"thresholded scrub drift: stream-only=${gotT.toSet -- wantT} batch-only=${wantT -- gotT.toSet}")
-    val unthreshRemoved = want.map(r => r._1 -> r._3).toMap
-    wantT.foreach { r =>
-      assert(r._3 <= unthreshRemoved(r._1),
-        s"doc ${r._1}: thresholded removed ${r._3} > unthresholded ${unthreshRemoved(r._1)}")
-    }
-  }
-
-  test("streaming bigram-LM scoring ≡ batch incremental form under any chunking (q101 twin)") {
-    import graft.streaming.LmScore
-    val sfLm = "/root/testdata/sf0.01"
-    val all = graft.sources.Tables(spark, sfLm, "documents")
-      .select(col("doc_id"), col("text"))
-    val bucket = graft.operators.Sampling.hashBucket(col("doc_id"), 10)
-    val corpus = all.filter(bucket < 8)
-    val feed = all.filter(bucket >= 8)
-    // fit returns uni already cached (Caches.track); cache big too
-    val lm0 = LmScore.fit(corpus)
-    val lm = lm0.copy(big = lm0.big.cache())
-    val stream = chunkedFeed(feed, "lmscore")
-    val got = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Double, Double)]
-    val q = LmScore.start(stream, lm, (rows, _) =>
-      got.synchronized {
-        got ++= rows.collect().map(r =>
-          (r.getLong(0), r.getLong(1), r.getDouble(2), r.getDouble(3)))
-      })
-    try q.processAllAvailable() finally q.stop()
-    // batch truth = the shared incremental form over the whole feed
-    val want = operators.TextOps.bigramLmScoreAgainst(feed, lm)
-      .collect().map(r =>
-        (r.getLong(0), r.getLong(1), r.getDouble(2), r.getDouble(3)))
-      .toSet
-    lm.big.unpersist(); operators.Caches.release()
-    spark.catalog.clearCache()
-    assert(want.nonEmpty && want.forall(_._3 < 0.0),
-      "fixture should score feed docs with negative log-probs")
-    assert(got.size == want.size,
-      s"stream emitted ${got.size} per-doc rows, batch has ${want.size}")
-    assert(got.toSet == want,
-      s"score drift: stream-only=${got.toSet -- want} batch-only=${want -- got.toSet}")
-  }
-
   test("three-tier index refresh: classify → refreshed3 → next batch ≡ one-shot") {
-    import graft.streaming.IncrementalDedup
     import graft.operators.Dedup
     import spark.implicits._
     def verdicts(df: org.apache.spark.sql.DataFrame) = df.collect()
@@ -912,14 +775,14 @@ class StreamingMultimodalSpec extends AnyFunSuite {
       Dedup.classifyNew3(Dedup.hashSigProjection(b), idx,
         Dedup.embSketchProjection(be, bits, dim), eidx,
         bits = bits, embBands = embBands)
-    val idx0 = IncrementalDedup.index(corpus).cache()
-    val eidx0 = IncrementalDedup.embIndex(corpusEmb, bits, dim).cache()
+    val idx0 = Dedup.hashSigProjection(corpus).cache()
+    val eidx0 = Dedup.embSketchProjection(corpusEmb, bits, dim).cache()
     val v1 = classify(batch1, batch1Emb, idx0, eidx0)
     assert(verdicts(v1) == Set((10L, "exact", Some(1L)), (11L, "new", None)))
     // WITHOUT the refresh, batch2 sails through as new on every tier
     assert(verdicts(classify(batch2, batch2Emb, idx0, eidx0))
       .forall(_._2 == "new"))
-    val (idx1, eidx1) = IncrementalDedup.refreshed3(
+    val (idx1, eidx1) = Dedup.refreshed3(
       idx0, eidx0, batch1, batch1Emb, v1, bits = bits, dim = dim)
     val v2 = classify(batch2, batch2Emb, idx1.cache(), eidx1.cache())
     assert(verdicts(v2) == Set((20L, "near_embedding", Some(11L)),
@@ -1302,6 +1165,14 @@ class StreamingMultimodalSpec extends AnyFunSuite {
     assert(report.finalStateRows == 4L,
       s"expected only W's 4 band buckets after eviction, " +
         s"state=${report.finalStateRows}")
+    // the eviction horizon parses the watermark string exactly as
+    // `withWatermark` does, compound intervals included
+    import graft.streaming.Watermarks.delayMs
+    assert(delayMs("10 minutes") === 600000L)
+    assert(delayMs("1 hour") === 3600000L)
+    assert(delayMs("1 minute 30 seconds") === 90000L)
+    assert(delayMs("1 week") === 604800000L)
+    intercept[Exception](delayMs("ten minutes"))
   }
 
   test("streaming near-dup: bucket cap stops accumulation, retained prefix still pairs") {
