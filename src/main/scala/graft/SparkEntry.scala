@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.operators._
+import graft.operators.Modality.{Embedding, Image, Text}
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
   *
@@ -84,21 +85,21 @@ object SparkEntry {
     "q62_composed_pipeline" -> ((s: SparkSession, d: String) => Compose.qualityDedupPack(s, d)),
     "q63_frame_sample"      -> Multimodal.frameSampleAudit _,
     "q64_audio_features"    -> Multimodal.audioFeatureAudit _,
-    "q65_incremental_dedup" -> ((s: SparkSession, d: String) => Dedup.incrementalDedup(s, d)),
+    "q65_incremental_dedup" -> ((s: SparkSession, d: String) => Dedup.incrementalDedup(s, d, Seq(Text)).orderBy("doc_id")),
     "q66_centroid_audit"    -> Similarity.centroidAudit _,
     "q67_crossmodal_audit"  -> ((s: SparkSession, d: String) => Similarity.crossModalAudit(s, d)),
-    "q68_incremental_dedup3" -> ((s: SparkSession, d: String) => Dedup.incrementalDedup3(s, d)),
+    "q68_incremental_dedup3" -> ((s: SparkSession, d: String) => Dedup.incrementalDedup(s, d, Seq(Text, Embedding())).orderBy("doc_id")),
     "q69_prefix_join"       -> ((s: SparkSession, d: String) => Dedup.ngramJaccardPairsPrefix(s, d)),
     "q70_embedding_clusters" -> ((s: SparkSession, d: String) => Dedup.embeddingDedupClusters(s, d)),
     "q71_url_dedup"         -> Dedup.urlNormalizedDedup _,
     "q72_decontamination"   -> ((s: SparkSession, d: String) => Sampling.benchmarkDecontamination(s, d)),
     "q73_image_neardup"     -> ((s: SparkSession, d: String) => Multimodal.imageNearDupPairs(s, d)),
-    "q74_indexed_dedup3"    -> ((s: SparkSession, d: String) => DedupIndex.incrementalDedupIndexed3(s, d)),
-    "q75_incremental_dedup4" -> ((s: SparkSession, d: String) => Dedup.incrementalDedup4(s, d)),
+    "q74_indexed_dedup3"    -> ((s: SparkSession, d: String) => DedupIndex.incrementalDedupIndexed(s, d, "graft_q74", Seq(Text, Embedding())).orderBy("doc_id")),
+    "q75_incremental_dedup4" -> ((s: SparkSession, d: String) => Dedup.incrementalDedup(s, d, Seq(Text, Embedding(), Image)).orderBy("doc_id")),
     "q76_audio_neardup"     -> ((s: SparkSession, d: String) => Multimodal.audioNearDupPairs(s, d)),
     "q77_video_neardup"     -> ((s: SparkSession, d: String) => Multimodal.videoNearDupPairs(s, d)),
-    "q78_incremental_dedup6" -> ((s: SparkSession, d: String) => Dedup.incrementalDedup6(s, d)),
-    "q79_indexed_dedup6"    -> ((s: SparkSession, d: String) => DedupIndex.incrementalDedupIndexed6(s, d)),
+    "q78_incremental_dedup6" -> ((s: SparkSession, d: String) => Dedup.incrementalDedup(s, d, Modality.all).orderBy("doc_id")),
+    "q79_indexed_dedup6"    -> ((s: SparkSession, d: String) => DedupIndex.incrementalDedupIndexed(s, d, "graft_q79", Modality.all).orderBy("doc_id")),
     "q80_doc_chunking"      -> ((s: SparkSession, d: String) => TextOps.docChunks(s, d)),
     "q81_chunk_packing"     -> ((s: SparkSession, d: String) => Packing.packChunks(s, d)),
     "q82_vocab_oov"         -> ((s: SparkSession, d: String) => TextOps.vocabOov(s, d)),
@@ -108,12 +109,12 @@ object SparkEntry {
     "q86_length_quantiles"  -> Sketches.tokenLengthQuantiles _,
     "q87_line_dedup"        -> ((s: SparkSession, d: String) => TextOps.lineDedup(s, d)),
     "q88_contaminated_spans" -> ((s: SparkSession, d: String) => Sampling.contaminatedSpans(s, d)),
-    "q89_index_append_probe" -> ((s: SparkSession, d: String) => DedupIndex.indexAppendProbe(s, d)),
+    "q89_index_append_probe" -> ((s: SparkSession, d: String) => DedupIndex.indexAppendProbe(s, d, "graft_q89", Seq(Text, Embedding())).orderBy("doc_id")),
     // iteration count passed EXPLICITLY from the same constant the
     // oracle generators unroll — the two sides cannot drift
     "q90_bpe_merges"        -> ((s: SparkSession, d: String) => Bpe.bpeMerges(s, d, BpeIters)),
     "q91_bpe_fertility"     -> ((s: SparkSession, d: String) => Bpe.bpeFertility(s, d, BpeIters)),
-    "q92_index_append_probe6" -> ((s: SparkSession, d: String) => DedupIndex.indexAppendProbe6(s, d)),
+    "q92_index_append_probe6" -> ((s: SparkSession, d: String) => DedupIndex.indexAppendProbe(s, d, "graft_q92", Modality.all).orderBy("doc_id")),
     "q93_line_dedup_newline" -> ((s: SparkSession, d: String) => TextOps.lineDedupNewline(s, d)),
     "q94_cluster_canonical" -> ((s: SparkSession, d: String) => Dedup.clusterCanonical(s, d)),
     "q95_repeated_gram_scrub" -> ((s: SparkSession, d: String) => TextOps.repeatedGramScrub(s, d)),
@@ -1988,7 +1989,7 @@ object SparkEntry {
     // split rule onto the embeddings side.
     "q68_incremental_dedup3" -> incrementalDedup3Sql,
     // q74: the SAME verdicts computed through the STORED bucketed index
-    // (DedupIndex.incrementalDedupIndexed3) — write path + probe path
+    // (DedupIndex.incrementalDedupIndexed) — write path + probe path
     // gated end-to-end. The engine-side duality (indexed ≡ in-memory
     // classifier) is spec-proven, so the oracle is q68's SQL verbatim:
     // a q74/q68 verdict divergence would fail BOTH against this one

@@ -110,10 +110,6 @@ object Customs {
           features: Seq[String]): DataFrame =
     discriminantAnalysis(train, score, labelCol, features, pooled = true)
 
-  def qda(train: DataFrame, score: DataFrame, labelCol: String,
-          features: Seq[String]): DataFrame =
-    discriminantAnalysis(train, score, labelCol, features, pooled = false)
-
   /** Exact KNN classifier (M4): candidate pairs via broadcast of the
     * (small) test side, vote by majority among the k nearest. Exact — the
     * LSH route in operators.Similarity is the at-scale approximation. */

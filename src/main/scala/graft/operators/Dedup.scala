@@ -855,171 +855,85 @@ object Dedup {
       .orderBy(col("doc_a"), col("doc_b"))
   }
 
-  /** q65 — INCREMENTAL batch dedup: dedup a NEW document batch against
-    * an EXISTING corpus — the shape production dedup actually runs
-    * day-over-day (a crawl delta lands; nobody re-dedups 100 TB from
-    * scratch). The batch/corpus split is the portable hash rule
-    * ([[Sampling.hashBucket]] mod 5 == 4 → ~20% "new"), so the oracle
-    * reproduces membership exactly.
+  /** q65/q68/q75/q78 — INCREMENTAL dedup: classify a NEW document batch
+    * against an EXISTING corpus — the shape production dedup actually
+    * runs day over day (a crawl delta lands; nobody re-dedups 100 TB
+    * from scratch). The batch is [[Modality.splitBucket]] 4 (~20%), the
+    * corpus the rest: a portable hash rule, so the oracle reproduces
+    * membership exactly. `mods` picks the tiers (q65: Text; q68: + the
+    * Embedding; q75: + Image; q78: all five modalities); precedence is
+    * the modality table's, see [[classify]].
     *
-    * Each batch document is classified:
-    *  - `exact` — its md5(text) matches some corpus document;
-    *  - `near`  — it shares a MinHash LSH band (q27's signature family:
-    *    4 bands × 3 rows over 12 portable affine minhashes) with a
-    *    corpus document whose signature agreement ≥ `estThreshold`;
-    *  - `new`   — neither. `match_id` = the smallest matching corpus
-    *    doc_id (exact match wins), NULL for `new`.
-    *
-    * Scale shape: signatures and content hashes come from ONE cached
-    * scan; every join is keyed (content hash / band key) with the SMALL
-    * batch side — at production scale the corpus side is a precomputed
-    * signature index and AQE broadcasts the batch, so the corpus is
-    * never shuffled, let alone self-joined. Directional (batch→corpus)
-    * banding also means candidate volume is |batch|-proportional, not
-    * |corpus|²-proportional. */
-  def incrementalDedup(s: SparkSession, dir: String, k: Int = 12,
-                       bands: Int = 4, estThreshold: Double = 0.5): DataFrame = {
-    // spread: the per-row minhash signature is the map-side hotspot.
-    // ONE scan: split flag + content hash + signature, cached — both
-    // sides of every join in the classifier read this cache.
-    val base = Caches.track(
-      hashSigProjection(docsSpread(s, dir), k)
-        .withColumn("_new", Sampling.hashBucket(col("doc_id"), 5) === 4))
-    classifyNew(base.filter(col("_new")).drop("_new"),
-                base.filter(!col("_new")).drop("_new"),
-                k, bands, estThreshold)
+    * Scale shape: each modality's side is ONE cached per-row projection
+    * carrying the split flag, read by both sides of its tier joins;
+    * every join is keyed (content hash / band key) with the SMALL batch
+    * side — at production scale the corpus side is a precomputed index
+    * and AQE broadcasts the batch, so the corpus is never shuffled, let
+    * alone self-joined, and candidate volume is |batch|-proportional.
+    * Production deployment: persist the corpus sides as [[DedupIndex]]'s
+    * bucketed tables — every tier then probes with ZERO index-side
+    * shuffle (plan-asserted in DedupIndexSpec). */
+  def incrementalDedup(s: SparkSession, dir: String,
+                       mods: Seq[Modality]): DataFrame = {
+    val flagged = mods.map(m => m -> Caches.track(
+      m.side(s, dir, lit(true)).withColumn("_new", Modality.splitBucket === 4)))
+    def half(isNew: Column) =
+      flagged.map { case (m, df) => m -> df.filter(isNew).drop("_new") }.toMap
+    classify(half(col("_new")), half(!col("_new")))
   }
 
-  /** [[incrementalDedup]] over ANY pair of (doc_id, text) frames — the
-    * library entry point: classify `newDocs` against `corpus` without
-    * the driver-table split rule. Callers with a precomputed index
-    * ([[hashSigProjection]], refreshed by [[refreshed]]) run
-    * [[classifyNewRaw]] per micro-batch through
-    * [[graft.streaming.Ingest.probe]]. */
-  def incrementalDedupFor(newDocs: DataFrame, corpus: DataFrame,
-                          k: Int = 12, bands: Int = 4,
-                          estThreshold: Double = 0.5): DataFrame =
-    classifyNew(hashSigProjection(newDocs, k), hashSigProjection(corpus, k),
-      k, bands, estThreshold)
+  /** Classify each `batch` doc against `corpus`, both given as
+    * [[Modality]] sides: (doc_id, status, match_id), unsorted. Every
+    * modality's tiers fold through ONE [[verdictTiers]] in the
+    * modality table's precedence (exact > near > near_embedding >
+    * near_image > near_audio > near_video > new); `match_id` is the
+    * smallest matching corpus doc_id of the winning tier, NULL for
+    * `new`. Batch ids come from the highest-precedence side; a doc with
+    * no row on some lower side simply can't match that tier. Shared by
+    * the declared queries and per-micro-batch ingest (a cached corpus
+    * side is the in-memory index; [[refreshed]] keeps it current), so
+    * batch and continuous ingest can't drift. */
+  def classify(batch: Map[Modality, DataFrame],
+               corpus: Map[Modality, DataFrame]): DataFrame = {
+    val mods = Modality.ordered(batch.keys)
+    verdictTiers(batch(mods.head).select(col("doc_id")),
+      mods.flatMap(m => m.tiers(batch(m), corpus(m))))
+  }
+
+  /** Fold a classified batch's `new` survivors into existing index sides
+    * WITHOUT a full corpus rebuild — the day-over-day loop (classify →
+    * refresh → tomorrow's batch). Only `new` verdicts enter, on every
+    * side: no tier matched them, so every tier must be able to probe
+    * them tomorrow; exact/near matches are represented by their corpus
+    * copy. Exact by construction: each side is a pure per-row
+    * projection, so `index(C) ∪ side(B_new) ≡ index(C ∪ B_new)` — the
+    * refresh duality specs prove classify-after-refresh equals the
+    * one-shot classification end to end.
+    *
+    * The unions are lazy and cost |B_new| rows; the deliberate act is
+    * the cache swap (persist the returned sides, unpersist the old) or
+    * the durable form, [[DedupIndex.append]]. A streaming query picks up
+    * a new static side on restart. */
+  def refreshed(index: Map[Modality, DataFrame], batch: Map[Modality, DataFrame],
+                verdicts: DataFrame): Map[Modality, DataFrame] = {
+    val newIds = verdicts.filter(col("status") === "new").select("doc_id")
+    index.map { case (m, idx) => m -> idx.unionByName(batch(m).join(newIds, Seq("doc_id"))) }
+  }
 
   /** (doc_id, _h, sig) projection over a (doc_id, text) frame: content
-    * hash + k-minhash signature (null for <3-token docs). Pure per-row,
-    * no shuffle; two-step projection so the token split evaluates once
-    * (CollapseProject keeps a non-cheap alias referenced twice). The
-    * corpus side of [[classifyNew]] is exactly this projection — a
-    * production deployment precomputes and caches it as the dedup
-    * INDEX ([[refreshed]] keeps it current), and per-micro-batch ingest
-    * projects each batch the same way. */
-  def hashSigProjection(docs: DataFrame, k: Int = 12): DataFrame =
+    * hash + [[Modality.Text]]'s k-minhash signature (null for <3-token
+    * docs) — the Text side. Pure per-row, no shuffle; two-step
+    * projection so the token split evaluates once (CollapseProject
+    * keeps a non-cheap alias referenced twice). */
+  def hashSigProjection(docs: DataFrame): DataFrame =
     docs.select(col("doc_id"), md5(col("text")).as("_h"),
         tokens(col("text")).as("_t"))
       .select(col("doc_id"), col("_h"),
-        when(size(col("_t")) >= 3, minhashSigCol(col("_t"), k)).as("sig"))
-
-  /** Fold a classified batch's `new` survivors into an existing
-    * [[hashSigProjection]] index WITHOUT a full corpus rebuild — the
-    * day-over-day production loop (classify → refresh → tomorrow's
-    * batch). Only `new`-verdict docs enter: exact/near matches are
-    * duplicates whose corpus copy already indexes them. Exact by
-    * construction: the projection is pure per-row, so
-    * `index(C) ∪ proj(B_new) ≡ index(C ∪ B_new)` — the refresh duality
-    * spec proves classify-after-refresh equals the one-shot
-    * classification end-to-end.
-    *
-    * The union is lazy and costs |B_new| rows of projection; the
-    * deliberate act is the cache swap — persist the returned frame and
-    * unpersist the old index (or append the |B_new| index rows to the
-    * index's table: the same union, durable). A streaming query picks
-    * up the new static side on restart (static-side refresh is a
-    * restart-boundary operation in Structured Streaming). */
-  def refreshed(index: DataFrame, batchDocs: DataFrame, verdicts: DataFrame,
-                k: Int = 12): DataFrame =
-    index.unionByName(hashSigProjection(
-      batchDocs.join(
-        verdicts.filter(col("status") === "new").select("doc_id"),
-        Seq("doc_id")), k))
-
-  /** Three-tier [[refreshed]]: fold a classified batch's `new` survivors
-    * into BOTH indexes — text ([[hashSigProjection]]) and embedding
-    * ([[embSketchProjection]]). A `new` verdict means no tier matched,
-    * so the doc must become probe-able by every tier tomorrow;
-    * exact/near/near_embedding matches are already represented by their
-    * corpus copy. Same exactness argument as [[refreshed]] (both
-    * projections are pure per-row, so union ≡ rebuild), proven
-    * end-to-end by the three-tier duality spec. Returns
-    * (textIndex', embIndex'). */
-  def refreshed3(index: DataFrame, embIdx: DataFrame,
-                 batchDocs: DataFrame, batchEmb: DataFrame,
-                 verdicts: DataFrame, k: Int = 12,
-                 bits: Int = 32, dim: Int = 64): (DataFrame, DataFrame) = {
-    val newIds = verdicts.filter(col("status") === "new").select("doc_id")
-    (index.unionByName(
-       hashSigProjection(batchDocs.join(newIds, Seq("doc_id")), k)),
-     embIdx.unionByName(
-       embSketchProjection(batchEmb.join(newIds, Seq("doc_id")), bits, dim)))
-  }
-
-  /** Classify each `batch` doc against `corpus` — both already
-    * [[hashSigProjection]]-shaped. Shared verbatim by q65 and
-    * per-micro-batch ingest, so batch and continuous ingest can't drift.
-    * Every join is keyed with the SMALL batch side (AQE broadcasts it);
-    * the corpus is never shuffled against itself. */
-  private[graft] def classifyNew(batch: DataFrame, corpus: DataFrame,
-                                 k: Int = 12, bands: Int = 4,
-                                 estThreshold: Double = 0.5): DataFrame =
-    // sort-last, cache-free (the tier joins re-read the callers' cached
-    // projections under sampling); streaming ingest uses
-    // [[classifyNewRaw]] — its sink needs no order at all.
-    classifyNewRaw(batch, corpus, k, bands, estThreshold)
-      .orderBy(col("doc_id"))
-
-  /** [[classifyNew]] without the oracle sort or the cache — the
-    * per-micro-batch entry (verdicts are order-free rows to a sink),
-    * run by [[graft.streaming.Ingest.probe]]. */
-  def classifyNewRaw(batch: DataFrame, corpus: DataFrame,
-                     k: Int = 12, bands: Int = 4,
-                     estThreshold: Double = 0.5): DataFrame =
-    batch.select(col("doc_id"))
-      .join(exactTier(batch, corpus), Seq("doc_id"), "left")
-      .join(nearTier(batch, corpus, k, bands, estThreshold), Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        when(col("exact_id").isNotNull, "exact")
-          .when(col("near_id").isNotNull, "near")
-          .otherwise("new").as("status"),
-        coalesce(col("exact_id"), col("near_id")).as("match_id"))
-
-  /** Exact tier: content-hash equi join, batch side small → broadcast.
-    * (doc_id, exact_id = min matching corpus doc_id). */
-  private def exactTier(batch: DataFrame, corpus: DataFrame): DataFrame =
-    batch.select(col("doc_id"), col("_h"))
-      .join(corpus.select(col("_h"), col("doc_id").as("_cid")), Seq("_h"))
-      .groupBy(col("doc_id")).agg(min(col("_cid")).as("exact_id"))
-
-  /** Near tier: band-keyed batch→corpus MinHash join (never
-    * corpus×corpus). (doc_id, near_id). */
-  private def nearTier(batch: DataFrame, corpus: DataFrame, k: Int,
-                       bands: Int, estThreshold: Double): DataFrame = {
-    def banded(df: DataFrame): DataFrame = df.filter(col("sig").isNotNull)
-      .select(col("doc_id"),
-        explode(bandKeyStructs(i => element_at(col("sig"), i + 1), k, bands)).as("b"))
-      .select(col("doc_id"), col("b.band").as("band"), col("b.key").as("key"))
-    val cand = banded(batch).as("x")
-      .join(banded(corpus).as("y"), Seq("band", "key"))
-      .select(col("x.doc_id").as("doc_id"), col("y.doc_id").as("_cid"))
-      .distinct()
-    val agree = size(filter(
-      zip_with(col("_sa"), col("_sb"), (x, y) => x === y), v => v))
-    cand
-      .join(batch.select(col("doc_id"), col("sig").as("_sa")), Seq("doc_id"))
-      .join(corpus.select(col("doc_id").as("_cid"), col("sig").as("_sb")), Seq("_cid"))
-      .withColumn("_est", agree.cast("double") / lit(k.toDouble))
-      .filter(col("_est") >= estThreshold)
-      .groupBy(col("doc_id")).agg(min(col("_cid")).as("near_id"))
-  }
+        when(size(col("_t")) >= 3, minhashSigCol(col("_t"), Modality.Text.K)).as("sig"))
 
   /** (band, key) structs over a packed sign-bit sketch — `bands` keys of
     * `bits/bands` bits each; the banding every hyperplane-sketch
-    * consumer (q43, q68's embedding tier, the bucketed index) derives
+    * consumer (q43, the embedding tier, the bucketed index) derives
     * from ONE definition so bucket keys can't drift between the
     * in-memory and stored-index paths. */
   private[graft] def sketchBandStructs(sketch: Column, bits: Int,
@@ -1032,37 +946,8 @@ object Dedup {
         shiftright(sketch, bd * r).bitwiseAND(mask).as("key"))): _*)
   }
 
-  /** Embedding tier: batch→corpus hyperplane-banded candidates scored
-    * by exact cosine (q43's sketch family made DIRECTIONAL — the corpus
-    * sketch index is never self-joined). Inputs are
-    * [[embSketchProjection]]-shaped; returns (doc_id, emb_id = min
-    * matching corpus doc_id with 4dp cosine ≥ `cosThreshold`). */
-  private def embeddingTier(batchEmb: DataFrame, corpusEmb: DataFrame,
-                            cosThreshold: Double, bits: Int,
-                            embBands: Int): DataFrame = {
-    import graft.functions.VectorFunctions.dotNative
-    def banded(df: DataFrame): DataFrame = df
-      .select(col("doc_id"),
-        explode(sketchBandStructs(col("sketch"), bits, embBands)).as("b"))
-      .select(col("doc_id"), col("b.band").as("band"), col("b.key").as("key"))
-    val cand = banded(batchEmb).as("x")
-      .join(banded(corpusEmb).as("y"), Seq("band", "key"))
-      .select(col("x.doc_id").as("doc_id"), col("y.doc_id").as("_cid"))
-      .distinct()
-    // one dot per pair: norms precomputed per vector in the projection
-    cand
-      .join(batchEmb.select(col("doc_id"), col("embedding").as("_va"),
-        col("_norm").as("_na")), Seq("doc_id"))
-      .join(corpusEmb.select(col("doc_id").as("_cid"),
-        col("embedding").as("_vb"), col("_norm").as("_nb")), Seq("_cid"))
-      .withColumn("_cos",
-        round(dotNative(col("_va"), col("_vb")) / (col("_na") * col("_nb")), 4))
-      .filter(col("_cos") >= cosThreshold)
-      .groupBy(col("doc_id")).agg(min(col("_cid")).as("emb_id"))
-  }
-
   /** (doc_id, embedding, sketch, _norm) projection over a
-    * (doc_id, embedding) frame — the embedding-side dedup INDEX
+    * (doc_id, embedding) frame — the Embedding side
     * ([[hashSigProjection]]'s vector twin). Pure per-row; a production
     * deployment precomputes this once over the corpus. */
   def embSketchProjection(vecs: DataFrame, bits: Int = 32,
@@ -1072,48 +957,6 @@ object Dedup {
     Similarity.hyperplaneSketch(vecs, "embedding", bits, dim)
       .withColumn("_norm", sqrt(dotNative(col("embedding"), col("embedding"))))
   }
-
-  /** Three-tier classifier: [[classifyNew]]'s exact + MinHash tiers
-    * plus the embedding tier. Tier precedence exact > near >
-    * near_embedding > new; `match_id` follows the same order. A batch
-    * doc without an embedding row simply can't match the embedding tier
-    * (left joins throughout). */
-  private[graft] def classifyNew3(batch: DataFrame, corpus: DataFrame,
-                                  batchEmb: DataFrame, corpusEmb: DataFrame,
-                                  k: Int = 12, bands: Int = 4,
-                                  estThreshold: Double = 0.5,
-                                  cosThreshold: Double = 0.40,
-                                  bits: Int = 32,
-                                  embBands: Int = 8): DataFrame =
-    verdict3(batch.select(col("doc_id")),
-      exactTier(batch, corpus),
-      nearTier(batch, corpus, k, bands, estThreshold),
-      embeddingTier(batchEmb, corpusEmb, cosThreshold, bits, embBands))
-      .orderBy(col("doc_id"))
-
-  /** Fold the three tier verdicts onto the batch ids with the
-    * exact > near > near_embedding > new precedence — shared by the
-    * in-memory classifier and the bucketed-index classifier
-    * ([[DedupIndex.classifyNew3Indexed]]) so the verdict rule can't
-    * drift between deployment shapes. */
-  private[graft] def verdict3(batchIds: DataFrame, exact: DataFrame,
-                              near: DataFrame, emb: DataFrame): DataFrame =
-    verdictTiers(batchIds, Seq(
-      ("exact", "exact_id", exact),
-      ("near", "near_id", near),
-      ("near_embedding", "emb_id", emb)))
-
-  /** Banded dHash rows (doc_id, band, key, dhash) — 8 bands × 8 bits
-    * over the 64-bit perceptual hash, the SAME q73 banding
-    * ([[sketchBandStructs]]), so the pair query, the incremental image
-    * tier and the stored-index bucket keys can't drift. The hash rides
-    * along so candidate generation and the hamming rescore are one
-    * join. */
-  private[graft] def imgBanded(hashes: DataFrame): DataFrame =
-    hashes.select(col("doc_id"), col("dhash"),
-        explode(sketchBandStructs(col("dhash"), 64, 8)).as("b"))
-      .select(col("doc_id"), col("b.band").as("band"),
-        col("b.key").as("key"), col("dhash"))
 
   /** (band, key) structs partitioning a 64-bit hash into 8 bands of
     * STRIDE-INTERLEAVED bits — band b holds bits {b, b+8, …, b+56}.
@@ -1133,65 +976,9 @@ object Dedup {
       struct(lit(bd).as("band"), key.as("key"))
     }: _*)
 
-  /** [[imgBanded]]'s audio twin: banded rows of a (doc_id, afp)
-    * fingerprint frame under the interleaved banding. */
-  private[graft] def afpBanded(fps: DataFrame): DataFrame =
-    fps.select(col("doc_id"), col("afp"),
-        explode(interleavedBandStructs(col("afp"))).as("b"))
-      .select(col("doc_id"), col("b.band").as("band"),
-        col("b.key").as("key"), col("afp"))
-
-  /** Image tier: batch→corpus banded-dHash candidates rescored by exact
-    * Hamming distance ≤ `maxHamming`. Directional like every other tier
-    * (the corpus image index is never self-joined), and for
-    * maxHamming ≤ 7 the 8-band split is EXACT by pigeonhole (q73's
-    * argument), so this tier has zero recall trade. Inputs are
-    * (doc_id, dhash) frames; returns (doc_id, img_id = min matching
-    * corpus doc_id). */
-  private def imageTier(batchImg: DataFrame, corpusImg: DataFrame,
-                        maxHamming: Int, out: String = "img_id"): DataFrame =
-    imgBanded(batchImg).withColumnRenamed("dhash", "_da")
-      .join(imgBanded(corpusImg).select(col("band"), col("key"),
-        col("doc_id").as("_cid"), col("dhash").as("_db")), Seq("band", "key"))
-      .filter(bit_count(col("_da").bitwiseXOR(col("_db"))) <= maxHamming)
-      .groupBy(col("doc_id")).agg(min(col("_cid")).as(out))
-
-  /** Audio tier: the image tier's shape over the q76 fingerprint with
-    * its stride-interleaved banding ([[afpBanded]]) and measured
-    * threshold. Inputs are (doc_id, afp) frames; returns
-    * (doc_id, afp_id). */
-  private def audioTier(batchAfp: DataFrame, corpusAfp: DataFrame,
-                        maxHamming: Int): DataFrame =
-    afpBanded(batchAfp).withColumnRenamed("afp", "_da")
-      .join(afpBanded(corpusAfp).select(col("band"), col("key"),
-        col("doc_id").as("_cid"), col("afp").as("_db")), Seq("band", "key"))
-      .filter(bit_count(col("_da").bitwiseXOR(col("_db"))) <= maxHamming)
-      .groupBy(col("doc_id")).agg(min(col("_cid")).as("afp_id"))
-
-  /** Four-tier classifier: [[classifyNew3]]'s tiers plus the PERCEPTUAL
-    * IMAGE tier — a batch document whose text, minhash signature and
-    * embedding all look novel can still carry a near-duplicate image
-    * payload (re-hosted photos, resized thumbnails, recompressed
-    * scans). Precedence exact > near > near_embedding > near_image >
-    * new; a doc with no image row simply can't match the image tier. */
-  private[graft] def classifyNew4(batch: DataFrame, corpus: DataFrame,
-                                  batchEmb: DataFrame, corpusEmb: DataFrame,
-                                  batchImg: DataFrame, corpusImg: DataFrame,
-                                  k: Int = 12, bands: Int = 4,
-                                  estThreshold: Double = 0.5,
-                                  cosThreshold: Double = 0.40,
-                                  bits: Int = 32, embBands: Int = 8,
-                                  maxHamming: Int = 6): DataFrame =
-    verdict4(batch.select(col("doc_id")),
-      exactTier(batch, corpus),
-      nearTier(batch, corpus, k, bands, estThreshold),
-      embeddingTier(batchEmb, corpusEmb, cosThreshold, bits, embBands),
-      imageTier(batchImg, corpusImg, maxHamming))
-      .orderBy(col("doc_id"))
-
-  /** GENERIC tier fold (r10): left-join each tier's (doc_id, <idCol>)
-    * frame onto the batch ids and fold status/match_id in DECLARED
-    * ORDER — the single precedence definition every classifier shape
+  /** GENERIC tier fold: left-join each tier's (doc_id, <idCol>) frame
+    * onto the batch ids and fold status/match_id in DECLARED ORDER —
+    * the single precedence definition every classifier shape
     * (in-memory, stored-index, streaming) derives from. `tiers` is an
     * ordered (status, idCol, frame) list, highest precedence first. */
   private[graft] def verdictTiers(batchIds: DataFrame,
@@ -1205,226 +992,6 @@ object Dedup {
     joined.select(col("doc_id"), status.as("status"),
       coalesce(tiers.map { case (_, idCol, _) => col(idCol) }: _*)
         .as("match_id"))
-  }
-
-  /** [[verdict3]] extended with the image tier (lowest match
-    * precedence) — shared by the in-memory and stored-index four-tier
-    * classifiers. */
-  private[graft] def verdict4(batchIds: DataFrame, exact: DataFrame,
-                              near: DataFrame, emb: DataFrame,
-                              img: DataFrame): DataFrame =
-    verdictTiers(batchIds, Seq(
-      ("exact", "exact_id", exact),
-      ("near", "near_id", near),
-      ("near_embedding", "emb_id", emb),
-      ("near_image", "img_id", img)))
-
-  /** q68 — three-tier INCREMENTAL dedup: q65's exact + MinHash tiers
-    * plus an EMBEDDING tier. A batch document that is neither a content
-    * copy nor a lexical near-dup of the corpus can still be a SEMANTIC
-    * duplicate (same content re-worded, translated boilerplate, template
-    * pages with synonym swaps) — the modality q43 dedups within a corpus,
-    * here run batch→corpus: hyperplane-banded candidates (8 bands × 4
-    * sign bits, the q43 family), exact-cosine rescored at 4dp ≥ 0.40
-    * (the testdata's near-dup range; production re-tunes upward), status
-    * `near_embedding`, losing precedence to both lexical tiers.
-    *
-    * Scale shape, on top of q65's: the embedding index is one more
-    * per-row corpus projection (sketch + norm — vectors are scanned once
-    * and never shuffled), band joins stay batch-directional so candidate
-    * volume is |batch|-proportional, and the only vectors that move are
-    * the |candidates| id-keyed rescore lookups. The batch/corpus split
-    * and oracle determinism follow q65 (portable hash rule, literal
-    * plane family in the oracle). Production deployment: persist the
-    * corpus side as [[DedupIndex]]'s bucketed tables — every tier then
-    * probes the stored index with ZERO index-side shuffle
-    * (plan-asserted in DedupIndexSpec). */
-  def incrementalDedup3(s: SparkSession, dir: String, k: Int = 12,
-                        bands: Int = 4, estThreshold: Double = 0.5,
-                        cosThreshold: Double = 0.40, bits: Int = 32,
-                        embBands: Int = 8, dim: Int = 64): DataFrame = {
-    val isNew = Sampling.hashBucket(col("doc_id"), 5) === 4
-    val base = Caches.track(
-      hashSigProjection(docsSpread(s, dir), k).withColumn("_new", isNew))
-    val embBase = Caches.track(
-      embSketchProjection(
-        Tables.spreadTable(s, dir, "embeddings", col("vec_id"))
-          .select(col("vec_id").as("doc_id"), col("embedding")), bits, dim)
-        .withColumn("_new", isNew))
-    classifyNew3(
-      base.filter(col("_new")).drop("_new"),
-      base.filter(!col("_new")).drop("_new"),
-      embBase.filter(col("_new")).drop("_new"),
-      embBase.filter(!col("_new")).drop("_new"),
-      k, bands, estThreshold, cosThreshold, bits, embBands)
-  }
-
-  /** [[incrementalDedup3]] over caller frames — (doc_id, text) batch and
-    * corpus plus their (doc_id, embedding) sides. The library entry
-    * point for production three-tier ingest. */
-  def incrementalDedupFor3(newDocs: DataFrame, corpus: DataFrame,
-                           newEmb: DataFrame, corpusEmb: DataFrame,
-                           k: Int = 12, bands: Int = 4,
-                           estThreshold: Double = 0.5,
-                           cosThreshold: Double = 0.40, bits: Int = 32,
-                           embBands: Int = 8, dim: Int = 64): DataFrame =
-    classifyNew3(hashSigProjection(newDocs, k), hashSigProjection(corpus, k),
-      embSketchProjection(newEmb, bits, dim),
-      embSketchProjection(corpusEmb, bits, dim),
-      k, bands, estThreshold, cosThreshold, bits, embBands)
-
-  /** q75 — FOUR-tier incremental dedup: q68's exact + MinHash +
-    * embedding tiers plus the PERCEPTUAL IMAGE tier (q73's dHash family
-    * run batch→corpus): a day's crawl batch is checked against the
-    * stored corpus on content hash, lexical shingles, embedding cosine
-    * AND image perceptual hash, completing the modality matrix for the
-    * day-over-day ingest shape. Split rule, thresholds, and oracle
-    * technique follow q68; the image side exists only for the q73 image
-    * family (doc_id % 3 = 0), and images hash per-partition — PNG bytes
-    * never shuffle, only the (id, 8-byte dHash) index rows do.
-    *
-    * Scale shape on top of q68's: the image index is one more pure
-    * per-row corpus projection; its band join stays batch-directional
-    * (candidate volume |batch|-proportional) and EXACT for
-    * maxHamming ≤ 7 by the q73 pigeonhole argument. Production: persist
-    * the corpus side as [[DedupIndex]]'s `_img` bucketed table — the
-    * probe then runs with zero index-side shuffle like the other three
-    * tiers (plan-asserted in DedupIndexSpec). */
-  def incrementalDedup4(s: SparkSession, dir: String, k: Int = 12,
-                        bands: Int = 4, estThreshold: Double = 0.5,
-                        cosThreshold: Double = 0.40, bits: Int = 32,
-                        embBands: Int = 8, dim: Int = 64,
-                        maxHamming: Int = 6): DataFrame = {
-    val isNew = Sampling.hashBucket(col("doc_id"), 5) === 4
-    val base = Caches.track(
-      hashSigProjection(docsSpread(s, dir), k).withColumn("_new", isNew))
-    val embBase = Caches.track(
-      embSketchProjection(
-        Tables.spreadTable(s, dir, "embeddings", col("vec_id"))
-          .select(col("vec_id").as("doc_id"), col("embedding")), bits, dim)
-        .withColumn("_new", isNew))
-    val imgBase = Caches.track(
-      Multimodal.imageDHashes(s, dir)
-        .select(col("media_id").as("doc_id"), col("dhash"))
-        .withColumn("_new", isNew))
-    classifyNew4(
-      base.filter(col("_new")).drop("_new"),
-      base.filter(!col("_new")).drop("_new"),
-      embBase.filter(col("_new")).drop("_new"),
-      embBase.filter(!col("_new")).drop("_new"),
-      imgBase.filter(col("_new")).drop("_new"),
-      imgBase.filter(!col("_new")).drop("_new"),
-      k, bands, estThreshold, cosThreshold, bits, embBands, maxHamming)
-  }
-
-  /** q78 — SIX-tier incremental dedup: the COMPLETE modality matrix at
-    * ingest. q75's four tiers plus perceptual AUDIO (q76's fingerprint,
-    * interleaved bands, measured threshold 4) and perceptual VIDEO
-    * (q77's frame-averaged hash) — a day's crawl batch is classified
-    * against the stored corpus on content hash, lexical shingles,
-    * embedding cosine, image dHash, audio fingerprint AND video hash in
-    * ONE pass. Precedence (one [[verdictTiers]] fold): exact > near >
-    * near_embedding > near_image > near_audio > near_video > new —
-    * text evidence beats semantic beats perceptual, and within
-    * perceptual the modality slots are DISJOINT here anyway (id mod 3
-    * fixes each doc's media kind), so the ordering is a documented
-    * convention, not a semantics risk. Every perceptual tier is the
-    * same batch-directional banded join; every scale argument of
-    * q73/q76/q77 carries over unchanged. */
-  def incrementalDedup6(s: SparkSession, dir: String, k: Int = 12,
-                        bands: Int = 4, estThreshold: Double = 0.5,
-                        cosThreshold: Double = 0.40, bits: Int = 32,
-                        embBands: Int = 8, dim: Int = 64,
-                        maxHamming: Int = 6, audioMaxHamming: Int = 4,
-                        videoMaxHamming: Int = 6): DataFrame = {
-    val isNew = Sampling.hashBucket(col("doc_id"), 5) === 4
-    val base = Caches.track(
-      hashSigProjection(docsSpread(s, dir), k).withColumn("_new", isNew))
-    val embBase = Caches.track(
-      embSketchProjection(
-        Tables.spreadTable(s, dir, "embeddings", col("vec_id"))
-          .select(col("vec_id").as("doc_id"), col("embedding")), bits, dim)
-        .withColumn("_new", isNew))
-    val imgBase = Caches.track(
-      Multimodal.imageDHashes(s, dir)
-        .select(col("media_id").as("doc_id"), col("dhash"))
-        .withColumn("_new", isNew))
-    val afpBase = Caches.track(
-      Multimodal.audioFingerprints(s, dir)
-        .select(col("media_id").as("doc_id"), col("afp"))
-        .withColumn("_new", isNew))
-    val vidBase = Caches.track(
-      Multimodal.videoHashes(s, dir)
-        .select(col("media_id").as("doc_id"), col("dhash"))
-        .withColumn("_new", isNew))
-    def nw(df: DataFrame) = df.filter(col("_new")).drop("_new")
-    def cp(df: DataFrame) = df.filter(!col("_new")).drop("_new")
-    verdictTiers(nw(base).select(col("doc_id")), Seq(
-      ("exact", "exact_id", exactTier(nw(base), cp(base))),
-      ("near", "near_id",
-        nearTier(nw(base), cp(base), k, bands, estThreshold)),
-      ("near_embedding", "emb_id",
-        embeddingTier(nw(embBase), cp(embBase), cosThreshold, bits, embBands)),
-      ("near_image", "img_id",
-        imageTier(nw(imgBase), cp(imgBase), maxHamming)),
-      ("near_audio", "afp_id",
-        audioTier(nw(afpBase), cp(afpBase), audioMaxHamming)),
-      ("near_video", "vid_id",
-        imageTier(nw(vidBase), cp(vidBase), videoMaxHamming, out = "vid_id"))))
-      .orderBy(col("doc_id"))
-  }
-
-  /** [[incrementalDedup4]] over caller frames — the library entry for
-    * production four-tier ingest: (doc_id, text) batch/corpus, their
-    * (doc_id, embedding) sides, and their (doc_id, dhash) image-hash
-    * sides (a real pipeline computes the hashes with
-    * [[Multimodal.imageDHashesFor]] over its media payloads). */
-  def incrementalDedupFor4(newDocs: DataFrame, corpus: DataFrame,
-                           newEmb: DataFrame, corpusEmb: DataFrame,
-                           newImg: DataFrame, corpusImg: DataFrame,
-                           k: Int = 12, bands: Int = 4,
-                           estThreshold: Double = 0.5,
-                           cosThreshold: Double = 0.40, bits: Int = 32,
-                           embBands: Int = 8, dim: Int = 64,
-                           maxHamming: Int = 6): DataFrame =
-    classifyNew4(hashSigProjection(newDocs, k), hashSigProjection(corpus, k),
-      embSketchProjection(newEmb, bits, dim),
-      embSketchProjection(corpusEmb, bits, dim),
-      newImg, corpusImg,
-      k, bands, estThreshold, cosThreshold, bits, embBands, maxHamming)
-
-  /** [[incrementalDedup6]] over caller frames — the library entry for
-    * production SIX-tier ingest: [[incrementalDedupFor4]]'s frames plus
-    * the (doc_id, afp) audio and (doc_id, dhash) video hash sides (a
-    * real pipeline computes them with [[Multimodal.audioFingerprintsFor]]
-    * / [[Multimodal.videoHashesFor]] at ingest). One [[verdictTiers]]
-    * fold, q78's precedence — and the one-shot ground truth the q92
-    * steady-state spec pins the stored-index path against. */
-  def incrementalDedupFor6(newDocs: DataFrame, corpus: DataFrame,
-                           newEmb: DataFrame, corpusEmb: DataFrame,
-                           newImg: DataFrame, corpusImg: DataFrame,
-                           newAfp: DataFrame, corpusAfp: DataFrame,
-                           newVid: DataFrame, corpusVid: DataFrame,
-                           k: Int = 12, bands: Int = 4,
-                           estThreshold: Double = 0.5,
-                           cosThreshold: Double = 0.40, bits: Int = 32,
-                           embBands: Int = 8, dim: Int = 64,
-                           maxHamming: Int = 6, audioMaxHamming: Int = 4,
-                           videoMaxHamming: Int = 6): DataFrame = {
-    val batch = hashSigProjection(newDocs, k)
-    val corp = hashSigProjection(corpus, k)
-    verdictTiers(batch.select(col("doc_id")), Seq(
-      ("exact", "exact_id", exactTier(batch, corp)),
-      ("near", "near_id", nearTier(batch, corp, k, bands, estThreshold)),
-      ("near_embedding", "emb_id",
-        embeddingTier(embSketchProjection(newEmb, bits, dim),
-          embSketchProjection(corpusEmb, bits, dim),
-          cosThreshold, bits, embBands)),
-      ("near_image", "img_id", imageTier(newImg, corpusImg, maxHamming)),
-      ("near_audio", "afp_id", audioTier(newAfp, corpusAfp, audioMaxHamming)),
-      ("near_video", "vid_id",
-        imageTier(newVid, corpusVid, videoMaxHamming, out = "vid_id"))))
-      .orderBy(col("doc_id"))
   }
 
   /** q94 — quality-aware CANONICAL selection per near-dup cluster: the

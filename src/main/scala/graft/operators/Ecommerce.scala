@@ -123,14 +123,4 @@ object Ecommerce {
         col("_sub.subcategory_id").as("subcategory_id"),
         col("_sub.name").as("subcategory_name")))
       .drop("cat_name", "subcategories", "_sub")
-
-  /** The current-price as-of pattern (dataset_generator.py:209: price =
-    * last price_history entry): element_at(…, -1), no as-of join needed
-    * (SURVEY §2.3). */
-  def withCurrentPrice(products: DataFrame): DataFrame =
-    products.withColumn("current_price",
-      // size guard: element_at on an empty array throws under Spark 4's
-      // default ANSI mode; a product with no history yields null instead
-      when(size(col("price_history")) > 0,
-        element_at(col("price_history"), -1).getField("price")))
 }

@@ -761,10 +761,9 @@ object Multimodal {
   /** (doc_id, `out`) from a (doc_id, bytes) media frame: `hash`
     * reduces each payload inside its task, so bytes never leave it and
     * only the 8-byte hash moves — the per-micro-batch decode of the
-    * image, audio and video ingest classifiers
-    * ([[DedupIndex.classifyImg]]/[[DedupIndex.classifyAfp]]/
-    * [[DedupIndex.classifyVid]]); `hash` gets the row's id to name it
-    * in errors. */
+    * image, audio and video ingest classifiers ([[DedupIndex.classify]]
+    * over one perceptual side); `hash` gets the row's id to name it in
+    * errors. */
   def payloadHashes(media: DataFrame, out: String)(
       hash: (Long, Array[Byte]) => Long): DataFrame = {
     val spark = media.sparkSession

@@ -58,18 +58,4 @@ object EntityIO {
                     buckets: Int): Unit =
     df.write.bucketBy(buckets, bucketCol).sortBy(bucketCol)
       .mode(SaveMode.Overwrite).saveAsTable(table)
-
-  /** CSV with the reference's reader conventions (S9:
-    * na_values='?', header, type inference). */
-  def readCsv(spark: SparkSession, path: String): DataFrame =
-    spark.read.option("header", true).option("nullValue", "?")
-      .option("inferSchema", true).csv(path)
-
-  /** The reference's single-file CSV sink (S10,
-    * clv_integration.py:65) — kept verbatim for output parity;
-    * `coalesce(1)` is the documented anti-scale knob, use only for
-    * small final results. */
-  def writeSingleCsv(df: DataFrame, path: String): Unit =
-    df.coalesce(1).write.mode(SaveMode.Overwrite)
-      .option("header", true).csv(path)
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextFunctions.{shingles, tokens}
-import graft.operators.{Caches, Compose, Dedup, Similarity}
+import graft.operators.{Caches, Compose, Dedup, Modality, Similarity}
 import graft.sources.Tables
 
 /** 10× scale soak for the dedup family (q26/q51/q62/q65): verifies the
@@ -75,14 +75,9 @@ object SoakScale {
   /** Near-tier candidate volume of the incremental classifier: distinct
     * (batch doc, corpus doc) pairs sharing a MinHash band key — the rows
     * entering q65's agreement scoring. */
-  def bandCandidateCount(newDocs: DataFrame, corpus: DataFrame,
-                         k: Int = 12, bands: Int = 4): Long = {
+  def bandCandidateCount(newDocs: DataFrame, corpus: DataFrame): Long = {
     val (n, sc) = Caches.scope {
-      def banded(df: DataFrame) =
-        Dedup.hashSigProjection(df, k).filter(col("sig").isNotNull)
-          .select(col("doc_id"),
-            explode(Dedup.bandKeyStructs(i => element_at(col("sig"), i + 1), k, bands)).as("b"))
-          .select(col("doc_id"), col("b.band").as("band"), col("b.key").as("key"))
+      def banded(df: DataFrame) = Modality.Text.banded(Dedup.hashSigProjection(df))
       banded(newDocs).as("x")
         .join(banded(corpus).as("y"), Seq("band", "key"))
         .select(col("x.doc_id").as("a"), col("y.doc_id").as("b"))
@@ -94,14 +89,14 @@ object SoakScale {
   /** Distinct band-sharing (a, b) pairs of a (doc_id, dhash)-shaped
     * 64-bit hash frame under the 8×8-bit banding — the candidate stage
     * of q73 (images) and q76 (audio). The hash column must be named
-    * `dhash` ([[Dedup.imgBanded]]'s contract). */
+    * `dhash` ([[Modality.Image]]'s side). */
   def hashBandCandidateCount(hashes: DataFrame): Long =
-    bandedCandidateCount(Dedup.imgBanded(hashes))
+    bandedCandidateCount(Modality.Image.banded(hashes))
 
   /** [[hashBandCandidateCount]] under q76's stride-interleaved audio
     * banding (the hash column must be named `afp`). */
   def afpBandCandidateCount(fps: DataFrame): Long =
-    bandedCandidateCount(Dedup.afpBanded(fps))
+    bandedCandidateCount(Modality.Audio.banded(fps))
 
   private def bandedCandidateCount(bandedPlan: DataFrame): Long = {
     val (n, sc) = Caches.scope {
@@ -315,7 +310,7 @@ object SoakScale {
 
     // q65 incremental classifier: batch = hash-mod 20% of corpus
     def splitBatch(df: DataFrame) = {
-      val isNew = graft.operators.Sampling.hashBucket(col("doc_id"), 5) === 4
+      val isNew = Modality.splitBucket === 4
       (df.filter(isNew), df.filter(!isNew))
     }
     val (b1, co1) = splitBatch(base)
@@ -334,8 +329,10 @@ object SoakScale {
         if (!ok) failures += 1
         println(f"[soak] RATIO $name%-26s ${perDoc}%8.3f cand/doc (gate 4.0) ${if (ok) "PASS" else "FAIL"}")
     }
-    scoped("q65 classify @1x")(Dedup.incrementalDedupFor(b1, co1).count())
-    scoped("q65 classify @10x")(Dedup.incrementalDedupFor(b10, co10).count())
+    def classify(batch: DataFrame, corpus: DataFrame) = Dedup.classify(
+      Modality.project(Modality.Text -> batch), Modality.project(Modality.Text -> corpus))
+    scoped("q65 classify @1x")(classify(b1, co1).count())
+    scoped("q65 classify @10x")(classify(b10, co10).count())
 
     // --- r10: q71 canonical-URL dedup — pure per-row normalize + ONE
     // hash shuffle; output groups must track corpus size ~linearly

@@ -51,6 +51,22 @@ class MlSpec extends AnyFunSuite {
     }
   }
 
+  test("oneHot ≡ pandas get_dummies(drop_first=True): the alphabetically first level is dropped (F20)") {
+    import org.apache.spark.ml.linalg.Vector
+    // "a" is the MOST frequent level, so a frequency-ordered indexer
+    // would keep it and drop "b"; pandas drops the alphabetically first
+    val df = Seq("c", "a", "b", "a", "c", "a").toDF("cat")
+    val enc = Features.oneHot("cat", "cat_vec").fit(df).transform(df)
+      .select("cat", "cat_vec").collect()
+      .map(r => r.getString(0) -> r.getAs[Vector](1)).toMap
+    assert(enc.values.forall(_.size == 2), "levels − 1 dummy columns")
+    assert(enc("a").numNonzeros == 0, s"reference level a must be all-zero: ${enc("a")}")
+    Seq("b", "c").foreach { l =>
+      assert(enc(l).numNonzeros == 1 && enc(l).toArray.max == 1.0, s"$l: ${enc(l)}")
+    }
+    assert(enc("b") != enc("c"))
+  }
+
   test("exact KNN classifies held-out blob points (M4)") {
     val test = blobs.limit(40).withColumn("pid", monotonically_increasing_id())
     val pred = Customs.knn(blobs, test, "label", Seq("f1", "f2"), k = 5, idCol = "pid")

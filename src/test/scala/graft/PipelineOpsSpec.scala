@@ -804,9 +804,9 @@ class PipelineOpsSpec extends AnyFunSuite {
 
   test("incremental dedup: exact tier matches brute force, near tier is signature-justified") {
     import org.apache.spark.sql.functions._
-    val inc = operators.Dedup.incrementalDedup(spark, sf)
+    val inc = operators.Dedup.incrementalDedup(spark, sf, Seq(operators.Modality.Text))
     val docs = graft.sources.Tables(spark, sf, "documents")
-      .withColumn("_new", operators.Sampling.hashBucket(col("doc_id"), 5) === 4)
+      .withColumn("_new", operators.Modality.splitBucket === 4)
     val rows = inc.collect()
     val batchIds = docs.filter(col("_new")).select("doc_id").collect()
       .map(_.getLong(0)).toSet
@@ -873,7 +873,9 @@ class PipelineOpsSpec extends AnyFunSuite {
       (11L, "one two three four five six seven eight nine eleven"),    // near of 2
       (12L, "completely fresh document with brand new words only")     // new
     ).toDF("doc_id", "text")
-    val got = operators.Dedup.incrementalDedupFor(batch, corpus).collect()
+    import operators.Modality
+    val got = operators.Dedup.classify(Modality.project(Modality.Text -> batch),
+        Modality.project(Modality.Text -> corpus)).collect()
       .map(r => r.getLong(0) -> (r.getString(1),
         if (r.isNullAt(2)) None else Some(r.getLong(2)))).toMap
     assert(got(10L) == ("exact", Some(1L)), s"got ${got(10L)}")
@@ -911,8 +913,9 @@ class PipelineOpsSpec extends AnyFunSuite {
       (13L, e3.map(_ * 1.01f)),                           // cosine 1.0 with e3
       (12L, vec(d => if (d >= 50 && d < 54) 1f else 0f))  // orthogonal to all
     ).toDF("doc_id", "embedding")
-    val got = operators.Dedup
-      .incrementalDedupFor3(batch, corpus, batchEmb, corpusEmb).collect()
+    import operators.Modality.{Embedding, Text, project}
+    val got = operators.Dedup.classify(project(Text -> batch, Embedding() -> batchEmb),
+        project(Text -> corpus, Embedding() -> corpusEmb)).collect()
       .map(r => r.getLong(0) -> (r.getString(1),
         if (r.isNullAt(2)) None else Some(r.getLong(2)))).toMap
     // 10 ALSO matches 1 in embedding space — exact must win precedence
@@ -1242,7 +1245,7 @@ class PipelineOpsSpec extends AnyFunSuite {
       (4L, "new", None)))
     // and the six-tier classifier exercises every declared status at
     // this SF (the oracle proves values; this pins non-vacuity)
-    val statuses = operators.Dedup.incrementalDedup6(spark, sf)
+    val statuses = operators.Dedup.incrementalDedup(spark, sf, operators.Modality.all)
       .select("status").distinct().as[String].collect().toSet
     operators.Caches.release()
     spark.catalog.clearCache()

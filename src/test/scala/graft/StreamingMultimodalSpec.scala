@@ -250,70 +250,69 @@ class StreamingMultimodalSpec extends AnyFunSuite {
   /** The stream-static duality specs, one row each: name → fixture. */
   private val dualities: Seq[(String, () => Fixture)] = Seq(
     "streaming incremental dedup: chunked replay ≡ batch q65 verdicts" -> { () =>
-      import operators.Dedup
+      import operators.{Dedup, Modality}
+      import Modality.Text
       val docs = graft.sources.Tables(spark, sf, "documents")
-        .withColumn("_new", operators.Sampling.hashBucket(col("doc_id"), 5) === 4)
+        .withColumn("_new", Modality.splitBucket === 4)
       // feed = the q65 batch side; index = the q65 corpus side, cached
       // like a production deployment would
-      val idx = Dedup.hashSigProjection(
-        docs.filter(!col("_new")).select("doc_id", "text")).cache()
+      val idx = Text.project(docs.filter(!col("_new")).select("doc_id", "text")).cache()
       Fixture(Seq(Pass(
           chunkedFeed(docs.filter(col("_new")).select("doc_id", "text"), 4, "incdedup"),
-          mb => Dedup.classifyNewRaw(Dedup.hashSigProjection(mb), idx),
-          Dedup.incrementalDedup(spark, sf))),
+          mb => Dedup.classify(Modality.project(Text -> mb), Map(Text -> idx)),
+          Dedup.incrementalDedup(spark, sf, Seq(Text)))),
         () => { idx.unpersist(); operators.Caches.release() })
     },
     "streaming image dedup ≡ batch classify under any chunking (q75 twin)" -> { () =>
-      import operators.{DedupIndex, Multimodal, Sampling}
+      import operators.{DedupIndex, Modality, Multimodal}
+      import Modality.Image
       val prefix = "graft_imgtwin"
-      val dropAll = () => DedupIndex.dropTable(spark, DedupIndex.imgTable(prefix))
-      val all = Multimodal.imageDHashes(spark, sf)
-        .select(col("media_id").as("doc_id"), col("dhash"))
-      val isNew = Sampling.hashBucket(col("doc_id"), 5) === 4
+      val dropAll = () =>
+        DedupIndex.tables(prefix, Seq(Image)).foreach(DedupIndex.dropTable(spark, _))
+      val all = Image.side(spark, sf, lit(true))
+      val isNew = Modality.splitBucket === 4
       dropAll()
       // corpus = bases 0..10 only: batch images of bases 11..20 have no
       // corpus twin and must come back `new` (else the duality is
       // vacuously all-near_image on this dense fixture)
-      DedupIndex.saveImgIndex(
-        all.filter(!isNew && expr("(doc_id div 3) % 21 < 11")), prefix, buckets = 4)
+      DedupIndex.save(Map(Image ->
+        all.filter(!isNew && expr("(doc_id div 3) % 21 < 11"))), prefix, buckets = 4)
       // the feed: the batch split's REAL PNG payloads in 3 file chunks
       Fixture(Seq(Pass(
           chunkedFeed(payloads(all, isNew, Multimodal.MediaCodec.pngNearFor), 3, "imgstream"),
-          mb => DedupIndex.classifyImg(
-            Multimodal.payloadHashes(mb, "dhash")(Multimodal.pngDHash), prefix),
-          DedupIndex.classifyImg(all.filter(isNew), prefix),
+          mb => DedupIndex.classify(Map(Image ->
+            Multimodal.payloadHashes(mb, "dhash")(Multimodal.pngDHash)), prefix),
+          DedupIndex.classify(Map(Image -> all.filter(isNew)), prefix),
           bothVerdicts("near_image"))),
         () => { operators.Caches.release(); spark.catalog.clearCache(); dropAll() })
     },
     "streaming audio+video dedup ≡ batch classify under any chunking (q78 twins)" -> { () =>
-      import operators.{DedupIndex, Multimodal, Sampling}
+      import operators.{DedupIndex, Modality, Multimodal}
+      import Modality.{Audio, Video}
       import Multimodal.MediaCodec
       val prefix = "graft_avtwin"
-      val dropAll = () => Seq(DedupIndex.afpTable(prefix),
-        DedupIndex.vidTable(prefix)).foreach(DedupIndex.dropTable(spark, _))
-      val afps = Multimodal.audioFingerprints(spark, sf)
-        .select(col("media_id").as("doc_id"), col("afp"))
-      val vids = Multimodal.videoHashes(spark, sf)
-        .select(col("media_id").as("doc_id"), col("dhash"))
-      val isNew = Sampling.hashBucket(col("doc_id"), 5) === 4
+      val dropAll = () => DedupIndex.tables(prefix, Seq(Audio, Video))
+        .foreach(DedupIndex.dropTable(spark, _))
+      val afps = Audio.side(spark, sf, lit(true))
+      val vids = Video.side(spark, sf, lit(true))
+      val isNew = Modality.splitBucket === 4
       dropAll()
       // corpus = half the waveform/pattern bases, so some batch media
       // come back `new` (the image row's non-vacuity trick)
-      DedupIndex.saveAfpIndex(
-        afps.filter(!isNew && expr("(doc_id div 3) % 17 < 9")), prefix, buckets = 4)
-      DedupIndex.saveVidIndex(
-        vids.filter(!isNew && expr("(doc_id div 3) % 13 < 7")), prefix, buckets = 4)
+      DedupIndex.save(Map(
+        Audio -> afps.filter(!isNew && expr("(doc_id div 3) % 17 < 9")),
+        Video -> vids.filter(!isNew && expr("(doc_id div 3) % 13 < 7"))), prefix, buckets = 4)
       // real WAV and RAWV bytes, each streamed in 3 file chunks
       Fixture(Seq(
           Pass(chunkedFeed(payloads(afps, isNew, MediaCodec.wavNearFor), 3, "wav"),
-            mb => DedupIndex.classifyAfp(Multimodal.payloadHashes(mb, "afp")(
-              (_, b) => MediaCodec.audioFingerprint64(MediaCodec.pcmSamples(b))), prefix),
-            DedupIndex.classifyAfp(afps.filter(isNew), prefix),
+            mb => DedupIndex.classify(Map(Audio -> Multimodal.payloadHashes(mb, "afp")(
+              (_, b) => MediaCodec.audioFingerprint64(MediaCodec.pcmSamples(b)))), prefix),
+            DedupIndex.classify(Map(Audio -> afps.filter(isNew)), prefix),
             bothVerdicts("near_audio")),
           Pass(chunkedFeed(payloads(vids, isNew, MediaCodec.rawvNearFor), 3, "rawv"),
-            mb => DedupIndex.classifyVid(Multimodal.payloadHashes(mb, "dhash")(
-              (_, b) => MediaCodec.vHash64(b)), prefix),
-            DedupIndex.classifyVid(vids.filter(isNew), prefix),
+            mb => DedupIndex.classify(Map(Video -> Multimodal.payloadHashes(mb, "dhash")(
+              (_, b) => MediaCodec.vHash64(b))), prefix),
+            DedupIndex.classify(Map(Video -> vids.filter(isNew)), prefix),
             bothVerdicts("near_video"))),
         () => { operators.Caches.release(); spark.catalog.clearCache(); dropAll() })
     },
@@ -415,7 +414,8 @@ class StreamingMultimodalSpec extends AnyFunSuite {
   }
 
   test("index refresh: classify → refreshed → next batch ≡ one-shot classify") {
-    import graft.operators.Dedup
+    import graft.operators.{Dedup, Modality}
+    import Modality.Text
     import spark.implicits._
     def verdicts(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getString(1),
@@ -433,23 +433,26 @@ class StreamingMultimodalSpec extends AnyFunSuite {
       (21L, "eleven twelve thirteen fourteen fifteen sixteen eighteen"),  // near of 11
       (22L, "entirely novel words never seen in any earlier document")    // new
     ).toDF("doc_id", "text")
-    val idx0 = Dedup.hashSigProjection(corpus).cache()
-    val v1 = Dedup.classifyNew(Dedup.hashSigProjection(batch1), idx0)
+    def classify(b: org.apache.spark.sql.DataFrame, idx: org.apache.spark.sql.DataFrame) =
+      Dedup.classify(Modality.project(Text -> b), Map(Text -> idx))
+    val idx0 = Text.project(corpus).cache()
+    val v1 = classify(batch1, idx0)
     assert(verdicts(v1) ==
       Set((10L, "exact", Some(1L)), (11L, "new", None)))
     // WITHOUT the refresh, batch2's dups of doc 11 would sail through as
     // new — the refresh is load-bearing, not bookkeeping
-    val unrefreshed = Dedup.classifyNew(Dedup.hashSigProjection(batch2), idx0)
+    val unrefreshed = classify(batch2, idx0)
     assert(verdicts(unrefreshed).forall(_._2 == "new"))
-    val idx1 = Dedup.refreshed(idx0, batch1, v1).cache()
-    val v2 = Dedup.classifyNew(Dedup.hashSigProjection(batch2), idx1)
+    val idx1 = Dedup.refreshed(Map(Text -> idx0), Modality.project(Text -> batch1), v1)(Text)
+      .cache()
+    val v2 = classify(batch2, idx1)
     assert(verdicts(v2) == Set((20L, "exact", Some(11L)),
       (21L, "near", Some(11L)), (22L, "new", None)))
     // duality: the refreshed-index path must equal classifying batch2
     // against (corpus ∪ batch1's new survivors) in one shot
-    val oneShot = Dedup.incrementalDedupFor(batch2,
+    val oneShot = classify(batch2, Text.project(
       corpus.unionByName(batch1.join(
-        v1.filter($"status" === "new").select("doc_id"), Seq("doc_id"))))
+        v1.filter($"status" === "new").select("doc_id"), Seq("doc_id")))))
     assert(verdicts(v2) == verdicts(oneShot))
     idx0.unpersist(); idx1.unpersist()
   }
@@ -739,13 +742,14 @@ class StreamingMultimodalSpec extends AnyFunSuite {
   }
 
   test("three-tier index refresh: classify → refreshed3 → next batch ≡ one-shot") {
-    import graft.operators.Dedup
+    import graft.operators.{Dedup, Modality}
+    import Modality.{Embedding, Text}
     import spark.implicits._
     def verdicts(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getString(1),
         if (r.isNullAt(2)) None else Some(r.getLong(2)))).toSet
     // tiny embedding space: dim=4, 8 sketch bits in 4 bands
-    val (bits, dim, embBands) = (8, 4, 4)
+    val emb = Embedding(bits = 8, dim = 4, bands = 4)
     val corpus = Seq(
       (1L, "alpha beta gamma delta epsilon zeta eta theta"),
       (2L, "one two three four five six seven eight nine ten")
@@ -771,20 +775,19 @@ class StreamingMultimodalSpec extends AnyFunSuite {
       (20L, Seq(0.0f, 0.0f, 1.0f, 0.0f)),
       (21L, Seq(-0.5f, -0.5f, -0.5f, -0.5f))).toDF("doc_id", "embedding")
     def classify(b: org.apache.spark.sql.DataFrame, be: org.apache.spark.sql.DataFrame,
-                 idx: org.apache.spark.sql.DataFrame, eidx: org.apache.spark.sql.DataFrame) =
-      Dedup.classifyNew3(Dedup.hashSigProjection(b), idx,
-        Dedup.embSketchProjection(be, bits, dim), eidx,
-        bits = bits, embBands = embBands)
-    val idx0 = Dedup.hashSigProjection(corpus).cache()
-    val eidx0 = Dedup.embSketchProjection(corpusEmb, bits, dim).cache()
-    val v1 = classify(batch1, batch1Emb, idx0, eidx0)
+                 index: Map[Modality, org.apache.spark.sql.DataFrame]) =
+      Dedup.classify(Modality.project(Text -> b, emb -> be), index)
+    val index0 = Modality.project(Text -> corpus, emb -> corpusEmb)
+      .map { case (m, df) => m -> df.cache() }
+    val v1 = classify(batch1, batch1Emb, index0)
     assert(verdicts(v1) == Set((10L, "exact", Some(1L)), (11L, "new", None)))
     // WITHOUT the refresh, batch2 sails through as new on every tier
-    assert(verdicts(classify(batch2, batch2Emb, idx0, eidx0))
+    assert(verdicts(classify(batch2, batch2Emb, index0))
       .forall(_._2 == "new"))
-    val (idx1, eidx1) = Dedup.refreshed3(
-      idx0, eidx0, batch1, batch1Emb, v1, bits = bits, dim = dim)
-    val v2 = classify(batch2, batch2Emb, idx1.cache(), eidx1.cache())
+    val index1 = Dedup.refreshed(index0,
+      Modality.project(Text -> batch1, emb -> batch1Emb), v1)
+      .map { case (m, df) => m -> df.cache() }
+    val v2 = classify(batch2, batch2Emb, index1)
     assert(verdicts(v2) == Set((20L, "near_embedding", Some(11L)),
       (21L, "new", None)),
       "the refreshed embedding index must catch the semantic dup")
@@ -794,11 +797,10 @@ class StreamingMultimodalSpec extends AnyFunSuite {
       Seq("doc_id"))
     val new1Emb = batch1Emb.join(v1.filter($"status" === "new").select("doc_id"),
       Seq("doc_id"))
-    val oneShot = Dedup.incrementalDedupFor3(batch2, corpus.unionByName(new1),
-      batch2Emb, corpusEmb.unionByName(new1Emb),
-      bits = bits, embBands = embBands, dim = dim)
+    val oneShot = classify(batch2, batch2Emb, Modality.project(
+      Text -> corpus.unionByName(new1), emb -> corpusEmb.unionByName(new1Emb)))
     assert(verdicts(v2) == verdicts(oneShot))
-    Seq(idx0, eidx0).foreach(_.unpersist())
+    index0.values.foreach(_.unpersist())
     spark.catalog.clearCache()
   }
 
