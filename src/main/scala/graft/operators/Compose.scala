@@ -22,9 +22,15 @@ import graft.sources.Tables
   * is one shuffle on the content hash; stage 3 is the capped candidate
   * pipeline + O(log d) components over the SURVIVOR subset (already
   * smaller than the corpus); stage 4 is the two-pass distributed prefix
-  * scan. The survivor frame is cached once and feeds stages 3 and 4 —
-  * at 100 TB that cache is the working set a real pipeline would
-  * checkpoint between stages anyway.
+  * scan. Stages 3 and 4 are size-decided: each first probes its input
+  * with one bounded collect (≤ 2²⁰ exploded gram rows, ≤ 2²⁰ count
+  * rows) and, when the input fits, solves on the driver and hands a
+  * local relation downstream, so at benchmark and board scale stage 3
+  * costs one probe job plus the components' zero and stage 4 one probe;
+  * above the cap the distributed plans run unchanged. The survivor
+  * frame is cached once and feeds stages 3 and 4 — at 100 TB that cache
+  * is the working set a real pipeline would checkpoint between stages
+  * anyway.
   */
 object Compose {
 

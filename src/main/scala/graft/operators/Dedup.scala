@@ -190,19 +190,187 @@ object Dedup {
     * aggregate the pairs (connected components, the composed pipeline)
     * must enter here — a Sort under their cache/count would cost a full
     * range-sampling pass that RE-EXECUTES the candidate+rescore subtree
-    * before the sort itself runs, for an ordering nothing reads. */
+    * before the sort itself runs, for an ordering nothing reads.
+    *
+    * Scale shape — the plan is decided from MEASURED size (the partial
+    * DAG execution move, and [[connectedComponents]]'s own rule): ONE
+    * bounded probe collects at most [[LocalSolveMaxRows]] + 1 exploded
+    * `(doc_id, pos, gram, xxhash64(gram))` rows. When the whole exploded gram
+    * set fits, the stage is solved on the driver
+    * ([[cappedPairsLocal]]) and returned as a local relation — the
+    * distributed plan's ~20 jobs (df groupBy, hot broadcast, self-join,
+    * two count joins, two rescore joins, each its own AQE stage) become
+    * one; a downstream [[connectedComponents]] then reads the pairs
+    * without launching a job. Above the cap the probe is discarded and
+    * [[cappedPairsDistributed]] runs unchanged — the corpus-scale path.
+    * The probe bounds GRAM ROWS, not documents, so one giant document
+    * cannot flood the driver, and the driver solve bounds its pruned
+    * PAIRS by the same cap (clusters of identical short docs yield up to
+    * maxDocFreq / 2 pairs per gram row). Measured at the cap: ≈ 200 MB
+    * of driver heap for 2²⁰ probe rows (long, int, gram string, long)
+    * plus ≈ 140 MB for 2²⁰ pair rows. */
   private[graft] def ngramJaccardPairsCappedTokRaw(
       docToks: DataFrame,
       threshold: Double = 0.5,
-      maxDocFreq: Long = 100): DataFrame = {
+      maxDocFreq: Long = 100): DataFrame =
+    cappedPairsLocal(docToks, threshold, maxDocFreq, LocalSolveMaxRows)
+      .getOrElse(cappedPairsDistributed(docToks, threshold, maxDocFreq))
+
+  /** Driver-solve ceiling shared by the size-decided stages (capped
+    * near-dup pairs, pack assignment, connected components): 2²⁰ probe
+    * rows. */
+  private[graft] val LocalSolveMaxRows: Int = 1 << 20
+
+  /** Distinct 3-gram shingle arrays of the docs with ≥ 3 tokens — the
+    * per-row projection both capped-pair paths start from. */
+  private def gramArrays(docToks: DataFrame): DataFrame =
+    docToks
+      .filter(size(col("t")) >= 3)
+      .select(col("doc_id"), shingles(col("t"), 3).as("grams"))
+
+  /** The capped pair stage solved on the driver, or None when it must
+    * run distributed: more than `cap` exploded gram rows, more than
+    * `cap` pairs left after the upper-bound prune, a non-long or null
+    * doc id, a doc id that owns two gram arrays, or a prune denominator
+    * of 0 (the distributed plan's division decides that case). Spark
+    * computes the shingles and their xxhash64 in the probe's
+    * projection; the driver then replays
+    * [[cappedPairsDistributed]] step for step — df per hash (with
+    * multiplicity), the hot set `df > maxDocFreq`, `ncc` per pair over
+    * the capped rows, the upper-bound prune and the exact string-set
+    * rescore — with Spark's arithmetic (a double divided by a long
+    * widened to double), so the rows equal the distributed output as a
+    * multiset, under its exact schema. */
+  private[graft] def cappedPairsLocal(docToks: DataFrame, threshold: Double,
+                                      maxDocFreq: Long,
+                                      cap: Int): Option[DataFrame] = {
+    val docGrams = gramArrays(docToks)
+    if (docGrams.schema("doc_id").dataType != org.apache.spark.sql.types.LongType)
+      return None
+    // posexplode_OUTER, not posexplode: for an inner generator Catalyst
+    // infers `size(grams) > 0` and pushes it below the spread exchange,
+    // so every document's shingles are built a second time in the scan
+    // task (measured at sf0.1: 5.0 s vs 0.5 s for the probe). Every array
+    // here holds ≥ 1 shingle, so the rows are the same. The arrays are
+    // NOT cached for the probe so the distributed plan could reuse them:
+    // that costs one more job under the cap (traced curation: 5 near-dup
+    // jobs vs 4) and saved nothing over it (2.6M gram rows, 4 cores,
+    // medians of 4 interleaved runs: 12.4 s cached, 11.5 s uncached,
+    // 11.7 s for the distributed plan with no probe).
+    val probe = docGrams
+      .select(col("doc_id"), posexplode_outer(col("grams")).as(Seq("pos", "gram")))
+      .select(col("doc_id"), col("pos"), col("gram"), xxhash64(col("gram")).as("gh"))
+      .limit(cap + 1).collect()
+    if (probe.length > cap || probe.exists(r => r.anyNull)) return None
+    import scala.collection.mutable
+    val n = probe.length
+    // dense doc indices in id order, so index order is doc_a < doc_b
+    val ids = probe.map(_.getLong(0)).distinct.sorted
+    val index = mutable.LongMap.empty[Int]
+    ids.indices.foreach(i => index(ids(i)) = i)
+    val nd = ids.length
+    val doc = probe.map(r => index(r.getLong(0)))
+    // ng per doc; one gram array per doc id: its rows are positions
+    // 0..ng-1, so a second array under the same id shows as more rows
+    // than max pos + 1
+    val ng = new Array[Long](nd)
+    val maxPos = new Array[Int](nd)
+    (0 until n).foreach { k =>
+      ng(doc(k)) += 1
+      maxPos(doc(k)) = math.max(maxPos(doc(k)), probe(k).getInt(1))
+    }
+    if ((0 until nd).exists(i => ng(i) != maxPos(i) + 1L)) return None
+    // df per hash = its rows (with multiplicity); a capped hash keeps its
+    // postings (doc indices, with multiplicity), a hot one gets null
+    val byHash = mutable.LongMap.empty[mutable.ArrayBuilder.ofInt]
+    (0 until n).foreach { k =>
+      byHash.getOrElseUpdate(probe(k).getLong(3), new mutable.ArrayBuilder.ofInt) += doc(k)
+    }
+    val postings = byHash.mapValuesNow { b =>
+      val ds = b.result(); if (ds.length > maxDocFreq) null else ds
+    }
+    val post = probe.map(r => postings(r.getLong(3)))
+    val ngc = new Array[Long](nd)
+    (0 until n).foreach(k => if (post(k) != null) ngc(doc(k)) += 1)
+    // rows grouped by doc (a counting sort on the doc index)
+    val start = new Array[Int](nd + 1)
+    doc.foreach(d => start(d + 1) += 1)
+    (0 until nd).foreach(i => start(i + 1) += start(i))
+    val order = new Array[Int](n)
+    val fill = start.clone()
+    (0 until n).foreach { k => order(fill(doc(k))) = k; fill(doc(k)) += 1 }
+    // ncc per pair, one doc_a at a time into a dense counter: the
+    // self-join on the hash filtered to doc_a < doc_b, counted; each
+    // pair is bounded and pruned as soon as its count is complete. The
+    // pairs are bounded by `cap` too: rows under the cap can still yield
+    // up to maxDocFreq / 2 pairs each (clusters of identical short docs),
+    // and past `cap` pairs the distributed plan takes over
+    val ncc = new Array[Long](nd)
+    val touched = new mutable.ArrayBuilder.ofInt
+    val pruned = mutable.ArrayBuffer.empty[(Int, Int)]
+    var declined = false
+    var i = 0
+    while (i < nd && !declined) {
+      var r = start(i)
+      while (r < start(i + 1)) {
+        val p = post(order(r))
+        if (p != null) {
+          var q = 0
+          while (q < p.length) {
+            val j = p(q)
+            if (j > i) { if (ncc(j) == 0) touched += j; ncc(j) += 1 }
+            q += 1
+          }
+        }
+        r += 1
+      }
+      touched.result().foreach { j =>
+        val upper = ncc(j) + math.min(ng(i) - ngc(i), ng(j) - ngc(j))
+        val den = ng(i) + ng(j) - upper
+        if (den == 0) declined = true
+        else if (upper.toDouble / den.toDouble >= threshold) pruned += ((i, j))
+        ncc(j) = 0
+      }
+      touched.clear()
+      if (pruned.length > cap) declined = true
+      i += 1
+    }
+    if (declined) return None
+    val needed = pruned.iterator.flatMap { case (a, b) => Iterator(a, b) }.toSet
+    val gramSet = mutable.LongMap.empty[mutable.HashSet[String]]
+    (0 until n).foreach { k =>
+      if (needed.contains(doc(k)))
+        gramSet.getOrElseUpdate(doc(k), mutable.HashSet.empty[String]) += probe(k).getString(2)
+    }
+    val rows = pruned.flatMap { case (a, b) =>
+      val (sa, sb) = (gramSet(a), gramSet(b))
+      val nCommon = (if (sa.size <= sb.size) sa.count(sb) else sb.count(sa)).toLong
+      val jaccard = nCommon.toDouble / (ng(a) + ng(b) - nCommon).toDouble
+      if (jaccard >= threshold)
+        Some(org.apache.spark.sql.Row(ids(a), ids(b), nCommon, ng(a), ng(b), jaccard))
+      else None
+    }
+    // the schema is read off the distributed scoring projection itself
+    // (analysis only, no job), nullability included
+    val schema = scoreGramPairs(docGrams.select(col("doc_id").as("doc_a"),
+      col("doc_id").as("doc_b"), col("grams").as("ga"), col("grams").as("gb")),
+      threshold).schema
+    val spark = docToks.sparkSession
+    Some(spark.createDataFrame(java.util.Arrays.asList(rows.toSeq: _*), schema))
+  }
+
+  /** The capped pair stage as a distributed plan — the corpus-scale path
+    * of [[ngramJaccardPairsCappedTokRaw]] and the reference its
+    * driver-solved form is specced against. */
+  private[graft] def cappedPairsDistributed(
+      docToks: DataFrame,
+      threshold: Double,
+      maxDocFreq: Long): DataFrame = {
     // per-doc gram ARRAYS are a per-row projection (no shuffle at all) —
     // they feed the explode, both rescore joins, and keep the gram-set
     // collection out of a groupBy/collect_list entirely. Cached because
     // three consumers read it; released via Caches.release()
-    val docGrams = Caches.track(
-      docToks
-        .filter(size(col("t")) >= 3)
-        .select(col("doc_id"), shingles(col("t"), 3).as("grams")))
+    val docGrams = Caches.track(gramArrays(docToks))
     val (capped, ncc) = cappedCandidates(docGrams, maxDocFreq)
     // Upper-bound prune (the similarity-join positional-filter idea):
     // instead of dragging both gram ARRAYS through a join for every pair
@@ -282,9 +450,14 @@ object Dedup {
     * through, so scores can't drift between strategies. */
   private def rescoreExact(cand: DataFrame, docGrams: DataFrame,
                            threshold: Double): DataFrame =
-    cand
+    scoreGramPairs(cand
       .join(docGrams.select(col("doc_id").as("doc_a"), col("grams").as("ga")), "doc_a")
-      .join(docGrams.select(col("doc_id").as("doc_b"), col("grams").as("gb")), "doc_b")
+      .join(docGrams.select(col("doc_id").as("doc_b"), col("grams").as("gb")), "doc_b"),
+      threshold)
+
+  /** The exact-jaccard projection over (doc_a, doc_b, ga, gb) rows. */
+  private def scoreGramPairs(joined: DataFrame, threshold: Double): DataFrame =
+    joined
       .withColumn("n_common", size(array_intersect(col("ga"), col("gb"))).cast("long"))
       .withColumn("ng_a", size(col("ga")).cast("long"))
       .withColumn("ng_b", size(col("gb")).cast("long"))
@@ -620,9 +793,12 @@ object Dedup {
     * computed by an exact in-memory union-find instead — the same move
     * AQE makes when it shrinks a planned shuffle join to a local one.
     * Both paths produce the identical component-min labeling; pass
-    * `localSolveMaxEdges = 0` to force the distributed loop (specs do). */
+    * `localSolveMaxEdges = 0` to force the distributed loop (specs do).
+    * When the pairs are themselves driver-solved (a local relation from
+    * [[ngramJaccardPairsCappedTokRaw]] under its cap), the probe folds
+    * into that relation and launches no job at all. */
   def connectedComponents(pairs: DataFrame, maxIter: Int = 50,
-                          localSolveMaxEdges: Long = 1L << 20): DataFrame =
+                          localSolveMaxEdges: Long = LocalSolveMaxRows): DataFrame =
     connectedComponentsCounted(pairs, maxIter, localSolveMaxEdges)._1
 
   /** [[connectedComponents]] plus the DISTRIBUTED round count actually
@@ -631,7 +807,7 @@ object Dedup {
     * at 10× with planted chains by `tools/SoakScale`. */
   private[graft] def connectedComponentsCounted(
       pairs: DataFrame, maxIter: Int = 50,
-      localSolveMaxEdges: Long = 1L << 20): (DataFrame, Int) = {
+      localSolveMaxEdges: Long = LocalSolveMaxRows): (DataFrame, Int) = {
     val Seq(a, b) = pairs.columns.take(2).toSeq.map(col)
     val directedPlan = pairs.select(a.as("src"), b.as("dst"))
     if (localSolveMaxEdges > 0) {

@@ -21,6 +21,13 @@ import graft.sources.Tables
   * (`parts` scalars) — the classic two-pass parallel scan.
   * The result depends only on the global order, not on partition
   * boundaries (spec: partition-count invariance).
+  *
+  * Scale shape: the scan is the corpus-scale path. [[packAssignments]]
+  * first probes its input with one bounded collect and, when the
+  * `(doc_id, order key, count)` rows fit under the shared 2²⁰-row
+  * driver cap, sorts and folds them on the driver instead — the same
+  * order and the same long sums, without the scan's sample, shuffle and
+  * totals jobs.
   */
 object Packing {
 
@@ -53,8 +60,10 @@ object Packing {
     // the big second pass reads the cache. Exclusive prefix accumulation
     // runs in pid order — the identical left fold the window form did, so
     // results are bit-equal for long AND double values.
+    // (≤ `parts` rows with unique pids: sorted on the driver, since a
+    // Spark orderBy would add a range-sampling job for nothing)
     val totals = ranged.groupBy(col("_pid")).agg(sum(value).as("_ptot"))
-      .orderBy(col("_pid")).collect()
+      .collect().sortBy(_.getInt(0))
     val cumType = within.schema("_cum_in").dataType
     var accL = 0L
     var accD = 0.0
@@ -107,8 +116,10 @@ object Packing {
     * full windows plus tails). Chunks enter keyed by "doc:idx" strings
     * so [[packSequencesCounts]] is reused VERBATIM — an ordering or
     * accumulation fix lands in q52 and q81 at once. Scale shape is the
-    * packer's: one range shuffle + the partition-count driver fold; the
-    * chunker adds no shuffle of its own. */
+    * packer's: a driver fold under its cap (string keys sort in
+    * UTF8String byte order there, as in Spark), else one range shuffle
+    * + the partition-count driver fold; the chunker adds no shuffle of
+    * its own. */
   def packChunks(s: SparkSession, dir: String, maxLen: Int = 32,
                  stride: Int = 24, budget: Long = 64): DataFrame =
     packSequencesCounts(
@@ -166,19 +177,81 @@ object Packing {
       .orderBy(col("seq_id"))
 
   /** The per-document pack assignment under q52's deterministic order:
-    * (doc_id, _ok = md5(doc_id) order key, _nt, seq_id). The shared
-    * head of the packing audit and the shard writer — extracting it
-    * means the artifact q103 writes and the report q52 publishes can
-    * never disagree on which sequence a document landed in. */
+    * (doc_id, _ok = md5(doc_id) order key, _nt, _cum, seq_id). The
+    * shared head of the packing audit and the shard writer — extracting
+    * it means the artifact q103 writes and the report q52 publishes can
+    * never disagree on which sequence a document landed in.
+    *
+    * Scale shape — decided from MEASURED size: one bounded probe
+    * collects at most [[Dedup.LocalSolveMaxRows]] + 1 `(doc_id, _ok, _nt)`
+    * rows; when they all fit, the order, the running total and the
+    * sequence ids are folded on the driver ([[packAssignmentsLocal]])
+    * and returned as a local relation — one job instead of the two-pass
+    * scan's range sample, range shuffle, totals and final pass. Above
+    * the cap [[packAssignmentsDistributed]] runs unchanged. */
   private[graft] def packAssignments(docCounts: DataFrame,
-                                     budget: Long): DataFrame = {
-    val d = docCounts
-      .select(col("doc_id"),
-        md5(col("doc_id").cast("string")).as("_ok"),
-        col("_nt"))
-    runningTotal(d, Seq(col("_ok"), col("doc_id")), col("_nt"))
-      .withColumn("seq_id", expr(s"(_cum - _nt) div ${budget}L"))
+                                     budget: Long): DataFrame =
+    packAssignmentsLocal(docCounts, budget, Dedup.LocalSolveMaxRows)
+      .getOrElse(packAssignmentsDistributed(docCounts, budget))
+
+  /** The `(doc_id, _ok, _nt)` rows both assignment paths order. */
+  private def orderKeyed(docCounts: DataFrame): DataFrame =
+    docCounts.select(col("doc_id"),
+      md5(col("doc_id").cast("string")).as("_ok"),
+      col("_nt"))
+
+  /** [[packAssignments]] solved on the driver, or None when it must run
+    * distributed: more than `cap` rows, a doc id that is neither long
+    * nor string, a non-long `_nt`, a null key or count, a budget ≤ 0, or
+    * a running total that overflows a long. Spark computes the md5 key
+    * in the probe's projection; the rows are sorted by (_ok, doc_id)
+    * under Spark's ordering — UTF8String byte order for strings, signed
+    * order for longs — and the inclusive long running total and
+    * `seq_id = (_cum - _nt) div budget` are folded in that order, so the
+    * rows equal the distributed output as a multiset, under its schema. */
+  private[graft] def packAssignmentsLocal(docCounts: DataFrame, budget: Long,
+                                          cap: Int): Option[DataFrame] = {
+    import org.apache.spark.sql.types.{LongType, StringType}
+    import org.apache.spark.unsafe.types.UTF8String
+    val d = orderKeyed(docCounts)
+    val keyType = d.schema("doc_id").dataType
+    if (budget <= 0 || d.schema("_nt").dataType != LongType ||
+        (keyType != LongType && keyType != StringType)) return None
+    val probe = d.limit(cap + 1).collect()
+    if (probe.length > cap || probe.exists(r => r.anyNull)) return None
+    // sort keys built once per row: md5 hex, then the doc id as a long
+    // or as its UTF-8 bytes (Spark's binary string order)
+    val keyed = probe.map(r => (UTF8String.fromString(r.getString(1)),
+      if (keyType == StringType) UTF8String.fromString(r.getString(0)) else null, r))
+    val byKey: Ordering[(UTF8String, UTF8String, org.apache.spark.sql.Row)] =
+      (x, y) => {
+        val c = x._1.compareTo(y._1)
+        if (c != 0) c
+        else if (keyType == LongType) java.lang.Long.compare(x._3.getLong(0), y._3.getLong(0))
+        else x._2.compareTo(y._2)
+      }
+    var cum = 0L
+    val rows = try keyed.sorted(byKey).map { case (_, _, r) =>
+      val (nt, before) = (r.getLong(2), cum)
+      cum = Math.addExact(cum, nt)
+      org.apache.spark.sql.Row(r.get(0), r.getString(1), nt, cum, before / budget)
+    } catch { case _: ArithmeticException => return None }
+    // the distributed frame's columns: runningTotal's `_cum` (a sum plus
+    // an offset, nullable) and the integral division's `seq_id`
+    val schema = d.schema
+      .add("_cum", LongType, nullable = true)
+      .add("seq_id", LongType, nullable = true)
+    Some(docCounts.sparkSession.createDataFrame(
+      java.util.Arrays.asList(rows.toIndexedSeq: _*), schema))
   }
+
+  /** [[packAssignments]] as the distributed two-pass scan — the
+    * corpus-scale path and the reference its driver-solved form is
+    * specced against. */
+  private[graft] def packAssignmentsDistributed(docCounts: DataFrame,
+                                                budget: Long): DataFrame =
+    runningTotal(orderKeyed(docCounts), Seq(col("_ok"), col("doc_id")), col("_nt"))
+      .withColumn("seq_id", expr(s"(_cum - _nt) div ${budget}L"))
 
   // q103 — CLEANED-SHARD WRITER: the physical artifact a pretraining
   // run actually ships. q52/q81 pin the LOGICAL packing; this op
@@ -379,39 +452,30 @@ object Packing {
   // loads its frozen tokenizer artifact instead).
   def writeCleanShardsBpe(s: SparkSession, dir: String, budget: Long = 512,
                           seqsPerShard: Long = 8, iters: Int = 10): DataFrame = {
-    // PIN the survivor corpus once (eager localCheckpoint — the
-    // checkpoint a real pipeline writes between cleaning and packing):
-    // three downstream consumers otherwise re-run the funnel's
-    // pair-subgraph anti-join per pass — the segmentation's distinct-
-    // word branch, its occurrence-stream join-back, and the writer's
-    // text join (measured 14.7 s/rep un-pinned vs ~q105+q106's sum
-    // with the pin). The checkpoint holds (doc_id, text) survivor rows
-    // — the stage-boundary working set, bounded by the cleaned corpus.
-    //
-    // r15 RESTRUCTURE, from stage-profile measurement:
+    // Plan, from stage-profile measurement (r15, r16) and the
+    // size-decided near-dup stage:
     //  - the survivor frame stays LAZY (see writeCleanShards — the
     //    funnel's internal caches make re-evaluation a cache-fed
     //    anti-join, while eagerly checkpointing the text cost ~2 s and
     //    its lingering blocks taxed neighboring queries);
-    //  - the funnel's caches are WARMED concurrently with the tokenizer
-    //    training (guide §2.6 — the train is a driver-loop job that
-    //    leaves the cluster idle between its small jobs; the two are
-    //    independent, so overlapping changes no row);
-    //  - the BPE COUNTS frame is checkpointed instead of the text: the
-    //    writer's range partitioner SAMPLES its input before shuffling
-    //    it, so an expensive counts subtree evaluates twice un-pinned
-    //    (measured 6.7 s vs 3.2 s for the same write over cheap counts)
-    //    — pinning the narrow (doc_id, _nt) rows is ~100× fewer bytes
-    //    than pinning the text and caps the writer at the cheap-counts
-    //    cost.
-    // r16: the warm action moved from surv.count() to the segmentation's
-    // own distinct-word cache fill (Bpe.subwordCountsTrained) — one bg
-    // action now warms the funnel's stage caches AND the distinct-word
-    // shuffle the segmentation reads, and its count hands the join-back
-    // its broadcast-vs-shuffle decision for free.
-    val surv = Compose.survivors(s, dir)
-    val (_, counts0) = Bpe.subwordCountsTrained(surv,
-      Bpe.trainedMerges(s, dir, iters))
+    //  - building it is EAGER all the same: the capped-pair probe and its
+    //    driver solve (Dedup.ngramJaccardPairsCappedTokRaw) run at
+    //    composition time and warm the funnel's exact-dedup cache. That
+    //    work shares no data with the tokenizer training (guide §2.6 —
+    //    the train is a driver loop of histogram-sized jobs that leaves
+    //    the cluster idle between them), so the two run joined: training
+    //    on this thread, the funnel on a worker. The merges reach the
+    //    segmentation already learned; its distinct-word cache fill then
+    //    hands the join-back its broadcast-vs-shuffle decision;
+    //  - the BPE COUNTS frame is checkpointed instead of the text: over
+    //    the packer's cap its range partitioner SAMPLES its input before
+    //    shuffling it, so an expensive counts subtree evaluates twice
+    //    un-pinned (measured 6.7 s vs 3.2 s for the same write over cheap
+    //    counts) — pinning the narrow (doc_id, _nt) rows is ~100× fewer
+    //    bytes than pinning the text.
+    val (merges, surv) = Par.join2(Bpe.trainedMerges(s, dir, iters))(
+      Compose.survivors(s, dir))
+    val (_, counts0) = Bpe.subwordCountsTrained(surv, merges)
     val counts = Caches.register(counts0.localCheckpoint())
     writeShardsCounts(surv, counts, budget, seqsPerShard,
       defaultShardPath(dir) + "_cleanbpe")

@@ -128,13 +128,16 @@ object SoakScale {
       .repartition(32, col("doc_id"))
 
   /** Distributed-CC measurement on an n-link chain: (distinct labels,
-    * rounds, wall seconds). localSolveMaxEdges=0 forces the distributed
-    * loop — the small-subgraph shortcut would otherwise answer locally
-    * and measure nothing. */
+    * rounds, wall seconds). The pairs come from the distributed capped
+    * plan and localSolveMaxEdges=0 forces the distributed loop, so the
+    * timed wall is the pair pipeline plus the components loop — the
+    * small-input driver solves would otherwise answer eagerly or
+    * locally and measure nothing. */
   def ccChain(spark: SparkSession, n: Int): (Long, Int, Double) = {
     val (res, sc) = graft.operators.Caches.scope {
-      val pairs = Dedup.ngramJaccardPairsCappedTokRaw(
-        chainDocs(spark, n).select(col("doc_id"), tokens(col("text")).as("t")))
+      val pairs = Dedup.cappedPairsDistributed(
+        chainDocs(spark, n).select(col("doc_id"), tokens(col("text")).as("t")),
+        threshold = 0.5, maxDocFreq = 100)
         .select(col("doc_a"), col("doc_b"))
       val t0 = System.nanoTime()
       val (labels, rounds) = Dedup.connectedComponentsCounted(
