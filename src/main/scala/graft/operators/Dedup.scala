@@ -20,13 +20,6 @@ object Dedup {
   private def docs(s: SparkSession, dir: String): DataFrame =
     Tables(s, dir, "documents")
 
-  /** Spread scan for the per-row-compute hotspots (shingling, q28's
-    * md5-per-token simhash signature) — one shared helper with the text
-    * family, see [[TextOps.docsHeavy]] for the floor-vs-plain-scan
-    * decision rule. */
-  private def docsSpread(s: SparkSession, dir: String): DataFrame =
-    TextOps.docsHeavy(s, dir)
-
   /** Deterministic synthetic crawl URL per document — the q71 FIXTURE
     * rule, not an operator: the driver testdata has no url column, so
     * the crawl-URL surface is derived from (doc_id, source) via the
@@ -91,7 +84,7 @@ object Dedup {
 
   /** Distinct 3-gram shingles per doc (docs with ≥3 tokens). */
   private def grams3(s: SparkSession, dir: String): DataFrame =
-    docsSpread(s, dir)
+    TextOps.docsHeavy(s, dir)
       .select(col("doc_id"), tokens(col("text")).as("t"))
       .filter(size(col("t")) >= 3)
       .select(col("doc_id"), explode(shingles(col("t"), 3)).as("gram"))
@@ -146,7 +139,7 @@ object Dedup {
   def ngramJaccardPairsCapped(s: SparkSession, dir: String,
                               threshold: Double = 0.5,
                               maxDocFreq: Long = 100): DataFrame =
-    ngramJaccardPairsCappedFor(docsSpread(s, dir), threshold, maxDocFreq)
+    ngramJaccardPairsCappedFor(TextOps.docsHeavy(s, dir), threshold, maxDocFreq)
 
   /** [[ngramJaccardPairsCapped]] over ANY (doc_id, text) frame — the form
     * a composed pipeline needs, where the near-dup corpus is the OUTPUT
@@ -182,7 +175,7 @@ object Dedup {
       s: SparkSession, dir: String,
       threshold: Double = 0.5, maxDocFreq: Long = 100): DataFrame =
     ngramJaccardPairsCappedTokRaw(
-      docsSpread(s, dir).select(col("doc_id"), tokens(col("text")).as("t")),
+      TextOps.docsHeavy(s, dir).select(col("doc_id"), tokens(col("text")).as("t")),
       threshold, maxDocFreq)
 
   /** [[ngramJaccardPairsCappedTok]] WITHOUT the final global sort. The
@@ -495,7 +488,7 @@ object Dedup {
   def ngramJaccardPairsPrefix(s: SparkSession, dir: String,
                               threshold: Double = 0.5,
                               wideKeys: Boolean = false): DataFrame =
-    ngramJaccardPairsPrefixFor(docsSpread(s, dir), threshold, wideKeys)
+    ngramJaccardPairsPrefixFor(TextOps.docsHeavy(s, dir), threshold, wideKeys)
 
   /** Distinct 3-gram shingle ARRAYS per (doc_id, text) row — the shared
     * entry of the pair pipelines; callers cache it (multiple consumers). */
@@ -614,7 +607,7 @@ object Dedup {
     * won't inline a non-cheap expression referenced k times, so the
     * signature evaluates once per row (spec-pinned from the plan). */
   def minhashSignatures(s: SparkSession, dir: String, k: Int = 12): DataFrame = {
-    val sigArr = docsSpread(s, dir)
+    val sigArr = TextOps.docsHeavy(s, dir)
       .select(col("doc_id"), tokens(col("text")).as("t"))
       .filter(size(col("t")) >= 3)
       .select(col("doc_id"), minhashSigCol(col("t"), k).as("sig"))
@@ -623,10 +616,10 @@ object Dedup {
   }
 
   /** LSH band keys as an array of (band, key) structs, shared by the
-    * batch self-join and the streaming twin so both derive byte-identical
-    * bucket keys from one definition (band count, order, separator). The
-    * caller supplies how to reach the i-th minhash — `mh_i` columns on
-    * the batch side, `element_at(sig, i+1)` on the streaming side. */
+    * batch band rows ([[Modality.Text]]) and the streaming twin so both
+    * derive byte-identical bucket keys from one definition (band count,
+    * order, separator). The caller supplies how to reach the i-th
+    * minhash, `element_at(sig, i+1)` on both sides. */
   private[graft] def bandKeyStructs(mh: Int => Column, k: Int, bands: Int): Column = {
     require(k % bands == 0, "bands must divide k")
     val r = k / bands
@@ -636,43 +629,26 @@ object Dedup {
     }: _*)
   }
 
-  // q27 — MinHash + LSH banding near-dup candidates: b bands of r rows;
-  // docs agreeing on ALL r minhashes in any band land in the same bucket
-  // (bucket-keyed self-join — the O(n²)-free scale path). Estimated
-  // similarity = fraction of the k minhashes that agree.
-  def minhashLshPairs(s: SparkSession, dir: String,
-                      k: Int = 12, bands: Int = 4): DataFrame = {
-    // cached: signatures feed both band-join sides AND the final
-    // agreement rescoring; released via Caches.release()
-    val sig = Caches.track(minhashSignatures(s, dir, k))
-    val banded = sig
-      .select(col("doc_id"),
-        explode(bandKeyStructs(i => col(s"mh_$i"), k, bands)).as("b"))
-      .select(col("doc_id"), col("b.band").as("band"), col("b.key").as("key"))
-    val cand = banded.as("x").join(banded.as("y"), Seq("band", "key"))
-      .filter(col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"))
-      .distinct()
-    val mhEq = (0 until k).map(i =>
-      when(col(s"a.mh_$i") === col(s"b.mh_$i"), 1).otherwise(0))
-      .reduce(_ + _)
-    cand
-      .join(sig.as("a"), col("doc_a") === col("a.doc_id"))
-      .join(sig.as("b"), col("doc_b") === col("b.doc_id"))
-      .withColumn("est_jaccard", mhEq.cast("double") / lit(k.toDouble))
-      .select(col("doc_a"), col("doc_b"), col("est_jaccard"))
-      .orderBy(col("doc_a"), col("doc_b"))
-  }
+  /** q27 — MinHash + LSH banding near-dup candidates: every pair sharing
+    * one of [[Modality.Text]]'s 4 bands of 3 minhashes (the bucket-keyed
+    * self-join — the O(n²)-free scale path), with its estimated
+    * similarity = fraction of the 12 minhashes that agree. Unthresholded:
+    * Text's ≥ 0.5 is the near TIER's verdict, not this query's. The
+    * cached frame is (doc_id, sig) only — the side's content hash is
+    * pruned before it is computed. */
+  def minhashLshPairs(s: SparkSession, dir: String): DataFrame =
+    Modality.Text.band.selfPairs(Caches.track(Modality.Text.side(s, dir, lit(true))
+      .select(col("doc_id"), col("sig"))), "doc_a", "doc_b").orderBy(col("doc_a"), col("doc_b"))
 
   /** q43 — embedding-cosine near-dup pairs, LSH-banded (the brief's
-    * "embedding-cosine near-dup" dedup modality). Candidate pairs come
-    * from a random-hyperplane sketch banded into `bands` keys of
-    * `bits/bands` sign bits each — a bucket-keyed equi self-join, NEVER
-    * an all-pairs cross join — and only bucket-mates are exact-rescored.
-    * At 100 TB the candidate volume per band bucket is ~n/2^(bits/bands),
-    * tunable by bits-per-band; the earlier exact formulation (kept below
-    * as [[embeddingNearDupPairsExact]]) is O(n²) and exists only as the
-    * recall baseline for specs.
+    * "embedding-cosine near-dup" dedup modality): [[Modality.Embedding]]'s
+    * band entry over its side. Candidate pairs come from a
+    * random-hyperplane sketch banded into `bands` keys of `bits/bands`
+    * sign bits each — a bucket-keyed equi self-join, NEVER an all-pairs
+    * cross join — and only bucket-mates are exact-rescored. At 100 TB the
+    * candidate volume per band bucket is ~n/2^(bits/bands), tunable by
+    * bits-per-band; the exact formulation ([[embeddingNearDupPairsExact]])
+    * is O(n²) and exists only as the recall baseline for specs.
     *
     * Recall < 1 by construction and is mirrored EXACTLY in the DuckDB
     * oracle: the same md5-derived hyperplane family (Similarity.planeCoef)
@@ -683,48 +659,17 @@ object Dedup {
     * sign-bit agreement is only ~0.63/plane — on a real corpus a near-dup
     * threshold of 0.9+ concentrates agreement near 1 and supports many
     * more bits per band. */
-  def embeddingNearDupPairs(s: SparkSession, dir: String,
-                            threshold: Double = 0.40, bits: Int = 32,
-                            bands: Int = 8, dim: Int = 64): DataFrame =
-    // sort-last, cache-free: the sampling re-execution reads the banded
-    // cache; cluster consumers (q70) enter the Raw form
-    embeddingNearDupPairsRaw(s, dir, threshold, bits, bands, dim)
-      .orderBy(col("vec_a"), col("vec_b"))
+  def embeddingNearDupPairs(s: SparkSession, dir: String): DataFrame =
+    // sort-last over the cached side; cluster consumers (q70) enter the
+    // Raw form
+    embeddingNearDupPairsRaw(s, dir).orderBy(col("vec_a"), col("vec_b"))
 
   /** [[embeddingNearDupPairs]] WITHOUT the final oracle sort — the entry
-    * for consumers that only aggregate the pairs (cluster labeling). */
-  private[graft] def embeddingNearDupPairsRaw(
-      s: SparkSession, dir: String,
-      threshold: Double = 0.40, bits: Int = 32,
-      bands: Int = 8, dim: Int = 64): DataFrame = {
-    require(bits % bands == 0, "bands must divide bits")
-    graft.GraftExtensions.install(s)
-    import graft.functions.VectorFunctions.dotNative
-    // per-vector norm computed ONCE here (sqrt(dot(v,v)) is the same
-    // double wherever computed, so the per-pair cosine stays bit-equal
-    // to the oracle while rescoring does one dot per pair, not three)
-    val e = Similarity.hyperplaneSketch(
-      Tables.spreadTable(s, dir, "embeddings", col("vec_id")).select(col("vec_id"), col("embedding")),
-      "embedding", bits, dim)
-      .withColumn("_norm", sqrt(dotNative(col("embedding"), col("embedding"))))
-    // cached: the sketch/norm projection feeds BOTH sides of the bucket
-    // self-join; released via Caches.release()
-    val banded = Caches.track(
-      e.select(col("vec_id"), col("embedding"), col("_norm"),
-        explode(sketchBandStructs(col("sketch"), bits, bands)).as("b"))
-        .select(col("vec_id"), col("embedding"), col("_norm"),
-          col("b.band").as("band"), col("b.key").as("key")))
-    val cand = banded.as("a").join(banded.as("b"), Seq("band", "key"))
-      .filter(col("a.vec_id") < col("b.vec_id"))
-      .select(col("a.vec_id").as("vec_a"), col("b.vec_id").as("vec_b"),
-        col("a.embedding").as("va"), col("b.embedding").as("vb"),
-        col("a._norm").as("_na"), col("b._norm").as("_nb"))
-      .dropDuplicates("vec_a", "vec_b")
-    cand
-      .withColumn("cosine",
-        round(dotNative(col("va"), col("vb")) / (col("_na") * col("_nb")), 4))
-      .filter(col("cosine") >= threshold)
-      .select(col("vec_a"), col("vec_b"), col("cosine"))
+    * for consumers that only aggregate the pairs (cluster labeling). The
+    * side is cached: it feeds both sides of the band self-join. */
+  private[graft] def embeddingNearDupPairsRaw(s: SparkSession, dir: String): DataFrame = {
+    val e = Modality.Embedding()
+    e.band.nearPairs(Caches.track(e.side(s, dir, lit(true))), "vec_a", "vec_b")
   }
 
   /** q70 — embedding dedup CLUSTER assignment: connected components over
@@ -737,10 +682,9 @@ object Dedup {
     * the algorithm and its scale story; same bounded-local / distributed
     * pointer-jumping machinery as the lexical clusters). */
   def embeddingDedupClusters(s: SparkSession, dir: String,
-                             threshold: Double = 0.40,
                              maxIter: Int = 50): DataFrame =
     clusterLabels(
-      embeddingNearDupPairsRaw(s, dir, threshold)
+      embeddingNearDupPairsRaw(s, dir)
         .select(col("vec_a"), col("vec_b")),
       Tables(s, dir, "embeddings").select(col("vec_id").as("doc_id")),
       maxIter)
@@ -936,7 +880,7 @@ object Dedup {
     * its scale story). */
   def dedupClusters(s: SparkSession, dir: String, threshold: Double = 0.5,
                     maxDocFreq: Long = 100, maxIter: Int = 50): DataFrame =
-    dedupClustersFor(docsSpread(s, dir), threshold, maxDocFreq, maxIter)
+    dedupClustersFor(TextOps.docsHeavy(s, dir), threshold, maxDocFreq, maxIter)
 
   /** [[dedupClusters]] over ANY (doc_id, text) frame — edges and the
     * singleton-completion corpus both come from the passed frame, so a
@@ -999,37 +943,25 @@ object Dedup {
     * whole pipeline (signature → banding → hamming) is mirrored in the
     * DuckDB oracle; the xxhash64-based [[graft.plans.SimHash64]] stays
     * available as the faster non-portable variant. Near-dups = pairs
-    * sharing a 15-bit band with overall Hamming distance ≤ maxHamming
-    * (banding: distance ≤ 3 guarantees a shared band among 4 bands). */
-  def simhashPairs(s: SparkSession, dir: String,
-                   maxHamming: Int = 6): DataFrame = {
+    * sharing a 15-bit band with overall Hamming distance ≤ 6. Recall < 1
+    * by construction: 4 bands guarantee a shared band only for
+    * distance ≤ 3. */
+  def simhashPairs(s: SparkSession, dir: String): DataFrame = {
     graft.GraftExtensions.install(s)
     // cached: the md5-per-token signature is the dominant per-row cost
     // (hence the spread scan) and feeds BOTH sides of the band
     // self-join; released via Caches.release()
-    val sh = Caches.track(docsSpread(s, dir)
+    val sh = Caches.track(TextOps.docsHeavy(s, dir)
       .select(col("doc_id"),
         call_function("simhash_md5_60", tokens(col("text"))).as("simhash")))
-    // 4 bands of 15 bits
-    val banded = sh.select(col("doc_id"), col("simhash"),
-      explode(array((0 until 4).map(bd =>
-        struct(lit(bd).as("band"),
-          shiftright(col("simhash"), bd * 15).bitwiseAND(0x7FFFL).as("key"))): _*)).as("b"))
-      .select(col("doc_id"), col("simhash"), col("b.band").as("band"), col("b.key").as("key"))
-    val hamming = {
-      val x = col("a.simhash").bitwiseXOR(col("b.simhash"))
-      bit_count(x).cast("long")
-    }
-    val candA = banded.as("a")
-    val candB = banded.as("b")
-    candA.join(candB, Seq("band", "key"))
-      .filter(col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
-        hamming.as("hamming"))
-      .distinct()
-      .filter(col("hamming") <= maxHamming)
-      .orderBy(col("doc_a"), col("doc_b"))
+    simhashBand.nearPairs(sh, "doc_a", "doc_b").orderBy(col("doc_a"), col("doc_b"))
   }
+
+  /** q28's band entry: 4 bands of 15 bits. It pairs documents only; no
+    * verdict tier or index table reads it. */
+  private val simhashBand = Modality.Stored("_sim", Seq("band", "key"),
+    Modality.bandRows(_, sketchBandStructs(col("simhash"), 60, 4), "simhash"),
+    Seq("simhash"), Modality.hamming("simhash"), _ <= 6, "near_simhash", "sim_id")
 
   /** q65/q68/q75/q78 — INCREMENTAL dedup: classify a NEW document batch
     * against an EXISTING corpus — the shape production dedup actually
@@ -1125,7 +1057,10 @@ object Dedup {
   /** (doc_id, embedding, sketch, _norm) projection over a
     * (doc_id, embedding) frame — the Embedding side
     * ([[hashSigProjection]]'s vector twin). Pure per-row; a production
-    * deployment precomputes this once over the corpus. */
+    * deployment precomputes this once over the corpus. The per-vector
+    * norm is computed ONCE here (sqrt(dot(v,v)) is the same double
+    * wherever computed, so the per-pair cosine stays bit-equal to the
+    * oracle while rescoring does one dot per pair, not three). */
   def embSketchProjection(vecs: DataFrame, bits: Int = 32,
                           dim: Int = 64): DataFrame = {
     graft.GraftExtensions.install(vecs.sparkSession)
@@ -1194,7 +1129,7 @@ object Dedup {
     * nothing else. */
   def clusterCanonical(s: SparkSession, dir: String, threshold: Double = 0.5,
                        maxDocFreq: Long = 100, maxIter: Int = 50): DataFrame =
-    clusterCanonicalFor(docsSpread(s, dir), threshold, maxDocFreq, maxIter)
+    clusterCanonicalFor(TextOps.docsHeavy(s, dir), threshold, maxDocFreq, maxIter)
 
   /** [[clusterCanonical]] over any (doc_id, text) frame — specs plant
     * clusters where the canonical is NOT the min-id member through the
@@ -1246,7 +1181,7 @@ object Dedup {
   def minhashCalibration(s: SparkSession, dir: String,
                          threshold: Double = 0.25,
                          maxDocFreq: Long = 100, k: Int = 12): DataFrame =
-    minhashCalibrationFor(docsSpread(s, dir), threshold, maxDocFreq, k)
+    minhashCalibrationFor(TextOps.docsHeavy(s, dir), threshold, maxDocFreq, k)
 
   /** [[minhashCalibration]] over any (doc_id, text) frame. */
   def minhashCalibrationFor(documents: DataFrame,

@@ -732,32 +732,6 @@ object Multimodal {
       .orderBy(col("media_id"), col("frame_idx"))
   }
 
-  /** (media_id, dhash) for every q73-family image id in `dir` — the
-    * perceptual image INDEX projection, factored out so the pair query
-    * (q73), the incremental classifier's image tier (q75) and the
-    * stored-index path all share ONE hash definition. Encode + decode +
-    * hash run in one per-partition pass: the payload is born and dies
-    * inside the task; only (id, 8-byte hash) ever moves. */
-  def imageDHashes(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    imageDHashesFor(s, graft.sources.Tables.spread(
-      graft.sources.Tables(s, dir, "documents")
-        .select(col("doc_id"))
-        .filter(pmod(col("doc_id"), lit(3)) === 0),
-      col("doc_id")).as[Long])
-  }
-
-  /** [[imageDHashes]] over ANY id set (a real deployment maps its media
-    * catalog here and swaps [[MediaCodec.pngNearFor]] for a fetch). */
-  def imageDHashesFor(s: SparkSession,
-                      ids: org.apache.spark.sql.Dataset[Long]): DataFrame = {
-    import s.implicits._
-    ids.mapPartitions { it =>
-      // the camera, then a hash of the bytes alone
-      it.map(id => (id, pngDHash(id, MediaCodec.pngNearFor(id))))
-    }.toDF("media_id", "dhash")
-  }
-
   /** (doc_id, `out`) from a (doc_id, bytes) media frame: `hash`
     * reduces each payload inside its task, so bytes never leave it and
     * only the 8-byte hash moves — the per-micro-batch decode of the
@@ -774,7 +748,7 @@ object Multimodal {
       .toDF("doc_id", out)
   }
 
-  /** The image hash of [[imageDHashesFor]] and [[payloadHashes]]:
+  /** The image hash of [[Modality.Image]] and [[payloadHashes]]:
     * decode the PNG payload and [[MediaCodec.dHash64]] it. Ingest
     * payloads come from outside the program, so an undecodable one
     * fails naming its row. */
@@ -786,65 +760,18 @@ object Multimodal {
 
   /** q73 — PERCEPTUAL image near-dup pairs: dedup extended to the
     * image modality. Each image id's real PNG payload (the q73 fixture
-    * family, [[MediaCodec.pngNearFor]]) is DECODED FROM BYTES ALONE,
-    * reduced to a 64-bit difference hash ([[MediaCodec.dHash64]]:
-    * 9×8 average-pooled grid, adjacent-block comparisons — robust to
-    * resolution changes and small pixel edits, the property
-    * content-hash dedup lacks for images), banded 8×8 bits, and pairs
-    * with Hamming distance ≤ `maxHamming` are emitted.
-    *
-    * Scale shape: hashing is one decoder pass per partition (bytes
-    * never shuffle — only the 8-byte hash does); the candidate join is
-    * band-keyed, never all-pairs; and for maxHamming ≤ 7 the 8-band
-    * split is EXACT by pigeonhole (two hashes differing in ≤ 7 bits
-    * must agree on one of 8 disjoint bytes), so the banding is a pure
-    * optimization with zero recall trade — the spec proves equality
-    * with the brute-force O(n²) scan. The oracle replays the whole
+    * family, [[MediaCodec.pngNearFor]]) is DECODED FROM BYTES ALONE and
+    * reduced to a 64-bit difference hash ([[MediaCodec.dHash64]]: 9×8
+    * average-pooled grid, adjacent-block comparisons — robust to
+    * resolution changes and small pixel edits, the property content-hash
+    * dedup lacks for images); [[Modality.Image]]'s band entry emits the
+    * pairs within its Hamming bound (scale shape and pigeonhole
+    * exactness: [[Modality.Perceptual]]). The oracle replays the whole
     * path from the fixture formulas (splitmix in HUGEINT, triangle
     * pattern, integer cross-multiplied pooled comparisons) without
     * decoding, exactly like q61/q63/q64. */
-  def imageNearDupPairs(s: SparkSession, dir: String,
-                        maxHamming: Int = 6): DataFrame = {
-    val hashes = Caches.track(imageDHashes(s, dir))
-    val banded = hashes.select(col("media_id"), col("dhash"),
-        explode(Dedup.sketchBandStructs(col("dhash"), 64, 8)).as("b"))
-      .select(col("media_id"), col("dhash"),
-        col("b.band").as("band"), col("b.key").as("key"))
-    banded.as("a").join(banded.as("b"), Seq("band", "key"))
-      .filter(col("a.media_id") < col("b.media_id"))
-      .select(col("a.media_id").as("img_a"), col("b.media_id").as("img_b"),
-        bit_count(col("a.dhash").bitwiseXOR(col("b.dhash")))
-          .cast("long").as("hamming"))
-      .distinct()
-      .filter(col("hamming") <= maxHamming)
-      .orderBy(col("img_a"), col("img_b"))
-  }
-
-  /** (media_id, dhash) perceptual video hashes for every q77-family
-    * video id in `dir` (the video modality slot doc_id % 3 = 2) —
-    * encode + decode + hash in one per-partition pass, RAWV payloads
-    * never shuffle. */
-  def videoHashes(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    videoHashesFor(s, graft.sources.Tables.spread(
-      graft.sources.Tables(s, dir, "documents")
-        .select(col("doc_id"))
-        .filter(pmod(col("doc_id"), lit(3)) === 2),
-      col("doc_id")).as[Long])
-  }
-
-  /** [[videoHashes]] over ANY id set (the q79 split-before-decode
-    * entry). */
-  def videoHashesFor(s: SparkSession,
-                     ids: org.apache.spark.sql.Dataset[Long]): DataFrame = {
-    import s.implicits._
-    ids.mapPartitions { it =>
-      it.map { id =>
-        val bytes = MediaCodec.rawvNearFor(id) // the camera
-        (id, MediaCodec.vHash64(bytes)) // bytes alone
-      }
-    }.toDF("media_id", "dhash")
-  }
+  def imageNearDupPairs(s: SparkSession, dir: String): DataFrame =
+    Modality.Image.pairs(s, dir, "img_a", "img_b")
 
   /** q77 — PERCEPTUAL video near-dup pairs, completing the modality
     * trio (q73 images, q76 audio): each video's RAWV payload is decoded
@@ -853,89 +780,22 @@ object Multimodal {
     * noise, so the hash is invariant to BOTH resolution and frame
     * count), banded 8×8 bits like q73 (spatial-pattern bits, so the
     * contiguous banding's collision rate is dHash-like — soak-gated
-    * against the analytic bound), pairs at Hamming ≤ `maxHamming`.
-    * Scale shape and exactness argument are q73's verbatim. */
-  def videoNearDupPairs(s: SparkSession, dir: String,
-                        maxHamming: Int = 6): DataFrame = {
-    val hashes = Caches.track(videoHashes(s, dir))
-    val banded = hashes.select(col("media_id"), col("dhash"),
-        explode(Dedup.sketchBandStructs(col("dhash"), 64, 8)).as("b"))
-      .select(col("media_id"), col("dhash"),
-        col("b.band").as("band"), col("b.key").as("key"))
-    banded.as("a").join(banded.as("b"), Seq("band", "key"))
-      .filter(col("a.media_id") < col("b.media_id"))
-      .select(col("a.media_id").as("vid_a"), col("b.media_id").as("vid_b"),
-        bit_count(col("a.dhash").bitwiseXOR(col("b.dhash")))
-          .cast("long").as("hamming"))
-      .distinct()
-      .filter(col("hamming") <= maxHamming)
-      .orderBy(col("vid_a"), col("vid_b"))
-  }
-
-  /** (media_id, afp) perceptual audio fingerprints for every
-    * q76-family clip id in `dir` (the audio modality slot doc_id % 3 =
-    * 1, matching [[mediaFromDocuments]]'s kind assignment) — encode +
-    * decode + fingerprint in one per-partition pass, WAV bytes never
-    * shuffle. */
-  def audioFingerprints(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    audioFingerprintsFor(s, graft.sources.Tables.spread(
-      graft.sources.Tables(s, dir, "documents")
-        .select(col("doc_id"))
-        .filter(pmod(col("doc_id"), lit(3)) === 1),
-      col("doc_id")).as[Long])
-  }
-
-  /** [[audioFingerprints]] over ANY id set — lets callers (q79) filter
-    * ids BEFORE the decode pass instead of fingerprinting everything
-    * and filtering after. */
-  def audioFingerprintsFor(s: SparkSession,
-                           ids: org.apache.spark.sql.Dataset[Long]): DataFrame = {
-    import s.implicits._
-    ids.mapPartitions { it =>
-      it.map { id =>
-        val bytes = MediaCodec.wavNearFor(id) // the microphone
-        (id, MediaCodec.audioFingerprint64(
-          MediaCodec.pcmSamples(bytes))) // bytes alone
-      }
-    }.toDF("media_id", "afp")
-  }
+    * against the analytic bound): [[Modality.Video]]'s band entry. */
+  def videoNearDupPairs(s: SparkSession, dir: String): DataFrame =
+    Modality.Video.pairs(s, dir, "vid_a", "vid_b")
 
   /** q76 — PERCEPTUAL audio near-dup pairs: the q73 shape applied to
     * the audio modality. Each clip's real WAV payload
     * ([[MediaCodec.wavNearFor]]) is decoded from bytes alone
-    * ([[MediaCodec.pcmSamples]]), reduced to the 64-bit temporal
-    * difference fingerprint ([[MediaCodec.audioFingerprint64]] —
-    * robust to re-sampling/duration changes the way dHash is robust to
-    * resizes), banded 8×8 bits, and pairs with Hamming distance ≤
-    * `maxHamming` are emitted.
-    *
-    * Scale shape = q73's verbatim: per-partition decode (only the
-    * 8-byte fingerprint moves), band-keyed candidate join (never
-    * all-pairs), and for maxHamming ≤ 7 the 8-band split is EXACT by
-    * pigeonhole — the spec proves equality with the brute-force O(n²)
-    * scan. The oracle replays the whole path from the fixture formulas
-    * in integer SQL. */
-  def audioNearDupPairs(s: SparkSession, dir: String,
-                        maxHamming: Int = 4): DataFrame = {
-    val fps = Caches.track(audioFingerprints(s, dir))
-    // stride-interleaved banding (Dedup.interleavedBandStructs): the
-    // fingerprint's differential bits come in runs, and contiguous
-    // byte bands would collide ~5.7× the uniform rate (soak-measured);
-    // interleaving restores it with the identical exactness argument
-    val banded = fps.select(col("media_id"), col("afp"),
-        explode(Dedup.interleavedBandStructs(col("afp"))).as("b"))
-      .select(col("media_id"), col("afp"),
-        col("b.band").as("band"), col("b.key").as("key"))
-    banded.as("a").join(banded.as("b"), Seq("band", "key"))
-      .filter(col("a.media_id") < col("b.media_id"))
-      .select(col("a.media_id").as("clip_a"), col("b.media_id").as("clip_b"),
-        bit_count(col("a.afp").bitwiseXOR(col("b.afp")))
-          .cast("long").as("hamming"))
-      .distinct()
-      .filter(col("hamming") <= maxHamming)
-      .orderBy(col("clip_a"), col("clip_b"))
-  }
+    * ([[MediaCodec.pcmSamples]]) and reduced to the 64-bit temporal
+    * difference fingerprint ([[MediaCodec.audioFingerprint64]] — robust
+    * to re-sampling/duration changes the way dHash is robust to
+    * resizes); [[Modality.Audio]]'s stride-interleaved band entry
+    * ([[Dedup.interleavedBandStructs]]) emits the pairs. The oracle
+    * replays the whole path from the fixture formulas in
+    * integer SQL. */
+  def audioNearDupPairs(s: SparkSession, dir: String): DataFrame =
+    Modality.Audio.pairs(s, dir, "clip_a", "clip_b")
 
   /** q64 — audio feature audit: [[extractFeatures]] over the real WAV
     * payloads, emitting the PCM statistics (RMS, mean amplitude,

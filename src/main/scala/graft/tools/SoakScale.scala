@@ -74,39 +74,10 @@ object SoakScale {
 
   /** Near-tier candidate volume of the incremental classifier: distinct
     * (batch doc, corpus doc) pairs sharing a MinHash band key — the rows
-    * entering q65's agreement scoring. */
-  def bandCandidateCount(newDocs: DataFrame, corpus: DataFrame): Long = {
-    val (n, sc) = Caches.scope {
-      def banded(df: DataFrame) = Modality.Text.banded(Dedup.hashSigProjection(df))
-      banded(newDocs).as("x")
-        .join(banded(corpus).as("y"), Seq("band", "key"))
-        .select(col("x.doc_id").as("a"), col("y.doc_id").as("b"))
-        .distinct().count()
-    }
-    sc.release(); n
-  }
-
-  /** Distinct band-sharing (a, b) pairs of a (doc_id, dhash)-shaped
-    * 64-bit hash frame under the 8×8-bit banding — the candidate stage
-    * of q73 (images) and q76 (audio). The hash column must be named
-    * `dhash` ([[Modality.Image]]'s side). */
-  def hashBandCandidateCount(hashes: DataFrame): Long =
-    bandedCandidateCount(Modality.Image.banded(hashes))
-
-  /** [[hashBandCandidateCount]] under q76's stride-interleaved audio
-    * banding (the hash column must be named `afp`). */
-  def afpBandCandidateCount(fps: DataFrame): Long =
-    bandedCandidateCount(Modality.Audio.banded(fps))
-
-  private def bandedCandidateCount(bandedPlan: DataFrame): Long = {
-    val (n, sc) = Caches.scope {
-      val banded = Caches.track(bandedPlan)
-      banded.as("a").join(banded.as("b"), Seq("band", "key"))
-        .filter(col("a.doc_id") < col("b.doc_id"))
-        .select(col("a.doc_id"), col("b.doc_id")).distinct().count()
-    }
-    sc.release(); n
-  }
+    * entering q65's agreement scoring ([[Modality.Stored.candidates]]). */
+  def bandCandidateCount(newDocs: DataFrame, corpus: DataFrame): Long =
+    Modality.Text.band.candidates(Dedup.hashSigProjection(newDocs),
+      Dedup.hashSigProjection(corpus)).count()
 
   /** A planted near-dup CHAIN of `n` documents: doc i carries tokens
     * [i·stride, i·stride+len) of one synthetic token stream, so
@@ -406,63 +377,34 @@ object SoakScale {
       println(f"[soak] RATIO $name%-26s $cands%12d cand (≤ ${bound}%12.0f analytic bound; true=$truePairs) ${if (ok) "PASS" else "FAIL"}")
     }
     import spark.implicits._
-    def mediaIds(df: DataFrame, slot: Int): org.apache.spark.sql.Dataset[Long] =
-      df.select(col("doc_id")).filter(pmod(col("doc_id"), lit(3)) === slot)
+    // (media count, band candidates, true pairs) of one perceptual entry
+    // over `df`'s ids of its slot: candidates from the entry's band
+    // self-join, true pairs by brute force under its keep (fine at soak
+    // scale; candidates are the claim)
+    def mediaPairs(m: Modality.Perceptual, df: DataFrame): (Long, Long, Long) = {
+      val ids = df.select(col("doc_id")).filter(pmod(col("doc_id"), lit(3)) === m.slot)
         .as[Long]
-    def imgPairs(df: DataFrame): (Long, Long, Long) = {
-      val ids = mediaIds(df, 0)
       val n = ids.count()
-      val hashes = Caches.track(
-        graft.operators.Multimodal.imageDHashesFor(spark, ids)
-          .select(col("media_id").as("doc_id"), col("dhash")))
-      val cands = hashBandCandidateCount(hashes)
-      val truePairs = hashes.as("a").join(hashes.as("b"),
-          col("a.doc_id") < col("b.doc_id"))
-        .filter(bit_count(col("a.dhash").bitwiseXOR(col("b.dhash"))) <= 6)
-        .count() // brute force is fine at soak scale; candidates are the claim
+      val side = Caches.track(m.hashed(spark, ids))
+      val cands = m.band.selfPairs(side, "a", "b").count()
+      def tagged(t: String) = side.select(col("doc_id").as(t) +:
+        m.band.payload.map(p => col(p).as(s"${p}_$t")): _*)
+      val truePairs = tagged("a").crossJoin(tagged("b"))
+        .filter(col("a") < col("b") && m.band.keep(m.band.score)).count()
       (n, cands, truePairs)
     }
-    def audioPairs(df: DataFrame): (Long, Long, Long) = {
-      val ids = mediaIds(df, 1)
-      val n = ids.count()
-      val fps = Caches.track(ids.mapPartitions { it =>
-        import graft.operators.Multimodal.MediaCodec
-        it.map(id => (id, MediaCodec.audioFingerprint64(
-          MediaCodec.pcmSamples(MediaCodec.wavNearFor(id)))))
-      }.toDF("doc_id", "afp"))
-      val cands = afpBandCandidateCount(fps)
-      val truePairs = fps.as("a").join(fps.as("b"),
-          col("a.doc_id") < col("b.doc_id"))
-        .filter(bit_count(col("a.afp").bitwiseXOR(col("b.afp"))) <= 4)
-        .count()
-      (n, cands, truePairs)
-    }
-    val (in1, ic1, it1) = scoped("q73 img band cands @1x")(imgPairs(base))
-    val (in10, ic10, it10) = scoped("q73 img band cands @10x")(imgPairs(corpus10))
+    val (in1, ic1, it1) = scoped("q73 img band cands @1x")(mediaPairs(Modality.Image, base))
+    val (in10, ic10, it10) = scoped("q73 img band cands @10x")(mediaPairs(Modality.Image, corpus10))
     println(s"[soak] q73 images: $in1 -> $in10; true pairs $it1 -> $it10")
     bandGate("q73-img-cands @1x", in1, ic1, it1)
     bandGate("q73-img-cands @10x", in10, ic10, it10)
-    def videoPairs(df: DataFrame): (Long, Long, Long) = {
-      val ids = mediaIds(df, 2)
-      val n = ids.count()
-      val hashes = Caches.track(ids.mapPartitions { it =>
-        import graft.operators.Multimodal.MediaCodec
-        it.map(id => (id, MediaCodec.vHash64(MediaCodec.rawvNearFor(id))))
-      }.toDF("doc_id", "dhash"))
-      val cands = hashBandCandidateCount(hashes)
-      val truePairs = hashes.as("a").join(hashes.as("b"),
-          col("a.doc_id") < col("b.doc_id"))
-        .filter(bit_count(col("a.dhash").bitwiseXOR(col("b.dhash"))) <= 6)
-        .count()
-      (n, cands, truePairs)
-    }
-    val (vn1, vc1, vt1) = scoped("q77 video band cands @1x")(videoPairs(base))
-    val (vn10, vc10, vt10) = scoped("q77 video band cands @10x")(videoPairs(corpus10))
+    val (vn1, vc1, vt1) = scoped("q77 video band cands @1x")(mediaPairs(Modality.Video, base))
+    val (vn10, vc10, vt10) = scoped("q77 video band cands @10x")(mediaPairs(Modality.Video, corpus10))
     println(s"[soak] q77 videos: $vn1 -> $vn10; true pairs $vt1 -> $vt10")
     bandGate("q77-video-cands @1x", vn1, vc1, vt1)
     bandGate("q77-video-cands @10x", vn10, vc10, vt10)
-    val (an1, ac1, at1) = scoped("q76 audio band cands @1x")(audioPairs(base))
-    val (an10, ac10, at10) = scoped("q76 audio band cands @10x")(audioPairs(corpus10))
+    val (an1, ac1, at1) = scoped("q76 audio band cands @1x")(mediaPairs(Modality.Audio, base))
+    val (an10, ac10, at10) = scoped("q76 audio band cands @10x")(mediaPairs(Modality.Audio, corpus10))
     println(s"[soak] q76 clips: $an1 -> $an10; true pairs $at1 -> $at10")
     bandGate("q76-audio-cands @1x", an1, ac1, at1)
     bandGate("q76-audio-cands @10x", an10, ac10, at10)

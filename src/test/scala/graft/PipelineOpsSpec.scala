@@ -40,13 +40,21 @@ class PipelineOpsSpec extends AnyFunSuite {
     operators.Caches.release()
     spark.catalog.clearCache()
     val sig = operators.Dedup.minhashSignatures(spark, sf, k)
+    // the band rows q27 and the q65–q92 Text tiers read: 4 bands × 3
+    // element_at references to the same signature
+    val banded = operators.Modality.Text.banded(operators.Dedup.hashSigProjection(
+      graft.sources.Tables(spark, sf, "documents")))
     // the row-local array aggregate must survive as ONE expression: if
-    // CollapseProject ever inlined it into the k mh_i extractions the
-    // signature would evaluate k times per row (k× md5 per gram)
-    val planStr = sig.queryExecution.optimizedPlan.toString
-    val evals = "aggregate\\(".r.findAllIn(planStr).size
-    assert(evals == 1,
-      s"signature aggregate must appear once in the plan, found $evals")
+    // CollapseProject ever inlined it into the k mh_i extractions (or the
+    // band keys) the signature would evaluate k times per row (k× md5
+    // per gram); a filter on `sig` pushed below the projection computing
+    // it (Text.banded's old null filter) evaluates it twice
+    Seq("minhashSignatures" -> sig, "Text.banded" -> banded).foreach { case (name, df) =>
+      val planStr = df.queryExecution.optimizedPlan.toString
+      val evals = "aggregate\\(".r.findAllIn(planStr).size
+      assert(evals == 1,
+        s"$name: signature aggregate must appear once in the plan, found $evals")
+    }
     // value parity with the explode + groupBy formulation it replaced
     // (same md5 base hash + affine family, min over the same gram set)
     import graft.functions.TextFunctions._

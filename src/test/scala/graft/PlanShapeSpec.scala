@@ -203,6 +203,28 @@ class PlanShapeSpec extends AnyFunSuite {
       s"no per-source stage-2 window; partition specs: ${specs.mkString("; ")}")
   }
 
+  // The near-dup pair queries, each one band self-join
+  // (operators.Modality.Stored.selfPairs) over a cached side, and q70,
+  // which reads q43's pairs: ceilings at the PlanFacts values measured
+  // before they shared that join (sf0.01 and sf0.1 read the same).
+  // (BHJ, hash exchanges, sorts); no SMJ, one range exchange, no cartesian.
+  Seq(
+    "q27_minhash_lsh" -> (3, 5, 1),
+    "q28_simhash_pairs" -> (1, 3, 1),
+    "q43_embedding_dedup" -> (1, 3, 3),
+    "q70_embedding_clusters" -> (2, 1, 1),
+    "q73_image_neardup" -> (1, 3, 1),
+    "q76_audio_neardup" -> (1, 3, 1),
+    "q77_video_neardup" -> (1, 3, 1)
+  ).foreach { case (q, (bhj, hash, sort)) =>
+    test(s"$q near-dup pairs: band self-join stays broadcast, bounded exchanges") {
+      pin(q,
+        "sort_merge_join" -> 0, "broadcast_hash_join" -> bhj,
+        "exchange_hash" -> hash, "exchange_range" -> 1, "sort" -> sort,
+        "cartesian" -> 0)
+    }
+  }
+
   test("q101 bigram LM: unigram joins broadcast, bigram join hash-partitioned") {
     // the unigram (vocab-sized) tables must broadcast — an SMJ there
     // would shuffle the scoring stream twice more; the bigram join and
