@@ -13,6 +13,10 @@ object Explain {
     names.foreach { q =>
       println(s"===== $q")
       SparkEntry.queries(q)(spark, sf).explain("formatted")
+      // each query's plan stands alone: no cached frame of an earlier
+      // query in the list may appear in a later one's plan
+      operators.Caches.release()
+      spark.catalog.clearCache()
     }
     spark.stop()
   }

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.sources.Tables
 
@@ -300,24 +301,32 @@ object Packing {
     * bounded by one shard (seqsPerShard × budget tokens by
     * construction — the operator's own knobs bound its heaviest task).
     *
-    * The report is computed from `spark.read.parquet(path)` — the
-    * written files are the thing under test, not an in-memory proxy. */
+    * The report is computed from the files read back ([[readShards]])
+    * — the written files are the thing under test, not an in-memory
+    * proxy. */
   def writeShardsFor(documents: DataFrame, budget: Long, seqsPerShard: Long,
                      path: String): DataFrame = {
     require(budget > 0 && seqsPerShard > 0,
       s"need budget > 0 and seqsPerShard > 0, got $budget / $seqsPerShard")
-    writeShardRows(documents, budget, seqsPerShard, seqBase = 0L,
+    val schema = writeShardRows(documents, budget, seqsPerShard, seqBase = 0L,
       path = path, mode = "overwrite")
-    shardReport(documents.sparkSession.read.parquet(path))
+    shardReport(readShards(documents.sparkSession, path, schema))
   }
+
+  /** Read a shard store back under the schema its writer just wrote:
+    * no footer inference, so the read-back launches no schema-merge job
+    * (partition discovery still lists the `shard_id=N` directories). */
+  private def readShards(s: SparkSession, path: String,
+                         schema: StructType): DataFrame =
+    s.read.schema(schema).parquet(path)
 
   /** Shared write path of q103/q104: pack `documents` (sequence ids
     * offset by `seqBase`), derive the shard range partition, and write
     * sorted one-file-per-shard parquet under `path` with the given
-    * save mode. */
+    * save mode. Returns the written schema. */
   private def writeShardRows(documents: DataFrame, budget: Long,
                              seqsPerShard: Long, seqBase: Long,
-                             path: String, mode: String): Unit =
+                             path: String, mode: String): StructType =
     writeShardRowsCounts(documents, tokenCounts(documents),
       budget, seqsPerShard, seqBase, path, mode)
 
@@ -336,7 +345,7 @@ object Packing {
   private def writeShardRowsCounts(documents: DataFrame, counts: DataFrame,
                                    budget: Long, seqsPerShard: Long,
                                    seqBase: Long, path: String,
-                                   mode: String): Unit =
+                                   mode: String): StructType =
     writeAssignedRows(documents, packAssignments(counts, budget),
       seqsPerShard, seqBase, path, mode)
 
@@ -347,7 +356,7 @@ object Packing {
     * knowledge of the store they will extend). */
   private def writeAssignedRows(documents: DataFrame, assigned: DataFrame,
                                 seqsPerShard: Long, seqBase: Long,
-                                path: String, mode: String): Unit = {
+                                path: String, mode: String): StructType = {
     val rows = assigned
       .withColumn("seq_id", col("seq_id") + lit(seqBase))
       .withColumn("shard_id", expr(s"seq_id div ${seqsPerShard}L"))
@@ -374,6 +383,7 @@ object Packing {
     rows.repartition(width, col("shard_id"))
       .sortWithinPartitions(col("shard_id"), col("ok"), col("doc_id"))
       .write.mode(mode).partitionBy("shard_id").parquet(path)
+    rows.schema
   }
 
   // q105 — the CLEANED-shard artifact, gated END-TO-END: q103 shards
@@ -488,9 +498,9 @@ object Packing {
                         path: String): DataFrame = {
     require(budget > 0 && seqsPerShard > 0,
       s"need budget > 0 and seqsPerShard > 0, got $budget / $seqsPerShard")
-    writeShardRowsCounts(documents, counts, budget, seqsPerShard,
+    val schema = writeShardRowsCounts(documents, counts, budget, seqsPerShard,
       seqBase = 0L, path = path, mode = "overwrite")
-    shardReport(documents.sparkSession.read.parquet(path))
+    shardReport(readShards(documents.sparkSession, path, schema))
   }
 
   // q113 — q105's STEADY STATE (the q89/q92 split applied to the
@@ -508,19 +518,21 @@ object Packing {
   def cleanShardsReport(s: SparkSession, dir: String, budget: Long = 512,
                         seqsPerShard: Long = 8): DataFrame = {
     val path = defaultShardPath(dir) + "_cleanss"
-    if (!builtCleanStores.contains(path)) {
+    val schema = Option(builtCleanStores.get(path)).getOrElse {
       val surv = Compose.survivorsCounted(s, dir)
-      writeShardRowsCounts(surv.select(col("doc_id"), col("text")),
+      val written = writeShardRowsCounts(surv.select(col("doc_id"), col("text")),
         surv.select(col("doc_id"), col("_nt")),
         budget, seqsPerShard, seqBase = 0L, path = path, mode = "overwrite")
-      builtCleanStores.add(path)
+      builtCleanStores.put(path, written)
+      written
     }
-    shardReport(s.read.parquet(path))
+    shardReport(readShards(s, path, schema))
   }
 
-  /** Clean stores already built by THIS process (q113's memo). */
+  /** Clean stores already built by THIS process, with the schema each
+    * was written under (q113's memo). */
   private val builtCleanStores =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    new java.util.concurrent.ConcurrentHashMap[String, StructType]()
 
   /** Spec/maintenance surface: forget built clean stores. */
   def clearCleanStoreMemo(): Unit = builtCleanStores.clear()
@@ -561,60 +573,102 @@ object Packing {
       packAssignments(tokenCounts(delta), budget)
     }
     val seqBase = (probeMaxShard(s, path) + 1L) * seqsPerShard
-    writeAssignedRows(delta, assigned, seqsPerShard, seqBase, path, "append")
-    shardReport(s.read.parquet(path))
+    val schema =
+      writeAssignedRows(delta, assigned, seqsPerShard, seqBase, path, "append")
+    shardReport(readShards(s, path, schema))
   }
 
-  /** Max shard_id already in the store — reads the PARTITION column
-    * alone (directory names, zero parquet row groups; the spec lints
-    * `ReadSchema: struct<>` on this plan shape). Fails loudly on an
-    * empty store. */
+  /** Max shard_id already in the store, from the directory names alone
+    * ([[storedMaxShard]]). Fails loudly on a missing or empty store. */
   private def probeMaxShard(s: SparkSession, path: String): Long = {
-    val probe = s.read.parquet(path)
-      .agg(max(col("shard_id").cast("long"))).head
-    require(!probe.isNullAt(0),
+    val max = storedMaxShard(s, path)
+    require(max.isDefined,
       s"$path holds no shards — write the initial store with writeShardsFor " +
         "before appending")
-    probe.getLong(0)
+    max.get
   }
+
+  /** Max shard_id of the store at `path`, or None when the path is
+    * missing or holds no shard. One driver-side listing through the
+    * Hadoop FileSystem, no Spark job: a `shard_id=N` directory counts
+    * only when it holds a data file (a name not starting with `_` or
+    * `.`), as Spark's partition discovery counts it — so `_temporary`,
+    * hidden and emptied shard directories never move the boundary. */
+  private[graft] def storedMaxShard(s: SparkSession, path: String): Option[Long] = {
+    import org.apache.hadoop.fs.{FileStatus, Path}
+    val root = new Path(path)
+    val fs = root.getFileSystem(s.sessionState.newHadoopConf())
+    def list(p: Path): Seq[FileStatus] =
+      try fs.listStatus(p).toSeq
+      catch { case _: java.io.FileNotFoundException => Nil }
+    def isData(f: FileStatus): Boolean = f.isFile && {
+      val n = f.getPath.getName
+      !n.startsWith("_") && !n.startsWith(".")
+    }
+    list(root).collect {
+      case d if d.isDirectory && ShardDir.matches(d.getPath.getName) &&
+          list(d.getPath).exists(isData) =>
+        d.getPath.getName.stripPrefix("shard_id=").toLong
+    }.maxOption
+  }
+
+  private val ShardDir = "shard_id=\\d+".r
 
   /** Append a delta (doc_id, text) frame to an existing shard store.
     *
-    * Scale shape — day-2 cost is DELTA-proportional: the only touch of
-    * the existing store is the max-shard-id lookup, which reads the
-    * PARTITION column alone — directory names, zero parquet row groups
-    * (the spec lints `ReadSchema: struct<>` on that plan). The delta
-    * then pays its own packer range shuffle + text join + one shard_id
-    * shuffle, and lands in fresh shard directories (`mode=append` can
-    * never collide: seqBase starts at the next whole-shard boundary).
-    * The read-back report re-reads the whole store because the REPORT
-    * certifies the whole store — a deployment publishing per-day
-    * reports would aim [[shardReport]] at the new shard range only. */
+    * Scale shape — day-2 WRITE cost is DELTA-proportional: the only
+    * touch of the existing store before the write is the max-shard-id
+    * lookup, a driver-side listing of the partition directories
+    * ([[storedMaxShard]], no Spark job, zero parquet row groups). The
+    * delta then pays its own packer range shuffle + text join + one
+    * shard_id shuffle, and lands in fresh shard directories
+    * (`mode=append` can never collide: seqBase starts at the next
+    * whole-shard boundary). The read-back report re-reads the whole
+    * store because the REPORT certifies the whole store — a deployment
+    * publishing per-day reports would aim [[shardReport]] at the new
+    * shard range only. */
   def appendShardsFor(delta: DataFrame, budget: Long, seqsPerShard: Long,
-                      path: String): DataFrame = {
+                      path: String): DataFrame =
+    appendShardsAt(delta, budget, seqsPerShard, path,
+      probeMaxShard(delta.sparkSession, path))
+
+  /** [[appendShardsFor]] past an already-probed max shard id — the
+    * streaming twin's entry, which probed once to choose between
+    * writing and appending. */
+  private[graft] def appendShardsAt(delta: DataFrame, budget: Long,
+                                    seqsPerShard: Long, path: String,
+                                    maxShard: Long): DataFrame = {
     require(budget > 0 && seqsPerShard > 0,
       s"need budget > 0 and seqsPerShard > 0, got $budget / $seqsPerShard")
-    val s = delta.sparkSession
-    val seqBase = (probeMaxShard(s, path) + 1L) * seqsPerShard
-    writeShardRows(delta, budget, seqsPerShard, seqBase, path, "append")
-    shardReport(s.read.parquet(path))
+    val schema = writeShardRows(delta, budget, seqsPerShard,
+      (maxShard + 1L) * seqsPerShard, path, "append")
+    shardReport(readShards(delta.sparkSession, path, schema))
   }
 
   /** Per-shard audit of a written shard set: sequence/doc/token mass
     * and the pack-order content hash (elements `seq:doc:md5(text)`,
     * ordered by the pack key — seq_id is monotone in (ok, doc_id) by
     * construction, so this IS global pack order). Split out so a spec
-    * can aim it at any path. */
+    * can aim it at any path.
+    *
+    * ONE aggregation: `n_seqs` counts the distinct non-null seq_ids of
+    * the per-shard list the content hash already collects, so there is
+    * no `countDistinct` (whose Expand rewrite adds a second
+    * aggregation and its exchanges). */
   def shardReport(shards: DataFrame): DataFrame =
     shards
       .groupBy(col("shard_id").cast("long").as("shard_id"))
       .agg(
-        countDistinct(col("seq_id")).as("n_seqs"),
+        collect_list(struct(col("ok"), col("doc_id"), col("seq_id"),
+          md5(col("text")).as("_th"))).as("_rows"),
         count(lit(1)).as("n_docs"),
-        sum(col("n_tokens")).as("shard_tokens"),
-        md5(concat_ws(" ", transform(
-          sort_array(collect_list(struct(col("ok"), col("doc_id"),
-            col("seq_id"), md5(col("text")).as("_th")))),
+        sum(col("n_tokens")).as("shard_tokens"))
+      .select(col("shard_id"),
+        size(array_distinct(filter(
+          transform(col("_rows"), x => x.getField("seq_id")),
+          _.isNotNull))).cast("long").as("n_seqs"),
+        col("n_docs"), col("shard_tokens"),
+        md5(concat_ws(" ", transform(sort_array(col("_rows")),
           x => concat(x.getField("seq_id"), lit(":"), x.getField("doc_id"),
             lit(":"), x.getField("_th"))))).as("content_hash"))
       .orderBy(col("shard_id"))

@@ -293,109 +293,140 @@ object TextOps {
   def repeatedGramScrub(s: SparkSession, dir: String, n: Int = 3): DataFrame =
     repeatedGramScrubFor(docsHeavy(s, dir), n)
 
-  /** Core of q95 over any (doc_id, text) frame.
+  /** Core of q95 over any (doc_id, text) frame, in the oracle's order.
     *
     * Semantics (1-based token positions): gram g_i spans tokens
     * [i, i+n−1]; an occurrence at i is a REPEAT iff the same gram hash
-    * occurred at some j < i in the document; removed positions are the
+    * occurred at some j < i in the same row; removed positions are the
     * union of repeat spans; maximal contiguous removed runs (overlap
     * OR adjacency merges, the q88 sessionize rule with gap n) are the
-    * reported spans. Token 1 is never removed (a repeat starts at
-    * pos ≥ 2), so the retained text is never empty.
+    * reported spans ([[spanScrub]]). Token 1 is never removed (a repeat
+    * starts at pos ≥ 2), so the retained text is never empty.
     *
-    * Scale shape: positioned gram hashes come from ONE native codegen'd
-    * pass per row ([[graft.plans.ShingleHashesMd5]] — 60-bit md5Long
-    * values the oracle replays); first-occurrence detection is a
-    * (doc_id, gram-hash) partial-agg shuffle — the word-count exchange,
-    * 16-byte keys; the span window partitions by doc_id over REPEAT
-    * hits only (repetition-volume-proportional, not corpus-
-    * proportional); the kept-token anti-join is equi-keyed on
-    * (doc_id, pos) against exploded span positions — bounded by removed
-    * volume; the final per-doc aggregate is the same sorted-collect
-    * bounded by one document that every per-doc reporter uses. */
-  def repeatedGramScrubFor(documents: DataFrame, n: Int = 3): DataFrame = {
+    * Scale shape: a pure per-row projection, no shuffle. The scrub
+    * depends on one document's tokens alone, so the positioned gram
+    * hashes ([[graft.plans.ShingleHashesMd5]], 60-bit md5Long values
+    * the oracle replays), the repeat detection (a hash set over the
+    * row's grams — linear in the document, so a giant document stays
+    * linear) and the span merge all run inside the row; the only
+    * exchange is this entry's oracle sort. */
+  def repeatedGramScrubFor(documents: DataFrame, n: Int = 3): DataFrame =
+    repeatedGramScrubRaw(documents, n).orderBy(col("doc_id"))
+
+  /** [[repeatedGramScrubFor]] UNSORTED — the streaming twin's entry
+    * ([[graft.streaming.SelfDedup]]): a micro-batch costs one
+    * projection over its own rows. */
+  private[graft] def repeatedGramScrubRaw(documents: DataFrame,
+                                          n: Int = 3): DataFrame = {
     require(n > 0, s"need n > 0, got $n")
-    val (toks, grams) = positionedGrams(documents, n)
-    val firsts = grams.groupBy(col("doc_id"), col("_gh"))
-      .agg(min(col("pos")).as("_first"))
-    val repeats = grams.join(firsts, Seq("doc_id", "_gh"))
-      .filter(col("pos") > col("_first"))
-      .select(col("doc_id"), col("pos"))
-    spanScrubReport(documents, toks, repeats, n, "n_repeat_spans")
-      .orderBy(col("doc_id"))
-  }
-
-  /** Tokenized frame + 1-based positioned gram hashes of a (doc_id,
-    * text) frame — the shared head of every gram-scrub operator (q95,
-    * q99, the ingest twin). One native codegen'd pass per row
-    * ([[graft.plans.ShingleHashesMd5]], 60-bit md5Long values the
-    * oracles replay). */
-  private def positionedGrams(documents: DataFrame,
-                              k: Int): (DataFrame, DataFrame) = {
     graft.GraftExtensions.install(documents.sparkSession)
-    val toks = documents.select(col("doc_id"), tokens(col("text")).as("_tk"))
-    val grams = toks
-      .select(col("doc_id"),
-        posexplode(call_function("shingle_hashes_md5", col("_tk"), lit(k)))
-          .as(Seq("_p0", "_gh")))
-      .select(col("doc_id"), (col("_p0") + 1).cast("long").as("pos"), col("_gh"))
-    (toks, grams)
+    val firstSeen = udf((hs: Seq[Long]) => repeatStarts(hs))
+    scrubReport(tokenized(documents).withColumn("_rs", firstSeen(
+      call_function("shingle_hashes_md5", col("_tk"), lit(n)))),
+      n, "n_repeat_spans")
   }
 
-  /** Shared tail of the gram-scrub family: merge the repeat hits
-    * (doc_id, pos) into maximal spans (gap `k` — overlap OR adjacency
-    * merges, the q88 sessionize rule), cut every covered token, and
-    * report per doc: token count, removed tokens, span count (named
-    * `spanCol` — q95 says n_repeat_spans, the cross-doc ops say
-    * n_dup_spans), and the md5 of the retained text. UNSORTED — batch
-    * entries add the oracle sort, the streaming twin can't sort.
+  /** 1-based positions whose gram hash already occurred earlier in the
+    * same array — q95's repeat starts, ascending. One hash-set pass. */
+  private[graft] def repeatStarts(hashes: Seq[Long]): Seq[Long] =
+    if (hashes == null) Nil
+    else {
+      val seen = scala.collection.mutable.HashSet.empty[Long]
+      hashes.iterator.zipWithIndex
+        .collect { case (h, i) if !seen.add(h) => i + 1L }.toVector
+    }
+
+  /** THE gram-scrub kernel over one row — the only statement of the
+    * span rule, shared by q95, q99/q102 and the gram-index scrub.
     *
-    * Scale shape (inherited by every caller): the span window
-    * partitions by doc_id over repeat hits only (repetition-volume-
-    * proportional, never corpus-proportional); the kept-token anti-join
-    * is equi-keyed on (doc_id, pos) against exploded span positions —
-    * bounded by removed volume; the final per-doc aggregate is the
-    * sorted-collect bounded by one document that every per-doc reporter
-    * uses. */
-  private def spanScrubReport(documents: DataFrame, toks: DataFrame,
-                              repeats: DataFrame, k: Int,
-                              spanCol: String,
-                              minSpanTokens: Long = 1L): DataFrame = {
+    * `starts` are the row's repeat gram positions (1-based, ascending);
+    * a gram at p covers tokens [p, p+k−1]. Starts merge into maximal
+    * spans when the next one begins at most `k` after the previous
+    * (overlap OR adjacency), a span of fewer than `minSpanTokens`
+    * tokens is neither removed nor counted (the ExactSubstr rule: what
+    * matters is the length of the merged duplicated RUN, not of any
+    * single k-gram hit), and every token of a surviving span is cut.
+    * Starts that are not gram positions of this row (< 1, or past
+    * n−k+1) are ignored. Returns (n_removed, n_spans, kept tokens);
+    * null tokens scrub to (0, 0, empty).
+    *
+    * Rows are scrubbed independently: two rows sharing a `doc_id`
+    * (outside the declared key) are two documents here, where the
+    * relational form this replaced merged their grams under one key. */
+  private[graft] def spanScrub(toks: Seq[String], starts: Seq[Long], k: Int,
+                               minSpanTokens: Long): (Long, Long, Seq[String]) = {
+    if (toks == null) return (0L, 0L, Nil)
+    val n = toks.length
+    val cut = new java.util.BitSet(n)
+    var removed, spans = 0L
+    var s, last = -1L
+    def close(): Unit =
+      if (s > 0 && last + k - s >= minSpanTokens) {
+        cut.set((s - 1).toInt, (last + k - 1).toInt)
+        removed += last + k - s
+        spans += 1
+      }
+    if (starts != null) starts.foreach { p =>
+      if (p >= 1 && p <= n - k + 1) {
+        if (s < 0 || p - last > k) { close(); s = p }
+        last = p
+      }
+    }
+    close()
+    (removed, spans,
+      if (removed == 0L) toks
+      else toks.iterator.zipWithIndex.collect { case (t, i) if !cut.get(i) => t }.toVector)
+  }
+
+  /** (doc_id, n_tokens, _tk): the token array every gram scrub reads. */
+  private def tokenized(documents: DataFrame): DataFrame =
+    documents.select(col("doc_id"), tokenCount(col("text")).as("n_tokens"),
+      tokens(col("text")).as("_tk"))
+
+  /** 1-based positioned gram hashes (doc_id, pos, _gh) of a (doc_id,
+    * text) frame — the head of the cross-document scrubs (q99, q102,
+    * the gram index). One native codegen'd pass per row
+    * ([[graft.plans.ShingleHashesMd5]], 60-bit md5Long values the
+    * oracles replay). The generator's input is an expression, not a
+    * column, so Catalyst infers no `size(...) > 0` filter for it and
+    * nothing is hashed below `docsHeavy`'s spread exchange (SCALE.md
+    * "Execution-layer traps"). */
+  private def positionedGrams(documents: DataFrame, k: Int): DataFrame = {
+    graft.GraftExtensions.install(documents.sparkSession)
+    documents
+      .select(col("doc_id"), posexplode(call_function(
+        "shingle_hashes_md5", tokens(col("text")), lit(k))).as(Seq("_p0", "_gh")))
+      .select(col("doc_id"), (col("_p0") + 1).cast("long").as("pos"), col("_gh"))
+  }
+
+  /** Shared tail of the cross-document scrubs: collect each document's
+    * repeat hits (doc_id, pos) into one sorted array, attach it to the
+    * tokenized rows, and run [[spanScrub]]. The collect is one partial
+    * aggregate on doc_id bounded by one document's repeats; UNSORTED —
+    * batch entries add the oracle sort, the streaming twin can't sort. */
+  private def crossDocReport(documents: DataFrame, repeats: DataFrame, k: Int,
+                             minSpanTokens: Long): DataFrame = {
+    val starts = repeats.groupBy(col("doc_id"))
+      .agg(sort_array(collect_list(col("pos"))).as("_rs"))
+    scrubReport(tokenized(documents).join(starts, Seq("doc_id"), "left"),
+      k, "n_dup_spans", minSpanTokens)
+  }
+
+  /** Run [[spanScrub]] over a (doc_id, n_tokens, _tk, _rs) frame and
+    * report per row: token count, removed tokens, span count (named
+    * `spanCol` — q95 says n_repeat_spans, the cross-doc ops say
+    * n_dup_spans), and the md5 of the retained text. */
+  private def scrubReport(rows: DataFrame, k: Int, spanCol: String,
+                          minSpanTokens: Long = 1L): DataFrame = {
     require(minSpanTokens >= 1L,
       s"need minSpanTokens >= 1, got $minSpanTokens")
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("doc_id")).orderBy(col("pos"))
-    // the length threshold applies AFTER span merge (the ExactSubstr
-    // rule: what matters is the length of the maximal duplicated RUN,
-    // not of any single k-gram hit) and BEFORE coverage/reporting —
-    // a sub-threshold span is not removed and not counted
-    val spans = repeats
-      .withColumn("_new", when(lag(col("pos"), 1).over(w).isNull ||
-        col("pos") - lag(col("pos"), 1).over(w) > k, 1L).otherwise(0L))
-      .withColumn("_span", sum(col("_new")).over(
-        w.rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, 0)))
-      .groupBy(col("doc_id"), col("_span"))
-      .agg(min(col("pos")).as("_s"), (max(col("pos")) + lit(k - 1)).as("_e"))
-      .filter(col("_e") - col("_s") + 1 >= minSpanTokens)
-    val covered = spans.select(col("doc_id"),
-      explode(sequence(col("_s"), col("_e"))).as("_p"))
-    val kept = toks
-      .select(col("doc_id"), posexplode(col("_tk")).as(Seq("_q0", "_tok")))
-      .select(col("doc_id"), (col("_q0") + 1).cast("long").as("_p"), col("_tok"))
-      .join(covered, Seq("doc_id", "_p"), "left_anti")
-    val keptAgg = kept.groupBy(col("doc_id"))
-      .agg(md5(concat_ws(" ", transform(
-        sort_array(collect_list(struct(col("_p"), col("_tok")))),
-        x => x.getField("_tok")))).as("_rh"))
-    val spanAgg = spans.groupBy(col("doc_id"))
-      .agg(count(lit(1)).as("_ns"), sum(col("_e") - col("_s") + 1).as("_nr"))
-    documents.select(col("doc_id"), tokenCount(col("text")).as("n_tokens"))
-      .join(spanAgg, Seq("doc_id"), "left")
-      .join(keptAgg, Seq("doc_id"), "left")
+    val scrub = udf((tk: Seq[String], rs: Seq[Long]) =>
+      spanScrub(tk, rs, k, minSpanTokens))
+    rows.select(col("doc_id"), col("n_tokens"),
+        scrub(col("_tk"), col("_rs")).as("_s"))
       .select(col("doc_id"), col("n_tokens"),
-        coalesce(col("_nr"), lit(0L)).as("n_removed_tokens"),
-        coalesce(col("_ns"), lit(0L)).as(spanCol),
-        coalesce(col("_rh"), md5(lit(""))).as("retained_hash"))
+        col("_s._1").as("n_removed_tokens"), col("_s._2").as(spanCol),
+        md5(concat_ws(" ", col("_s._3"))).as("retained_hash"))
   }
 
   // q99 — CROSS-document exact-substring scrub (the ExactSubstr pass of
@@ -427,26 +458,27 @@ object TextOps {
 
   /** Core of q99 over any (doc_id, text) frame.
     *
-    * Scale shape vs q95 (which this deliberately mirrors): positioned
-    * gram hashes come from the same single native codegen'd pass per
-    * row ([[graft.plans.ShingleHashesMd5]]); the global-first table is
-    * one partial-agg shuffle on the 60-bit gram hash ALONE — `min` over
-    * the (doc_id, pos) struct combines map-side, so the exchange
-    * carries one candidate row per (partition, gram), never the
-    * positioned stream (a window `row_number() OVER (PARTITION BY gh)`
-    * formulation would shuffle + sort every occurrence; the agg
-    * formulation is the one that survives 100 TB). Repeat detection is
-    * the equi-join of positioned grams against that table on the hash —
-    * both sides hash-partition, no sort. The span window partitions by
-    * doc_id over repeat hits only (duplication-volume-proportional),
-    * and the kept-token anti-join + per-doc rollup are q95's verbatim
-    * tail. The (doc_id, pos) total order is unique per gram (one gram
-    * per position), so the survivor set is deterministic in any engine.
+    * Scale shape: positioned gram hashes come from the single native
+    * codegen'd pass per row ([[graft.plans.ShingleHashesMd5]]); the
+    * global-first table is one partial-agg shuffle on the 60-bit gram
+    * hash ALONE — `min` over the (doc_id, pos) struct combines
+    * map-side, so the exchange carries one candidate row per
+    * (partition, gram), never the positioned stream (a window
+    * `row_number() OVER (PARTITION BY gh)` formulation would shuffle +
+    * sort every occurrence; the agg formulation is the one that
+    * survives 100 TB). Repeat detection is the equi-join of positioned
+    * grams against that table on the hash — both sides hash-partition,
+    * no sort. The repeats then collect per doc_id (one partial agg
+    * bounded by duplication volume) and join back to the tokenized
+    * documents once; the span merge and the cut are q95's per-row
+    * kernel ([[spanScrub]]). The (doc_id, pos) total order is unique
+    * per gram (one gram per position), so the survivor set is
+    * deterministic in any engine.
     */
   def crossDocGramScrubFor(documents: DataFrame, k: Int = 8,
                            minSpanTokens: Long = 1L): DataFrame = {
     require(k > 0, s"need k > 0, got $k")
-    val (toks, grams) = positionedGrams(documents, k)
+    val grams = positionedGrams(documents, k)
     val firsts = grams
       .groupBy(col("_gh"))
       .agg(min(struct(col("doc_id"), col("pos"))).as("_f"))
@@ -454,7 +486,7 @@ object TextOps {
     val repeats = grams.join(firsts, Seq("_gh"))
       .filter(col("doc_id") =!= col("_fd") || col("pos") > col("_fp"))
       .select(col("doc_id"), col("pos"))
-    spanScrubReport(documents, toks, repeats, k, "n_dup_spans", minSpanTokens)
+    crossDocReport(documents, repeats, k, minSpanTokens)
       .orderBy(col("doc_id"))
   }
 
@@ -471,7 +503,7 @@ object TextOps {
     * deployment's cadence exactly like q87's boilerplate line table.
     * One partial-agg distinct on 8-byte keys. */
   def corpusGramIndex(corpus: DataFrame, k: Int = 8): GramIndex =
-    GramIndex(positionedGrams(corpus, k)._2.select(col("_gh")).distinct(), k)
+    GramIndex(positionedGrams(corpus, k).select(col("_gh")).distinct(), k)
 
   /** Scrub a (doc_id, text) frame against a [[corpusGramIndex]]: every
     * position whose gram the corpus already contains is a repeat — the
@@ -490,10 +522,10 @@ object TextOps {
     * size. */
   def scrubAgainstGramIndex(docs: DataFrame, index: GramIndex,
                             minSpanTokens: Long = 1L): DataFrame = {
-    val (toks, grams) = positionedGrams(docs, index.k)
-    val repeats = grams.join(index.grams, Seq("_gh"), "left_semi")
+    val repeats = positionedGrams(docs, index.k)
+      .join(index.grams, Seq("_gh"), "left_semi")
       .select(col("doc_id"), col("pos"))
-    spanScrubReport(docs, toks, repeats, index.k, "n_dup_spans", minSpanTokens)
+    crossDocReport(docs, repeats, index.k, minSpanTokens)
   }
 
   // q101 — bigram language-model scoring: fit an interpolated bigram LM

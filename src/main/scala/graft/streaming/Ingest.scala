@@ -45,12 +45,14 @@ object Ingest {
       applyOnce(mb, batchId, path, f).foreach(sink(_, batchId)))
 
   /** One [[once]] trigger, extracted so the replay path is spec-testable
-    * without a restarted stream: `f(microBatch)` unless the batch is
-    * empty or its id is already committed at `path`; the marker commits
-    * strictly after `f` returns. None when the batch was skipped. */
+    * without a restarted stream: `f(microBatch)` unless its id is
+    * already committed at `path` or the batch is empty; the marker
+    * commits strictly after `f` returns. None when the batch was
+    * skipped. The marker (a file read) is checked before emptiness (a
+    * Spark job), so a replayed batch costs no job. */
   def applyOnce(microBatch: DataFrame, batchId: Long, path: String,
                 f: DataFrame => DataFrame): Option[DataFrame] =
-    if (microBatch.isEmpty || batchId <= committedBatch(path)) None
+    if (batchId <= committedBatch(path) || microBatch.isEmpty) None
     else {
       val out = f(microBatch)
       commitBatch(path, batchId)

@@ -9,7 +9,8 @@ import graft.operators.TextOps
   * ([[graft.operators.TextOps.repeatedGramScrubFor]]) at ingest: the
   * scrub is a function of ONE document's tokens, so there is no static
   * artifact at all — [[Ingest.probe]] runs the declared query's batch
-  * function on each micro-batch. */
+  * function, unsorted, on each micro-batch: one per-row projection, no
+  * shuffle and no join per trigger. */
 object SelfDedup {
 
   /** Scrub a streaming (doc_id, text) feed; each micro-batch's
@@ -17,5 +18,5 @@ object SelfDedup {
     * rows go to `sink` with the batch id. */
   def start(docs: DataFrame, sink: (DataFrame, Long) => Unit,
             n: Int = 3): StreamingQuery =
-    Ingest.probe(docs, TextOps.repeatedGramScrubFor(_, n), sink)
+    Ingest.probe(docs, TextOps.repeatedGramScrubRaw(_, n), sink)
 }

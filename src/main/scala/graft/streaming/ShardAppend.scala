@@ -16,7 +16,8 @@ import graft.operators.Packing
   * ZERO KEYED STATE, by design: the only thing a trigger needs from
   * the past is the store's current max shard id, and that lives in the
   * STORE ITSELF — read from the partition-directory names alone
-  * (`ReadSchema: struct<>`, the q104 probe), never in Spark state. No
+  * (a driver-side listing, [[Packing.storedMaxShard]]), never in Spark
+  * state. No
   * watermark, no `mapGroupsWithState`: the shard store is the state,
   * exactly as a production ingest pipeline would have it (restarts
   * recover from the store; no checkpointed operator state can drift
@@ -31,10 +32,14 @@ import graft.operators.Packing
   * exactly (duality spec); a different chunking yields the same
   * documents in shards cut at different boundaries.
   *
-  * Scale/trigger cost: one packer range shuffle + text join + one
-  * shard_id shuffle over the MICRO-BATCH, plus the O(#partitions)
-  * directory listing for the boundary probe — trigger latency scales
-  * with feed rate, not store size.
+  * Scale/trigger cost: the pack and the write scale with the
+  * MICRO-BATCH (the packer's driver solve under its cap, a text join
+  * and one shard_id shuffle), and the boundary probe is an
+  * O(#shard directories) driver listing. The read-back REPORT does
+  * not: it certifies the whole store, so it reads every shard each
+  * trigger, and trigger latency grows with store size through it (a
+  * deployment publishing per-trigger reports would aim
+  * [[Packing.shardReport]] at the new shards only).
   */
 object ShardAppend {
 
@@ -52,13 +57,14 @@ object ShardAppend {
     Ingest.applyOnce(microBatch, batchId, path,
       pack(_, path, budget, seqsPerShard))
 
-  /** The first batch creates the store ([[Packing.writeShardsFor]]);
-    * every later one appends from the next whole-shard boundary
-    * ([[Packing.appendShardsFor]]). */
+  /** A batch over a store holding no shard creates it
+    * ([[Packing.writeShardsFor]]); every later one appends from the
+    * next whole-shard boundary ([[Packing.appendShardsFor]]). One
+    * listing decides both. */
   private def pack(batch: DataFrame, path: String, budget: Long,
                    seqsPerShard: Long): DataFrame =
-    if (new java.io.File(path).exists())
-      Packing.appendShardsFor(batch, budget, seqsPerShard, path)
-    else
-      Packing.writeShardsFor(batch, budget, seqsPerShard, path)
+    Packing.storedMaxShard(batch.sparkSession, path) match {
+      case Some(max) => Packing.appendShardsAt(batch, budget, seqsPerShard, path, max)
+      case None => Packing.writeShardsFor(batch, budget, seqsPerShard, path)
+    }
 }

@@ -107,45 +107,66 @@ class PlanShapeSpec extends AnyFunSuite {
       "cartesian" -> 0)
   }
 
+  test("q95 repeated-gram scrub: row-local — no shuffle, no join, the oracle sort only") {
+    // the scrub is one per-row kernel: the only hash exchange allowed is
+    // docsHeavy's input spread (REPARTITION_BY_NUM), never a shuffle
+    // the scrub itself asks for; a join or a second sort means the
+    // relational self-join formulation came back
+    val plan = SparkEntry.queries("q95_repeated_gram_scrub")(spark, sf)
+      .queryExecution.executedPlan.toString
+    operators.Caches.release()
+    spark.catalog.clearCache()
+    val shuffles = plan.linesIterator.count(l =>
+      l.contains("Exchange hashpartitioning") && !l.contains("REPARTITION_BY_NUM"))
+    assert(shuffles === 0, s"q95 shuffles for the scrub:\n$plan")
+    pin("q95_repeated_gram_scrub",
+      "sort_merge_join" -> 0, "broadcast_hash_join" -> 0,
+      "exchange_hash" -> 1, "exchange_range" -> 1, "sort" -> 1,
+      "cartesian" -> 0)
+  }
+
   test("q99 cross-doc scrub: global-first agg + hash joins, never a positioned-stream SMJ") {
     // the global-first table and the repeat join ride the 60-bit gram
-    // hash; an SMJ or extra exchange means the positioned gram stream
-    // started shuffling for something other than its one partial agg.
+    // hash; the repeat starts collect per doc_id on the spread's own
+    // partitioning and join the tokenized documents once. An SMJ or
+    // extra exchange means the positioned gram stream started
+    // shuffling for something other than its one partial agg; a new
+    // sort means the span window came back.
     pin("q99_crossdoc_scrub",
-      "sort_merge_join" -> 0, "exchange_hash" -> 8,
-      "exchange_range" -> 1, "sort" -> 7, "cartesian" -> 0)
+      "sort_merge_join" -> 0, "exchange_hash" -> 4,
+      "exchange_range" -> 1, "sort" -> 3, "cartesian" -> 0)
   }
 
   test("q102 thresholded scrub: q99's exact plan — the length filter adds no exchange") {
-    // the minimum-match-length rule is ONE post-merge filter inside the
-    // shared spanScrubReport; if these ceilings ever diverge from
-    // q99's, the filter stopped being a filter (PlanFacts sf0.001 r13:
-    // byte-identical fact sets for the two queries)
+    // the minimum-match-length rule is a parameter of the row-local
+    // span kernel; if these ceilings ever diverge from q99's, the
+    // threshold stopped being part of the kernel
     pin("q102_crossdoc_scrub_min",
-      "sort_merge_join" -> 0, "exchange_hash" -> 8,
-      "exchange_range" -> 1, "sort" -> 7, "cartesian" -> 0)
+      "sort_merge_join" -> 0, "exchange_hash" -> 4,
+      "exchange_range" -> 1, "sort" -> 3, "cartesian" -> 0)
   }
 
   test("q103 shard write: read-back report plan — grouped agg + oracle sort only") {
     // the declared frame is the report over the files just written:
-    // one countDistinct two-phase agg on shard_id (2 hash exchanges),
-    // the oracle ORDER BY (1 range + its sort), no join anywhere — the
+    // ONE two-phase aggregation on shard_id (1 hash exchange; n_seqs
+    // comes from the collected list, not a countDistinct Expand), the
+    // oracle ORDER BY (1 range + its sort), no join anywhere — the
     // write side's exchanges are paid inside the eager write, bounded
     // by the packer's pinned runningTotal shape (q52's spec)
     pin("q103_shard_write",
       "sort_merge_join" -> 0, "broadcast_hash_join" -> 0,
-      "exchange_hash" -> 2, "exchange_range" -> 1, "sort" -> 1,
+      "exchange_hash" -> 1, "exchange_range" -> 1, "sort" -> 1,
       "cartesian" -> 0)
   }
 
   test("q104 shard append: same read-back report shape as q103, no joins") {
     // both days' writes are eager; the declared frame is the full-store
-    // report — identical ceilings to q103 (PlanFacts sf0.001 r13), and
-    // the delta-proportionality of the append itself is gated by the
-    // ReadSchema lint in the q104 spec
+    // report — identical ceilings to q103, and the delta-proportionality
+    // of the append itself is gated by the ReadSchema lint in the q104
+    // spec and the listing probe's spec
     pin("q104_shard_append",
       "sort_merge_join" -> 0, "broadcast_hash_join" -> 0,
-      "exchange_hash" -> 2, "exchange_range" -> 1, "sort" -> 1,
+      "exchange_hash" -> 1, "exchange_range" -> 1, "sort" -> 1,
       "cartesian" -> 0)
   }
 
