@@ -111,7 +111,13 @@ object Bpe {
     * histogram-sized block sets can coexist between GC cycles, and
     * their MEMORY_AND_DISK level is evictable under storage pressure —
     * bounded by construction, stated so nobody hunts for a leak. */
-  def learnMerges(state0: DataFrame, iters: Int): (Seq[Merge], DataFrame) = {
+  def learnMerges(state0: DataFrame, iters: Int): (Seq[Merge], DataFrame) =
+    learnMerges(state0, iters, Sized.BpeDriverRows)
+
+  /** [[learnMerges]] under a driver-training `cap`; `cap = 0` forces
+    * the distributed loop. */
+  private[graft] def learnMerges(state0: DataFrame, iters: Int,
+                                 cap: Int): (Seq[Merge], DataFrame) = {
     require(iters > 0, s"need iters > 0, got $iters")
     // r16 DRIVER FAST PATH (§1.2 step 1 — fix the distributed algorithm
     // before the per-task work): the loop below costs ~0.16 s/merge at
@@ -151,18 +157,12 @@ object Bpe {
     // cache, the checkpoint reads the probe's materialized partitions
     // (and the shared shuffle map output) instead of recomputing.
     val source = if (fastPathSchema) Caches.track(state0) else state0
-    if (fastPathSchema) {
-      val cap0 = state0.sparkSession.conf.getOption(DriverTrainMaxRowsConf)
-        .flatMap(_.toIntOption).getOrElse(DriverTrainMaxRowsDefault)
-      // clamp BOTH ends: negative caps mean "never", and cap+1 at
-      // Int.MaxValue would wrap negative and fail limit()'s analysis
-      val cap = math.min(math.max(cap0, 0), Int.MaxValue - 1)
-      val probe = source.limit(cap + 1).collect()
+    (if (fastPathSchema) Sized.rowsAtMost(source, cap) else None)
       // null word/syms rows (never produced by wordHistogram, possible
       // from library callers) fall through to the distributed loop,
       // whose fold/aggregate null semantics are the defined ones
-      if (probe.length <= cap &&
-          probe.forall(r => !r.isNullAt(0) && !r.isNullAt(2))) {
+      .filter(_.forall(r => !r.isNullAt(0) && !r.isNullAt(2)))
+      .map { probe =>
         val rows = probe.map { r =>
           (r.getString(0),
            if (r.isNullAt(1)) 0L else r.getLong(1),
@@ -170,9 +170,15 @@ object Bpe {
         }.toIndexedSeq
         val (merges, fin) = learnMergesDriver(rows, iters)
         import state0.sparkSession.implicits._
-        return (merges, fin.toDF("word", "freq", "syms"))
+        (merges, fin.toDF("word", "freq", "syms"))
       }
-    }
+      .getOrElse(learnMergesDistributed(source, iters))
+  }
+
+  /** [[learnMerges]]' distributed loop: two jobs per merge over the
+    * checkpointed (word, freq, syms) state. */
+  private def learnMergesDistributed(source: DataFrame,
+                                     iters: Int): (Seq[Merge], DataFrame) = {
     // full shuffle width kept on the loop state: a coalesce(8) variant
     // (fewer sliver tasks per loop job) also A/B-measured slower — the
     // interpreted merge fold is the loop's real compute and wants the
@@ -399,27 +405,6 @@ object Bpe {
     words.withColumn("syms", seg(col(wordCol)))
   }
 
-  /** Broadcast cap (rows) for the segmentation join-back's vocab side —
-    * ~50 B/row in the built hash relation puts the default 4M rows at
-    * ~200 MB, inside the guide's "few hundred MB is fine" broadcast
-    * envelope and far under the 8 GB/512M-row hard cap. Overridable via
-    * `spark.graft.bpe.segBroadcastMaxRows`: a 100-TB web corpus's vocab
-    * (hundreds of millions of distinct "words") exceeds any sane cap
-    * and falls back to the shuffled join — the guard is measured per
-    * run from the actual vocab, never assumed from the bench scale. */
-  val SegBroadcastMaxRowsConf = "spark.graft.bpe.segBroadcastMaxRows"
-  val SegBroadcastMaxRowsDefault = 4000000L
-
-  /** Driver cap (rows) for [[learnMerges]]' in-memory fast path —
-    * 512k histogram rows ≈ tens of MB of (word, freq, syms) on the
-    * heap, the same envelope as the broadcast rank map. Overridable via
-    * `spark.graft.bpe.driverTrainMaxRows` (0 forces the distributed
-    * loop — the spec uses that to pin driver ≡ distributed). A real
-    * 100-TB corpus vocabulary (tens of millions of distinct words)
-    * exceeds the cap and trains distributed, exactly as before. */
-  val DriverTrainMaxRowsConf = "spark.graft.bpe.driverTrainMaxRows"
-  val DriverTrainMaxRowsDefault = 524288
-
   /** The textbook BPE trainer over an in-memory (word, freq, syms) row
     * seq — [[learnMerges]]' driver fast path. Bit-identical to the
     * distributed loop by construction: same freq-weighted overlapping
@@ -479,8 +464,8 @@ object Bpe {
     * per-word frame (guide §3.1 — pick the strategy deliberately): the
     * vocab side is cached (scope-tracked) and COUNTED — a vocab-sized
     * action that fills the cache the join reads — and broadcast when it
-    * fits the cap above, so the occurrence stream is never exchanged
-    * for the join at all (its bytes next move in the doc_id partial
+    * fits [[Sized.BroadcastRows]], so the occurrence stream is never
+    * exchanged for the join at all (its bytes next move in the doc_id partial
     * aggregation, already compressed to one row per document). Catalyst
     * can't make this call itself: the vocab side is a UDF projection
     * over a distinct, whose size estimate defeats the 10 MB
@@ -488,10 +473,9 @@ object Bpe {
     * that shuffles the full occurrence stream by word. Over the cap the
     * original shuffled join returns unchanged — same rows either way,
     * only the exchange placement moves. */
-  private[operators] def vocabJoinBack(occ: DataFrame, vocab: DataFrame,
-                                       knownRows: Option[Long] = None): DataFrame = {
-    val cap = occ.sparkSession.conf.getOption(SegBroadcastMaxRowsConf)
-      .flatMap(_.toLongOption).getOrElse(SegBroadcastMaxRowsDefault)
+  private[graft] def vocabJoinBack(occ: DataFrame, vocab: DataFrame,
+                                   knownRows: Option[Long] = None,
+                                   cap: Int = Sized.BroadcastRows): DataFrame = {
     val (v, fits) = knownRows match {
       // caller already counted the vocab side (e.g. the overlapped-warm
       // path cached + counted the distinct words during training):
@@ -499,18 +483,15 @@ object Bpe {
       // projection over that cache needs no second pin
       case Some(k) => (vocab, k <= cap)
       case None =>
-        // BOUNDED cap probe, not a full count: limit(cap+1) stops as
+        // BOUNDED cap probe, not a full count: Sized.fits stops as
         // soon as the vocab provably exceeds the cap, so an over-cap
         // web-scale vocabulary pays a truncated scan instead of a full
         // count just to learn it must take the shuffled join. (This
         // branch is eager — it runs a vocab-sized job at composition
         // time; the cache it fills is the same one the join build
         // reads.)
-        // cap clamped into limit()'s Int domain — a cap beyond 2^31
-        // rows is far past Spark's 512M-row broadcast hard cap anyway
-        val capEff = math.min(math.max(cap, 0L), (Int.MaxValue - 1).toLong)
         val tracked = Caches.track(vocab)
-        (tracked, tracked.limit(capEff.toInt + 1).count() <= capEff)
+        (tracked, Sized.fits(tracked, cap))
     }
     if (fits) occ.join(broadcast(v), Seq("word"))
     else occ.join(v, Seq("word"))

@@ -187,7 +187,7 @@ object Dedup {
     *
     * Scale shape — the plan is decided from MEASURED size (the partial
     * DAG execution move, and [[connectedComponents]]'s own rule): ONE
-    * bounded probe collects at most [[LocalSolveMaxRows]] + 1 exploded
+    * bounded probe collects at most [[Sized.DriverRows]] + 1 exploded
     * `(doc_id, pos, gram, xxhash64(gram))` rows. When the whole exploded gram
     * set fits, the stage is solved on the driver
     * ([[cappedPairsLocal]]) and returned as a local relation — the
@@ -205,41 +205,9 @@ object Dedup {
   private[graft] def ngramJaccardPairsCappedTokRaw(
       docToks: DataFrame,
       threshold: Double = 0.5,
-      maxDocFreq: Long = 100): DataFrame =
-    cappedPairsLocal(docToks, threshold, maxDocFreq, LocalSolveMaxRows)
-      .getOrElse(cappedPairsDistributed(docToks, threshold, maxDocFreq))
-
-  /** Driver-solve ceiling shared by the size-decided stages (capped
-    * near-dup pairs, pack assignment, connected components): 2²⁰ probe
-    * rows. */
-  private[graft] val LocalSolveMaxRows: Int = 1 << 20
-
-  /** Distinct 3-gram shingle arrays of the docs with ≥ 3 tokens — the
-    * per-row projection both capped-pair paths start from. */
-  private def gramArrays(docToks: DataFrame): DataFrame =
-    docToks
-      .filter(size(col("t")) >= 3)
-      .select(col("doc_id"), shingles(col("t"), 3).as("grams"))
-
-  /** The capped pair stage solved on the driver, or None when it must
-    * run distributed: more than `cap` exploded gram rows, more than
-    * `cap` pairs left after the upper-bound prune, a non-long or null
-    * doc id, a doc id that owns two gram arrays, or a prune denominator
-    * of 0 (the distributed plan's division decides that case). Spark
-    * computes the shingles and their xxhash64 in the probe's
-    * projection; the driver then replays
-    * [[cappedPairsDistributed]] step for step — df per hash (with
-    * multiplicity), the hot set `df > maxDocFreq`, `ncc` per pair over
-    * the capped rows, the upper-bound prune and the exact string-set
-    * rescore — with Spark's arithmetic (a double divided by a long
-    * widened to double), so the rows equal the distributed output as a
-    * multiset, under its exact schema. */
-  private[graft] def cappedPairsLocal(docToks: DataFrame, threshold: Double,
-                                      maxDocFreq: Long,
-                                      cap: Int): Option[DataFrame] = {
+      maxDocFreq: Long = 100,
+      cap: Int = Sized.DriverRows): DataFrame = {
     val docGrams = gramArrays(docToks)
-    if (docGrams.schema("doc_id").dataType != org.apache.spark.sql.types.LongType)
-      return None
     // posexplode_OUTER, not posexplode: for an inner generator Catalyst
     // infers `size(grams) > 0` and pushes it below the spread exchange,
     // so every document's shingles are built a second time in the scan
@@ -253,8 +221,36 @@ object Dedup {
     val probe = docGrams
       .select(col("doc_id"), posexplode_outer(col("grams")).as(Seq("pos", "gram")))
       .select(col("doc_id"), col("pos"), col("gram"), xxhash64(col("gram")).as("gh"))
-      .limit(cap + 1).collect()
-    if (probe.length > cap || probe.exists(r => r.anyNull)) return None
+    // the driver solve indexes long doc ids; other ids skip the probe
+    (if (docGrams.schema("doc_id").dataType != org.apache.spark.sql.types.LongType) None
+     else Sized.rowsAtMost(probe, cap))
+      .flatMap(cappedPairsLocal(_, docGrams, threshold, maxDocFreq, cap))
+      .getOrElse(cappedPairsDistributed(docToks, threshold, maxDocFreq))
+  }
+
+  /** Distinct 3-gram shingle arrays of the docs with ≥ 3 tokens — the
+    * per-row projection both capped-pair paths start from. */
+  private def gramArrays(docToks: DataFrame): DataFrame =
+    docToks
+      .filter(size(col("t")) >= 3)
+      .select(col("doc_id"), shingles(col("t"), 3).as("grams"))
+
+  /** The capped pair stage solved on the driver from its probe rows
+    * `(doc_id, pos, gram, xxhash64(gram))`, or None when it must run
+    * distributed: more than `cap` pairs left after the upper-bound
+    * prune, a null doc id, a doc id that owns two gram arrays, or a
+    * prune denominator of 0 (the distributed plan's division decides
+    * that case). The driver replays [[cappedPairsDistributed]] step for
+    * step — df per hash (with multiplicity), the hot set
+    * `df > maxDocFreq`, `ncc` per pair over the capped rows, the
+    * upper-bound prune and the exact string-set rescore — with Spark's
+    * arithmetic (a double divided by a long widened to double), so the
+    * rows equal the distributed output as a multiset, under its exact
+    * schema. */
+  private def cappedPairsLocal(probe: Array[org.apache.spark.sql.Row], docGrams: DataFrame,
+                               threshold: Double, maxDocFreq: Long,
+                               cap: Int): Option[DataFrame] = {
+    if (probe.exists(r => r.anyNull)) return None
     import scala.collection.mutable
     val n = probe.length
     // dense doc indices in id order, so index order is doc_a < doc_b
@@ -348,8 +344,7 @@ object Dedup {
     val schema = scoreGramPairs(docGrams.select(col("doc_id").as("doc_a"),
       col("doc_id").as("doc_b"), col("grams").as("ga"), col("grams").as("gb")),
       threshold).schema
-    val spark = docToks.sparkSession
-    Some(spark.createDataFrame(java.util.Arrays.asList(rows.toSeq: _*), schema))
+    Some(docGrams.sparkSession.createDataFrame(java.util.Arrays.asList(rows.toSeq: _*), schema))
   }
 
   /** The capped pair stage as a distributed plan — the corpus-scale path
@@ -732,18 +727,17 @@ object Dedup {
     * FRACTION by construction (only near-dups produce edges), and a
     * distributed round has a fixed multi-job overhead that dwarfs the
     * work when the subgraph is thousands of nodes. When the measured
-    * edge count fits comfortably on the driver
-    * (`localSolveMaxEdges`, default 2²⁰ edges ≈ 16 MB) the labeling is
-    * computed by an exact in-memory union-find instead — the same move
-    * AQE makes when it shrinks a planned shuffle join to a local one.
-    * Both paths produce the identical component-min labeling; pass
-    * `localSolveMaxEdges = 0` to force the distributed loop (specs do).
+    * edge count fits comfortably on the driver ([[Sized.DriverRows]]
+    * edges ≈ 16 MB) the labeling is computed by an exact in-memory
+    * union-find instead — the same move AQE makes when it shrinks a
+    * planned shuffle join to a local one. Both paths produce the
+    * identical component-min labeling; specs and soaks force the
+    * distributed loop with [[connectedComponentsCounted]]'s `cap = 0`.
     * When the pairs are themselves driver-solved (a local relation from
     * [[ngramJaccardPairsCappedTokRaw]] under its cap), the probe folds
     * into that relation and launches no job at all. */
-  def connectedComponents(pairs: DataFrame, maxIter: Int = 50,
-                          localSolveMaxEdges: Long = LocalSolveMaxRows): DataFrame =
-    connectedComponentsCounted(pairs, maxIter, localSolveMaxEdges)._1
+  def connectedComponents(pairs: DataFrame, maxIter: Int = 50): DataFrame =
+    connectedComponentsCounted(pairs, maxIter)._1
 
   /** [[connectedComponents]] plus the DISTRIBUTED round count actually
     * executed (0 when the small-subgraph local path answered) — the
@@ -751,23 +745,19 @@ object Dedup {
     * at 10× with planted chains by `tools/SoakScale`. */
   private[graft] def connectedComponentsCounted(
       pairs: DataFrame, maxIter: Int = 50,
-      localSolveMaxEdges: Long = LocalSolveMaxRows): (DataFrame, Int) = {
+      cap: Int = Sized.DriverRows): (DataFrame, Int) = {
     val Seq(a, b) = pairs.columns.take(2).toSeq.map(col)
     val directedPlan = pairs.select(a.as("src"), b.as("dst"))
-    if (localSolveMaxEdges > 0) {
-      // ONE bounded pass decides the path AND delivers the edges: collect
-      // at most maxEdges+1 directed rows. The previous shape (cache the
-      // pair list, count it, then collect from the cache) materialized a
-      // cache stacked on the pipeline's inner docGram/capped caches, and
-      // that nested materialization measured ~2.5× the pipeline's own
-      // cost; the limit also caps driver memory no matter how big the
-      // subgraph really is (an oversized probe just falls through).
-      val lim = math.min(localSolveMaxEdges + 1, Int.MaxValue.toLong).toInt
-      val probe = directedPlan.limit(lim).collect()
-      if (probe.length < lim)
-        return (localComponents(probe, pairs.sparkSession), 0)
-    }
-    // distributed path: materialize the DIRECTED pair list once and
+    // ONE bounded pass decides the path AND delivers the edges (caching
+    // and counting the pair list first measured ~2.5× the pipeline's cost)
+    Sized.rowsAtMost(directedPlan, cap)
+      .map(edges => (localComponents(edges, pairs.sparkSession), 0))
+      .getOrElse(distributedComponents(directedPlan, maxIter))
+  }
+
+  /** [[connectedComponentsCounted]]'s pointer-jumping loop. */
+  private def distributedComponents(directedPlan: DataFrame, maxIter: Int): (DataFrame, Int) = {
+    // materialize the DIRECTED pair list once and
     // derive the symmetric edge list from it (materializing the union
     // instead would evaluate the expensive pair plan — q26's whole
     // candidate+rescore pipeline — once per union branch).

@@ -184,16 +184,24 @@ object Packing {
     * never disagree on which sequence a document landed in.
     *
     * Scale shape — decided from MEASURED size: one bounded probe
-    * collects at most [[Dedup.LocalSolveMaxRows]] + 1 `(doc_id, _ok, _nt)`
+    * collects at most [[Sized.DriverRows]] + 1 `(doc_id, _ok, _nt)`
     * rows; when they all fit, the order, the running total and the
     * sequence ids are folded on the driver ([[packAssignmentsLocal]])
     * and returned as a local relation — one job instead of the two-pass
     * scan's range sample, range shuffle, totals and final pass. Above
-    * the cap [[packAssignmentsDistributed]] runs unchanged. */
-  private[graft] def packAssignments(docCounts: DataFrame,
-                                     budget: Long): DataFrame =
-    packAssignmentsLocal(docCounts, budget, Dedup.LocalSolveMaxRows)
+    * the cap, and for a budget ≤ 0, a non-long `_nt` or a doc id that is
+    * neither long nor string, [[packAssignmentsDistributed]] runs. */
+  private[graft] def packAssignments(docCounts: DataFrame, budget: Long,
+                                     cap: Int = Sized.DriverRows): DataFrame = {
+    import org.apache.spark.sql.types.{LongType, StringType}
+    val d = orderKeyed(docCounts)
+    val keyType = d.schema("doc_id").dataType
+    (if (budget <= 0 || d.schema("_nt").dataType != LongType ||
+         (keyType != LongType && keyType != StringType)) None
+     else Sized.rowsAtMost(d, cap))
+      .flatMap(packAssignmentsLocal(_, d, budget))
       .getOrElse(packAssignmentsDistributed(docCounts, budget))
+  }
 
   /** The `(doc_id, _ok, _nt)` rows both assignment paths order. */
   private def orderKeyed(docCounts: DataFrame): DataFrame =
@@ -201,25 +209,20 @@ object Packing {
       md5(col("doc_id").cast("string")).as("_ok"),
       col("_nt"))
 
-  /** [[packAssignments]] solved on the driver, or None when it must run
-    * distributed: more than `cap` rows, a doc id that is neither long
-    * nor string, a non-long `_nt`, a null key or count, a budget ≤ 0, or
-    * a running total that overflows a long. Spark computes the md5 key
-    * in the probe's projection; the rows are sorted by (_ok, doc_id)
-    * under Spark's ordering — UTF8String byte order for strings, signed
-    * order for longs — and the inclusive long running total and
-    * `seq_id = (_cum - _nt) div budget` are folded in that order, so the
-    * rows equal the distributed output as a multiset, under its schema. */
-  private[graft] def packAssignmentsLocal(docCounts: DataFrame, budget: Long,
-                                          cap: Int): Option[DataFrame] = {
+  /** [[packAssignments]] solved on the driver from the probe rows of
+    * its keyed frame `d`, or None when it must run distributed: a null
+    * key or count, or a running total that overflows a long. Spark
+    * computes the md5 key in the probe's projection; the rows are sorted
+    * by (_ok, doc_id) under Spark's ordering — UTF8String byte order for
+    * strings, signed order for longs — and the inclusive long running
+    * total and `seq_id = (_cum - _nt) div budget` are folded in that
+    * order, so the rows equal the distributed output as a multiset. */
+  private def packAssignmentsLocal(probe: Array[org.apache.spark.sql.Row], d: DataFrame,
+                                   budget: Long): Option[DataFrame] = {
     import org.apache.spark.sql.types.{LongType, StringType}
     import org.apache.spark.unsafe.types.UTF8String
-    val d = orderKeyed(docCounts)
     val keyType = d.schema("doc_id").dataType
-    if (budget <= 0 || d.schema("_nt").dataType != LongType ||
-        (keyType != LongType && keyType != StringType)) return None
-    val probe = d.limit(cap + 1).collect()
-    if (probe.length > cap || probe.exists(r => r.anyNull)) return None
+    if (probe.exists(r => r.anyNull)) return None
     // sort keys built once per row: md5 hex, then the doc id as a long
     // or as its UTF-8 bytes (Spark's binary string order)
     val keyed = probe.map(r => (UTF8String.fromString(r.getString(1)),
@@ -242,7 +245,7 @@ object Packing {
     val schema = d.schema
       .add("_cum", LongType, nullable = true)
       .add("seq_id", LongType, nullable = true)
-    Some(docCounts.sparkSession.createDataFrame(
+    Some(d.sparkSession.createDataFrame(
       java.util.Arrays.asList(rows.toIndexedSeq: _*), schema))
   }
 
@@ -277,11 +280,23 @@ object Packing {
     * run — from racing one shard store: one side's mode=overwrite delete
     * could land mid-read of the other's read-back report. Within one
     * process the path is stable, which is all q103/q104's write→read-back
-    * and the day-1-immutability spec rely on. */
-  def defaultShardPath(dir: String): String =
-    new java.io.File(sys.props("java.io.tmpdir"),
+    * and the day-1-immutability spec rely on. Being per-process, the
+    * stores die with the process: a JVM shutdown hook removes every
+    * path handed out here, with the suffixed stores built beside it. */
+  def defaultShardPath(dir: String): String = {
+    val store = new java.io.File(sys.props("java.io.tmpdir"),
       "graft_shards_p" + ProcessHandle.current().pid() + "_" +
-        dir.replaceAll("[^A-Za-z0-9]+", "_")).getAbsolutePath
+        dir.replaceAll("[^A-Za-z0-9]+", "_")).getAbsoluteFile
+    handedOut.add(store)
+    store.getPath
+  }
+
+  private val handedOut = java.util.concurrent.ConcurrentHashMap.newKeySet[java.io.File]()
+  sys.addShutdownHook(handedOut.forEach { store =>
+    Option(store.getParentFile.listFiles()).toSeq.flatten
+      .filter(_.getName.startsWith(store.getName))
+      .foreach(org.apache.commons.io.FileUtils.deleteQuietly)
+  })
 
   /** Core of q103 over any (doc_id, text) frame.
     *

@@ -100,7 +100,7 @@ object SoakScale {
 
   /** Distributed-CC measurement on an n-link chain: (distinct labels,
     * rounds, wall seconds). The pairs come from the distributed capped
-    * plan and localSolveMaxEdges=0 forces the distributed loop, so the
+    * plan and `cap = 0` forces the distributed loop, so the
     * timed wall is the pair pipeline plus the components loop — the
     * small-input driver solves would otherwise answer eagerly or
     * locally and measure nothing. */
@@ -112,7 +112,7 @@ object SoakScale {
         .select(col("doc_a"), col("doc_b"))
       val t0 = System.nanoTime()
       val (labels, rounds) = Dedup.connectedComponentsCounted(
-        pairs, maxIter = 50, localSolveMaxEdges = 0)
+        pairs, maxIter = 50, cap = 0)
       val distinctLabels = labels.select(col("label")).distinct().count()
       (distinctLabels, rounds, (System.nanoTime() - t0) / 1e9)
     }
@@ -141,11 +141,11 @@ object SoakScale {
   }
 
   /** Distributed-CC measurement on the hub graph: (distinct labels,
-    * rounds, wall seconds, edge count). Runs with the DEFAULT
-    * `localSolveMaxEdges` — the point is that the bounded probe FALLS
-    * THROUGH (edges exceed the bound) and the distributed
-    * pointer-jumping path runs, unlike the chain soaks which force it
-    * with localSolveMaxEdges = 0. */
+    * rounds, wall seconds, edge count). Runs with the DEFAULT cap
+    * ([[graft.operators.Sized.DriverRows]]) — the point is that the
+    * bounded probe FALLS THROUGH (edges exceed the bound) and the
+    * distributed pointer-jumping path runs, unlike the chain soaks
+    * which force it with `cap = 0`. */
   def ccHub(spark: SparkSession, n: Long): (Long, Int, Double, Long) = {
     val (res, sc) = graft.operators.Caches.scope {
       val edges = hubEdges(spark, n)
@@ -157,47 +157,6 @@ object SoakScale {
     }
     sc.release(); spark.catalog.clearCache()
     res
-  }
-
-  /** In-memory textbook BPE trainer (BpeSpec.refLearn's algorithm) —
-    * produces the VALID 1000-merge table the segmenter soak applies.
-    * Driver-side on a 2000-word sub-histogram: learning 1000 merges
-    * through [[graft.operators.Bpe.learnMerges]] would be 1000
-    * sequential Spark jobs (~0.14 s/iter — the floor the 100-iter
-    * measurement above records), which would time the DRIVER LOOP, not
-    * the segmenter this soak gates. Stops early (loudly, via the size
-    * require at the call site) if the pair space exhausts. */
-  private def naiveLearn(words: Map[String, Long],
-                         iters: Int): Seq[graft.operators.Bpe.Merge] = {
-    var state: Map[String, Seq[String]] =
-      words.map { case (w, _) =>
-        w -> (w.map(_.toString) :+ graft.operators.Bpe.EndMark)
-      }
-    val merges = Seq.newBuilder[graft.operators.Bpe.Merge]
-    var it = 1
-    var exhausted = false
-    while (it <= iters && !exhausted) {
-      val pc = scala.collection.mutable.Map.empty[(String, String), Long]
-      for ((w, f) <- words; s = state(w); i <- 0 until s.length - 1)
-        pc((s(i), s(i + 1))) = pc.getOrElse((s(i), s(i + 1)), 0L) + f
-      if (pc.isEmpty) exhausted = true
-      else {
-        val ((a, b), c) = pc.toSeq.minBy { case ((l, r), n) => (-n, l, r) }
-        merges += graft.operators.Bpe.Merge(it.toLong, a, b, c)
-        state = state.map { case (w, s) =>
-          val out = Seq.newBuilder[String]
-          var i = 0
-          while (i < s.length) {
-            if (i + 1 < s.length && s(i) == a && s(i + 1) == b) {
-              out += (a + b); i += 2
-            } else { out += s(i); i += 1 }
-          }
-          w -> out.result()
-        }
-        it += 1
-      }
-    }
-    merges.result()
   }
 
   def main(args: Array[String]): Unit = {
@@ -693,11 +652,10 @@ object SoakScale {
         .select(concat(col("word"), substring(
           md5(concat(col("word"), pmod(xxhash64(col("doc_id"), col("pos")), lit(64)))),
           1, 3)).as("word"))
-    val topHist = augWords(base)
-      .groupBy(col("word")).agg(count(lit(1)).as("freq"))
+    // 2000 rows train on the driver: no Spark job per merge
+    val topHist = graft.operators.Bpe.wordHistogram(augWords(base))
       .orderBy(col("freq").desc, col("word")).limit(2000)
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    val merges1k = naiveLearn(topHist, 1000)
+    val merges1k = graft.operators.Bpe.learnMerges(topHist, 1000)._1
     require(merges1k.size == 1000, s"expected 1000 merges, got ${merges1k.size}")
     def segWall(df: DataFrame, merges: Seq[graft.operators.Bpe.Merge]): Double =
       (1 to 3).map { _ =>
@@ -923,7 +881,7 @@ object SoakScale {
     // --- r11: the GIANT-COMPONENT adversary. The chains above prove
     // O(log diameter) but their subgraphs fit the local-solve bound
     // (they force the distributed path artificially). Here the planted
-    // hub graph EXCEEDS localSolveMaxEdges, so the production code path
+    // hub graph EXCEEDS Sized.DriverRows, so the production code path
     // itself falls through the bounded probe into pointer jumping, on
     // the skew shape that actually hurts at 100 TB: one component
     // swallowing every node, a top hub adjacent to half the graph, and

@@ -167,67 +167,6 @@ class BpeSpec extends AnyFunSuite {
     assert(viaVocab.exists { case (w, syms) => syms.length < w.length + 1 })
   }
 
-  test("driver fast path ≡ distributed trainer on the corpus histogram (r16)") {
-    // learnMerges takes the in-memory path when the histogram fits the
-    // driver cap; forcing the cap to 0 re-routes the SAME input through
-    // the distributed loop — table and final state must be identical
-    // (and both must match the naive reference, which learnOn's caller
-    // already pins on the driver corpus). Also covers the overlap/run
-    // edge cases the distributed fold was originally proven on.
-    val spark2 = spark
-    import spark2.implicits._
-    val b = operators.Sampling.hashBucket(col("doc_id"), 100)
-    val words = graft.sources.Tables(spark, sf, "documents")
-      .filter(b < 80)
-      .select(explode(graft.functions.TextFunctions.tokens(col("text"))).as("word"))
-    def bothPaths(state0: org.apache.spark.sql.DataFrame, iters: Int) = {
-      val (drvM, drvF) = Bpe.learnMerges(state0, iters)
-      spark.conf.set(Bpe.DriverTrainMaxRowsConf, "0")
-      val (dstM, dstF) =
-        try Bpe.learnMerges(state0, iters)
-        finally spark.conf.unset(Bpe.DriverTrainMaxRowsConf)
-      def st(df: org.apache.spark.sql.DataFrame) =
-        df.select(col("word"), col("freq"), col("syms")).collect()
-          .map(r => (r.getString(0), r.getLong(1), r.getSeq[String](2).toSeq))
-          .sortBy(_._1)
-      (drvM, dstM, st(drvF), st(dstF))
-    }
-    val (drvM, dstM, drvF, dstF) = bothPaths(Bpe.wordHistogram(words), 10)
-    assert(drvM === dstM)
-    assert(drvF === dstF)
-    // planted run/overlap edge cases (the inputs where a wrong greedy
-    // rule diverges) through both paths too
-    val planted = Seq(("aaaa", 5L), ("aaab", 3L), ("baaa", 2L))
-      .toDF("word", "freq")
-      .withColumn("syms",
-        concat(split(col("word"), ""), array(lit(Bpe.EndMark))))
-    val (pDrvM, pDstM, pDrvF, pDstF) = bothPaths(planted, 4)
-    assert(pDrvM === pDstM)
-    assert(pDrvF === pDstF)
-    // a non-(word,freq,syms) schema must NEVER take the driver path —
-    // extra columns would be dropped; the distributed loop keeps them
-    val extra = planted.withColumn("tag", lit("x"))
-    val (_, finExtra) = Bpe.learnMerges(extra, 1)
-    assert(finExtra.columns.contains("tag"))
-    // a name-matching frame with a NON-LONG freq was always valid
-    // through the distributed loop's sum() — it must route there (the
-    // driver path's getLong would crash), and still learn correctly
-    val intFreq = Seq(("aaaa", 5), ("aaab", 3))
-      .toDF("word", "freq")
-      .withColumn("syms",
-        concat(split(col("word"), ""), array(lit(Bpe.EndMark))))
-    val (mInt, _) = Bpe.learnMerges(intFreq, 1)
-    assert(mInt.head.lhs === "a" && mInt.head.rhs === "a")
-    // a null syms row falls through to the distributed loop (whose
-    // fold/size null semantics are the defined ones) instead of
-    // NPE-ing in the driver trainer
-    val withNull = planted.unionByName(
-      Seq(("zz", 1L)).toDF("word", "freq")
-        .withColumn("syms", lit(null).cast("array<string>")))
-    val (mNull, _) = Bpe.learnMerges(withNull, 1)
-    assert(mNull.head.lhs === "a" && mNull.head.rhs === "a")
-  }
-
   test("selectNonInteracting: rank order kept, shared symbols deferred, batch capped") {
     val ranked = Seq(
       ("a", "b", 10L),  // picked

@@ -428,10 +428,9 @@ class PipelineOpsSpec extends AnyFunSuite {
     val chain = (1L until 64L).map(i => (i, i + 1))
     val extra = Seq((100L, 101L), (101L, 102L), (100L, 102L), (200L, 201L))
     val edges = (chain ++ extra).toDF("doc_a", "doc_b")
-    // localSolveMaxEdges = 0 forces the DISTRIBUTED loop — the subject
-    // under test here; the small-subgraph union-find path is compared
-    // against it below
-    val lab = operators.Dedup.connectedComponents(edges, localSolveMaxEdges = 0)
+    // cap = 0 forces the DISTRIBUTED loop — the subject under test here;
+    // the small-subgraph union-find path is compared against it below
+    val lab = operators.Dedup.connectedComponentsCounted(edges, cap = 0)._1
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     operators.Caches.release()
     (1L to 64L).foreach(i => assert(lab(i) == 1L, s"chain node $i -> ${lab(i)}"))
@@ -1777,119 +1776,6 @@ class PipelineOpsSpec extends AnyFunSuite {
     assert(out(11L) == ((1L, r6(math.log(pAB)), r6(math.log(pAB)))),
       s"got ${out(11L)}")
     operators.Caches.release()
-    spark.catalog.clearCache()
-  }
-
-  /** Inputs both size-decided stages are specced on: (name, (doc_id,
-    * text) frame, maxDocFreq for the near-dup stage, whether the
-    * near-dup driver solve applies — it needs long doc ids). */
-  private def decisionInputs: Seq[(String, org.apache.spark.sql.DataFrame, Long, Boolean)] = {
-    val spark2 = spark
-    import spark2.implicits._
-    val sf01 = s"${new java.io.File(sf).getParent}/sf0.01"
-    def docs(rows: (Long, String)*) = rows.toDF("doc_id", "text")
-    val body = (1 to 12).map(i => s"w$i").mkString(" ")
-    val t = (1 to 14).map(i => s"t$i")
-    Seq(
-      ("the sf0.01 corpus",
-        graft.sources.Tables(spark, sf01, "documents").select("doc_id", "text"), 100L, true),
-      ("an empty frame", docs(), 100L, true),
-      ("all docs under 3 tokens",
-        docs((1L, "a b"), (2L, "a b"), (3L, "c"), (4L, ""), (5L, null)), 100L, true),
-      ("all-duplicate docs", docs((1L to 6L).map(i => (i, body)): _*), 100L, true),
-      // "the cat sat" sits in 5 docs (df 5 > 2): it feeds no candidate,
-      // yet still counts in each pair's exact rescore
-      ("a gram with df > maxDocFreq", docs(
-        (1L, "the cat sat w1 w2 w3 w4 w5 w6"), (2L, "the cat sat w1 w2 w3 w4 w5 w7"),
-        (3L, "the cat sat x1 x2 x3 x4 x5 x6"), (4L, "the cat sat y1 y2 y3"),
-        (5L, "the cat sat x1 x2 x3 x4 x5 x9")), 2L, true),
-      // j(A,B) = j(B,C) = 6/10, j(A,C) = 4/12
-      ("a chain A~B~C with jaccard(A,C) below threshold", docs(
-        (10L, t.slice(0, 10).mkString(" ")), (20L, t.slice(2, 12).mkString(" ")),
-        (30L, t.slice(4, 14).mkString(" "))), 100L, true),
-      ("non-ASCII text", docs(
-        (1L, "café naïve 文書 ü 😀 straße ø α β γ"), (2L, "café naïve 文書 ü 😀 straße ø α β δ"),
-        (3L, "\uE000 \uFFFD 😀 文書 a b c")), 100L, true),
-      // 10 clusters of 10 identical one-gram docs: 100 gram rows, 450 pairs
-      ("many small identical clusters", docs((for (c <- 0 until 10; k <- 0 until 10)
-        yield (c * 100L + k, s"c$c a b")): _*), 100L, true),
-      ("string doc:idx keys, non-ASCII included",
-        Seq(("doc:0", body), ("dóc:1", body + " x"), ("文書:2", "p q r s"),
-          ("😀:3", body), ("\uE000:4", "p q r s t")).toDF("doc_id", "text"), 100L, false))
-  }
-
-  /** Same schema, nullability included, and the same rows as a multiset. */
-  private def assertSameRows(got: org.apache.spark.sql.DataFrame,
-                             want: org.apache.spark.sql.DataFrame, what: String): Unit = {
-    assert(got.schema == want.schema, s"$what: schema ${got.schema} vs ${want.schema}")
-    def bag(df: org.apache.spark.sql.DataFrame) =
-      df.collect().toSeq.map(_.toSeq).groupBy(identity).view.mapValues(_.size).toMap
-    val (g, w) = (bag(got), bag(want))
-    assert(g == w, s"$what: rows differ, e.g. only driver-side " +
-      s"${(g.toSet -- w.toSet).take(3)}, only distributed ${(w.toSet -- g.toSet).take(3)}")
-  }
-
-  test("size-decided near-dup pairs: the driver solve equals the distributed plan on every input shape") {
-    import org.apache.spark.sql.functions._
-    import graft.functions.TextFunctions.tokens
-    val D = operators.Dedup
-    def toks(d: org.apache.spark.sql.DataFrame) =
-      d.select(col("doc_id"), tokens(col("text")).as("t"))
-    decisionInputs.foreach { case (name, d, maxDocFreq, solvable) =>
-      val dist = D.cappedPairsDistributed(toks(d), 0.5, maxDocFreq)
-      val local = D.cappedPairsLocal(toks(d), 0.5, maxDocFreq, D.LocalSolveMaxRows)
-      assert(local.isDefined == solvable, s"$name: driver solve applies = ${local.isDefined}")
-      local.foreach(assertSameRows(_, dist, name))
-      assertSameRows(D.ngramJaccardPairsCappedTokRaw(toks(d), 0.5, maxDocFreq), dist, name)
-      val pairs = dist.select("doc_a", "doc_b").collect().map(_.toSeq).toSet
-      name match {
-        case "the sf0.01 corpus" | "all-duplicate docs" | "a gram with df > maxDocFreq" =>
-          assert(pairs.nonEmpty, s"$name: fixture needs pairs")
-        case "a chain A~B~C with jaccard(A,C) below threshold" =>
-          assert(pairs == Set(Seq(10L, 20L), Seq(20L, 30L)), s"$name: $pairs")
-          // the components pass reads the local relation: B and C lose to A
-          val losers = D.nonKeepers(local.get.select("doc_a", "doc_b"))
-            .collect().map(_.getLong(0)).toSet
-          assert(losers == Set(20L, 30L), s"$name: non-keepers $losers")
-        case _ =>
-      }
-      operators.Caches.release()
-    }
-    // over the cap the driver solve declines and the distributed plan runs
-    assert(D.cappedPairsLocal(toks(decisionInputs.head._2), 0.5, 100L, cap = 2).isEmpty)
-    // ... and it bounds the pairs as well as the probe rows: 100 gram
-    // rows fit a cap of 200, their 450 pairs do not
-    val clusters = toks(decisionInputs.find(_._1 == "many small identical clusters").get._2)
-    assert(D.cappedPairsDistributed(clusters, 0.5, 100L).count() == 450L)
-    assert(D.cappedPairsLocal(clusters, 0.5, 100L, cap = 200).isEmpty)
-    operators.Caches.release()
-    spark.catalog.clearCache()
-  }
-
-  test("size-decided pack assignment: the driver fold equals the distributed scan on every input shape") {
-    import org.apache.spark.sql.functions._
-    val spark2 = spark
-    import spark2.implicits._
-    val P = operators.Packing
-    val budget = 16L
-    val counted = decisionInputs.map { case (name, d, _, _) =>
-      (name, d.select(col("doc_id"),
-        graft.functions.TextFunctions.tokenCount(col("text")).as("_nt")))
-    }
-    val nullNt = Seq((1L, Some(3L)), (2L, None), (3L, Some(5L))).toDF("doc_id", "_nt")
-    (counted :+ ("a null _nt" -> nullNt)).foreach { case (name, c) =>
-      val dist = P.packAssignmentsDistributed(c, budget)
-      val local = P.packAssignmentsLocal(c, budget, operators.Dedup.LocalSolveMaxRows)
-      // null text counts as a null _nt too: both must fall through
-      val falls = name == "a null _nt" || name == "all docs under 3 tokens"
-      assert(local.isEmpty == falls, s"$name: driver fold applies = ${local.isDefined}")
-      local.foreach(assertSameRows(_, dist, name))
-      assertSameRows(P.packAssignments(c, budget), dist, name)
-      if (name == "the sf0.01 corpus")
-        assert(dist.select("seq_id").distinct().count() > 1, s"$name: one sequence only")
-      operators.Caches.release()
-    }
-    assert(P.packAssignmentsLocal(counted.head._2, budget, cap = 2).isEmpty)
     spark.catalog.clearCache()
   }
 }
