@@ -192,15 +192,23 @@ object Packing {
     * the cap, and for a budget ≤ 0, a non-long `_nt` or a doc id that is
     * neither long nor string, [[packAssignmentsDistributed]] runs. */
   private[graft] def packAssignments(docCounts: DataFrame, budget: Long,
-                                     cap: Int = Sized.DriverRows): DataFrame = {
+                                     cap: Int = Sized.DriverRows): DataFrame =
+    packAssignmentsProbed(docCounts, budget, cap)._1
+
+  /** [[packAssignments]], with whether its input is empty when the probe
+    * ran and told (None when no probe ran). */
+  private def packAssignmentsProbed(docCounts: DataFrame, budget: Long,
+                                    cap: Int): (DataFrame, Option[Boolean]) = {
     import org.apache.spark.sql.types.{LongType, StringType}
     val d = orderKeyed(docCounts)
     val keyType = d.schema("doc_id").dataType
-    (if (budget <= 0 || d.schema("_nt").dataType != LongType ||
-         (keyType != LongType && keyType != StringType)) None
-     else Sized.rowsAtMost(d, cap))
-      .flatMap(packAssignmentsLocal(_, d, budget))
+    val probe =
+      if (budget <= 0 || cap <= 0 || d.schema("_nt").dataType != LongType ||
+          (keyType != LongType && keyType != StringType)) None
+      else Some(Sized.rowsAtMost(d, cap))
+    val assigned = probe.flatten.flatMap(packAssignmentsLocal(_, d, budget))
       .getOrElse(packAssignmentsDistributed(docCounts, budget))
+    (assigned, probe.map(_.exists(_.isEmpty)))
   }
 
   /** The `(doc_id, _ok, _nt)` rows both assignment paths order. */
@@ -643,21 +651,36 @@ object Packing {
     * publishing per-day reports would aim [[shardReport]] at the new
     * shard range only. */
   def appendShardsFor(delta: DataFrame, budget: Long, seqsPerShard: Long,
-                      path: String): DataFrame =
-    appendShardsAt(delta, budget, seqsPerShard, path,
-      probeMaxShard(delta.sparkSession, path))
-
-  /** [[appendShardsFor]] past an already-probed max shard id — the
-    * streaming twin's entry, which probed once to choose between
-    * writing and appending. */
-  private[graft] def appendShardsAt(delta: DataFrame, budget: Long,
-                                    seqsPerShard: Long, path: String,
-                                    maxShard: Long): DataFrame = {
+                      path: String): DataFrame = {
     require(budget > 0 && seqsPerShard > 0,
       s"need budget > 0 and seqsPerShard > 0, got $budget / $seqsPerShard")
-    val schema = writeShardRows(delta, budget, seqsPerShard,
-      (maxShard + 1L) * seqsPerShard, path, "append")
+    val seqBase = (probeMaxShard(delta.sparkSession, path) + 1L) * seqsPerShard
+    val schema = writeShardRows(delta, budget, seqsPerShard, seqBase, path, "append")
     shardReport(readShards(delta.sparkSession, path, schema))
+  }
+
+  /** The streaming twin's trigger: `batch` packed and written as the
+    * store's first shards ([[writeShardsFor]]) when the store holds none,
+    * else appended from the next whole-shard boundary
+    * ([[appendShardsFor]]); one listing decides which. Returns the
+    * store's read-back report, or None, with nothing written, when the
+    * pack's own probe saw no document — so an empty batch costs that
+    * probe and no emptiness job. */
+  private[graft] def ingestShards(batch: DataFrame, budget: Long,
+                                  seqsPerShard: Long, path: String): Option[DataFrame] = {
+    require(budget > 0 && seqsPerShard > 0,
+      s"need budget > 0 and seqsPerShard > 0, got $budget / $seqsPerShard")
+    val s = batch.sparkSession
+    val (assigned, empty) = packAssignmentsProbed(tokenCounts(batch), budget, Sized.DriverRows)
+    if (empty.getOrElse(batch.isEmpty)) None
+    else {
+      val (seqBase, mode) = storedMaxShard(s, path) match {
+        case Some(max) => ((max + 1L) * seqsPerShard, "append")
+        case None      => (0L, "overwrite")
+      }
+      val schema = writeAssignedRows(batch, assigned, seqsPerShard, seqBase, path, mode)
+      Some(shardReport(readShards(s, path, schema)))
+    }
   }
 
   /** Per-shard audit of a written shard set: sequence/doc/token mass

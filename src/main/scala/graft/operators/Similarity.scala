@@ -576,7 +576,7 @@ object Similarity {
       .select(col("query_id"), col("qv"), col("_qnorm"), col("cell")))
     val probedCells = probes.select(col("cell")).distinct()
       .collect().map(_.getLong(0)).sorted
-    val store = s.read.parquet(path)
+    val store = Tables.parquet(s, path)
       .select(col("cell").cast("long").as("cell"), col("vec_id"),
         col("embedding"), col("norm"))
       .filter(col("cell").isin(probedCells.map(Long.box): _*))

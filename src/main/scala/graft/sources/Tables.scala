@@ -1,6 +1,11 @@
 package graft.sources
 
+import java.nio.charset.StandardCharsets.UTF_8
+import java.util.concurrent.ConcurrentHashMap
+
 import org.apache.spark.sql.{functions, types, Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation, PartitioningAwareFileIndex}
 
 /** Parquet-backed table registry for the driver testdata layout
   * (`<dir>/<name>.parquet`, see TESTDATA.md).
@@ -32,7 +37,7 @@ object Tables {
   def apply(spark: SparkSession, dir: String, name: String): DataFrame = {
     if (name == "events")
       spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val df = spark.read.parquet(s"$dir/$name.parquet")
+    val df = parquet(spark, s"$dir/$name.parquet")
     if (name != "events") df
     else df.schema("ts").dataType match {
       case types.LongType =>
@@ -42,6 +47,62 @@ object Tables {
       case _ => df
     }
   }
+
+  /** Scan the parquet table at `path` under the schema inferred for its
+    * current files. The first read of a file set is
+    * `spark.read.parquet(path)`: Spark infers the schema with a footer
+    * job. Every later read of the same files, under the same parquet
+    * session confs, reads with that schema and launches no job; it pays
+    * only the file listing the scan makes anyway. The listing is also
+    * the check: a table rewritten at the same path lists other files,
+    * misses and is inferred again. Two threads that miss together both
+    * infer; no lock is held across the job. */
+  def parquet(spark: SparkSession, path: String): DataFrame = {
+    val key = path + "|" + spark.conf.getAll.toSeq
+      .filter { case (k, _) => ParquetConfs.exists(k.startsWith) }
+      .sorted.mkString(",")
+    Option(schemas.get(key))
+      .map { case (files, schema) => (files, spark.read.schema(schema).parquet(path)) }
+      .collect { case (files, df) if filesOf(df).contains(files) => df }
+      .getOrElse {
+        val df = spark.read.parquet(path)
+        filesOf(df).foreach(files => schemas.put(key, (files, df.schema)))
+        df
+      }
+  }
+
+  /** The session confs that change what parquet schema inference
+    * returns (`nanosAsLong`, binary-as-string, INT96 handling, …): all
+    * of them are part of a memoized schema's key. */
+  private val ParquetConfs = Seq("spark.sql.parquet.", "spark.sql.legacy.parquet.")
+
+  /** path + parquet confs → (file set, inferred schema). */
+  private val schemas = new ConcurrentHashMap[String, (String, types.StructType)]()
+
+  private def filesOf(read: DataFrame): Option[String] =
+    fileSet(read.queryExecution.analyzed).map(_._2)
+
+  /** The root paths of a plan over one file relation, with a digest of
+    * its leaf files (name, length, modification time) taken from the
+    * listing the relation already holds; None for any other plan. The
+    * key of both memos here. */
+  private def fileSet(plan: LogicalPlan): Option[(String, String)] =
+    plan.collectLeaves() match {
+      case Seq(lr: LogicalRelation) => lr.relation match {
+        case fs: HadoopFsRelation => fs.location match {
+          case index: PartitioningAwareFileIndex =>
+            val digest = java.security.MessageDigest.getInstance("SHA-256")
+            index.allFiles()
+              .map(f => s"${f.getPath}\u0000${f.getLen}\u0000${f.getModificationTime}\n")
+              .sorted.foreach(line => digest.update(line.getBytes(UTF_8)))
+            Some((index.rootPaths.mkString(","),
+              java.util.HexFormat.of().formatHex(digest.digest())))
+          case _ => None
+        }
+        case _ => None
+      }
+      case _ => None
+    }
 
   /** Register every table as a temp view (the engine's SQL entry point,
     * mirroring `createOrReplaceTempView` at spark_processing.py:41-42). */
@@ -83,50 +144,40 @@ object Tables {
     }.isEmpty
     if (!scanShaped) df
     else {
-      // memoize the probe by the file relation's root paths: a parquet
-      // scan's split count is projection-independent (splits are file
-      // byte ranges; column pruning doesn't change them), so every
-      // projection of one table shares a count and repeated query
-      // construction (bench reps, iterative operators) pays the ~0.3s
-      // planning + file-listing cost once per process, not per call.
-      // A coalesce-bearing plan must NOT share that entry (its count is
+      // memoize the probe per (split-relevant session confs, root paths)
+      // and file set: a parquet scan's split count is projection-
+      // independent (splits are file byte ranges; column pruning doesn't
+      // change them), so every projection of one table shares a count
+      // and repeated query construction (bench reps, iterative
+      // operators) pays the ~0.3s planning cost once per file set. Two
+      // sessions over one SparkContext can set different file-split
+      // confs, so the confs are in the key; a table rewritten at the
+      // same path lists other files and is probed again. A
+      // coalesce-bearing plan must NOT share that entry (its count is
       // the coalesce target, not the split count — a memo hit in either
-      // direction mis-decides the floor), so it probes unmemoized.
+      // direction mis-decides the floor), so it probes unmemoized. The
+      // memo ignores partition pruning a caller's filter might add:
+      // acceptable because it only gates an optimization, never
+      // semantics.
       val hasCoalesce = plan.exists(_.isInstanceOf[Repartition])
-      val rootKey = if (hasCoalesce) None else plan.collectLeaves() match {
-        case Seq(lr: org.apache.spark.sql.execution.datasources.LogicalRelation) =>
-          lr.relation match {
-            case fs: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
-              // key by (split-relevant session confs, root paths): two
-              // sessions over one SparkContext can set different file-
-              // split confs, and a bare path key would hand the second
-              // session the first one's count — a silently wrong floor
-              // decision (round-5 judge finding)
-              Some(splitConfFingerprint(df.sparkSession) + "@" +
-                fs.location.rootPaths.mkString(","))
-            case _ => None
-          }
-        case _ => None
+      val memoKey = if (hasCoalesce) None else fileSet(plan).map {
+        case (roots, files) => (splitConfFingerprint(df.sparkSession) + "@" + roots, files)
       }
-      val parts = rootKey match {
-        case Some(k) => partsMemo.getOrElseUpdate(k, df.rdd.getNumPartitions)
-        case None    => df.rdd.getNumPartitions
+      val parts = memoKey match {
+        case Some((key, files)) =>
+          Option(partsMemo.get(key)).collect { case (`files`, n) => n }.getOrElse {
+            val n = df.rdd.getNumPartitions
+            partsMemo.put(key, (files, n))
+            n
+          }
+        case None => df.rdd.getNumPartitions
       }
       spreadIf(df, parts, keys)
     }
   }
 
-  // CONTRACT for the split-count memo: assumes the table files are
-  // immutable while the process lives (true for the driver's testdata
-  // layout and any sane warehouse); a pipeline that rewrites a table
-  // in-process must call [[resetSplitMemo]] or the stale count silently
-  // mis-decides the floor. The count is keyed by the session's file-
-  // split confs (so sibling sessions with different maxPartitionBytes
-  // don't inherit each other's counts) but NOT by any partition-pruning
-  // a caller's filter might add — acceptable because it only gates an
-  // optimization, never semantics.
-  private val partsMemo =
-    scala.collection.concurrent.TrieMap.empty[String, Int]
+  /** (split confs, root paths) → (file set, split count). */
+  private val partsMemo = new ConcurrentHashMap[String, (String, Int)]()
 
   /** The session confs that determine a parquet scan's split count (file
     * packing: FilePartition.getFilePartitions) plus the parallelism the
@@ -138,9 +189,6 @@ object Tables {
       spark.conf.getOption("spark.sql.files.minPartitionNum").getOrElse(""),
       spark.sparkContext.defaultParallelism.toString
     ).mkString("|")
-
-  /** Drop memoized split counts (for in-process table rewrites). */
-  def resetSplitMemo(): Unit = partsMemo.clear()
 
   /** Number of memoized split counts (spec surface: pins that the
     * root-path key extraction engages on real parquet scans — if the

@@ -202,10 +202,9 @@ object CentroidDrift {
       val fs = new org.apache.hadoop.fs.Path(dir)
         .getFileSystem(spark.sparkContext.hadoopConfiguration)
       snaps.dropRight(1).foreach { case (_, p) => fs.delete(p, true) }
-      // re-project to the caller's schema order: parquet round-trips
-      // columns by name
-      spark.read.parquet(snaps.last._2.toString)
-        .select(schema.fieldNames.map(col).toIndexedSeq: _*).collect()
+      // read under the schema the snapshot was written with: no
+      // footer inference, columns in the caller's order
+      spark.read.schema(schema).parquet(snaps.last._2.toString).collect()
     }
   }
 }

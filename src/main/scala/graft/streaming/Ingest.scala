@@ -15,18 +15,18 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * Two shapes:
   *   - [[probe]]: pure enrichment — dedup verdicts, scrubs, scores and
   *     contamination hits against a static index (`f` closes over it);
-  *   - [[once]]: `f` writes into a store at `path` and reports from it,
-  *     so a replayed batch must not apply twice. The last applied batch
-  *     id is persisted next to the store (`_graft_last_batch`,
-  *     underscore-prefixed so Spark's parquet reader ignores it),
-  *     written atomically only after `f`'s rows are on disk;
-  *     [[applyOnce]] skips any `batchId <=` the committed one. A crash
-  *     between the write and the marker re-applies that batch on replay
-  *     — exactly-once would need the store write and the marker in one
-  *     atomic commit (a table format's job, not a directory's) — but the
-  *     window is the marker write alone, and every other replay path
-  *     (the common one: sink failure after a complete trigger) is a
-  *     no-op.
+  *   - [[once]]: `f` writes a non-empty batch into a store at `path`
+  *     and reports from it, so a replayed batch must not apply twice.
+  *     The last applied batch id is persisted next to the store
+  *     (`_graft_last_batch`, underscore-prefixed so Spark's parquet
+  *     reader ignores it), written atomically only after `f`'s rows are
+  *     on disk; [[applyOnce]] skips any `batchId <=` the committed one.
+  *     A crash between the write and the marker re-applies that batch
+  *     on replay — exactly-once would need the store write and the
+  *     marker in one atomic commit (a table format's job, not a
+  *     directory's) — but the window is the marker write alone, and
+  *     every other replay path (the common one: sink failure after a
+  *     complete trigger) is a no-op.
   */
 object Ingest {
 
@@ -39,24 +39,26 @@ object Ingest {
   /** Run `f` on every micro-batch of `feed` at most once per batch id
     * under the store at `path` ([[applyOnce]]); each APPLIED batch's
     * rows go to `sink` with the batch id. */
-  def once(feed: DataFrame, path: String, f: DataFrame => DataFrame,
+  def once(feed: DataFrame, path: String, f: DataFrame => Option[DataFrame],
            sink: (DataFrame, Long) => Unit): StreamingQuery =
     start(feed)((mb, batchId) =>
       applyOnce(mb, batchId, path, f).foreach(sink(_, batchId)))
 
   /** One [[once]] trigger, extracted so the replay path is spec-testable
     * without a restarted stream: `f(microBatch)` unless its id is
-    * already committed at `path` or the batch is empty; the marker
-    * commits strictly after `f` returns. None when the batch was
-    * skipped. The marker (a file read) is checked before emptiness (a
-    * Spark job), so a replayed batch costs no job. */
+    * already committed at `path`. `f` answers None for a batch it did
+    * not apply (an empty one): it decides emptiness from work it does
+    * anyway, so no separate emptiness job runs. The marker commits
+    * strictly after `f` applied a batch. None when the batch was
+    * skipped. The marker is a file read, so a replayed batch costs no
+    * job. */
   def applyOnce(microBatch: DataFrame, batchId: Long, path: String,
-                f: DataFrame => DataFrame): Option[DataFrame] =
-    if (batchId <= committedBatch(path) || microBatch.isEmpty) None
+                f: DataFrame => Option[DataFrame]): Option[DataFrame] =
+    if (batchId <= committedBatch(path)) None
     else {
       val out = f(microBatch)
-      commitBatch(path, batchId)
-      Some(out)
+      if (out.isDefined) commitBatch(path, batchId)
+      out
     }
 
   private def start(feed: DataFrame)(

@@ -50,11 +50,17 @@ object QuotaScore {
                  k: Int, salts: Int): Option[DataFrame] =
     Ingest.applyOnce(microBatch, batchId, path, append(_, path, k, salts))
 
+  /** Score and append a non-empty batch, then report from the store read
+    * under the schema just written: no footer inference per trigger. */
   private def append(batch: DataFrame, path: String, k: Int,
-                     salts: Int): DataFrame = {
-    scoreRows(batch).write.mode("append").parquet(path)
-    report(batch.sparkSession, path, k, salts)
-  }
+                     salts: Int): Option[DataFrame] =
+    if (batch.isEmpty) None
+    else {
+      val scored = scoreRows(batch)
+      scored.write.mode("append").parquet(path)
+      Some(Sampling.modelQuotaScored(
+        batch.sparkSession.read.schema(scored.schema).parquet(path), k, salts))
+    }
 
   /** The stateless per-row scoring projection — identical to the
     * columns [[Sampling.modelQuotaFor]] derives in-plan, so the store's

@@ -35,8 +35,10 @@ import graft.operators.Packing
   * Scale/trigger cost: the pack and the write scale with the
   * MICRO-BATCH (the packer's driver solve under its cap, a text join
   * and one shard_id shuffle), and the boundary probe is an
-  * O(#shard directories) driver listing. The read-back REPORT does
-  * not: it certifies the whole store, so it reads every shard each
+  * O(#shard directories) driver listing. An empty batch stops at the
+  * packer's probe, which tells it has no document: nothing is written
+  * and no marker commits. The read-back REPORT does not scale with the
+  * batch: it certifies the whole store, so it reads every shard each
   * trigger, and trigger latency grows with store size through it (a
   * deployment publishing per-trigger reports would aim
   * [[Packing.shardReport]] at the new shards only).
@@ -48,23 +50,12 @@ object ShardAppend {
     * (q103's exact shape) goes to `sink` with the batch id. */
   def start(docs: DataFrame, path: String, budget: Long, seqsPerShard: Long,
             sink: (DataFrame, Long) => Unit): StreamingQuery =
-    Ingest.once(docs, path, pack(_, path, budget, seqsPerShard), sink)
+    Ingest.once(docs, path, Packing.ingestShards(_, budget, seqsPerShard, path), sink)
 
   /** One trigger ([[Ingest.applyOnce]]): the read-back report when the
     * batch applied, None when it was empty or already committed. */
   def applyBatch(microBatch: DataFrame, batchId: Long, path: String,
                  budget: Long, seqsPerShard: Long): Option[DataFrame] =
     Ingest.applyOnce(microBatch, batchId, path,
-      pack(_, path, budget, seqsPerShard))
-
-  /** A batch over a store holding no shard creates it
-    * ([[Packing.writeShardsFor]]); every later one appends from the
-    * next whole-shard boundary ([[Packing.appendShardsFor]]). One
-    * listing decides both. */
-  private def pack(batch: DataFrame, path: String, budget: Long,
-                   seqsPerShard: Long): DataFrame =
-    Packing.storedMaxShard(batch.sparkSession, path) match {
-      case Some(max) => Packing.appendShardsAt(batch, budget, seqsPerShard, path, max)
-      case None => Packing.writeShardsFor(batch, budget, seqsPerShard, path)
-    }
+      Packing.ingestShards(_, budget, seqsPerShard, path))
 }

@@ -7,7 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.ml._
 
 /** Specs for the MLlib-gap approximations (SURVEY M7/M12/M22/M26/M27). */
-class ApproxSpec extends AnyFunSuite {
+class ApproxSpec extends AnyFunSuite with TempDirs {
   import TestSpark._
 
   // concentric-circles data: NOT linearly separable, RBF-separable —
@@ -225,7 +225,7 @@ class ApproxSpec extends AnyFunSuite {
   test("Q-Q scatter renders deterministically via the plot sink (M27/S15)") {
     val normal = spark.range(2000).select(randn(52).as("v"))
     val qq = Approx.qqNormal(normal, "v")
-    val dir = java.nio.file.Files.createTempDirectory("graft_qq").toString
+    val dir = tempDir("graft_qq").toString
     val f1 = graft.sources.PlotSink.scatter(qq, "theoretical_q", "sample_q",
       s"$dir/qq1.png", refLine = true)
     val f2 = graft.sources.PlotSink.scatter(qq, "theoretical_q", "sample_q",

@@ -12,7 +12,7 @@ import org.json4s.jackson.JsonMethods
   * snapshots, and the suspect list — so the shape can't silently drift
   * back to medians-only. No SparkSession needed: renderJson is pure.
   */
-class BenchJsonSpec extends AnyFunSuite {
+class BenchJsonSpec extends AnyFunSuite with TempDirs {
 
   private val clean = Bench.QueryTimes("q01", Vector(0.50, 0.52, 0.48))
   // 16x rep spread, the r5 q42 pattern: one rep starved by external load
@@ -365,7 +365,7 @@ class BenchJsonSpec extends AnyFunSuite {
   }
 
   test("committedBoardCal parses the compact artifact's cal and fails open otherwise") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_cal")
+    val dir = tempDir("graft_cal")
     val p = dir.resolve("bench_compact.json")
     java.nio.file.Files.writeString(p,
       """{"metric":"total","unit":"sec","queries":{"q01":0.5},""" +
@@ -379,7 +379,7 @@ class BenchJsonSpec extends AnyFunSuite {
   }
 
   test("committedBoardQueries parses the compact artifact and fails open otherwise") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_board")
+    val dir = tempDir("graft_board")
     val p = dir.resolve("bench_compact.json")
     java.nio.file.Files.writeString(p,
       """{"metric":"total","unit":"sec","queries":{"q01":0.5,"q02":1.25},""" +

@@ -12,7 +12,7 @@ import graft.sources.EntityIO
 /** E-commerce layer specs: generator invariants (SURVEY §1.2 schema
   * contracts), the three entry-point pipelines, JSON round-trips in both
   * layouts, and the degenerate CLV mode. */
-class EcommerceSpec extends AnyFunSuite {
+class EcommerceSpec extends AnyFunSuite with TempDirs {
   import TestSpark._
 
   private lazy val cats = DataGen.categories(spark).cache()
@@ -72,7 +72,7 @@ class EcommerceSpec extends AnyFunSuite {
 
   test("cart_contents is a true MapType and JSON round-trips both layouts") {
     assert(Schemas.sessions("cart_contents").dataType.isInstanceOf[MapType])
-    val dir = java.nio.file.Files.createTempDirectory("graft_json").toString
+    val dir = tempDir("graft_json").toString
     // JSONL layout
     EntityIO.writeJsonl(sess, s"$dir/sessions_jsonl")
     val back = EntityIO.readEntity(spark, s"$dir/sessions_jsonl", "sessions")
@@ -150,7 +150,7 @@ class EcommerceSpec extends AnyFunSuite {
 
   test("S15 plot sink renders an aggregated result to a deterministic PNG") {
     val trend = operators.Relational.monthlyRevenue(spark, sf) // q12 feed
-    val dir = java.nio.file.Files.createTempDirectory("graft_plot").toString
+    val dir = tempDir("graft_plot").toString
     val f1 = graft.sources.PlotSink.barChart(trend, "month", "revenue", s"$dir/a.png")
     val f2 = graft.sources.PlotSink.barChart(trend, "month", "revenue", s"$dir/b.png")
     assert(f1.exists() && f1.length() > 0)
@@ -179,7 +179,7 @@ class EcommerceSpec extends AnyFunSuite {
 
   test("S15 line chart renders the monthly trend (visualizations.py's plt.plot panel)") {
     val trend = operators.Relational.monthlyRevenue(spark, sf) // q12 feed
-    val dir = java.nio.file.Files.createTempDirectory("graft_line").toString
+    val dir = tempDir("graft_line").toString
     val f1 = graft.sources.PlotSink.lineChart(trend, "month", "revenue", s"$dir/a.png")
     val f2 = graft.sources.PlotSink.lineChart(trend, "month", "revenue", s"$dir/b.png")
     assert(f1.exists() && f1.length() > 0)

@@ -5,7 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Specs for the training-data pipeline operators (dedup, similarity,
   * text analysis) — the rows-only queries get their semantic checks here
   * since they have no DuckDB oracle. */
-class PipelineOpsSpec extends AnyFunSuite {
+class PipelineOpsSpec extends AnyFunSuite with TempDirs {
   import TestSpark._
 
   test("exact dedup: copies partition the corpus") {
@@ -486,7 +486,7 @@ class PipelineOpsSpec extends AnyFunSuite {
       (1L, "a b c"), (2L, "d e"), (3L, "f"), (4L, "g h i j"),
       (5L, "k"), (6L, "l m"), (7L, "n o p"), (8L, "q")
     ).toDF("doc_id", "text")
-    val base = java.nio.file.Files.createTempDirectory("graft_shards_spec")
+    val base = tempDir("graft_shards_spec")
     val p1 = base.resolve("w1").toString
     val rep1 = operators.Packing.writeShardsFor(docs, budget = 4,
       seqsPerShard = 2, p1).collect()
@@ -558,7 +558,7 @@ class PipelineOpsSpec extends AnyFunSuite {
     import graft.operators.{Bpe, Packing}
     val docs = Seq((1L, "ab cd ab"), (2L, "ef ab"), (3L, "cd cd gh"))
       .toDF("doc_id", "text")
-    val base = java.nio.file.Files.createTempDirectory("graft_shards_bpe")
+    val base = tempDir("graft_shards_bpe")
     // SATURATING merge table (every corpus word fully merged): subword
     // counts ≡ whitespace counts, so the written artifact must be
     // report-identical to the whitespace shard writer's — the BpeSpec
@@ -633,7 +633,7 @@ class PipelineOpsSpec extends AnyFunSuite {
     val day2 = Seq(
       (11L, "r s t"), (12L, "u v"), (13L, "w x y z")
     ).toDF("doc_id", "text")
-    val p = java.nio.file.Files.createTempDirectory("graft_shards_incr")
+    val p = tempDir("graft_shards_incr")
       .resolve("store").toString
     val rep1 = operators.Packing.writeShardsFor(day1, budget = 4,
       seqsPerShard = 2, p).collect()

@@ -11,7 +11,7 @@ import graft.operators.{Packing, TextOps}
   * shard report, each pinned against the relational form it replaced.
   * The reference forms live here, in test code only: they are the
   * definition the faster paths must keep reproducing row for row. */
-class ReferenceFormsSpec extends AnyFunSuite {
+class ReferenceFormsSpec extends AnyFunSuite with TempDirs {
   import TestSpark._
   import spark.implicits._
 
@@ -191,7 +191,7 @@ class ReferenceFormsSpec extends AnyFunSuite {
   }
 
   test("shard-store listing probe ≡ the partition-column max: fresh, appended, and debris-holding stores") {
-    val root = java.nio.file.Files.createTempDirectory("graft_shard_probe")
+    val root = tempDir("graft_shard_probe")
     val p = root.resolve("store").toString
     def partitionMax(): Long = {
       val m = spark.read.parquet(p).agg(max(col("shard_id").cast("long"))).head
@@ -223,7 +223,7 @@ class ReferenceFormsSpec extends AnyFunSuite {
   }
 
   test("shard-store listing probe: a missing or shard-less store still fails the append") {
-    val root = java.nio.file.Files.createTempDirectory("graft_shard_empty")
+    val root = tempDir("graft_shard_empty")
     val delta = Seq((1L, "a b")).toDF("doc_id", "text")
     val missing = root.resolve("missing").toString
     val empty = root.resolve("empty")
@@ -253,7 +253,7 @@ class ReferenceFormsSpec extends AnyFunSuite {
     assert(got === Relational.shardReport(frame).collect().map(_.toSeq).toSeq)
     assert(got.map(_(1)) === Seq(2L, 2L, 0L), s"n_seqs per shard: $got")
     // and over a store read back from disk
-    val p = java.nio.file.Files.createTempDirectory("graft_shard_report")
+    val p = tempDir("graft_shard_report")
       .resolve("store").toString
     val docs = (1L to 20L).map(i => (i, (0L to i % 5L).map(j => s"w$j").mkString(" ")))
       .toDF("doc_id", "text")
@@ -265,7 +265,7 @@ class ReferenceFormsSpec extends AnyFunSuite {
   }
 
   test("a replayed batch is skipped before the micro-batch is evaluated") {
-    val path = java.nio.file.Files.createTempDirectory("graft_replay_nojob")
+    val path = tempDir("graft_replay_nojob")
       .resolve("store").toString
     val ok = Seq((1L, "alpha bravo")).toDF("doc_id", "text")
     assert(streaming.ShardAppend.applyBatch(ok, 0L, path, 512L, 8L).isDefined)
@@ -274,7 +274,24 @@ class ReferenceFormsSpec extends AnyFunSuite {
     val poisoned = spark.range(1).select(
       raise_error(lit("replayed batch was evaluated")).cast("long").as("doc_id"),
       lit("x").as("text"))
-    assert(streaming.Ingest.applyOnce(poisoned, 0L, path, (df: DataFrame) => df).isEmpty)
+    assert(streaming.Ingest.applyOnce(poisoned, 0L, path, (df: DataFrame) => Some(df)).isEmpty)
+    operators.Caches.release()
+  }
+
+  test("an empty shard-append batch stops at the packer's probe: no write, no marker") {
+    val path = tempDir("graft_empty_batch").resolve("store").toString
+    val empty = spark.range(0, 8, 1, 2).filter(col("id") < 0)
+      .select(col("id").as("doc_id"), lit("x").as("text"))
+    val (out, jobs) = jobsOf(streaming.ShardAppend.applyBatch(empty, 0L, path, 512L, 8L))
+    assert(out.isEmpty)
+    assert(streaming.Ingest.committedBatch(path) === -1L)
+    assert(!new java.io.File(path).exists(), "an empty batch wrote the store")
+    // the probe is the only job: no separate emptiness check runs
+    assert(jobs.nonEmpty && jobs.forall(_.contains("Packing.scala:")), jobs)
+    // the next batch with documents still applies under batch id 0
+    val ok = Seq((1L, "alpha bravo")).toDF("doc_id", "text")
+    assert(streaming.ShardAppend.applyBatch(ok, 0L, path, 512L, 8L).isDefined)
+    assert(streaming.Ingest.committedBatch(path) === 0L)
     operators.Caches.release()
   }
 }

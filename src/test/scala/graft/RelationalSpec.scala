@@ -6,6 +6,39 @@ import org.scalatest.funsuite.AnyFunSuite
 object TestSpark {
   lazy val spark: SparkSession = Sessions.local(4)
   val sf = "/root/testdata/sf0.001"
+
+  /** `body`'s result and the names of the stages of the Spark jobs it
+    * launched (a stage's name is its call site), seen by a listener. */
+  def jobsOf[T](body: => T): (T, Seq[String]) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val group = "jobsOf-" + java.util.UUID.randomUUID()
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val g = Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull
+        e.stageInfos.foreach(st => seen.add((g, st.name)))
+      }
+    }
+    def inGroup[R](g: String)(r: => R): R = {
+      sc.setJobGroup(g, g)
+      try r finally sc.clearJobGroup()
+    }
+    sc.addSparkListener(listener)
+    try {
+      val out = inGroup(group)(body)
+      // the listener bus delivers in order: once the marker job is seen,
+      // every earlier job start has been delivered too
+      inGroup(group + "-marker")(spark.range(1).count())
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!seen.stream().anyMatch(_._1 == group + "-marker") &&
+             System.nanoTime() < deadline)
+        Thread.sleep(20)
+      val jobs = seen.toArray(Array.empty[(String, String)]).toSeq
+      assert(jobs.exists(_._1 == group + "-marker"), "marker job never seen")
+      (out, jobs.filter(_._1 == group).map(_._2))
+    } finally sc.removeSparkListener(listener)
+  }
 }
 
 class RelationalSpec extends AnyFunSuite {

@@ -7,7 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * 100-TB design relies on, asserted against the actual physical plans —
   * not just "it returns rows".
   */
-class ScaleSpec extends AnyFunSuite {
+class ScaleSpec extends AnyFunSuite with TempDirs {
   import TestSpark._
 
   private def plan(df: org.apache.spark.sql.DataFrame): String =
@@ -75,22 +75,21 @@ class ScaleSpec extends AnyFunSuite {
   }
 
   test("Tables.spread memoizes the split-count probe per parquet root path") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_memo").toString
+    val dir = tempDir("graft_memo").toString
     spark.range(100).toDF("id").write.mode("overwrite")
       .parquet(s"$dir/t.parquet")
-    graft.sources.Tables.resetSplitMemo()
+    val before = graft.sources.Tables.splitMemoSize
     val scan = spark.read.parquet(s"$dir/t.parquet")
     graft.sources.Tables.spread(scan.select(col("id")))
-    assert(graft.sources.Tables.splitMemoSize == 1,
+    assert(graft.sources.Tables.splitMemoSize == before + 1,
       "a parquet scan's probe must be memoized by its root path")
     // a second projection of the same table reuses the entry
     graft.sources.Tables.spread(scan.filter(col("id") > 10))
-    assert(graft.sources.Tables.splitMemoSize == 1)
+    assert(graft.sources.Tables.splitMemoSize == before + 1)
     // a coalesce-bearing plan must neither read nor write the memo:
     // its count is the coalesce target, not the table's split count
     graft.sources.Tables.spread(scan.coalesce(1))
-    assert(graft.sources.Tables.splitMemoSize == 1)
-    graft.sources.Tables.resetSplitMemo()
+    assert(graft.sources.Tables.splitMemoSize == before + 1)
   }
 
   test("Tables.spread memo keys on session split confs — no stale floor across sessions") {
@@ -99,30 +98,29 @@ class ScaleSpec extends AnyFunSuite {
     // maxPartitionBytes is very different from the default's, and a
     // shared memo entry would hand one session the other's floor
     // decision (round-5 judge finding: memo was keyed by path alone)
-    val dir = java.nio.file.Files.createTempDirectory("graft_memo2").toString
+    val dir = tempDir("graft_memo2").toString
     spark.range(50000)
       .select(col("id"), md5(col("id").cast("string")).as("s"))
       .write.mode("overwrite").parquet(s"$dir/t.parquet")
-    graft.sources.Tables.resetSplitMemo()
+    val before = graft.sources.Tables.splitMemoSize
     val s1 = spark.newSession()
     val s2 = spark.newSession()
     s2.conf.set("spark.sql.files.maxPartitionBytes", "16384")
     s2.conf.set("spark.sql.files.openCostInBytes", "0")
     val out1 = graft.sources.Tables.spread(s1.read.parquet(s"$dir/t.parquet"))
-    assert(graft.sources.Tables.splitMemoSize == 1)
+    assert(graft.sources.Tables.splitMemoSize == before + 1)
     val out2 = graft.sources.Tables.spread(s2.read.parquet(s"$dir/t.parquet"))
-    assert(graft.sources.Tables.splitMemoSize == 2,
+    assert(graft.sources.Tables.splitMemoSize == before + 2,
       "a session with different split confs must not inherit another session's count")
     // behavior check: the default-conf scan is one split → floored up to
     // defaultParallelism; the 16KB-split scan is already wide → untouched
     assert(out1.rdd.getNumPartitions == spark.sparkContext.defaultParallelism)
     assert(out2.rdd.getNumPartitions > spark.sparkContext.defaultParallelism,
       "16KB maxPartitionBytes should split the scan wider than the core count")
-    graft.sources.Tables.resetSplitMemo()
   }
 
   test("date-partitioned write enables partition pruning at the scan") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_part").toString
+    val dir = tempDir("graft_part").toString
     val ord = graft.sources.Tables(spark, sf, "orders")
       .withColumn("order_year", year(col("o_orderdate")))
     graft.sources.EntityIO.writeParquet(ord, s"$dir/orders_p", Seq("order_year"))
@@ -139,7 +137,7 @@ class ScaleSpec extends AnyFunSuite {
 
   test("nested-schema pruning reads only geo_data.state from a struct") {
     val users = gen.DataGen.users(spark, 100)
-    val dir = java.nio.file.Files.createTempDirectory("graft_nested").toString
+    val dir = tempDir("graft_nested").toString
     users.write.mode("overwrite").parquet(s"$dir/users")
     val scan = spark.read.parquet(s"$dir/users").select(col("geo_data.state"))
     val p = plan(scan)
@@ -155,7 +153,7 @@ class ScaleSpec extends AnyFunSuite {
     // RUNTIME via a DPP subquery (a static PartitionFilters entry can't
     // know them; reading all partitions is the difference between
     // scanning 1 year and scanning 30)
-    val dir = java.nio.file.Files.createTempDirectory("graft_dpp").toString
+    val dir = tempDir("graft_dpp").toString
     val ord = graft.sources.Tables(spark, sf, "orders")
       .withColumn("order_year", year(col("o_orderdate")))
     graft.sources.EntityIO.writeParquet(ord, s"$dir/orders_p", Seq("order_year"))
@@ -367,8 +365,9 @@ class ScaleSpec extends AnyFunSuite {
       pmod(xxhash64(col("id")), lit(200)).as("x"),
       pmod(xxhash64(col("id") + 777), lit(200)).as("y"),
       col("id").as("payload"))
-    val naive = "/tmp/graft_zorder_naive"
-    val zpath = "/tmp/graft_zorder_z"
+    val dir = tempDir("graft_zorder").toString
+    val naive = s"$dir/naive"
+    val zpath = s"$dir/z"
     df.repartition(8).write.mode("overwrite").parquet(naive)
     ZOrderLayout.writeZOrdered(df, zpath, col("x"), col("y"), numFiles = 8)
     // a 1/64-area box query: naive layout overlaps every row group, the
@@ -390,7 +389,7 @@ class ScaleSpec extends AnyFunSuite {
 
   test("ORC round-trips with pushdown like parquet") {
     import org.apache.spark.sql.functions._
-    val dir = java.nio.file.Files.createTempDirectory("graft_orc").toString
+    val dir = tempDir("graft_orc").toString
     val docs = graft.sources.Tables(spark, sf, "documents")
     graft.sources.EntityIO.writeOrc(docs, s"$dir/docs")
     val back = graft.sources.EntityIO.readOrc(spark, s"$dir/docs")

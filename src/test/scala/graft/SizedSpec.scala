@@ -261,46 +261,23 @@ class SizedSpec extends AnyFunSuite {
   }
 
   test("Sized: a cap of 0 launches no probe job; a probe job keeps its caller's call site") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     val sc = spark.sparkContext
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        e.stageInfos.foreach(st => seen.add((e.properties.getProperty("spark.jobGroup.id"), st.name)))
-    }
-    def inGroup[T](group: String)(body: => T): T = {
-      sc.setJobGroup(group, group)
-      try body finally sc.clearJobGroup()
-    }
     val frame = spark.range(0, 10, 1, 2).toDF("id")
-    sc.addSparkListener(listener)
-    try {
-      inGroup("cap0") {
-        assert(Sized.rowsAtMost(frame, 0).isEmpty)
-        assert(!Sized.fits(frame, 0))
-      }
-      inGroup("probe") {
-        assert(Sized.rowsAtMost(frame, 9).isEmpty)
-        assert(Sized.rowsAtMost(frame, 10).map(_.length).contains(10))
-        assert(Sized.fits(frame, 10) && !Sized.fits(frame, 9))
-      }
-      inGroup("preset") {
-        sc.setCallSite("set by the caller")
-        try assert(Sized.fits(frame, 10)) finally sc.clearCallSite()
-      }
-      // the listener bus delivers in order: once the marker job is seen,
-      // every earlier job start has been delivered too
-      inGroup("marker")(frame.count())
-      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-      while (!seen.stream().anyMatch(_._1 == "marker") && System.nanoTime() < deadline)
-        Thread.sleep(20)
-      val jobs = seen.toArray(Array.empty[(String, String)]).toSeq
-      assert(jobs.exists(_._1 == "marker"), "marker job never seen")
-      assert(!jobs.exists(_._1 == "cap0"), jobs)
-      val probes = jobs.filter(_._1 == "probe")
-      assert(probes.nonEmpty && probes.forall(_._2.contains("SizedSpec.scala:")), probes)
-      val preset = jobs.filter(_._1 == "preset")
-      assert(preset.nonEmpty && preset.forall(_._2 == "set by the caller"), preset)
-    } finally sc.removeSparkListener(listener)
+    val (_, cap0) = jobsOf {
+      assert(Sized.rowsAtMost(frame, 0).isEmpty)
+      assert(!Sized.fits(frame, 0))
+    }
+    assert(cap0.isEmpty, cap0)
+    val (_, probes) = jobsOf {
+      assert(Sized.rowsAtMost(frame, 9).isEmpty)
+      assert(Sized.rowsAtMost(frame, 10).map(_.length).contains(10))
+      assert(Sized.fits(frame, 10) && !Sized.fits(frame, 9))
+    }
+    assert(probes.nonEmpty && probes.forall(_.contains("SizedSpec.scala:")), probes)
+    val (_, preset) = jobsOf {
+      sc.setCallSite("set by the caller")
+      try assert(Sized.fits(frame, 10)) finally sc.clearCallSite()
+    }
+    assert(preset.nonEmpty && preset.forall(_ == "set by the caller"), preset)
   }
 }

@@ -7,7 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.Multimodal
 import graft.streaming.{Ingest, NearDup, Sessionize}
 
-class StreamingMultimodalSpec extends AnyFunSuite {
+class StreamingMultimodalSpec extends AnyFunSuite with TempDirs {
   import TestSpark._
   import spark.implicits._
 
@@ -174,7 +174,7 @@ class StreamingMultimodalSpec extends AnyFunSuite {
 
   test("streaming: watermarked hourly rollup matches the batch rollup") {
     // bounded parquet dir as a streaming source
-    val dir = java.nio.file.Files.createTempDirectory("graft_stream").toString
+    val dir = tempDir("graft_stream").toString
     val events = graft.sources.Tables(spark, sf, "events")
     events.write.mode("overwrite").parquet(s"$dir/events")
     val stream = spark.readStream.schema(events.schema).parquet(s"$dir/events")
@@ -199,7 +199,7 @@ class StreamingMultimodalSpec extends AnyFunSuite {
     * over it — one micro-batch per chunk file, the "any chunking" side
     * of every duality spec below. */
   private def chunkedFeed(docs: DataFrame, chunks: Int, tag: String): DataFrame = {
-    val dir = java.nio.file.Files.createTempDirectory(s"graft_$tag").toString
+    val dir = tempDir(s"graft_$tag").toString
     docs.withColumn("_chunk", pmod(col("doc_id"), lit(chunks)))
       .write.partitionBy("_chunk").mode("overwrite").parquet(s"$dir/feed")
     spark.readStream.schema(spark.read.parquet(s"$dir/feed").schema)
@@ -578,7 +578,7 @@ class StreamingMultimodalSpec extends AnyFunSuite {
     // boundary — the ingest twin of the batch two-day shape
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val ms = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, String)]
-    val path = java.nio.file.Files.createTempDirectory("graft_shard_stream")
+    val path = tempDir("graft_shard_stream")
       .resolve("store").toString
     val reports = scala.collection.mutable.ArrayBuffer
       .empty[(Long, Seq[Seq[Any]])]
@@ -650,7 +650,7 @@ class StreamingMultimodalSpec extends AnyFunSuite {
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val ms = org.apache.spark.sql.execution.streaming.runtime
       .MemoryStream[(Long, String, String)]
-    val path = java.nio.file.Files.createTempDirectory("graft_quota_stream")
+    val path = tempDir("graft_quota_stream")
       .resolve("store").toString
     val reports = scala.collection.mutable.ArrayBuffer
       .empty[(Long, Seq[Seq[Any]])]
@@ -702,7 +702,7 @@ class StreamingMultimodalSpec extends AnyFunSuite {
     // failure or restart; applyBatch must skip a batch id the store's
     // marker already committed, or replay duplicates rows and breaks
     // the mass-conservation invariant the twin spec pins.
-    val path = java.nio.file.Files.createTempDirectory("graft_shard_replay")
+    val path = tempDir("graft_shard_replay")
       .resolve("store").toString
     val b0 = Seq((1L, "alpha bravo"), (2L, "charlie delta")).toDF("doc_id", "text")
     val b1 = Seq((3L, "echo foxtrot"), (4L, "golf hotel")).toDF("doc_id", "text")
@@ -806,7 +806,7 @@ class StreamingMultimodalSpec extends AnyFunSuite {
 
   test("streaming centroid drift: windowed sums ≡ batch, drift cosine sane") {
     import graft.streaming.CentroidDrift
-    val dir = java.nio.file.Files.createTempDirectory("graft_drift").toString
+    val dir = tempDir("graft_drift").toString
     // embeddings spread across 3 hours by vec_id; +1 flush row far past
     // the watermark horizon so every real window closes and emits
     val base = graft.sources.Tables(spark, sf, "embeddings")
@@ -872,7 +872,7 @@ class StreamingMultimodalSpec extends AnyFunSuite {
 
   test("drift alerter state survives a restart via the persisted snapshots") {
     import graft.streaming.CentroidDrift
-    val dir = java.nio.file.Files.createTempDirectory("graft_drift_state").toString
+    val dir = tempDir("graft_drift_state").toString
     val t0 = 1700002800L
     def ts(h: Int) = new java.sql.Timestamp((t0 + h * 3600L) * 1000L)
     val w0 = Seq((1, ts(0), Seq(1.0, 0.0))).toDF("label", "win_start", "centroid")
@@ -916,7 +916,7 @@ class StreamingMultimodalSpec extends AnyFunSuite {
 
   test("streaming drift alert: injected spike fires exactly one alert") {
     import graft.streaming.CentroidDrift
-    val dir = java.nio.file.Files.createTempDirectory("graft_drift_alert").toString
+    val dir = tempDir("graft_drift_alert").toString
     val t0 = 1700002800L // hour-aligned
     def rows(win: Int, vs: Seq[Array[Float]]): Seq[(Int, Array[Float], Long)] =
       vs.zipWithIndex.map { case (v, i) => (1, v, t0 + win * 3600L + 60L + i * 60L) }
@@ -954,7 +954,7 @@ class StreamingMultimodalSpec extends AnyFunSuite {
   }
 
   test("streaming: dedup-within-watermark removes duplicated events") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_dedup").toString
+    val dir = tempDir("graft_dedup").toString
     val events = graft.sources.Tables(spark, sf, "events")
     // duplicate the whole table: every event_id appears twice
     events.unionByName(events).write.mode("overwrite").parquet(s"$dir/ev")
@@ -980,7 +980,7 @@ class StreamingMultimodalSpec extends AnyFunSuite {
     val all = orig.unionByName(clones)
     val nTotal = all.count()
     // 8 time-ordered chunks with pinned mtimes (the soak replay pattern)
-    val dir = java.nio.file.Files.createTempDirectory("graft_exdedup").toString
+    val dir = tempDir("graft_exdedup").toString
     val byTime = org.apache.spark.sql.expressions.Window.orderBy("ingest_ts", "doc_id")
     val chunked = all.withColumn("_chunk", ntile(8).over(byTime))
     val seenFiles = scala.collection.mutable.Set.empty[String]
@@ -1040,7 +1040,7 @@ class StreamingMultimodalSpec extends AnyFunSuite {
       .withColumn("ingest_ts",
         timestamp_seconds(lit(1700000000L) + col("doc_id")))
     // 6 time-ordered chunks with pinned mtimes (the soak replay pattern)
-    val dir = java.nio.file.Files.createTempDirectory("graft_snd").toString
+    val dir = tempDir("graft_snd").toString
     val byTime = org.apache.spark.sql.expressions.Window.orderBy("ingest_ts", "doc_id")
     val chunked = docs.withColumn("_chunk", ntile(6).over(byTime))
     val seenFiles = scala.collection.mutable.Set.empty[String]
@@ -1103,7 +1103,7 @@ class StreamingMultimodalSpec extends AnyFunSuite {
       chunks: Seq[Seq[(Long, String, Long)]]): String = {
     import spark.implicits._
     val base = 1700000000L
-    val dir = java.nio.file.Files.createTempDirectory("graft_sndc").toString
+    val dir = tempDir("graft_sndc").toString
     val seen = scala.collection.mutable.Set.empty[String]
     val mtimeBase = System.currentTimeMillis() - 600000L
     chunks.zipWithIndex.foreach { case (rows, i) =>
@@ -1219,7 +1219,7 @@ class StreamingMultimodalSpec extends AnyFunSuite {
     val ev = graft.sources.Tables(spark, sf, "events")
       .select(col("event_id"), col("ts"), col("user_id"),
         col("event_type"), col("value")).as[Sessionize.Event]
-    val dir = java.nio.file.Files.createTempDirectory("graft_bs").toString
+    val dir = tempDir("graft_bs").toString
     ev.write.mode("overwrite").parquet(s"$dir/ev")
     val stream = spark.readStream
       .schema(implicitly[org.apache.spark.sql.Encoder[Sessionize.Event]].schema)
@@ -1253,7 +1253,7 @@ class StreamingMultimodalSpec extends AnyFunSuite {
         col("event_type"), col("value")).as[Sessionize.Event]
     val nEvents = ev.count()
     val nUsers = ev.select("user_id").distinct().count()
-    val dir = java.nio.file.Files.createTempDirectory("graft_soak").toString
+    val dir = tempDir("graft_soak").toString
     val byTime = org.apache.spark.sql.expressions.Window.orderBy("ts", "event_id")
     val chunked = ev.toDF().withColumn("_chunk", ntile(8).over(byTime))
     // FileStreamSource replays files in modification-time order, and two
@@ -1297,7 +1297,7 @@ class StreamingMultimodalSpec extends AnyFunSuite {
   }
 
   test("streaming: stream-stream range join matches the batch range join") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_ssj").toString
+    val dir = tempDir("graft_ssj").toString
     val events = graft.sources.Tables(spark, sf, "events")
     events.write.mode("overwrite").parquet(s"$dir/ev")
     def stream = spark.readStream.schema(events.schema).parquet(s"$dir/ev")
@@ -1334,7 +1334,7 @@ class StreamingMultimodalSpec extends AnyFunSuite {
       ev(3, 1, 4000, 3.0),
       ev(4, 2, 0, 5.0),
       ev(5, 99, 20000, 0.0)) // watermark pusher
-    val dir = java.nio.file.Files.createTempDirectory("graft_sess").toString
+    val dir = tempDir("graft_sess").toString
     events.toDS().write.mode("overwrite").parquet(s"$dir/ev")
     val stream = spark.readStream
       .schema(implicitly[org.apache.spark.sql.Encoder[Sessionize.Event]].schema)
@@ -1356,7 +1356,7 @@ class StreamingMultimodalSpec extends AnyFunSuite {
   private def asOfStreams(chunks: Seq[org.apache.spark.sql.DataFrame])
       : (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
     import org.apache.spark.sql.types._
-    val dir = java.nio.file.Files.createTempDirectory("graft_asof").toString
+    val dir = tempDir("graft_asof").toString
     val seen = scala.collection.mutable.Set.empty[String]
     val mtimeBase = System.currentTimeMillis() - 600000L
     chunks.zipWithIndex.foreach { case (df, i) =>

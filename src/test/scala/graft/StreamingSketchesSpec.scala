@@ -11,12 +11,12 @@ import graft.streaming.{Sketches => S}
   * max/sum laws, must equal the batch sketch over the same rows — the
   * stream and the batch share every hash/rank definition verbatim, so
   * any divergence is a merge-law violation, not a formula drift. */
-class StreamingSketchesSpec extends AnyFunSuite {
+class StreamingSketchesSpec extends AnyFunSuite with TempDirs {
   import TestSpark._
 
   test("streaming sketch twin: merged windowed registers/cells ≡ batch " +
        "sketch over the same documents") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_sketch").toString
+    val dir = tempDir("graft_sketch").toString
     // documents spread across 3 hours by doc_id; +1 flush row far past
     // the watermark horizon so every real window closes and emits
     val base = graft.sources.Tables(spark, sf, "documents")
@@ -98,7 +98,7 @@ class StreamingSketchesSpec extends AnyFunSuite {
       .select(col("ingest_ts"), explode(graft.functions.TextFunctions
         .shingles(graft.functions.TextFunctions.tokens(col("text")),
           B.ShingleK)).as("gram"))
-    val dirB = java.nio.file.Files.createTempDirectory("graft_bloomtw").toString
+    val dirB = tempDir("graft_bloomtw").toString
     memberFeed.write.mode("overwrite").parquet(s"$dirB/grams")
     val gramStream = spark.readStream.schema(memberFeed.schema)
       .option("maxFilesPerTrigger", 1).parquet(s"$dirB/grams")

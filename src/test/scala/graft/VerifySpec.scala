@@ -11,11 +11,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * round-6 q42 regression shipped invisible precisely because the old
   * catch printed to stderr and wrote nothing.
   */
-class VerifySpec extends AnyFunSuite {
+class VerifySpec extends AnyFunSuite with TempDirs {
   import TestSpark.spark
 
   private def outDir(): String =
-    Files.createTempDirectory("verify-spec").toString
+    tempDir("verify-spec").toString
 
   private val good: (SparkSession, String) => DataFrame =
     (s, _) => s.range(3).toDF("id")
