@@ -217,43 +217,16 @@ object DedupIndex {
     }
   }
 
-  /** Prefixes (+ bucket counts) already lint-checked, per live session:
-    * the lint is a PLAN-SHAPE assertion over (code, bucketed-table DDL),
-    * both fixed for a given (session, prefix, buckets), so re-planning
-    * the probe under disabled-broadcast confs on every call re-proves a
-    * theorem that cannot have changed — and that planning pass alone
-    * measured ~1.0 s of q79's wall (stage profile). First call per
-    * (session, prefix, buckets) still runs the full lint, so any code
-    * change is caught by every fresh session (each Verify/Bench/test
-    * JVM). WEAK-keyed on the session object itself (r11 ADVICE): an
-    * identityHashCode key could be reused by a fresh session after the
-    * old one is GC'd — silently skipping its first lint — and entries
-    * never evicted; weak keys make reuse impossible and let dead
-    * sessions' entries go with them. The bucket count rides in the
-    * value key so a same-prefix rebuild with different DDL re-lints. */
-  private val lintedPrefixes =
-    new java.util.WeakHashMap[SparkSession, java.util.Set[String]]()
-
   /** [[assertIndexNeverShuffled]] memoized per (session, prefix,
-    * buckets) — the form the DECLARED queries use. Specs exercising the
-    * lint itself call the un-memoized variant. */
+    * buckets) ([[Lints]]) — the form the DECLARED queries use. The bucket
+    * count rides in the key so a same-prefix rebuild with different DDL
+    * re-lints. Specs exercising the lint itself call the un-memoized
+    * variant. */
   def assertIndexNeverShuffledOnce(s: SparkSession, prefix: String,
                                    buckets: Int = 8)
-                                  (mkFrame: => DataFrame): Unit = {
-    val seen = lintedPrefixes.synchronized {
-      var set = lintedPrefixes.get(s)
-      if (set == null) {
-        set = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-        lintedPrefixes.put(s, set)
-      }
-      set
-    }
-    val key = prefix + ":" + buckets
-    if (!seen.contains(key)) {
-      assertIndexNeverShuffled(s, prefix)(mkFrame)
-      seen.add(key)
-    }
-  }
+                                  (mkFrame: => DataFrame): Unit =
+    Lints.once(s, s"index:$prefix:$buckets")(
+      assertIndexNeverShuffled(s, prefix)(mkFrame))(())
 
   /** Build `mkFrame`'s physical plan under broadcast-disabled,
     * non-adaptive confs (broadcasting the batch side would trivially

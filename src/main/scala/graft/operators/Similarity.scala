@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.functions.VectorFunctions._
 import graft.plans.FloatVectorExprs
-import graft.sources.Tables
+import graft.sources.{Store, Tables}
 
 /** Similarity search over the `embeddings` table (`array<float>` vectors)
   * — approximate-nearest-neighbor for training-data curation
@@ -170,9 +170,9 @@ object Similarity {
   }
 
   /** In-JVM quantizer memo: bench reps and composed queries in one
-    * process never refit the same (dir, nCells) quantizer. */
+    * process never reload the same quantizer artifact. */
   private val quantizers =
-    new java.util.concurrent.ConcurrentHashMap[(String, Int),
+    new java.util.concurrent.ConcurrentHashMap[String,
       org.apache.spark.ml.clustering.KMeansModel]
 
   /** Fit-once IVF coarse quantizer. At 100 TB the quantizer is an
@@ -180,33 +180,16 @@ object Similarity {
     * probe query — not a per-query step. Fitting is deterministic
     * (seed 42, 20k sample cap), so a loaded model and a refit model
     * assign identical cells. Persisted under
-    * `$SPARK_GRAFT_QUANTIZER_DIR` (default /tmp/graft_quantizers),
-    * keyed by a CORPUS FINGERPRINT (row count + order-insensitive
-    * xxhash64 fold of the vectors) and nCells — a regenerated or edited
-    * corpus at the same path can never silently reuse stale centroids;
-    * the fingerprint scan is one cheap pass, paid once per process. */
+    * `$SPARK_GRAFT_QUANTIZER_DIR` (default /tmp/graft_quantizers) as a
+    * [[Store]] whose identity is nCells plus the corpus' file set: a
+    * regenerated or edited corpus at the same path is refit, and so is a
+    * directory a killed save left without its marker. */
   def ivfQuantizer(s: SparkSession, dir: String, nCells: Int)
       : org.apache.spark.ml.clustering.KMeansModel = {
-    val root = sys.env.getOrElse("SPARK_GRAFT_QUANTIZER_DIR", "/tmp/graft_quantizers")
-    // the fingerprint scan runs on EVERY call (one cheap column pass) so
-    // even the in-JVM memo can never serve centroids fit on a corpus
-    // that has since changed; what the artifact+memo skip is the
-    // expensive FIT. On a real lakehouse swap the scan for catalog
-    // metadata (table snapshot id / file-manifest hash).
-    val fp = emb(s, dir)
-      .select(xxhash64(col("vec_id"), col("embedding")).as("_h"))
-      .agg(count(lit(1)).as("n"), expr("bit_xor(_h)").as("x"))
-      .head
-    require(fp.getLong(0) > 0, s"ivfQuantizer: no embeddings found under $dir")
-    val corpusFp = f"${fp.getLong(0)}%d_${fp.getLong(1)}%016x"
-    val key = (corpusFp, nCells)
-    val memo = quantizers.get(key)
-    if (memo != null) return memo
-    val path = s"$root/ivf_${corpusFp}_c$nCells"
-    val model =
-      if (new java.io.File(path).exists())
-        org.apache.spark.ml.clustering.KMeansModel.load(path)
-      else {
+    val id = Store.identity(s"c$nCells", emb(s, dir))
+    Option(quantizers.get(id)).getOrElse {
+      val path = quantizerPath(dir, nCells)
+      Store.ensure(path, id) { tmp =>
         import org.apache.spark.ml.functions.array_to_vector
         // quantizer fits on a bounded sample (standard IVF practice —
         // the coarse centroids don't need the full corpus; at 100 TB
@@ -216,19 +199,24 @@ object Similarity {
         val e = Caches.track(emb(s, dir).select(col("embedding"))
           .withColumn("features", array_to_vector(col("embedding"))))
         val corpusSize = e.count()
+        require(corpusSize > 0, s"ivfQuantizer: no embeddings found under $dir")
         val sampleCap = 20000L
         val sample = if (corpusSize <= sampleCap) e
                      else e.sample(withReplacement = false,
                        sampleCap.toDouble / corpusSize, 42L)
-        val m = new org.apache.spark.ml.clustering.KMeans()
+        new org.apache.spark.ml.clustering.KMeans()
           .setK(nCells).setSeed(42L).setFeaturesCol("features")
-          .fit(sample)
-        m.write.overwrite().save(path)
-        m
+          .fit(sample).write.save(tmp)
       }
-    quantizers.put(key, model)
-    model
+      val model = org.apache.spark.ml.clustering.KMeansModel.load(path)
+      quantizers.put(id, model)
+      model
+    }
   }
+
+  private[graft] def quantizerPath(dir: String, nCells: Int): String =
+    sys.env.getOrElse("SPARK_GRAFT_QUANTIZER_DIR", "/tmp/graft_quantizers") +
+      "/ivf_" + dir.replaceAll("[^A-Za-z0-9]+", "_") + s"_c$nCells"
 
   /** Spec/maintenance surface: drop the in-JVM quantizer memo. */
   def clearQuantizerMemo(): Unit = quantizers.clear()
@@ -333,93 +321,31 @@ object Similarity {
   /** Deterministic CROSS-PROCESS location of the persisted IVF store
     * (r14 VERDICT #2 — the r13/r14 shape was pid-suffixed tmp, which
     * amortized the build within one JVM only): the path is keyed on the
-    * store's CONTENT IDENTITY — the quantizer artifact's content
-    * version ([[IvfCentroids.version]]) and the corpus directory — so
-    * every process over the same (corpus, centroids) pair shares one
-    * store, a regenerated centroid fit lands at a DIFFERENT path (no
-    * stale serving), and the meta file inside the store re-checks both
-    * on open ([[storeMetaValid]]). Concurrent first-builders are safe
-    * via [[publishIvfStore]]'s build-to-temp + atomic-rename: losers
-    * adopt the winner's store. `suffix` separates store LIFECYCLES
-    * (q107's whole-corpus build vs q110's day-1 + ingest). */
+    * quantizer artifact's content version ([[IvfCentroids.version]]) and
+    * the corpus directory, so every process over the same corpus shares
+    * one store and a regenerated centroid fit lands at a DIFFERENT path.
+    * Whether the directory there may be reused is [[Store]]'s decision
+    * ([[ensureIvfStore]]). `suffix` separates store LIFECYCLES (q107's
+    * whole-corpus build vs q110's day-1 + ingest). */
   def ivfStorePath(dir: String, suffix: String = ""): String =
     new java.io.File(sys.props("java.io.tmpdir"),
       "graft_ivf_" + IvfCentroids.version + "_" +
         dir.replaceAll("[^A-Za-z0-9]+", "_") + suffix).getAbsolutePath
 
-  /** Stores already built or validated by THIS process: the build (or
-    * the cross-process open + meta check) is paid once per JVM, every
-    * later call — bench reps included — runs the probe alone. */
-  private val builtStores =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
-  /** Spec/maintenance surface: forget built stores (forces a rebuild
-    * or re-validation — what a fresh JVM over an existing store does). */
-  def clearStoreMemo(): Unit = builtStores.clear()
-
-  private val MetaName = "_graft_ivf_meta"
-
-  /** The store's identity line: quantizer version + corpus dir. */
-  private def metaLine(dir: String): String =
-    s"${IvfCentroids.version} $dir"
-
-  /** Does the store at `path` carry a meta file matching the expected
-    * (centroid version, corpus) identity? The VALIDATE-ON-OPEN check: a
-    * pre-existing directory with a missing, unreadable, or mismatched
-    * meta is NOT a usable store (half-built leftovers, a different
-    * corpus' store at a colliding path, or a stale centroid fit) and
-    * gets rebuilt. */
-  def storeMetaValid(path: String, dir: String): Boolean = {
-    val f = new java.io.File(path, MetaName)
-    f.exists() && (try new String(
-      java.nio.file.Files.readAllBytes(f.toPath),
-      java.nio.charset.StandardCharsets.UTF_8).trim == metaLine(dir)
-    catch { case scala.util.control.NonFatal(_) => false })
-  }
-
-  /** Build the store in a pid-suffixed temp directory (meta file
-    * included — store and identity publish TOGETHER) and atomically
-    * rename it into place. If another process won the race, adopt its
-    * store (meta re-validated) and drop ours — two concurrent
-    * first-builders over the same corpus converge on one store with no
-    * torn reads, the r13-ADVICE concern that motivated pid paths,
-    * solved without giving up cross-process reuse. */
-  private def publishIvfStore(e0: DataFrame, dir: String, path: String): Unit = {
-    val tmp = path + ".build" + ProcessHandle.current().pid()
-    writeIvfStore(e0, tmp)
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(tmp, MetaName),
-      (metaLine(dir) + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    if (!new java.io.File(tmp).renameTo(new java.io.File(path))) {
-      // rename fails iff `path` sprang into existence: a concurrent
-      // builder published first. Validate theirs, discard ours.
-      require(storeMetaValid(path, dir),
-        s"IVF store at $path exists but fails the meta check " +
-          s"(expected '${metaLine(dir)}') and could not be replaced")
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(tmp))
-    }
-  }
+  /** The IVF store's [[Store]] identity: the centroid version plus the
+    * corpus' file set, so a corpus rewritten at the same path is another
+    * store. */
+  private def ivfStoreId(s: SparkSession, dir: String): String =
+    Store.identity(IvfCentroids.version, emb(s, dir))
 
   /** Ensure a valid store for `dir` exists at `path`, building from
-    * `mkCorpus` only when no valid store is present; memoized per
-    * process. A pre-existing VALID store is adopted as-is — the
-    * cross-process steady state (day 2 in a new JVM pays a meta read,
-    * not a rebuild). An existing-but-invalid directory is removed and
-    * rebuilt. */
+    * `mkCorpus` only when no valid store is present ([[Store.ensure]]):
+    * once per process, a valid store another process published is
+    * adopted as-is (day 2 in a new JVM pays a marker read, not a
+    * rebuild), and an invalid directory is removed and rebuilt. */
   def ensureIvfStore(s: SparkSession, dir: String, path: String)
                     (mkCorpus: => DataFrame): Unit =
-    if (!builtStores.contains(path)) {
-      if (!storeMetaValid(path, dir)) {
-        val f = new java.io.File(path)
-        if (f.exists()) org.apache.commons.io.FileUtils.deleteDirectory(f)
-        publishIvfStore(mkCorpus, dir, path)
-      }
-      builtStores.add(path)
-    }
-
-  /** Spec surface: forget linted store paths (forces a re-lint). */
-  def clearLintMemo(): Unit =
-    lintedStores.synchronized { lintedStores.clear() }
+    Store.ensure(path, ivfStoreId(s, dir))(writeIvfStore(mkCorpus, _))
 
   /** Write the IVF store: every vector cell-assigned by the literal
     * [[IvfCentroids]] partition function and written
@@ -466,29 +392,23 @@ object Similarity {
     * never rewrites existing files — day-1 immutability is spec'd
     * byte-for-byte), so ingest cost is delta-proportional and a probe
     * of the grown store stays one partition-pruned scan. Idempotent
-    * under re-runs via a per-batch marker next to the meta file (the
+    * under re-runs via a per-batch marker in the store (the
     * ShardAppend pattern): a crash-and-retry of the same `batchKey`
     * skips the append instead of duplicating vectors; the marker
-    * commits atomically AFTER the rows land. */
+    * commits atomically ([[Store.mark]]) AFTER the rows land. */
   def ingestVectors(delta: DataFrame, dir: String, path: String,
                     batchKey: String): Unit = {
-    require(storeMetaValid(path, dir),
-      s"cannot ingest into $path: store missing or fails the meta check " +
-        s"(expected '${metaLine(dir)}') — build it with ensureIvfStore first")
-    val marker = new java.io.File(path, s"_graft_ingest_$batchKey")
-    if (!marker.exists()) {
+    require(Store.holds(path, ivfStoreId(delta.sparkSession, dir)),
+      s"cannot ingest into $path: no valid store for $dir there — " +
+        "build it with ensureIvfStore first")
+    val marker = s"_graft_ingest_$batchKey"
+    if (Store.marked(path, marker).isEmpty) {
       ivfStoreRows(delta)
         .repartition( // explicit width — see writeIvfStore's note
           delta.sparkSession.sessionState.conf.numShufflePartitions,
           col("cell"))
         .write.mode("append").partitionBy("cell").parquet(path)
-      val tmp = java.nio.file.Paths.get(path,
-        s"._graft_ingest_$batchKey.tmp${ProcessHandle.current().pid()}")
-      java.nio.file.Files.write(tmp,
-        "done\n".getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      java.nio.file.Files.move(tmp, marker.toPath,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+      Store.mark(path, marker, "done")
     }
   }
 
@@ -533,7 +453,8 @@ object Similarity {
     * certifies that growing the store by append is invisible to every
     * verdict, which is the property that makes incremental ingest safe
     * to ship. Steady state across processes: a fresh JVM re-validates
-    * the meta, sees the ingest marker, and pays probe cost only. */
+    * the store's marker, sees the ingest marker, and pays probe cost
+    * only. */
   def ivfIngestTopK(s: SparkSession, dir: String, k: Int = 5,
                     nQueries: Int = 10,
                     nProbe: Int = DefaultNProbe): DataFrame = {
@@ -607,19 +528,13 @@ object Similarity {
     }
   }
 
-  /** Sessions that already linted a store path (the
-    * DedupIndex.lintedPrefixes rationale: the lint is a plan-shape
-    * theorem over fixed code + fixed store DDL — prove it once per
-    * session, not per bench rep). */
-  private val lintedStores =
-    new java.util.WeakHashMap[SparkSession, java.util.Set[String]]()
-
   /** Require every scan of the store under `mkFrame`'s plan to carry a
-    * `cell` partition filter; memoized per (session, path). Returns the
-    * frame it linted (r14 ADVICE: the caller would otherwise construct
-    * the probe a second time, re-running the bounded probed-cells
-    * driver collect and registering a second tracked cache), so the
-    * frame is built exactly once per call whether or not the lint runs.
+    * `cell` partition filter; memoized per (session, path) ([[Lints]]).
+    * Returns the frame it linted (r14 ADVICE: the caller would
+    * otherwise construct the probe a second time, re-running the bounded
+    * probed-cells driver collect and registering a second tracked
+    * cache), so the frame is built exactly once per call whether or not
+    * the lint runs.
     * On the lint pass the frame is CONSTRUCTED and planned under
     * non-adaptive conf (the DedupIndex lint's reason: AQE wraps the
     * physical plan in an AdaptiveSparkPlanExec whose children are
@@ -629,44 +544,31 @@ object Similarity {
     * restored before returning. Already-linted paths get the normally
     * (AQE-) planned frame untouched. */
   def assertIvfProbePruned(s: SparkSession, path: String)
-                          (mkFrame: => DataFrame): DataFrame = {
-    val seen = lintedStores.synchronized {
-      var set = lintedStores.get(s)
-      if (set == null) {
-        set = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-        lintedStores.put(s, set)
-      }
-      set
-    }
-    if (seen.contains(path)) mkFrame
-    else {
+                          (mkFrame: => DataFrame): DataFrame =
+    Lints.once(s, "ivf:" + path)({
       val conf = "spark.sql.adaptive.enabled"
       val prev = s.conf.getOption(conf)
       s.conf.set(conf, "false")
-      val frame =
-        try {
-          val f = mkFrame
-          val plan = f.queryExecution.executedPlan
-          val scanned = plan.collect {
-            case sc: org.apache.spark.sql.execution.FileSourceScanExec
-                if sc.relation.location.rootPaths
-                  .exists(_.toString.contains(path)) => sc
-          }
-          require(scanned.nonEmpty,
-            s"lint is vacuous: no scan of $path found in the probe plan")
-          val offending = ivfUnprunedStoreScans(plan, path)
-          require(offending.isEmpty,
-            s"IVF store scanned WITHOUT cell partition pruning " +
-              s"(${offending.size} scan(s)):\n" + offending.mkString("\n---\n"))
-          f
-        } finally prev match {
-          case Some(v) => s.conf.set(conf, v)
-          case None    => s.conf.unset(conf)
+      try {
+        val f = mkFrame
+        val plan = f.queryExecution.executedPlan
+        val scanned = plan.collect {
+          case sc: org.apache.spark.sql.execution.FileSourceScanExec
+              if sc.relation.location.rootPaths
+                .exists(_.toString.contains(path)) => sc
         }
-      seen.add(path)
-      frame
-    }
-  }
+        require(scanned.nonEmpty,
+          s"lint is vacuous: no scan of $path found in the probe plan")
+        val offending = ivfUnprunedStoreScans(plan, path)
+        require(offending.isEmpty,
+          s"IVF store scanned WITHOUT cell partition pruning " +
+            s"(${offending.size} scan(s)):\n" + offending.mkString("\n---\n"))
+        f
+      } finally prev match {
+        case Some(v) => s.conf.set(conf, v)
+        case None    => s.conf.unset(conf)
+      }
+    })(mkFrame)
 
   /** CALIBRATE nProbe for a recall target by MEASUREMENT (the q98
     * pattern applied to IVF): compute the brute-force top-k for the

@@ -79,7 +79,9 @@ object Tables {
   /** path + parquet confs → (file set, inferred schema). */
   private val schemas = new ConcurrentHashMap[String, (String, types.StructType)]()
 
-  private def filesOf(read: DataFrame): Option[String] =
+  /** The file-set digest of a read of one file relation; None for any
+    * other plan. Also the input identity of a [[Store]]. */
+  private[sources] def filesOf(read: DataFrame): Option[String] =
     fileSet(read.queryExecution.analyzed).map(_._2)
 
   /** The root paths of a plan over one file relation, with a digest of

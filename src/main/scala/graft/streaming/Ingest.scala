@@ -3,6 +3,8 @@ package graft.streaming
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.StreamingQuery
 
+import graft.sources.Store
+
 /** The one stream-static ingest combinator: a batch function from
   * `graft.operators` applied to every micro-batch of a feed, its output
   * handed to a sink with the batch id. No watermark, no keyed state —
@@ -19,8 +21,9 @@ import org.apache.spark.sql.streaming.StreamingQuery
   *     and reports from it, so a replayed batch must not apply twice.
   *     The last applied batch id is persisted next to the store
   *     (`_graft_last_batch`, underscore-prefixed so Spark's parquet
-  *     reader ignores it), written atomically only after `f`'s rows are
-  *     on disk; [[applyOnce]] skips any `batchId <=` the committed one.
+  *     reader ignores it), written atomically ([[Store.mark]]) only
+  *     after `f`'s rows are on disk; [[applyOnce]] skips any
+  *     `batchId <=` the committed one.
   *     A crash between the write and the marker re-applies that batch
   *     on replay — exactly-once would need the store write and the
   *     marker in one atomic commit (a table format's job, not a
@@ -57,7 +60,7 @@ object Ingest {
     if (batchId <= committedBatch(path)) None
     else {
       val out = f(microBatch)
-      if (out.isDefined) commitBatch(path, batchId)
+      if (out.isDefined) Store.mark(path, MarkerName, batchId.toString)
       out
     }
 
@@ -71,28 +74,8 @@ object Ingest {
   /** The last committed batch id at `path`, or -1 with no (or an
     * unreadable) marker — fail-open toward re-applying, never toward
     * silently dropping a batch. */
-  def committedBatch(path: String): Long = {
-    val f = new java.io.File(path, MarkerName)
-    if (!f.exists()) -1L
-    else
-      try new String(java.nio.file.Files.readAllBytes(f.toPath),
-        java.nio.charset.StandardCharsets.UTF_8).trim.toLong
-      catch { case scala.util.control.NonFatal(_) => -1L }
-  }
+  def committedBatch(path: String): Long =
+    Store.marked(path, MarkerName).flatMap(_.toLongOption).getOrElse(-1L)
 
   private val MarkerName = "_graft_last_batch"
-
-  /** Atomically persist `batchId` as the store's committed high-water
-    * mark (temp file + ATOMIC_MOVE in the same directory — a reader
-    * sees the old marker or the new one, never a torn write). */
-  private def commitBatch(path: String, batchId: Long): Unit = {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
-    val dir = Paths.get(path)
-    val tmp = dir.resolve(
-      s".$MarkerName.tmp${ProcessHandle.current().pid()}")
-    Files.write(tmp,
-      (batchId.toString + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    Files.move(tmp, dir.resolve(MarkerName),
-      StandardCopyOption.REPLACE_EXISTING, StandardCopyOption.ATOMIC_MOVE)
-  }
 }

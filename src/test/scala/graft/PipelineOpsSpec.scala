@@ -7,6 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * since they have no DuckDB oracle. */
 class PipelineOpsSpec extends AnyFunSuite with TempDirs {
   import TestSpark._
+  import graft.sources.Store
 
   test("exact dedup: copies partition the corpus") {
     val d = operators.Dedup.exactDedup(spark, sf)
@@ -292,7 +293,7 @@ class PipelineOpsSpec extends AnyFunSuite with TempDirs {
     // and the in-query lint entry actually rejects an unpruned probe
     // (memo cleared so the assertion runs; a FAILED lint never
     // memoizes, so later real queries still re-prove the clean shape)
-    operators.Similarity.clearLintMemo()
+    operators.Lints.clearLintMemo()
     val err = intercept[IllegalArgumentException] {
       operators.Similarity.assertIvfProbePruned(spark, path)(
         spark.read.parquet(path).filter(col("vec_id") < 10))
@@ -307,14 +308,16 @@ class PipelineOpsSpec extends AnyFunSuite with TempDirs {
     // fresh lifecycle: remove any store a previous process left and
     // forget the memos, so build → validate → ingest all really run
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(path))
-    S.clearStoreMemo(); S.clearLintMemo()
+    Store.forget(); operators.Lints.clearLintMemo()
     val all = graft.sources.Tables(spark, sf, "embeddings")
       .select(col("vec_id"), col("embedding"))
+    val id = Store.identity(operators.IvfCentroids.version,
+      graft.sources.Tables(spark, sf, "embeddings"))
     val bucket = operators.Sampling.hashBucket(col("vec_id"), 10)
     assert(all.filter(bucket >= 8).count() > 0, "day-2 delta must be non-empty")
     // day 1: versioned build publishes store + meta atomically
     S.ensureIvfStore(spark, sf, path)(all.filter(bucket < 8))
-    assert(S.storeMetaValid(path, sf), "fresh store must carry a valid meta")
+    assert(Store.holds(path, id), "fresh store must carry a valid meta")
     def partFiles(): Map[String, (Long, String)] =
       new java.io.File(path).listFiles().filter(_.getName.startsWith("cell="))
         .flatMap(_.listFiles()).filter(_.getName.startsWith("part-"))
@@ -341,21 +344,21 @@ class PipelineOpsSpec extends AnyFunSuite with TempDirs {
     assert(stored.distinct().count() === all.count(), "duplicated vec_ids")
     // cross-process steady state: a fresh JVM (memo cleared) re-opens
     // the store via the meta check — no rebuild, files untouched
-    S.clearStoreMemo()
+    Store.forget()
     S.ensureIvfStore(spark, sf, path)(
       sys.error("steady-state open must not rebuild"): org.apache.spark.sql.DataFrame)
     assert(partFiles() === grown, "steady-state open rewrote the store")
     // a corrupted meta fails validation and forces a rebuild
     java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(path, "_graft_ivf_meta"), "stale-version /elsewhere\n")
-    assert(!S.storeMetaValid(path, sf), "corrupt meta must not validate")
-    S.clearStoreMemo()
+      java.nio.file.Paths.get(path, "_graft_store"), "stale-version /elsewhere\n")
+    assert(!Store.holds(path, id), "corrupt meta must not validate")
+    Store.forget()
     S.ensureIvfStore(spark, sf, path)(all.filter(bucket < 8))
-    assert(S.storeMetaValid(path, sf), "rebuild must restore a valid meta")
+    assert(Store.holds(path, id), "rebuild must restore a valid meta")
     // rebuilt day-1-only store lost the delta (as it must: the rebuild
     // corpus was day 1) — re-ingest lands it again, then the declared
     // query's verdicts equal the in-query full-corpus form
-    S.clearLintMemo()
+    operators.Lints.clearLintMemo()
     val viaIngest = S.ivfIngestTopK(spark, sf).collect().map(_.toSeq).toSeq
     operators.Caches.release()
     val inQuery = S.ivfTopKFor(spark, all).collect().map(_.toSeq).toSeq
@@ -454,6 +457,15 @@ class PipelineOpsSpec extends AnyFunSuite with TempDirs {
     val second = operators.Similarity.ivfQuantizer(spark, sf, 16)
     val c2 = second.clusterCenters.map(_.toArray.toSeq).toSeq
     assert(c1 == c2, "persisted quantizer must reload bit-identical centroids")
+    // a directory a killed save left behind (no Store marker) is refit,
+    // not handed to KMeansModel.load
+    val qPath = operators.Similarity.quantizerPath(sf, 16)
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(qPath))
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(qPath, "metadata"))
+    operators.Similarity.clearQuantizerMemo(); Store.forget()
+    val refit = operators.Similarity.ivfQuantizer(spark, sf, 16)
+    assert(refit.clusterCenters.map(_.toArray.toSeq).toSeq == c1,
+      "a partial quantizer directory must be refit to the same centroids")
     // and the probe query still works end-to-end on the loaded model
     assert(operators.Similarity.ivfTopK(spark, sf).count() == 50)
   }
@@ -604,7 +616,7 @@ class PipelineOpsSpec extends AnyFunSuite with TempDirs {
     val want = operators.Packing.writeCleanShards(spark, sf)
       .collect().map(_.toSeq).toSeq
     operators.Caches.release()
-    operators.Packing.clearCleanStoreMemo()
+    Store.forget()
     val first = operators.Packing.cleanShardsReport(spark, sf)
       .collect().map(_.toSeq).toSeq
     operators.Caches.release()
