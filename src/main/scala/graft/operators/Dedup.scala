@@ -1031,12 +1031,13 @@ object Dedup {
 
   /** (band, key) structs over a packed sign-bit sketch — `bands` keys of
     * `bits/bands` bits each; the banding every hyperplane-sketch
-    * consumer (q43, the embedding tier, the bucketed index) derives
+    * consumer (q31, q43, the embedding tier, the bucketed index) derives
     * from ONE definition so bucket keys can't drift between the
     * in-memory and stored-index paths. */
   private[graft] def sketchBandStructs(sketch: Column, bits: Int,
                                        bands: Int): Column = {
-    require(bits % bands == 0, "bands must divide bits")
+    require(bits % bands == 0,
+      s"bands ($bands) must divide bits ($bits) — trailing sketch bits would be silently unused")
     val r = bits / bands
     val mask = (1L << r) - 1
     array((0 until bands).map(bd =>

@@ -26,7 +26,9 @@ import graft.sources.Tables
   * The band entries also drive the six near-dup PAIR queries, each one
   * [[Modality.Stored.selfPairs]] over its side: q27 (Text, unthresholded),
   * q43 (Embedding), q73/q76/q77 (Image, Audio, Video) and q28, whose
-  * SimHash entry is no verdict tier ([[Dedup.simhashPairs]]). */
+  * SimHash entry is no verdict tier ([[Dedup.simhashPairs]]); and q31's
+  * top-k candidates, [[Modality.Stored.queryPairs]] of a 16-bit
+  * Embedding entry. */
 sealed abstract class Modality(val rank: Int) {
 
   /** A caller's (doc_id, payload) frame as this modality's side. */
@@ -94,23 +96,35 @@ object Modality {
         .distinct()
     }
 
-    /** THE band self-join of the pair queries: one side's key-sharing
-      * pairs, `a` < `b`, passing `test`, once, as (`a`, `b`, score). Rows
+    /** THE band join of the pair queries: the key-sharing pairs of two
+      * banded frames passing `test`, once, as (`a`, `b`, score). Rows
       * are scored before the `distinct`: it shuffles three columns only. */
-    private def pairs(side: DataFrame, a: String, b: String, test: Column): DataFrame = {
-      val banded = rows(side)
-      payloadOf(banded, a, "_a", key).join(payloadOf(banded, b, "_b", key), key)
-        .filter(col(a) < col(b) && test)
+    private def pairs(left: DataFrame, right: DataFrame, a: String, b: String,
+                      test: Column): DataFrame =
+      payloadOf(left, a, "_a", key).join(payloadOf(right, b, "_b", key), key)
+        .filter(test)
         .select(col(a), col(b), score).distinct()
+
+    /** One side against itself: the pairs `a` < `b` passing `test`, the
+      * one banded frame feeding both join sides. */
+    private def sidePairs(side: DataFrame, a: String, b: String, test: Column): DataFrame = {
+      val banded = rows(side)
+      pairs(banded, banded, a, b, col(a) < col(b) && test)
     }
 
     /** Every pair of `side` sharing a key, unthresholded (q27). */
     def selfPairs(side: DataFrame, a: String, b: String): DataFrame =
-      pairs(side, a, b, lit(true))
+      sidePairs(side, a, b, lit(true))
 
     /** The [[selfPairs]] that `keep` accepts (q28, q43, q73, q76, q77). */
     def nearPairs(side: DataFrame, a: String, b: String): DataFrame =
-      pairs(side, a, b, keep(score))
+      sidePairs(side, a, b, keep(score))
+
+    /** Every key-sharing pair of a query side (`a`) and a corpus side
+      * (`b`) but a doc with itself, unthresholded: the candidates of
+      * q31's top-k, scored. */
+    def queryPairs(queries: DataFrame, corpus: DataFrame, a: String, b: String): DataFrame =
+      pairs(rows(queries), rows(corpus), a, b, col(a) =!= col(b))
   }
 
   /** (doc_id, band, key, payload…) rows of a side: one row per struct of
@@ -182,7 +196,7 @@ object Modality {
     def banded(side: DataFrame): DataFrame =
       bandRows(side, Dedup.sketchBandStructs(col("sketch"), bits, bands), "embedding", "_norm")
 
-    /** The sketch band; its score is q43's `cosine`. */
+    /** The sketch band; its score is q43's and q31's `cosine`. */
     val band: Stored = {
       import graft.functions.VectorFunctions.dotNative
       Stored("_emb", Seq("band", "key"), banded, Seq("embedding", "_norm"),

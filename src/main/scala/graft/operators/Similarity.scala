@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -12,15 +12,18 @@ import graft.sources.{Store, Tables}
   * — approximate-nearest-neighbor for training-data curation
   * (near-dup detection in embedding space, retrieval eval).
   *
-  * Two paths:
-  *  - `bruteForceTopK`: exact cosine top-k of a (small, broadcast) query
-  *    set against the full corpus. Correctness baseline; fine whenever
-  *    |queries| is broadcastable — the corpus side streams, never
-  *    materializes pairs beyond the per-partition top-k.
-  *  - `lshTopK`: random-hyperplane LSH — corpus and queries are bucketed
-  *    by sign-bit sketches, candidates come from a bucket-keyed join
-  *    (shuffle on bucket key, no cross join). The 100-TB path: probes
-  *    multiple bands, recall tunable by (bits, bands).
+  * One pipeline: the top-k queries differ only in where a query's
+  * candidates come from. Each takes the vectors `vec_id < nQueries` as
+  * its queries, scores their candidates with the 4dp cosine, and ends
+  * in the one ranking tail ([[topK]]):
+  *  - `bruteForceTopK` (q29): every vector, the query side broadcast.
+  *    Exact; the correctness baseline and the recall reference.
+  *  - `lshTopK` (q31): vectors sharing a hyperplane-sketch band with the
+  *    query — [[Modality.Stored.queryPairs]] of a 16-bit
+  *    [[Modality.Embedding]] entry, the banding and score q43 uses.
+  *  - `ivfTopK` (q38) and the stored q107/q110: vectors in the query's
+  *    `nProbe` nearest cells ([[probes]]) under the one cell assignment
+  *    ([[ivfStoreRows]]), in memory or from the cell-partitioned store.
   */
 object Similarity {
 
@@ -43,20 +46,37 @@ object Similarity {
   def bruteForceTopKFor(s: SparkSession, e0: DataFrame,
                         k: Int = 5, nQueries: Int = 10): DataFrame = {
     graft.GraftExtensions.install(s)
-    // per-vector norm computed ONCE, not per pair — sqrt(dot(v,v)) on the
-    // same input is the same double, so cosine stays bit-identical to the
-    // per-pair formulation (and to the oracle) while rescoring does one
-    // dot per pair instead of three
-    val e = e0
-      .withColumn("_norm", sqrt(dotNative(col("embedding"), col("embedding"))))
-    val q = e.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qv"),
-        col("_norm").as("_qnorm"))
-    val scored = e.crossJoin(broadcast(q))
-      .filter(col("vec_id") =!= col("query_id"))
+    val e = e0.withColumn("norm", norm)
+    topK(rescore(e.crossJoin(broadcast(queries(e, nQueries)))), k)
+  }
+
+  /** sqrt(dot(v, v)) of the `embedding` column: computed once per vector,
+    * not per pair — the same input gives the same double, so the cosine
+    * stays bit-identical to the per-pair formulation (and to the oracle)
+    * while rescoring does one dot per pair instead of three. */
+  private def norm: Column = sqrt(dotNative(col("embedding"), col("embedding")))
+
+  /** The query side of the brute-force and IVF top-k: `vec_id <
+    * nQueries` of a (vec_id, embedding) frame as (query_id, qv, _qnorm).
+    * (q31's queries are the same rows of its banded side.) */
+  private def queries(e: DataFrame, nQueries: Int): DataFrame =
+    e.filter(col("vec_id") < nQueries)
+      .select(col("vec_id").as("query_id"), col("embedding").as("qv"), norm.as("_qnorm"))
+
+  /** (query_id, vec_id, cosine) of candidate rows carrying both sides —
+    * corpus (vec_id, embedding, norm), query (query_id, qv, _qnorm) —
+    * a query never its own candidate; cosine at 4dp absorbs
+    * summation-order noise. */
+  private def rescore(cand: DataFrame): DataFrame =
+    cand.filter(col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id"),
         round(dotNative(col("embedding"), col("qv")) /
-          (col("_norm") * col("_qnorm")), 4).as("cosine"))
+          (col("norm") * col("_qnorm")), 4).as("cosine"))
+
+  /** THE top-k tail: (query_id, vec_id, cosine) rows ranked by cosine
+    * desc with a vec_id tiebreak, so the oracle ranks identically; the
+    * first `k` per query, ordered. */
+  private def topK(scored: DataFrame, k: Int): DataFrame = {
     val w = Window.partitionBy(col("query_id"))
       .orderBy(desc("cosine"), col("vec_id"))
     scored.withColumn("rank", row_number().over(w).cast("long"))
@@ -110,7 +130,7 @@ object Similarity {
     df.withColumn("sketch", sketch)
   }
 
-  // LSH-bucketed ANN: band the sketch, join corpus and queries on
+  // LSH-bucketed ANN: band the sketch, join queries and corpus on
   // (band, key), exact-rescore candidates, top-k per query. Same output
   // schema as bruteForceTopK; recall < 1 by construction (rows-only /
   // spec-tested against the brute-force baseline).
@@ -132,41 +152,13 @@ object Similarity {
   def lshTopKFor(s: SparkSession, e0: DataFrame, k: Int = 5,
                  nQueries: Int = 10, bits: Int = 16, bands: Int = 8,
                  dim: Int = 64): DataFrame = {
-    require(bits % bands == 0,
-      s"bands ($bands) must divide bits ($bits) — trailing sketch bits would be silently unused")
-    graft.GraftExtensions.install(s)
-    val r = bits / bands
-    val mask = (1L << r) - 1
-    val e = hyperplaneSketch(e0, "embedding", bits, dim)
-      .withColumn("_norm", sqrt(dotNative(col("embedding"), col("embedding"))))
-    // cached: the sketch projection feeds BOTH sides of the bucket join —
+    val e = Modality.Embedding(bits, dim, bands)
+    // cached: the sketched side feeds BOTH sides of the bucket join —
     // without this the sketch and norms compute twice; released via
     // Caches.release()
-    val banded = Caches.track(
-      e.select(col("vec_id"), col("embedding"), col("_norm"),
-        explode(array((0 until bands).map(bd =>
-          struct(lit(bd).as("band"),
-            shiftright(col("sketch"), bd * r).bitwiseAND(mask).as("key"))): _*)).as("b"))
-        .select(col("vec_id"), col("embedding"), col("_norm"),
-          col("b.band").as("band"), col("b.key").as("key")))
-    val q = banded.filter(col("vec_id") < nQueries)
-      .select(col("band"), col("key"),
-        col("vec_id").as("query_id"), col("embedding").as("qv"),
-        col("_norm").as("_qnorm"))
-    val cand = banded.join(q, Seq("band", "key"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id"), col("embedding"), col("qv"),
-        col("_norm"), col("_qnorm"))
-      .dropDuplicates("query_id", "vec_id")
-    // norm precomputed per vector (see bruteForceTopK) — bit-identical
-    val scored = cand.select(col("query_id"), col("vec_id"),
-      round(dotNative(col("embedding"), col("qv")) /
-        (col("_norm") * col("_qnorm")), 4).as("cosine"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(desc("cosine"), col("vec_id"))
-    scored.withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .orderBy(col("query_id"), col("rank"))
+    val side = Caches.track(e.project(e0.select(col("vec_id").as("doc_id"), col("embedding"))))
+    topK(e.band.queryPairs(side.filter(col("doc_id") < nQueries), side,
+      "query_id", "vec_id"), k)
   }
 
   /** In-JVM quantizer memo: bench reps and composed queries in one
@@ -273,50 +265,35 @@ object Similarity {
     * recall gate measures how the FIXED centroids hold up at 10×). */
   def ivfTopKFor(s: SparkSession, e0: DataFrame, k: Int = 5,
                  nQueries: Int = 10, nProbe: Int = DefaultNProbe): DataFrame = {
-    graft.GraftExtensions.install(s)
+    val assigned = Caches.track(ivfStoreRows(e0))
+    inProbedCells(assigned, probes(queries(assigned, nQueries), nProbe), k)
+  }
+
+  /** Probe selection: (query_id, qv, _qnorm, cell) for each query's
+    * `nProbe` nearest cells — cosine of the query against each literal
+    * centroid (posexplode of an nCells array — no centroid table, no
+    * join), cell tiebreak. */
+  private def probes(queries: DataFrame, nProbe: Int): DataFrame = {
     val cents = IvfCentroids.cells
-    val halfSq = cents.map(c => 0.5 * IvfCentroids.sqNorm(c))
     val cnorm = cents.map(c => math.sqrt(IvfCentroids.sqNorm(c)))
-    // nearest-centroid scores as one array; cell = 1-based first argmax
-    // (array_position and DuckDB's list_position agree on both counts)
-    val scores = array(cents.indices.map(j =>
-      dotNative(col("embedding"), typedlit(cents(j).toSeq)) - lit(halfSq(j))): _*)
-    val assigned = Caches.track(
-      e0
-        .withColumn("_scores", scores)
-        .withColumn("cell", expr("array_position(_scores, array_max(_scores))"))
-        .drop("_scores")
-        .withColumn("_norm", sqrt(dotNative(col("embedding"), col("embedding")))))
-    val queries = assigned.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qv"),
-        col("_norm").as("_qnorm"))
-    // probe selection: cosine of the query against each literal centroid
-    // (posexplode of an nCells array — no centroid table, no join), top
-    // nProbe per query with cell tiebreak
     val sims = array(cents.indices.map(j =>
       dotNative(col("qv"), typedlit(cents(j).toSeq)) /
         (col("_qnorm") * lit(cnorm(j)))): _*)
-    val wProbe = Window.partitionBy(col("query_id"))
+    val w = Window.partitionBy(col("query_id"))
       .orderBy(desc("_sim"), col("cell"))
-    val probes = queries
+    queries
       .select(col("query_id"), col("qv"), col("_qnorm"),
         posexplode(sims).as(Seq("_c0", "_sim")))
       .withColumn("cell", (col("_c0") + 1).cast("long"))
-      .withColumn("_pr", row_number().over(wProbe))
+      .withColumn("_pr", row_number().over(w))
       .filter(col("_pr") <= nProbe)
       .select(col("query_id"), col("qv"), col("_qnorm"), col("cell"))
-    val cand = assigned.join(probes, Seq("cell"))
-      .filter(col("vec_id") =!= col("query_id"))
-    // norm precomputed per vector (see bruteForceTopK) — bit-identical
-    val scored = cand.select(col("query_id"), col("vec_id"),
-      round(dotNative(col("embedding"), col("qv")) /
-        (col("_norm") * col("_qnorm")), 4).as("cosine"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(desc("cosine"), col("vec_id"))
-    scored.withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .orderBy(col("query_id"), col("rank"))
   }
+
+  /** The top-k of each probe's query among the (cell, vec_id, embedding,
+    * norm) rows of its probed cells: the cell-keyed candidate join. */
+  private def inProbedCells(cells: DataFrame, probes: DataFrame, k: Int): DataFrame =
+    topK(rescore(cells.join(probes, Seq("cell"))), k)
 
   /** Deterministic CROSS-PROCESS location of the persisted IVF store
     * (r14 VERDICT #2 — the r13/r14 shape was pid-suffixed tmp, which
@@ -368,10 +345,12 @@ object Similarity {
         col("cell"))
       .write.mode("overwrite").partitionBy("cell").parquet(path)
 
-  /** The store's row projection — cell assignment by the literal
-    * quantizer + the precomputed norm — shared by the initial build and
-    * the incremental ingest so the two paths can never assign a vector
-    * differently. */
+  /** THE cell assignment — by the literal quantizer, plus the
+    * precomputed norm — shared by q38's in-query pass, the initial store
+    * build and the incremental ingest, so no two paths can assign a
+    * vector differently. Nearest-centroid scores as one array; cell =
+    * 1-based first argmax (array_position and DuckDB's list_position
+    * agree on both counts). */
   private def ivfStoreRows(e0: DataFrame): DataFrame = {
     graft.GraftExtensions.install(e0.sparkSession)
     val cents = IvfCentroids.cells
@@ -380,7 +359,7 @@ object Similarity {
       dotNative(col("embedding"), typedlit(cents(j).toSeq)) - lit(halfSq(j))): _*)
     e0.withColumn("_scores", scores)
       .withColumn("cell", expr("array_position(_scores, array_max(_scores))"))
-      .withColumn("norm", sqrt(dotNative(col("embedding"), col("embedding"))))
+      .withColumn("norm", norm)
       .select(col("cell"), col("vec_id"), col("embedding"), col("norm"))
   }
 
@@ -468,49 +447,23 @@ object Similarity {
   }
 
   /** The probe-only query against a written IVF store: probe cells are
-    * selected exactly as [[ivfTopKFor]] does (cosine of each query
-    * against the literal centroids, top `nProbe` with cell tiebreak),
-    * their union collected — a ≤ nQueries×nProbe-row driver fetch, the
-    * bounded-collect shape the indexed-dedup family established — and
-    * pushed at the store as a LITERAL `cell IN (…)` partition predicate.
+    * [[ivfTopKFor]]'s ([[probes]]), their union collected — a
+    * ≤ nQueries×nProbe-row driver fetch, the bounded-collect shape the
+    * indexed-dedup family established — and pushed at the store as a
+    * LITERAL `cell IN (…)` partition predicate.
     * The per-query cell join then restricts each query to its own
     * probed cells, so results are row-identical to q38's. */
   def ivfProbeStore(s: SparkSession, path: String, queries0: DataFrame,
                     k: Int, nQueries: Int, nProbe: Int): DataFrame = {
     graft.GraftExtensions.install(s)
-    val cents = IvfCentroids.cells
-    val cnorm = cents.map(c => math.sqrt(IvfCentroids.sqNorm(c)))
-    val queries = queries0.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qv"),
-        sqrt(dotNative(col("embedding"), col("embedding"))).as("_qnorm"))
-    val sims = array(cents.indices.map(j =>
-      dotNative(col("qv"), typedlit(cents(j).toSeq)) /
-        (col("_qnorm") * lit(cnorm(j)))): _*)
-    val wProbe = Window.partitionBy(col("query_id"))
-      .orderBy(desc("_sim"), col("cell"))
-    val probes = Caches.track(queries
-      .select(col("query_id"), col("qv"), col("_qnorm"),
-        posexplode(sims).as(Seq("_c0", "_sim")))
-      .withColumn("cell", (col("_c0") + 1).cast("long"))
-      .withColumn("_pr", row_number().over(wProbe))
-      .filter(col("_pr") <= nProbe)
-      .select(col("query_id"), col("qv"), col("_qnorm"), col("cell")))
-    val probedCells = probes.select(col("cell")).distinct()
+    val probed = Caches.track(probes(queries(queries0, nQueries), nProbe))
+    val probedCells = probed.select(col("cell")).distinct()
       .collect().map(_.getLong(0)).sorted
     val store = Tables.parquet(s, path)
       .select(col("cell").cast("long").as("cell"), col("vec_id"),
         col("embedding"), col("norm"))
       .filter(col("cell").isin(probedCells.map(Long.box): _*))
-    val cand = store.join(probes, Seq("cell"))
-      .filter(col("vec_id") =!= col("query_id"))
-    val scored = cand.select(col("query_id"), col("vec_id"),
-      round(dotNative(col("embedding"), col("qv")) /
-        (col("norm") * col("_qnorm")), 4).as("cosine"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(desc("cosine"), col("vec_id"))
-    scored.withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .orderBy(col("query_id"), col("rank"))
+    inProbedCells(store, probed, k)
   }
 
   /** Store scans of `prefix` that DON'T carry a partition filter on
@@ -590,19 +543,28 @@ object Similarity {
     require(targetRecall > 0.0 && targetRecall <= 1.0,
       s"need 0 < targetRecall <= 1, got $targetRecall")
     require(candidates.nonEmpty, "need at least one candidate width")
-    def pairs(df: DataFrame): Set[(Long, Long)] =
-      df.select(col("query_id"), col("vec_id")).collect()
-        .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val truth = pairs(bruteForceTopKFor(s, e0, k, nQueries))
-    val denom = math.max(truth.size, 1)
+    val recall = recallAgainst(bruteForceTopKFor(s, e0, k, nQueries))
     val curve = candidates.distinct.sorted.map { p =>
-      p -> pairs(ivfTopKFor(s, e0, k, nQueries, p))
-        .intersect(truth).size.toDouble / denom
+      p -> recall(ivfTopKFor(s, e0, k, nQueries, p))
     }
     val chosen = curve.collectFirst {
       case (p, r) if r >= targetRecall => p
     }.getOrElse(curve.last._1)
     (chosen, curve)
+  }
+
+  /** Top-k SET RECALL against `truth`: the share of its (query_id,
+    * vec_id) pairs a top-k frame also returns. `truth` is collected once
+    * (k × nQueries rows), so one reference serves every frame measured
+    * against it. The one measure of [[probeForRecall]] and of the recall
+    * tools (graft.tools.RecallCurve, the SoakScale recall gate). */
+  private[graft] def recallAgainst(truth: DataFrame): DataFrame => Double = {
+    def pairs(df: DataFrame): Set[(Long, Long)] =
+      df.select(col("query_id"), col("vec_id")).collect()
+        .map(r => (r.getLong(0), r.getLong(1))).toSet
+    val t = pairs(truth)
+    val denom = math.max(t.size, 1)
+    got => pairs(got).intersect(t).size.toDouble / denom
   }
 
   /** q60 — int8 quantization audit: symmetric per-vector scaling

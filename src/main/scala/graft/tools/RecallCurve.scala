@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Caches, Similarity}
@@ -11,23 +11,45 @@ import graft.sources.Tables
   * that the default be chosen from a measured curve, not assumed).
   *
   * For each nProbe: top-5 set recall vs [[Similarity.bruteForceTopKFor]]
-  * at 1× and at the soak's 10× jittered corpus, plus the wall per run.
-  * The probed fraction nProbe/16 IS the scan-cost model at 100 TB (the
-  * corpus is partition-pruned by cell), so the printout is the whole
-  * trade: recall bought vs fraction of the store read.
+  * ([[Similarity.probeForRecall]]'s curve) at 1× and at the soak's 10×
+  * jittered corpus ([[embCorpora]]). The probed fraction nProbe/16 IS
+  * the scan-cost model at 100 TB (the corpus is partition-pruned by
+  * cell), so the printout is the whole trade: recall bought vs fraction
+  * of the store read.
   *
   * Usage: SPARK_GRAFT_SF_DIR=... sbt "runMain graft.tools.RecallCurve"
   */
 object RecallCurve {
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = graft.Sessions.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
+    val (embBase, emb10) = embCorpora(spark, sfDir)
 
+    def curve(e: DataFrame): Seq[(Int, Double)] = {
+      val ((_, c), sc) = Caches.scope(Similarity.probeForRecall(spark, e, 1.0,
+        candidates = Seq(1, 2, 4, 6, 8, 10, 12, 16)))
+      sc.release()
+      c
+    }
+    val (c1, c10) = (curve(embBase), curve(emb10))
+
+    println("nProbe  frac_read  recall@1x  recall@10x")
+    c1.zip(c10).foreach { case ((p, r1), (_, r10)) =>
+      println(f"$p%6d  ${p / 16.0}%9.3f  $r1%9.3f  $r10%10.3f")
+    }
+    spark.stop()
+  }
+
+  /** The `sfDir` embeddings at 1× and the 10× corpus: 9 jittered
+    * near-copies per vector (copy c offsets vec_id by c·10⁷ and scales
+    * each component by a small deterministic per-copy factor). Both
+    * cached and counted; the recall tools' one corpus. */
+  private[tools] def embCorpora(spark: SparkSession, sfDir: String): (DataFrame, DataFrame) = {
     val embBase = Caches.track(
       Tables(spark, sfDir, "embeddings")
         .select(col("vec_id"), col("embedding"))
         .repartition(32, col("vec_id")))
-    // the soak's 10× corpus shape: 9 jittered near-copies per vector
     def embCopy(c: Int): DataFrame =
       if (c == 0) embBase
       else embBase.select(
@@ -38,29 +60,6 @@ object RecallCurve {
       (0 until 10).map(embCopy).reduce(_ unionByName _)
         .repartition(32, col("vec_id")))
     embBase.count(); emb10.count()
-
-    def recallOf(e: DataFrame, nProbe: Int): (Double, Double) = {
-      val t0 = System.nanoTime()
-      val (r, sc) = Caches.scope {
-        val truth = Caches.track(Similarity.bruteForceTopKFor(spark, e)
-          .select(col("query_id"), col("vec_id")))
-        val got = Similarity.ivfTopKFor(spark, e, nProbe = nProbe)
-          .select(col("query_id"), col("vec_id"))
-        val denom = truth.count()
-        got.join(truth, Seq("query_id", "vec_id")).count().toDouble /
-          math.max(denom, 1L)
-      }
-      sc.release(); spark.catalog.clearCache()
-      embBase.cache(); embBase.count(); emb10.cache(); emb10.count()
-      (r, (System.nanoTime() - t0) / 1e9)
-    }
-
-    println("nProbe  frac_read  recall@1x  recall@10x  wall1x_s  wall10x_s")
-    Seq(1, 2, 4, 6, 8, 10, 12, 16).foreach { p =>
-      val (r1, w1) = recallOf(embBase, p)
-      val (r10, w10) = recallOf(emb10, p)
-      println(f"$p%6d  ${p / 16.0}%9.3f  $r1%9.3f  $r10%10.3f  $w1%8.2f  $w10%9.2f")
-    }
-    spark.stop()
+    (embBase, emb10)
   }
 }

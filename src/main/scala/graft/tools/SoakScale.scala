@@ -704,30 +704,11 @@ object SoakScale {
     //         cells (measured 1.000, floor 0.95) — a banding change
     //         that splits near-identical vectors across buckets fails
     //         here even if @1× recall survives.
-    val embBase = Caches.track(
-      Tables(spark, sfDir, "embeddings")
-        .select(col("vec_id"), col("embedding"))
-        .repartition(32, col("vec_id")))
-    def embCopy(c: Int): DataFrame =
-      if (c == 0) embBase
-      else embBase.select(
-        (col("vec_id") + lit(c * 10000000L)).as("vec_id"),
-        expr(s"transform(embedding, (x, i) -> cast(x * (1.0 + 0.002 * (((i + $c * 31) % 7) - 3)) as float))")
-          .as("embedding"))
-    val emb10 = Caches.track(
-      (0 until 10).map(embCopy).reduce(_ unionByName _)
-        .repartition(32, col("vec_id")))
-    emb10.count()
+    val (embBase, emb10) = RecallCurve.embCorpora(spark, sfDir)
     def recallOf(name: String, e: DataFrame,
                  ann: DataFrame => DataFrame, floor: Double): Double = {
-      val (r, sc) = Caches.scope {
-        val truth = Caches.track(Similarity.bruteForceTopKFor(spark, e)
-          .select(col("query_id"), col("vec_id")))
-        val got = ann(e).select(col("query_id"), col("vec_id"))
-        val denom = truth.count()
-        got.join(truth, Seq("query_id", "vec_id")).count().toDouble /
-          math.max(denom, 1L)
-      }
+      val (r, sc) = Caches.scope(
+        Similarity.recallAgainst(Similarity.bruteForceTopKFor(spark, e))(ann(e)))
       sc.release(); spark.catalog.clearCache()
       base.cache(); base.count(); corpus10.cache(); corpus10.count()
       embBase.cache(); embBase.count(); emb10.cache(); emb10.count()

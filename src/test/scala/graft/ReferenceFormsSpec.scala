@@ -7,8 +7,9 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.functions.TextFunctions.{tokenCount, tokens}
 import graft.operators.{Packing, TextOps}
 
-/** The row-local gram scrub, the listing shard probe and the one-pass
-  * shard report, each pinned against the relational form it replaced.
+/** The row-local gram scrub, the listing shard probe, the one-pass
+  * shard report and q31's band-entry candidates, each pinned against
+  * the form it replaced.
   * The reference forms live here, in test code only: they are the
   * definition the faster paths must keep reproducing row for row. */
 class ReferenceFormsSpec extends AnyFunSuite with TempDirs {
@@ -108,6 +109,41 @@ class ReferenceFormsSpec extends AnyFunSuite with TempDirs {
             x => concat(x.getField("seq_id"), lit(":"), x.getField("doc_id"),
               lit(":"), x.getField("_th"))))).as("content_hash"))
         .orderBy(col("shard_id"))
+  }
+
+  /** q31's candidate stage as it was inlined: the sketch's bands cut
+    * by shift-and-mask right here, one exploded frame cached for both
+    * join sides, duplicates dropped on (query_id, vec_id) before the
+    * cosine rescore. */
+  private def inlineLshTopK(e0: DataFrame, k: Int, nQueries: Int,
+                            bits: Int, bands: Int, dim: Int): DataFrame = {
+    import graft.functions.VectorFunctions.dotNative
+    val r = bits / bands
+    val mask = (1L << r) - 1
+    val e = operators.Similarity.hyperplaneSketch(e0, "embedding", bits, dim)
+      .withColumn("_norm", sqrt(dotNative(col("embedding"), col("embedding"))))
+    val banded = e.select(col("vec_id"), col("embedding"), col("_norm"),
+        explode(array((0 until bands).map(bd =>
+          struct(lit(bd).as("band"),
+            shiftright(col("sketch"), bd * r).bitwiseAND(mask).as("key"))): _*)).as("b"))
+      .select(col("vec_id"), col("embedding"), col("_norm"),
+        col("b.band").as("band"), col("b.key").as("key")).cache()
+    val q = banded.filter(col("vec_id") < nQueries)
+      .select(col("band"), col("key"), col("vec_id").as("query_id"),
+        col("embedding").as("qv"), col("_norm").as("_qnorm"))
+    val scored = banded.join(q, Seq("band", "key"))
+      .filter(col("vec_id") =!= col("query_id"))
+      .select(col("query_id"), col("vec_id"), col("embedding"), col("qv"),
+        col("_norm"), col("_qnorm"))
+      .dropDuplicates("query_id", "vec_id")
+      .select(col("query_id"), col("vec_id"),
+        round(dotNative(col("embedding"), col("qv")) /
+          (col("_norm") * col("_qnorm")), 4).as("cosine"))
+    val w = org.apache.spark.sql.expressions.Window.partitionBy(col("query_id"))
+      .orderBy(desc("cosine"), col("vec_id"))
+    scored.withColumn("rank", row_number().over(w).cast("long"))
+      .filter(col("rank") <= k)
+      .orderBy(col("query_id"), col("rank"))
   }
 
   private def rows(df: DataFrame): Set[Seq[Any]] = {
@@ -293,5 +329,25 @@ class ReferenceFormsSpec extends AnyFunSuite with TempDirs {
     assert(streaming.ShardAppend.applyBatch(ok, 0L, path, 512L, 8L).isDefined)
     assert(streaming.Ingest.committedBatch(path) === 0L)
     operators.Caches.release()
+  }
+
+  test("q31's band-entry candidates ≡ the inline sketch banding: rows and order, three (bits, bands)") {
+    val sf01 = s"${new java.io.File(sf).getParent}/sf0.01"
+    val e = graft.sources.Tables(spark, sf01, "embeddings")
+      .select(col("vec_id"), col("embedding"))
+    for ((bits, bands) <- Seq((16, 8), (12, 4), (24, 8))) {
+      val want = inlineLshTopK(e, 5, 10, bits, bands, 64).collect().map(_.toSeq).toSeq
+      val got = operators.Similarity.lshTopKFor(spark, e, 5, 10, bits, bands, 64)
+        .collect().map(_.toSeq).toSeq
+      spark.catalog.clearCache()
+      operators.Caches.release()
+      assert(want.nonEmpty, s"($bits, $bands): the reference found no rows")
+      assert(got === want, s"q31 diverged from the inline banding at ($bits, $bands)")
+    }
+    val err = intercept[IllegalArgumentException] {
+      operators.Similarity.lshTopKFor(spark, e, bits = 16, bands = 3)
+    }
+    operators.Caches.release()
+    assert(err.getMessage.contains("trailing sketch bits"), err.getMessage)
   }
 }
