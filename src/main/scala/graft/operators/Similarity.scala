@@ -152,12 +152,12 @@ object Similarity {
   def lshTopKFor(s: SparkSession, e0: DataFrame, k: Int = 5,
                  nQueries: Int = 10, bits: Int = 16, bands: Int = 8,
                  dim: Int = 64): DataFrame = {
-    val e = Modality.Embedding(bits, dim, bands)
+    val entry = Modality.Embedding(bits, dim, bands)
     // cached: the sketched side feeds BOTH sides of the bucket join —
     // without this the sketch and norms compute twice; released via
     // Caches.release()
-    val side = Caches.track(e.project(e0.select(col("vec_id").as("doc_id"), col("embedding"))))
-    topK(e.band.queryPairs(side.filter(col("doc_id") < nQueries), side,
+    val side = Caches.track(entry.project(e0.select(col("vec_id").as("doc_id"), col("embedding"))))
+    topK(entry.band.queryPairs(side.filter(col("doc_id") < nQueries), side,
       "query_id", "vec_id"), k)
   }
 
@@ -273,7 +273,7 @@ object Similarity {
     * `nProbe` nearest cells — cosine of the query against each literal
     * centroid (posexplode of an nCells array — no centroid table, no
     * join), cell tiebreak. */
-  private def probes(queries: DataFrame, nProbe: Int): DataFrame = {
+  private def probes(q: DataFrame, nProbe: Int): DataFrame = {
     val cents = IvfCentroids.cells
     val cnorm = cents.map(c => math.sqrt(IvfCentroids.sqNorm(c)))
     val sims = array(cents.indices.map(j =>
@@ -281,7 +281,7 @@ object Similarity {
         (col("_qnorm") * lit(cnorm(j)))): _*)
     val w = Window.partitionBy(col("query_id"))
       .orderBy(desc("_sim"), col("cell"))
-    queries
+    q
       .select(col("query_id"), col("qv"), col("_qnorm"),
         posexplode(sims).as(Seq("_c0", "_sim")))
       .withColumn("cell", (col("_c0") + 1).cast("long"))
